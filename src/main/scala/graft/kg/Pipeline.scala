@@ -1,8 +1,11 @@
 package graft.kg
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.util.{CollationFactory, CollationSupport}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.model._
 import graft.tag.{Ontology, Taggers}
@@ -17,11 +20,18 @@ import graft.text.Text
   * objects shipped in the closure, the moral equivalent of a broadcast of
   * model parameters).
   *
-  * Every per-sentence relational step (A1 aggregation, J4 self-join, J1
-  * alignment, J2 duration merge, U1 union) keys on the same `sentKey`
-  * column, so Catalyst reuses one hash-partitioning across the chain
-  * instead of reshuffling per step — the property that keeps the plan
-  * shuffle-count constant as data scales.
+  * Every annotate step (A1 heads, J4 pairs, J1 alignment, P7/J3 endpoint
+  * mapping, U1 injection, J2 durations, P9 speculation) reads only one
+  * sentence — the reference annotates sentence by sentence,
+  * project/APIs/main.py:23-242. The pipeline therefore runs them as one
+  * pure per-sentence kernel, [[annotateSentence]], inside two narrow
+  * flatMaps over the tagged frame ([[annotateFrom]]): no join, no
+  * shuffle, no cache. The relational operators below (`headsNarrow`,
+  * `relationCandidates`, `scoreRelations`, `filterRelations`,
+  * `alignHeads`, `mapRelationEndpoints`, `injectTempRelOnlyEvents`,
+  * `durations`, `enrich`) are the same steps as `sentKey`-keyed frame
+  * transforms: the golden-stage queries and the traced benchmark build
+  * compose them, and OperatorSpec pins the kernel to their composition.
   */
 object Pipeline {
 
@@ -139,15 +149,17 @@ object Pipeline {
     * P11b/P11c masks. flatMap — narrow. */
   def eventRows(spark: SparkSession, tagged: Dataset[TaggedSentence]): Dataset[EventRow] = {
     import spark.implicits._
-    tagged.flatMap { t =>
-      t.triggers.map { tr =>
-        val args = Taggers.argumentSpans(t.tokens, t.ner, tr)
-        EventRow(t.repo, t.path, t.contentSha, t.lineNum, t.senNum, t.sentKey,
-          eventIdOf(t.sentKey, tr.start), tr.eventType, tr.text,
-          Ontology.lemmaOf(tr.text), tr.start, tr.end, args)
-      }
-    }
+    tagged.flatMap(triggerEvents)
   }
+
+  /** X1 for one sentence: one event per trigger, arguments tagged. */
+  private def triggerEvents(t: TaggedSentence): Seq[EventRow] =
+    t.triggers.map { tr =>
+      val args = Taggers.argumentSpans(t.tokens, t.ner, tr)
+      EventRow(t.repo, t.path, t.contentSha, t.lineNum, t.senNum, t.sentKey,
+        eventIdOf(t.sentKey, tr.start), tr.eventType, tr.text,
+        Ontology.lemmaOf(tr.text), tr.start, tr.end, args)
+    }
 
   // ---- stage 4: TempRel — A1 head aggregation + J4 pair self-join ----
 
@@ -181,11 +193,16 @@ object Pipeline {
       tagged: Dataset[TaggedSentence]): DataFrame = {
     import spark.implicits._
     tagged.flatMap { s =>
-      s.tokens.zipWithIndex.flatMap { case (tok, i) =>
-        val ev = Taggers.headEvidence(tok)
-        if (ev.sum / ev.size > 0.5) Some((s.sentKey, i, tok)) else None
+      s.tokens.zipWithIndex.collect { case (tok, i) if isHead(tok) =>
+        (s.sentKey, i, tok)
       }
     }.toDF("sentKey", "tokIdx", "tok")
+  }
+
+  /** A1 for one token: the mean of its two evidence channels > 0.5. */
+  private def isHead(tok: String): Boolean = {
+    val ev = Taggers.headEvidence(tok)
+    ev.sum / ev.size > 0.5
   }
 
   /** J4: per-sentence ordered pairs (the theta self-join,
@@ -329,6 +346,89 @@ object Pipeline {
       .drop("negationScope")
   }
 
+  // ---- the per-sentence annotate kernel ----
+
+  /** An enriched event: [[EventRow]] plus the J2 duration and the P9
+    * speculation flag, in the column order of [[enrich]]'s output. */
+  case class EnrichedEvent(
+      sentKey: String,
+      trigStart: Int,
+      repo: String,
+      path: String,
+      contentSha: String,
+      lineNum: Int,
+      senNum: Int,
+      eventId: String,
+      eventType: String,
+      trigText: String,
+      trigLemma: String,
+      trigEnd: Int,
+      args: Seq[Argument],
+      duration: String,
+      speculation: Boolean)
+
+  /** A temporal relation between two aligned token positions — the row
+    * [[mapRelationEndpoints]] emits. */
+  case class RelationRow(sentKey: String, lAligned: Int, rAligned: Int,
+      label: String)
+
+  case class SentenceAnnotation(events: Seq[EnrichedEvent],
+      relations: Seq[RelationRow])
+
+  /** The annotate layer for one sentence, as pure code: exactly the rows
+    * the relational composition `enrich(injectTempRelOnlyEvents(...))` and
+    * `mapRelationEndpoints(filterRelations(scoreRelations(...)))` produces
+    * for this sentence when it is alone under its `sentKey`. */
+  def annotateSentence(t: TaggedSentence): SentenceAnnotation =
+    SentenceAnnotation(sentenceEvents(t), sentenceRelations(t))
+
+  /** A1 + J1: the positions of the sentence's heads. A head is one of the
+    * sentence's own tokens, so its J1 band (|Δ| ≤ 2, '.'-stripped text
+    * equal, nearest first) always holds the head itself at |Δ| = 0: every
+    * head aligns to its own position, and P7 keeps every pair. */
+  private def headPositions(tokens: Seq[String]): IndexedSeq[Int] =
+    tokens.indices.filter(i => isHead(tokens(i)))
+
+  /** Catalyst's `lower` on one string — the call the SQL function makes,
+    * so the kernel folds case exactly as the relational operators do. */
+  private def sqlLower(s: String): String =
+    CollationSupport.Lower.exec(UTF8String.fromString(s),
+      CollationFactory.UTF8_BINARY_COLLATION_ID,
+      SQLConf.get.getConf(SQLConf.ICU_CASE_MAPPINGS_ENABLED)).toString
+
+  /** J4 + connective scoring + P6 + P7/J3: every head pair l < r whose first
+    * connective strictly between them is a real temporal label. */
+  private def sentenceRelations(t: TaggedSentence): Seq[RelationRow] = {
+    val tokens = t.tokens.toIndexedSeq
+    headPositions(tokens).combinations(2).flatMap { case Seq(l, r) =>
+      val label = (l + 1 until r).iterator
+        .flatMap(i => Ontology.Connectives.get(sqlLower(tokens(i))))
+        .nextOption().getOrElse("NONE")
+      if (label == "VAGUE" || label == "NONE") None
+      else Some(RelationRow(t.sentKey, l, r, label))
+    }.toSeq
+  }
+
+  /** X1 + U1 + J2 + P9: trigger events plus a typeless event at every head
+    * no trigger starts at, each with its duration and speculation flag. */
+  private def sentenceEvents(t: TaggedSentence): Seq[EnrichedEvent] = {
+    val tokens = t.tokens.toIndexedSeq
+    val trigStarts = t.triggers.map(_.start).toSet
+    val injected = headPositions(tokens).filterNot(trigStarts).map { i =>
+      EventRow(t.repo, t.path, t.contentSha, t.lineNum, t.senNum, t.sentKey,
+        eventIdOf(t.sentKey, i), "", tokens(i), sqlLower(tokens(i)), i, i,
+        Seq.empty)
+    }
+    val events = triggerEvents(t) ++ injected
+    // J2 joins durations on (sentKey, trigStart): an event pairs with the
+    // duration of EVERY event that starts at its token
+    val durationsAt = events.groupMap(_.trigStart)(e => Taggers.durationOf(e.trigText))
+    for (e <- events; d <- durationsAt(e.trigStart)) yield EnrichedEvent(
+      e.sentKey, e.trigStart, e.repo, e.path, e.contentSha, e.lineNum,
+      e.senNum, e.eventId, e.eventType, e.trigText, e.trigLemma, e.trigEnd,
+      e.args, d, t.negationScope.lift(e.trigStart).contains(1))
+  }
+
   /** Quarantine-aware extraction: per-record failures become rows in a
     * quarantine table instead of being swallowed (the reference's
     * try/except drop, test_on_raw_text.py:107-117 — SURVEY.md §2.9). */
@@ -371,7 +471,7 @@ object Pipeline {
     // sampler re-ran the extraction flatMap and nothing downstream
     // consumed the layout — every relational op hash-shuffles on its own
     // key, guide §2.4) and no separate `sents` cache: the tagged frame
-    // carries sentKey + tokens, which is everything the relational core
+    // carries sentKey + tokens, which is everything the annotate kernel
     // reads, so caching the sentence frame only added an encoder
     // round-trip + columnar cache write of the whole corpus (measured:
     // per-sentence tagging compute is ~0.15 ms while the stage cost
@@ -380,7 +480,8 @@ object Pipeline {
     // sentence stage — there the stored snapshot is the point.
     // persist (columnar cache), not localCheckpoint: tried both — the
     // checkpoint skips the columnar encode but loses column pruning, and
-    // the tagged frame's ~8 downstream consumers mostly read narrow
+    // the tagged frame's downstream consumers (the two annotate flatMaps,
+    // emit's relation and entity branches) mostly read narrow
     // projections, so full-UnsafeRow scans cost MORE in total task time
     // (332 vs 285 s at sf0.1). The count materializes the cache before
     // the fan-out so broadcast threads never race a cold subtree.
@@ -390,32 +491,17 @@ object Pipeline {
     ann.copy(caches = ann.caches :+ tagged.toDF())
   }
 
-  /** The relational core of the DAG, from the committed tag stage (shared
-    * by the in-memory path and the checkpoint-resumable path; the tagged
-    * frame carries sentKey + tokens, so the sentence frame is not
-    * needed). */
+  /** The annotate layer over a tagged frame (shared by the in-memory path
+    * and the checkpoint-resumable path): two narrow flatMaps running the
+    * [[annotateSentence]] kernel — the events half and the relations half,
+    * so neither pays for the other's work. No join, no shuffle, no cache:
+    * each sentence is annotated on its own, so two rows that share a
+    * `sentKey` (one file under two commits) never mix. */
   def annotateFrom(spark: SparkSession,
       tagged: Dataset[TaggedSentence]): Annotated = {
-    val events = eventRows(spark, tagged)
-    // consumed by BOTH alignHeads (token-array join side) and
-    // scoreRelations (connective window) — cache the narrow projection so
-    // the two joins (and their broadcast threads) share one evaluation
-    val sentToks = tagged.select(col("sentKey"), col("tokens")).persist()
-    // heads feeds BOTH the alignment and the pair generator; allEvents
-    // feeds BOTH the duration stage and the final merge — persist each so
-    // the branches share one computation instead of re-running the
-    // upstream DAG per consumer. headsNarrow = the fused A1 (no evidence
-    // explode, no aggregation shuffle).
-    val heads = headsNarrow(spark, tagged).persist()
-    val aligned = alignHeads(heads, sentToks).persist()
-    val scored = scoreRelations(relationCandidates(heads), sentToks)
-    val rels = mapRelationEndpoints(filterRelations(scored), aligned)
-    val allEvents = injectTempRelOnlyEvents(spark, aligned, events, tagged).persist()
-    allEvents.count() // fill the cache before the two consumers race
-    val durs = durations(spark, allEvents)
-    val enriched = enrich(spark, allEvents, durs, tagged)
-    Annotated(tagged, enriched, rels,
-      caches = Seq(sentToks, heads, aligned, allEvents.toDF()))
+    import spark.implicits._
+    Annotated(tagged, tagged.flatMap(sentenceEvents).toDF(),
+      tagged.flatMap(sentenceRelations).toDF())
   }
 
   /** Ingest reference-format annotation records (Sources.annotationSchema,
@@ -506,23 +592,24 @@ object Pipeline {
   def runCheckpointed(spark: SparkSession, files: Dataset[SourceFile],
       root: String, inputSig: String): DataFrame = {
     import spark.implicits._
-    val extracted = Store.runStage(spark, root, "sentences", inputSig) {
+    // the extraction cache feeds both the quarantine and the sentences
+    // commits; it is released once both are on disk. runStage skips the
+    // body on resume, so nothing was cached then.
+    var extracted: Option[Dataset[SentOrErr]] = None
+    val sents = Store.runStage(spark, root, "sentences", inputSig) {
       val e = extract(spark, files).persist()
+      extracted = Some(e)
       // quarantine commits alongside (same pass over the input)
       Store.runStage(spark, root, "quarantine", inputSig) {
         e.flatMap(_.err).toDF()
       }
-      val out = e.flatMap(_.sent)
-        .repartitionByRange(col("repo"), col("path"))
-        .toDF()
-      out
-    }
-    val sents = extracted.as[Sentence]
+      e.flatMap(_.sent).toDF()
+    }.as[Sentence]
+    extracted.foreach(_.unpersist())
     val tagged = Store.runStage(spark, root, "tagged", inputSig) {
       tagStage(spark, sents).toDF()
     }.as[TaggedSentence]
-    var annForced = false
-    lazy val ann = { annForced = true; annotateFrom(spark, tagged) }
+    val ann = annotateFrom(spark, tagged)
     val events = Store.runStage(spark, root, "events", inputSig)(ann.events)
     val rels = Store.runStage(spark, root, "relations", inputSig)(ann.relations)
     // capture emit's intermediate caches (events/formMap/blockCanon) so
@@ -533,12 +620,12 @@ object Pipeline {
     var emitCaches: Seq[DataFrame] = Nil
     val out = Store.runStage(spark, root, "triples", inputSig) {
       val (frame, caches) =
-        Triples.emitWithCaches(spark, Annotated(tagged, events, rels))
+        Triples.emitWithCaches(spark, Annotated(tagged, events, rels),
+          committedEvents = Store.readManifest(root, "events").map(_._2))
       emitCaches = caches
       frame
     }
     emitCaches.foreach(_.unpersist())
-    if (annForced) ann.caches.foreach(_.unpersist())
     out
   }
 }

@@ -1,6 +1,7 @@
 package graft.kg
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 
 import graft.link.Canonicalize
@@ -45,16 +46,20 @@ object Triples {
     cached
   }
 
+  /** `committedEvents`: the row count of `ann.events` when they are a
+    * committed snapshot — re-reading the snapshot is cheaper than caching
+    * it, and the known count resolves the broadcast gates. */
   private[kg] def emitWithCaches(spark: SparkSession,
-      ann: Pipeline.Annotated, distinct: Boolean = false): (DataFrame, Seq[DataFrame]) = {
-    val events = ann.events.persist()
-    // materialize the cache NOW: the canonicalization loop and the two
-    // broadcast builds below otherwise race to each recompute the whole
-    // upstream DAG before any of them fills the cache (broadcast exchanges
-    // execute on separate threads). The count doubles as the cardinality
-    // upper bound that lets the broadcast gates below resolve without
-    // extra jobs.
-    val nEvents = events.count()
+      ann: Pipeline.Annotated, distinct: Boolean = false,
+      committedEvents: Option[Long] = None): (DataFrame, Seq[DataFrame]) = {
+    // Events that are not a committed snapshot are cached and materialized
+    // NOW: the canonicalization and the two broadcast builds below would
+    // otherwise race to each recompute the whole upstream DAG before any
+    // of them fills the cache (broadcast exchanges execute on separate
+    // threads). The count doubles as the cardinality upper bound that lets
+    // the broadcast gates below resolve without extra jobs.
+    val events = if (committedEvents.isDefined) ann.events else ann.events.persist()
+    val nEvents = committedEvents.getOrElse(events.count())
 
     val lineage = Seq(col("repo"), col("path"), col("contentSha"))
 
@@ -77,7 +82,10 @@ object Triples {
         col("arg.text").as("text")) ++ lineage: _*)
     val (formMap0, nForms) =
       Canonicalize.canonicalFormsCounted(spark, argMentions)
-    val formMap = formMap0.persist()
+    // a driver-local map is already a local relation: nothing to cache
+    val formMap =
+      if (formMap0.queryExecution.logical.isInstanceOf[LocalRelation]) formMap0
+      else formMap0.persist()
     val argTriplesRaw = Canonicalize.rewrite(argMentions, formMap,
       maxBroadcastRows, formMapRows = nForms)
       .select(Seq(col("eventId").as("subj"), col("role").as("pred"),

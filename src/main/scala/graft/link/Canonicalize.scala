@@ -1,7 +1,11 @@
 package graft.link
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Entity-linking / canonicalization stage (north rule; reference analog is
   * the coref post-pass, project/APIs/coref.py:32-119):
@@ -17,11 +21,16 @@ import org.apache.spark.sql.functions._
   *      broadcast threshold, see SkewJoin).
   *   2. pairwise similarity: token-set containment between forms sharing a
   *      block (coref.py's exact-span match generalized);
-  *   3. connected components via iterative DataFrame self-join with AQE
-  *      (north star names this explicitly) — label propagation to the
-  *      component-minimum id;
+  *   3. connected components: a driver-local union-find when the distinct
+  *      forms fit `spark.graft.maxLocalCCForms` (they are vocabulary-
+  *      bounded, and a dozen label-propagation jobs of scheduling overhead
+  *      would sit in the serial fraction that caps N→4N scaling);
+  *      otherwise iterative DataFrame self-join with AQE (north star names
+  *      this explicitly) — label propagation to the component-minimum id;
   *   4. canonical form per component = longest text, ties to the
   *      lexicographically smallest (the A6 argmin analog, coref.py:38-52).
+  * Blocking (step 1) always runs in Catalyst; steps 2-4 run on the driver
+  * or distributed, with one result.
   */
 object Canonicalize {
 
@@ -91,39 +100,31 @@ object Canonicalize {
     labels
   }
 
-  /** Driver-local union-find over a collected graph — the fast path for
-    * vocabulary-bounded form graphs. The distributed label-propagation
-    * loop costs ~2 driver-blocking jobs per iteration (a dozen jobs of
-    * pure scheduling overhead when the whole graph is a few thousand
-    * rows); at that size a local solve is exact, instant, and removes
-    * the overhead from the serial fraction that caps N→4N scaling.
-    * Produces the identical (vid, component = min member vid) labeling
-    * as `connectedComponents`. */
-  def localComponents(spark: SparkSession, vids: Array[String],
-      edges: Array[(String, String)]): DataFrame = {
-    import spark.implicits._
-    val parent = scala.collection.mutable.Map(vids.map(v => v -> v): _*)
-    def find(x: String): String = {
+  /** Union-find over `0 until n` with path compression — the driver-local
+    * component solve of [[canonicalFormsCounted]]. */
+  private[graft] final class UnionFind(n: Int) {
+    private val parent = Array.tabulate(n)(identity)
+    def find(x: Int): Int = {
       var r = x
       while (parent(r) != r) r = parent(r)
       var c = x
-      while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
+      while (parent(c) != r) { val next = parent(c); parent(c) = r; c = next }
       r
     }
-    for ((s, d) <- edges) parent(find(s)) = find(d)
-    val minOfRoot = vids.groupBy(find).map { case (r, ms) => r -> ms.min }
-    vids.toSeq.map(v => (v, minOfRoot(find(v)))).toDF("vid", "component")
+    def union(a: Int, b: Int): Unit = parent(find(a)) = find(b)
   }
 
   /** Canonical-form map over mention texts: (repo, text) -> canonical.
     * `mentions` needs columns (repo, text). The returned map is one row per
     * distinct (repo, text).
     *
-    * CC strategy is size-gated: graphs up to
-    * `spark.graft.maxLocalCCForms` distinct forms (default 100k; the edge
-    * count is re-checked with a limit-guard) are solved by a driver-local
-    * union-find; larger graphs run the distributed label-propagation
-    * loop. Both produce the min-vid labeling — equality is unit-tested. */
+    * Blocking always runs in Catalyst ([[refineBlocks]]). The rest is
+    * size-gated: when the distinct forms fit under
+    * `spark.graft.maxLocalCCForms` (default 100k), one guarded collect
+    * brings them to the driver, which solves containment, components and
+    * canonical forms itself and returns the map as a local relation; a
+    * larger vocabulary runs the distributed label-propagation loop. Both
+    * paths emit the same map — equality is unit-tested. */
   def canonicalForms(spark: SparkSession, mentions: DataFrame): DataFrame =
     canonicalFormsCounted(spark, mentions)._1
 
@@ -136,10 +137,83 @@ object Canonicalize {
       mentions: DataFrame): (DataFrame, Long) = {
     val maxBlock =
       spark.conf.get("spark.graft.maxBlockForms", "1000").toInt
+    val maxLocal =
+      spark.conf.get("spark.graft.maxLocalCCForms", "100000").toLong
     val forms = refineBlocks(mentions, maxBlock)
+    // the guard: at most maxLocal + 1 forms ever reach the driver
+    val collected = forms.take(math.min(maxLocal, Int.MaxValue - 1L).toInt + 1)
+    if (collected.length <= maxLocal) {
+      val nForms = collected.length.toLong
+      // a degenerate block could still make the edges quadratic: past
+      // 4 edges per form the components go to the distributed loop
+      val map = solveLocal(spark, collected, maxEdges = 4L * math.max(nForms, 1L))
+        .getOrElse(distributedMap(spark,
+          spark.createDataFrame(collected.toSeq.asJava, forms.schema)))
+      (map, nForms)
+    } else {
+      val cached = forms.persist()
+      val nForms = cached.count() // materializes the cache for all consumers
+      val map = distributedMap(spark, cached)
+      cached.unpersist()
+      (map, nForms)
+    }
+  }
+
+  /** The driver-local solve over collected [[refineBlocks]] rows (repo,
+    * text, block, kept): token-set containment within each kept
+    * (repo, block), union-find components, and per component the longest
+    * text by code points, ties to the smallest in UTF-8 binary order (the
+    * `min(struct(1000 - length(text), text))` of [[distributedMap]]).
+    * Forms outside a kept block map to themselves. Returns the map as a
+    * local relation, or None once the containment edges exceed
+    * `maxEdges`. */
+  private def solveLocal(spark: SparkSession, forms: Array[Row],
+      maxEdges: Long): Option[DataFrame] = {
+    // distributedMap keys components on concat(repo, NUL, text): a form
+    // with a null repo or text has a null vertex id and joins no component
+    val kept = forms.filter(r => r.getBoolean(3) && !r.isNullAt(0) && !r.isNullAt(1))
+    val texts = kept.map(_.getString(1))
+    val tokens = texts.map(_.split(" ", -1))
+    val tokenSets = tokens.map(_.toSet)
+    // edges exist only within a (repo, block)
+    val blocks = kept.indices
+      .groupBy(i => (kept(i).getString(0), kept(i).getString(2))).values
+    val uf = new UnionFind(kept.length)
+    var edges = 0L
+    for (block <- blocks; Seq(a, b) <- block.combinations(2)) {
+      val (small, big) =
+        if (tokenSets(a).size <= tokenSets(b).size) (tokenSets(a), tokenSets(b))
+        else (tokenSets(b), tokenSets(a))
+      if (small.count(big) == math.min(tokens(a).length, tokens(b).length)) {
+        edges += 1
+        if (edges > maxEdges) return None
+        uf.union(a, b)
+      }
+    }
+    val utf8 = texts.map(UTF8String.fromString)
+    val canonical = kept.indices.groupBy(uf.find).values.flatMap { members =>
+      val best = members.minBy(utf8)(CanonicalOrder)
+      members.map(i => Row(kept(i).getString(0), texts(i), texts(best)))
+    }
+    val identity = forms.filterNot(_.getBoolean(3))
+      .map(r => Row(r.getString(0), r.getString(1), r.getString(1)))
+    Some(spark.createDataFrame((canonical ++ identity).toSeq.asJava, MapSchema))
+  }
+
+  /** Longest by code points first, then smallest in UTF-8 binary order. */
+  private val CanonicalOrder: Ordering[UTF8String] =
+    Ordering.by[UTF8String, Int](u => -u.numChars)
+      .orElse(Ordering.fromLessThan(_.compareTo(_) < 0))
+
+  private val MapSchema = StructType(Seq("repo", "text", "canonical")
+    .map(StructField(_, StringType)))
+
+  /** The distributed solve over (repo, text, block, kept) forms: pairwise
+    * containment edges within each kept block, label-propagation
+    * components, canonical form per component. */
+  private def distributedMap(spark: SparkSession, blocked: DataFrame): DataFrame = {
+    val forms = blocked
       .withColumn("vid", concat(col("repo"), lit("\u0000"), col("text")))
-      .persist()
-    val nForms = forms.count() // materializes the cache for all consumers
     // pairwise similarity within a KEPT block: token-set containment. The
     // `kept` gate bounds the per-(repo, block) join fan-out at maxBlock²
     // (≤1M comparisons in the one task a hot block lands on — never
@@ -156,23 +230,8 @@ object Canonicalize {
       .filter(size(array_intersect(col("ta"), col("tb"))) ===
         least(size(col("ta")), size(col("tb"))))
       .select("src", "dst")
-    val maxLocal =
-      spark.conf.get("spark.graft.maxLocalCCForms", "100000").toLong
-    val maxLocalEdges = 4L * math.max(nForms, 1L)
-    val comps =
-      if (nForms <= maxLocal) {
-        import spark.implicits._
-        // limit-guard: a degenerate block could still make edges
-        // quadratic; take() early-exits, and overflow falls back to the
-        // distributed loop
-        val es = edges.as[(String, String)].take(maxLocalEdges.toInt + 1)
-        if (es.length <= maxLocalEdges)
-          localComponents(spark,
-            inBlock.select("vid").as[String].collect(), es)
-        else connectedComponents(spark, inBlock.select("vid"), edges)
-      } else connectedComponents(spark, inBlock.select("vid"), edges)
-    // comps is tiny on the local path and AQE picks the strategy on the
-    // distributed one — no forced broadcast (comps grows with forms)
+    val comps = connectedComponents(spark, inBlock.select("vid"), edges)
+    // AQE picks the join strategy (comps grows with forms)
     val withComp = inBlock.join(comps, Seq("vid"))
     // canonical per component: longest text, ties -> lexicographically min
     val canon = withComp
@@ -180,12 +239,10 @@ object Canonicalize {
       .agg(min(struct((lit(1000) - length(col("text"))).as("negLen"),
         col("text").as("t"))).as("best"))
       .select(col("component"), col("best.t").as("canonical"))
-    val out = withComp.join(canon, Seq("component"))
+    withComp.join(canon, Seq("component"))
       .select("repo", "text", "canonical")
       .unionByName(forms.filter(!col("kept"))
         .select(col("repo"), col("text"), col("text").as("canonical")))
-    forms.unpersist()
-    (out, nForms)
   }
 
   /** Block refinement behind `canonicalForms`' quadratic cap: distinct

@@ -28,6 +28,7 @@ import graft.tag.Ontology
   * none is derived from engine code.
   */
 class GoldenDemoSpec extends AnyFunSuite {
+  import GoldenDemoSpec._
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -42,8 +43,6 @@ class GoldenDemoSpec extends AnyFunSuite {
 
   // ---- 1. BETTER/joint/README.md:15-18 (ACE demo) ----
 
-  val aceText = "Orders went out today to deploy 17,000 U.S. Army " +
-    "soldiers in the Persian Gulf region ."
 
   /** Transcribed from README.md:17 ('tokens': [...]). */
   val aceTokens = Seq("Orders", "went", "out", "today", "to", "deploy",
@@ -87,9 +86,6 @@ class GoldenDemoSpec extends AnyFunSuite {
 
   // ---- 2. main.py:246-249 news text vs views.py:20-52 result_news ----
 
-  val newsText = "A powerful ice storm continues to maintain its grip. " +
-    "Yesterday New York governor George Pataki toured five counties " +
-    "that have been declared under a state of emergency"
 
   /** Transcribed from views.py:21-23 ("tokens": [...]). */
   val newsTokens = Seq("A", "powerful", "ice", "storm", "continues", "to",
@@ -141,11 +137,6 @@ class GoldenDemoSpec extends AnyFunSuite {
 
   // ---- 3. main.py:250-252 speculation demo ----
 
-  val mozText = "The United States is not considering sending troops to " +
-    "Mozambique to combat the terrorist threat in the northern province " +
-    "of Cabo Delgado, but it is willing to boost \"civilian " +
-    "counter-terrorism capabilities\", said the US Coordinator for " +
-    "Counterterrorism, Nathan Sales, on Tuesday 8 December."
 
   test("speculation demo: events inside the 'not' negation scope are " +
       "speculated (main.py:226-230 rule on the main.py:250 demo input)") {
@@ -169,4 +160,30 @@ class GoldenDemoSpec extends AnyFunSuite {
     // no typed events in this sentence — nothing carries hasType
     assert(!triples.exists(_._2 == "hasType"))
   }
+}
+
+/** The three reference demo inputs (shared with OperatorSpec's kernel
+  * equivalence check). */
+object GoldenDemoSpec {
+
+  // ---- 1. BETTER/joint/README.md:15-18 (ACE demo) ----
+
+  val aceText = "Orders went out today to deploy 17,000 U.S. Army " +
+    "soldiers in the Persian Gulf region ."
+
+  // ---- 2. main.py:246-249 news demo ----
+
+  val newsText = "A powerful ice storm continues to maintain its grip. " +
+    "Yesterday New York governor George Pataki toured five counties " +
+    "that have been declared under a state of emergency"
+
+  // ---- 3. main.py:250-252 speculation demo ----
+
+  val mozText = "The United States is not considering sending troops to " +
+    "Mozambique to combat the terrorist threat in the northern province " +
+    "of Cabo Delgado, but it is willing to boost \"civilian " +
+    "counter-terrorism capabilities\", said the US Coordinator for " +
+    "Counterterrorism, Nathan Sales, on Tuesday 8 December."
+
+  val texts: Seq[String] = Seq(aceText, newsText, mozText)
 }

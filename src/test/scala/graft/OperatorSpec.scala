@@ -1,10 +1,12 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 import graft.kg.Pipeline
 import graft.link.Canonicalize
+import graft.model.{SourceFile, Trigger}
 
 /** Operator-level specs on crafted inputs, mirroring the cited reference
   * semantics (SURVEY.md §5 "unit per operator"). */
@@ -95,6 +97,143 @@ class OperatorSpec extends AnyFunSuite {
     assert(kept == Set(("s1", 2, 6, "BEFORE")))
   }
 
+  // ---- the per-sentence annotate kernel vs the relational operators ----
+
+  /** The annotate layer composed from the relational operators — the
+    * reference the kernel is checked against: (enriched events,
+    * relations). */
+  def relationalAnnotate(tagged: Dataset[Pipeline.TaggedSentence]): (DataFrame, DataFrame) = {
+    val sentToks = tagged.select(col("sentKey"), col("tokens"))
+    val heads = Pipeline.headsNarrow(spark, tagged)
+    val aligned = Pipeline.alignHeads(heads, sentToks)
+    val rels = Pipeline.mapRelationEndpoints(Pipeline.filterRelations(
+      Pipeline.scoreRelations(Pipeline.relationCandidates(heads), sentToks)), aligned)
+    val all = Pipeline.injectTempRelOnlyEvents(spark, aligned,
+      Pipeline.eventRows(spark, tagged), tagged)
+    (Pipeline.enrich(spark, all, Pipeline.durations(spark, all), tagged), rels)
+  }
+
+  def multiset[A](xs: Seq[A]): Map[A, Int] = xs.groupBy(identity).map { case (k, v) => k -> v.size }
+
+  /** Kernel (`annotateFrom`, and `annotateSentence` row by row) equals the
+    * relational composition: same columns in the same order, and equal
+    * multisets of event and relation rows. Returns the kernel row counts. */
+  def assertKernelMatches(tagged: Dataset[Pipeline.TaggedSentence]): (Int, Int) = {
+    val (relEvents, relRels) = relationalAnnotate(tagged)
+    val ann = Pipeline.annotateFrom(spark, tagged)
+    assert(ann.events.schema.map(f => (f.name, f.dataType)) ==
+      relEvents.schema.map(f => (f.name, f.dataType)))
+    assert(ann.relations.schema.map(f => (f.name, f.dataType)) ==
+      relRels.schema.map(f => (f.name, f.dataType)))
+    val events = ann.events.as[Pipeline.EnrichedEvent].collect().toSeq
+    val rels = ann.relations.as[Pipeline.RelationRow].collect().toSeq
+    assert(multiset(events) == multiset(relEvents.as[Pipeline.EnrichedEvent].collect().toSeq))
+    assert(multiset(rels) == multiset(relRels.as[Pipeline.RelationRow].collect().toSeq))
+    val direct = tagged.collect().toSeq.map(Pipeline.annotateSentence)
+    assert(multiset(direct.flatMap(_.events)) == multiset(events))
+    assert(multiset(direct.flatMap(_.relations)) == multiset(rels))
+    (events.size, rels.size)
+  }
+
+  test("annotate kernel == relational composition on a Synth corpus and the demos") {
+    val synth = Pipeline.tagStage(spark, Pipeline.sentences(spark,
+      graft.corpus.Synth.corpus(spark, 40L, 6)))
+    val (ev, rel) = assertKernelMatches(synth)
+    assert(ev > 0 && rel > 0)
+    val demos = GoldenDemoSpec.texts.zipWithIndex
+      .map { case (t, i) => SourceFile("demo", s"doc$i.md", "c0", "markdown", t) }
+    assertKernelMatches(Pipeline.tagStage(spark,
+      Pipeline.sentences(spark, demos.toDS())))
+  }
+
+  test("annotate kernel == relational composition on crafted edge cases") {
+    def sent(i: Int, tokens: Seq[String], triggers: Seq[Trigger] = Nil,
+        scope: Seq[Int] = Nil): Pipeline.TaggedSentence = {
+      val key = Pipeline.sentKeyOf("r", "p.md", i, 0)
+      Pipeline.TaggedSentence("r", "p.md", "sha", i, 0, key, tokens, Nil,
+        triggers, tokens.map(_ => 0), if (scope.isEmpty) tokens.map(_ => 0) else scope)
+    }
+    val cases = Seq(
+      // two triggers sharing a start token, with different durations (J2
+      // pairs each with both)
+      sent(1, Seq("They", "attacked", "the", "town", "before", "leaving"),
+        Seq(Trigger("Conflict:Attack", "attacked", 1, 1),
+          Trigger("Movement:Transport", "toured", 1, 3))),
+      // two equal heads next to each other, and '.'-bearing tokens
+      sent(2, Seq("U.S.", "troops", "left", "left.", "after", "U.S", "said", ".")),
+      // 0- and 1-token sentences
+      sent(3, Nil),
+      sent(4, Seq("attacked"), Seq(Trigger("Conflict:Attack", "attacked", 0, 0))),
+      sent(5, Seq("said")),
+      // a VAGUE `when` before a real connective decides the pair (dropped)
+      sent(6, Seq("He", "left", "when", "before", "she", "attacked")),
+      // "and" (NONE) before a real connective, and a pair it does not sit in
+      sent(7, Seq("He", "met", "and", "before", "that", "said", "after", "it",
+        "ended")),
+      // a head on the last token, in the negation scope
+      sent(8, Seq("Troops", "did", "not", "leave"), scope = Seq(0, 0, 0, 1)),
+      // a trigger at a head position is not injected again
+      sent(9, Seq("Police", "arrested", "him", "before", "he", "resigned"),
+        Seq(Trigger("Justice:Arrest-Jail", "arrested", 1, 1)), Seq(0, 1, 0, 0, 0, 1)))
+    val (ev, rel) = assertKernelMatches(cases.toDS())
+    assert(ev > cases.size && rel > 0)
+  }
+
+  test("annotate kernel == relational composition on the reference golden corpora") {
+    val dir = new GoldenAceSpec().dataDir // the corpora GoldenAceSpec reads
+    assume(java.nio.file.Files.isDirectory(java.nio.file.Paths.get(dir)),
+      s"reference golden corpora not present at $dir")
+    import graft.tag.Taggers
+    for (f <- Seq("test_ace", "test_tbd", "dev_ace", "dev_tbd", "train_tbd")) {
+      val ann = Pipeline.fromAnnotations(spark, graft.sources.Sources
+        .readAnnotationArray(spark, s"$dir/$f.pred.json"), "eventplus", f)
+      // the golden records carry no negation; tag it as the pipeline does
+      val tagged = ann.tagged.map { t =>
+        val cues = Taggers.negationCues(t.tokens)
+        t.copy(negationCue = cues, negationScope = Taggers.negationScope(t.tokens, cues))
+      }
+      assertKernelMatches(tagged)
+      ann.caches.foreach(_.unpersist())
+    }
+  }
+
+  test("annotate: one file under two commits is annotated per copy, " +
+      "never cross-multiplied") {
+    // the same (repo, path) twice gives two sentences per sentKey; each
+    // copy must annotate exactly as it does alone
+    val files = graft.corpus.Synth.corpus(spark, 6L, 4)
+    def counts(fs: Dataset[SourceFile]): (Long, Long) = {
+      val ann = Pipeline.annotateFrom(spark,
+        Pipeline.tagStage(spark, Pipeline.sentences(spark, fs)))
+      val n = (ann.events.count(), ann.relations.count())
+      ann.caches.foreach(_.unpersist())
+      n
+    }
+    val (ev1, rel1) = counts(files)
+    assert(ev1 > 0 && rel1 > 0)
+    val twice = files.unionByName(files.map(_.copy(commit = "other-commit")))
+    assert(counts(twice) == ((2 * ev1, 2 * rel1)))
+  }
+
+  test("annotate: the frames annotateFrom returns plan no Exchange and no Join") {
+    val tagged = Pipeline.tagStage(spark, Pipeline.sentences(spark,
+      graft.corpus.Synth.corpus(spark, 8L, 4)))
+    val ann = Pipeline.annotateFrom(spark, tagged)
+    for (df <- Seq(ann.events, ann.relations)) {
+      val plan = df.queryExecution.executedPlan.toString
+      assert(!plan.contains("Exchange") && !plan.contains("Join"),
+        s"annotate must be narrow; plan:\n${plan.take(1500)}")
+    }
+    ann.caches.foreach(_.unpersist())
+  }
+
+  test("canonicalFormsCounted: the driver-local path returns a local relation") {
+    val mentions = Seq(("r1", "George Pataki"), ("r1", "Pataki"),
+      ("r2", "the convoy")).toDF("repo", "text")
+    val (map, n) = Canonicalize.canonicalFormsCounted(spark, mentions)
+    assert(n == 3 && isLocalRelation(map), map.queryExecution.logical.toString)
+  }
+
   // ---- connected components (link stage) ----
 
   test("CC: chain, star, and disjoint clusters converge to min label") {
@@ -126,33 +265,82 @@ class OperatorSpec extends AnyFunSuite {
   }
 
   test("local union-find CC == distributed label propagation") {
-    // same graph through both strategies
+    // same graph through the driver-local solve's union-find (labelled by
+    // component minimum, as canonicalFormsCounted groups it) and the
+    // distributed loop
     val vids = (1 to 10).map(i => s"v$i").toArray
     val edgePairs = Array(("v1", "v2"), ("v2", "v3"), ("v3", "v4"),
       ("v5", "v6"), ("v5", "v7"), ("v5", "v8"))
-    val local = Canonicalize.localComponents(spark, vids, edgePairs)
-      .as[(String, String)].collect().toMap
+    val uf = new Canonicalize.UnionFind(vids.length)
+    for ((s, d) <- edgePairs) uf.union(vids.indexOf(s), vids.indexOf(d))
+    val minOfRoot = vids.indices.groupBy(uf.find)
+      .map { case (r, ms) => r -> ms.map(vids).min }
+    val local = vids.indices.map(i => vids(i) -> minOfRoot(uf.find(i))).toMap
     val dist = Canonicalize.connectedComponents(spark,
       vids.toSeq.toDF("vid"), edgePairs.toSeq.toDF("src", "dst"))
       .as[(String, String)].collect().toMap
     assert(local == dist)
   }
 
-  test("canonicalForms: local and distributed CC paths emit the same map") {
-    val mentions = Seq(
-      ("r1", "George Pataki"), ("r1", "Pataki"), ("r1", "the convoy"),
-      ("r1", "a convoy"), ("r2", "Pataki"), ("r1", "Governor George Pataki")
-    ).toDF("repo", "text")
-    def run(): Map[(String, String), String] =
-      Canonicalize.canonicalForms(spark, mentions)
-        .as[(String, String, String)].collect()
+  def isLocalRelation(df: DataFrame): Boolean =
+    df.queryExecution.logical
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
+
+  /** The canonical map on the driver-local path and on the forced
+    * distributed path, plus whether the local path returned a local
+    * relation. */
+  def bothCanonicalPaths(mentions: DataFrame)
+      : (Map[(String, String), String], Map[(String, String), String], Boolean) = {
+    def collect(df: DataFrame) =
+      df.as[(String, String, String)].collect()
         .map { case (repo, text, canon) => (repo, text) -> canon }.toMap
-    val localPath = run() // 6 forms -> local union-find
+    val localMap = Canonicalize.canonicalForms(spark, mentions)
+    val localPath = collect(localMap)
     spark.conf.set("spark.graft.maxLocalCCForms", "0")
+    try (localPath, collect(Canonicalize.canonicalForms(spark, mentions)),
+      isLocalRelation(localMap))
+    finally spark.conf.unset("spark.graft.maxLocalCCForms")
+  }
+
+  test("canonicalForms: local and distributed CC paths emit the same map") {
+    val mentions = (Seq(
+      ("r1", "George Pataki"), ("r1", "Pataki"), ("r1", "the convoy"),
+      ("r1", "a convoy"), ("r2", "Pataki"), ("r1", "Governor George Pataki"),
+      // accented text: one block, the longer form wins
+      ("r1", "José Pérez"), ("r1", "Pérez"),
+      // length is in code points, not UTF-16 units: the 9-point form wins
+      // over the 6-point form of 10 UTF-16 units, both linked through "x"
+      ("r1", "x"), ("r1", "\uD83D\uDE00\uD83D\uDE00\uD83D\uDE00\uD83D\uDE00 x"),
+      ("r1", "abcdefg x"),
+      // an equal-length tie goes to the smaller UTF-8 string: U+FF5E
+      // sorts before U+1F600 in UTF-8, after it in UTF-16
+      ("r3", "\uFF5E \uD83D\uDE00 y"), ("r3", "\uD83D\uDE00 \uFF5E y"),
+      // trailing spaces split into an empty last token (split limit -1)
+      ("r1", "Pataki "), ("r1", "George Pataki ")
+    ) ++ // a hot block over the cap below: identity-canonical
+      (1 to 6).map(i => ("r1", s"spokesman number$i said")) ++
+      Seq(("r1", "spokesman said"))
+    ).toDF("repo", "text")
+    spark.conf.set("spark.graft.maxBlockForms", "5")
     try {
-      val distPath = run() // forced distributed label propagation
+      val (localPath, distPath, local) = bothCanonicalPaths(mentions)
+      assert(local, "the map fits: the local path returns a local relation")
       assert(localPath == distPath)
-    } finally spark.conf.unset("spark.graft.maxLocalCCForms")
+      assert(localPath(("r1", "x")) == "abcdefg x")
+      assert(localPath(("r3", "\uD83D\uDE00 \uFF5E y")) == "\uFF5E \uD83D\uDE00 y")
+      assert(localPath(("r1", "Pérez")) == "José Pérez")
+      assert(localPath(("r1", "Pataki ")) == "George Pataki ")
+      assert(localPath(("r1", "spokesman said")) == "spokesman said")
+    } finally spark.conf.unset("spark.graft.maxBlockForms")
+
+    // past the edge guard: 12 nested forms of one block make 66 containment
+    // edges > 4 x 12 forms, so the components go to the distributed loop
+    val nested = (0 until 12).map(k => ("r1", ((1 to k).map(i => s"a$i") :+ "x")
+      .mkString(" "))).toDF("repo", "text")
+    val (localPath, distPath, local) = bothCanonicalPaths(nested)
+    assert(!local, "the edge guard must fall back to the distributed loop")
+    assert(localPath == distPath)
+    assert(localPath.values.toSet == Set((1 to 11).map(i => s"a$i").mkString(" ") + " x"))
   }
 
   test("canonicalForms: hot-lemma block is capped, audited, and " +

@@ -45,6 +45,16 @@ class StoreSpec extends AnyFunSuite {
       p.startsWith("repo=") && f > 0 && b > 0 })
   }
 
+  test("a committed build leaves no cached blocks behind") {
+    // a long-lived session must not pile up storage per build: after the
+    // build and a count over its triples, no RDD the build cached is left
+    val before = spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
+    Pipeline.runCheckpointed(spark, Synth.corpus(spark, NFiles, Spf), tmp(), Sig)
+      .count()
+    val left = spark.sparkContext.getRDDStorageInfo.filterNot(i => before(i.id))
+    assert(left.isEmpty, left.map(i => s"${i.name} ${i.memSize} B").mkString("; "))
+  }
+
   test("rerun resumes every committed stage — compute closures never invoked") {
     val root = tmp()
     val t1 = triplesOf(root, Synth.corpus(spark, NFiles, Spf))
