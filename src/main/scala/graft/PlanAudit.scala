@@ -1,6 +1,10 @@
 package graft
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
+
+/** Writes `.explain("formatted")` of SparkEntry queries to one text file.
+  * Usage: runMain graft.PlanAudit [sfDir] [outFile] [query ...] (defaults:
+  * the sf0.01 test data, /tmp/plans.txt, every audited query below). */
 object PlanAudit {
   def main(args: Array[String]): Unit = {
     val spark = SparkSession.builder().master("local[8]")
@@ -34,15 +38,17 @@ object PlanAudit {
       "q68_sessionize", "q69_rollup", "q70_cube", "q71_zorder",
       "q72_sketch_distinct", "kg_triangles", "kg_kcore",
       "kg_edge_jaccard", "kg_truss", "q73_edit_pairs", "q74_prefix_jaccard")
+    val sfDir = args.lift(0).getOrElse(dir)
+    val outFile = args.lift(1).getOrElse("/tmp/plans.txt")
     val sb = new StringBuilder
-    for (n <- names) {
-      val df = SparkEntry.queries(n)(spark, dir)
+    for (n <- if (args.length > 2) args.drop(2).toSeq else names) {
+      val df = SparkEntry.queries(n)(spark, sfDir)
       sb.append(s"\n===== $n =====\n")
       sb.append(df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode))
     }
-    Files.writeString(Paths.get("/tmp/plans.txt"), sb.toString)
-    println("WROTE /tmp/plans.txt")
+    Files.writeString(Paths.get(outFile), sb.toString)
+    println(s"WROTE $outFile")
     spark.stop()
   }
 }

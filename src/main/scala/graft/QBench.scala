@@ -3,7 +3,7 @@ import scala.collection.concurrent.TrieMap
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd, SparkListenerStageSubmitted, SparkListenerJobStart, SparkListenerJobEnd}
 import org.apache.spark.sql.SparkSession
 import graft.corpus.Synth
-import graft.kg.Triples
+import graft.kg.{Pipeline, Triples}
 object QBench {
   def main(args: Array[String]): Unit = {
     val cores = args.lift(0).map(_.toInt).getOrElse(32)
@@ -57,8 +57,7 @@ object QBench {
       if (committed) {
         // the Bench/triplesFor shape: committed emit + set-dedup + cache,
         // then repeated aggregates against the warm cache
-        val distinct = Triples.fromFilesDistinctCommitted(spark,
-          Synth.corpus(spark, nFiles, 8))
+        val distinct = Triples.fromFiles(spark, Synth.corpus(spark, nFiles, 8))
         val c = distinct.count()
         val tMid = System.nanoTime()
         println(f"PROBE committed+dedup wall=${(tMid-t0)/1e9}%.1f")
@@ -72,7 +71,8 @@ object QBench {
         println("PROBE planHasCache=" + plan.contains("InMemory") +
           " planHead=" + plan.linesIterator.take(12).mkString(" / ").take(600))
         c
-      } else Triples.fromFiles(spark, Synth.corpus(spark, nFiles, 8)).count()
+      } else Triples.emit(spark,
+        Pipeline.annotate(spark, Synth.corpus(spark, nFiles, 8))).count()
     val wall = (System.nanoTime()-t0)/1e9
     println(f"PROBE wall=$wall%.1f totalTaskSec=${stageTime.values.sum/1000.0}%.1f triples=$n")
     stageTime.toSeq.sortBy(-_._2).take(25).foreach { case (id, ms) =>

@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
 
 import graft.corpus.Synth
-import graft.kg.Triples
+import graft.kg.{Pipeline, Triples}
 
 /** Two-parallelism scaling evidence for the north rule: the SAME KG job on
   * the SAME deterministic input at local[N] and local[4N] (the sandbox
@@ -86,10 +86,10 @@ object Scaling {
     try {
       val files = Synth.corpus(spark, nFiles, spf)
       // warm-up: JIT + codegen caches, tiny slice (excluded from timing)
-      Triples.fromFiles(spark, Synth.corpus(spark, 8, 2)).count()
+      Triples.emit(spark, Pipeline.annotate(spark, Synth.corpus(spark, 8, 2))).count()
       val nSentences = nFiles * spf
       val t0 = System.nanoTime()
-      val nTriples = Triples.fromFiles(spark, files).count()
+      val nTriples = Triples.emit(spark, Pipeline.annotate(spark, files)).count()
       val sec = (System.nanoTime() - t0) / 1e9
       Run(cores, sec, nTriples, nSentences)
     } finally spark.stop()

@@ -45,7 +45,7 @@ object SparkEntry {
       // was the round-3 kg_entities_top bench residual). The
       // cluster-scale analog of this snapshot is the Store stage commit
       // in Pipeline.runCheckpointed.
-      Triples.fromFilesDistinctCommitted(spark, Synth.corpus(spark, nFiles, spf))
+      Triples.fromFiles(spark, Synth.corpus(spark, nFiles, spf))
     })
 
   /** The PRIOR corpus snapshot for kg_snapshot_delta: the first half of
@@ -55,7 +55,7 @@ object SparkEntry {
   private def priorTriplesFor(spark: SparkSession, dir: String): DataFrame =
     tripleCache.getOrElseUpdate(s"$dir#prior", {
       val (nFiles, spf) = Synth.sizeForSfDir(dir)
-      Triples.fromFilesDistinctCommitted(spark,
+      Triples.fromFiles(spark,
         Synth.corpus(spark, math.max(1L, nFiles / 2), spf))
     })
 
@@ -264,13 +264,14 @@ object SparkEntry {
       import s.implicits._
       // stage snapshots from the shared golden cache (goldenStages) — the
       // round-4 variant re-ingested test_ace.pred.json per call;
-      // emitCommitted, not emit: Bench iterates every query in one session,
+      // materialize, not emit: Bench iterates every query in one session,
       // and the lazy emit would retain events/formMap/blockCanon caches
       val (tagged, events) = goldenStages(s, "test_ace")
       val emptyRels = s.emptyDataset[(String, Int, Int, String)]
         .toDF("sentKey", "lAligned", "rAligned", "label")
-      Triples.emitCommitted(s,
-        Pipeline.Annotated(tagged.as[Pipeline.TaggedSentence], events, emptyRels))
+      Triples.materialize(s,
+        Pipeline.Annotated(tagged.as[Pipeline.TaggedSentence], events, emptyRels),
+        distinct = false)
         .select("subj", "pred", "obj").orderBy("subj", "pred", "obj")
     }),
 

@@ -20,6 +20,13 @@ import graft.text.Text
   * objects shipped in the closure, the moral equivalent of a broadcast of
   * model parameters).
   *
+  * The front end is defined once, per file and per sentence:
+  * [[fileSentences]] (sha256, natural text, sentence split, tokens) and
+  * [[tagSentence]] (NER, triggers, negation cue and scope). The in-memory
+  * build ([[annotate]]), the committed build ([[runCheckpointed]], via
+  * [[extract]] and [[tagStage]]) and the streaming narrow triples all
+  * call them.
+  *
   * Every annotate step (A1 heads, J4 pairs, J1 alignment, P7/J3 endpoint
   * mapping, U1 injection, J2 durations, P9 speculation) reads only one
   * sentence — the reference annotates sentence by sentence,
@@ -72,43 +79,49 @@ object Pipeline {
 
   // ---- stage 1: scan + sentence segmentation + tokenization ----
 
-  /** S1 + P1: source files → sentences, tokenized ONCE (the reference
-    * re-tokenizes per component and fuzz-joins, SURVEY.md J1; we share).
-    * The flatMap is narrow — no shuffle. */
-  def sentences(spark: SparkSession, files: Dataset[SourceFile]): Dataset[Sentence] = {
-    import spark.implicits._
-    files.flatMap { f =>
-      val sha = Text.sha256(f.content)
-      Text.naturalText(f.lang, f.content).flatMap { case (lineNum, text) =>
-        Text.sentSplit(text).zipWithIndex.map { case (sent, senNum) =>
-          Sentence(f.repo, f.path, sha, lineNum, senNum, sent, Text.tokenize(sent))
-        }
+  /** S1 + P1 for one file: content sha256, natural-language lines,
+    * sentence split, tokens — each sentence tokenized ONCE (the reference
+    * re-tokenizes per component and fuzz-joins, SURVEY.md J1; we share). */
+  def fileSentences(repo: String, path: String, lang: String,
+      content: String): Seq[Sentence] = {
+    val sha = Text.sha256(content)
+    Text.naturalText(lang, content).flatMap { case (lineNum, text) =>
+      Text.sentSplit(text).zipWithIndex.map { case (sent, senNum) =>
+        Sentence(repo, path, sha, lineNum, senNum, sent, Text.tokenize(sent))
       }
     }
   }
 
+  /** S1 + P1: source files → sentences. The flatMap is narrow — no
+    * shuffle. */
+  def sentences(spark: SparkSession, files: Dataset[SourceFile]): Dataset[Sentence] = {
+    import spark.implicits._
+    files.flatMap(f => fileSentences(f.repo, f.path, f.lang, f.content))
+  }
+
   // ---- stage 2: NER + trigger + negation tagging (BETTER analog) ----
 
-  /** mapPartitions tagging stage: NER CRF decode → trigger decode with
-    * P11a mask → negation cue+scope (two chained passes, train.py:1791-
-    * 1813). Narrow — no shuffle. */
+  /** Tagging for one sentence: NER CRF decode → trigger decode with P11a
+    * mask → negation cue+scope (two chained passes, train.py:1791-1813). */
+  def tagSentence(s: Sentence): TaggedSentence = {
+    val ner = Taggers.nerSpans(s.tokens)
+    val triggers = Taggers.triggerSpans(s.tokens, ner)
+    val cues = Taggers.negationCues(s.tokens)
+    val scope = Taggers.negationScope(s.tokens, cues)
+    TaggedSentence(s.repo, s.path, s.contentSha, s.lineNum, s.senNum,
+      sentKeyOf(s.repo, s.path, s.lineNum, s.senNum),
+      s.tokens, ner, triggers, cues, scope)
+  }
+
+  /** mapPartitions tagging stage: [[tagSentence]] per sentence. Narrow —
+    * no shuffle. */
   def tagStage(spark: SparkSession, sents: Dataset[Sentence]): Dataset[TaggedSentence] = {
     import spark.implicits._
     // K3: length-sorted batching (joint_model.py:62 pad_collate) — groups
     // similar-length sentences so a batched scorer pads minimally; narrow
     // (within-partition) sort, no shuffle
     sents.sortWithinPartitions(size(col("tokens")).desc)
-      .mapPartitions { it =>
-      it.map { s =>
-        val ner = Taggers.nerSpans(s.tokens)
-        val triggers = Taggers.triggerSpans(s.tokens, ner)
-        val cues = Taggers.negationCues(s.tokens)
-        val scope = Taggers.negationScope(s.tokens, cues)
-        TaggedSentence(s.repo, s.path, s.contentSha, s.lineNum, s.senNum,
-          sentKeyOf(s.repo, s.path, s.lineNum, s.senNum),
-          s.tokens, ner, triggers, cues, scope)
-      }
-      }
+      .mapPartitions(_.map(tagSentence))
   }
 
   /** K3's batching SEMANTICS made driver-visible. The physical K3 op in
@@ -153,7 +166,7 @@ object Pipeline {
   }
 
   /** X1 for one sentence: one event per trigger, arguments tagged. */
-  private def triggerEvents(t: TaggedSentence): Seq[EventRow] =
+  private[graft] def triggerEvents(t: TaggedSentence): Seq[EventRow] =
     t.triggers.map { tr =>
       val args = Taggers.argumentSpans(t.tokens, t.ner, tr)
       EventRow(t.repo, t.path, t.contentSha, t.lineNum, t.senNum, t.sentKey,
@@ -438,13 +451,8 @@ object Pipeline {
     import spark.implicits._
     files.flatMap { f =>
       try {
-        val sha = Text.sha256(f.content)
-        Text.naturalText(f.lang, f.content).flatMap { case (lineNum, text) =>
-          Text.sentSplit(text).zipWithIndex.map { case (sent, senNum) =>
-            SentOrErr(Some(Sentence(f.repo, f.path, sha, lineNum, senNum, sent,
-              Text.tokenize(sent))), None)
-          }
-        }
+        fileSentences(f.repo, f.path, f.lang, f.content)
+          .map(s => SentOrErr(Some(s), None))
       } catch {
         case e: Exception =>
           Seq(SentOrErr(None, Some(QuarantineRow(f.repo, f.path, -1, -1,
@@ -462,7 +470,7 @@ object Pipeline {
       // every frame persist()ed while building this Annotated — a
       // long-lived session (Bench/serving) unpersists them once the
       // downstream triple frame is materialized, instead of accumulating
-      // cached partitions per emit (Triples.emitCommitted does this)
+      // cached partitions per emit (Triples.materialize does this)
       caches: Seq[DataFrame] = Seq.empty)
 
   def annotate(spark: SparkSession, files: Dataset[SourceFile]): Annotated = {

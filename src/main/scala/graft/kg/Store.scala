@@ -73,11 +73,12 @@ object Store {
     if (!Files.exists(p)) None
     else {
       val s = Files.readString(p)
-      val sig = "\"inputSig\":\"([^\"]*)\"".r.findFirstMatchIn(s).map(_.group(1))
+      // string fields are written escaped by `q`: match escaped strings
+      def str(field: String): Option[String] =
+        ("\"" + field + "\":\"((?:[^\"\\\\]|\\\\.)*)\"").r
+          .findFirstMatchIn(s).map(m => unescape(m.group(1)))
       val rows = "\"rows\":(\\d+)".r.findFirstMatchIn(s).map(_.group(1).toLong)
-      val schema = "\"schema\":\"((?:[^\"\\\\]|\\\\.)*)\"".r
-        .findFirstMatchIn(s).map(m => unescape(m.group(1)))
-      for (a <- sig; b <- rows; c <- schema) yield (a, b, c)
+      for (a <- str("inputSig"); b <- rows; c <- str("schema")) yield (a, b, c)
     }
   }
 

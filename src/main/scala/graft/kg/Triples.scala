@@ -15,36 +15,53 @@ import graft.model._
   *   (event, sameAs, canonicalEvent).
   * Lineage columns (repo, path, content sha256) ride on every row — the
   * per-row invariant of BASELINE.json.
+  *
+  * One entry point per output shape: [[emit]] (lazy, annotations →
+  * triples), [[materialize]] (eager, caches released, optionally a set)
+  * and [[fromFiles]] (files → the materialized triple set).
   */
 object Triples {
-
-  private val tripleCols = Seq("subj", "pred", "obj", "repo", "path", "contentSha")
 
   /** Emit all triples from an annotated corpus. `events` is the enriched
     * EventRow frame (with duration + speculation); `relations` is the
     * aligned relation frame. The returned frame is LAZY and depends on
     * caches persisted here and in Pipeline — short-lived sessions can
-    * consume it directly; long-lived sessions should use `emitCommitted`,
+    * consume it directly; long-lived sessions should use [[materialize]],
     * which materializes the result and releases every intermediate
     * cache. */
   def emit(spark: SparkSession, ann: Pipeline.Annotated): DataFrame =
     emitWithCaches(spark, ann)._1
 
-  /** Materialized emit for long-lived sessions: persists the triple frame,
-    * fills the cache, then unpersists every intermediate cache (this
-    * emit's events/formMap/blockCanon AND the Annotated stage caches) so
-    * repeated pipeline runs don't accumulate executor storage.
-    * `numPartitions > 0` compacts the union (many small partitions) before
-    * caching. */
-  def emitCommitted(spark: SparkSession, ann: Pipeline.Annotated,
-      numPartitions: Int = 0): DataFrame = {
-    val (out, caches) = emitWithCaches(spark, ann)
-    val compacted = if (numPartitions > 0) out.repartition(numPartitions) else out
-    val cached = compacted.persist()
-    cached.count()
+  /** Materialized emit for long-lived sessions, via an EAGER
+    * localCheckpoint in a single pass, then every intermediate cache (this
+    * emit's events/formMap/blockCanon AND the Annotated stage caches) is
+    * released, so repeated pipeline runs don't accumulate executor
+    * storage. The checkpoint truncates lineage, so repeated queries
+    * against the returned frame plan against a flat LogicalRDD instead of
+    * re-canonicalizing the whole pipeline DAG (measured ~9 s of driver
+    * time per query on the persisted-lineage variant).
+    *
+    * `distinct`: set semantics. Deduplication happens PER BRANCH inside
+    * the emit (arg and entity triples, the only two branches whose rows
+    * can repeat — with one commit per (repo, path), every other branch
+    * emits at most one row per event id or per distinct (sentKey, l, r)
+    * pair by construction), so only ~40%
+    * of the union's rows cross a dedup shuffle instead of the whole
+    * six-string frame (GoldenPipelineSpec pins branch-dedup ≡ global
+    * dedup). */
+  def materialize(spark: SparkSession, ann: Pipeline.Annotated,
+      distinct: Boolean): DataFrame = {
+    val (out, caches) = emitWithCaches(spark, ann, distinct)
+    val snapped = out.localCheckpoint()
     (caches ++ ann.caches).foreach(_.unpersist())
-    cached
+    snapped
   }
+
+  /** End-to-end in memory: source files → the materialized triple SET
+    * (see [[materialize]]). The committed build is
+    * `Pipeline.runCheckpointed`; both give the same triple set. */
+  def fromFiles(spark: SparkSession, files: Dataset[SourceFile]): DataFrame =
+    materialize(spark, Pipeline.annotate(spark, files), distinct = true)
 
   /** `committedEvents`: the row count of `ann.events` when they are a
     * committed snapshot — re-reading the snapshot is cheaper than caching
@@ -91,12 +108,11 @@ object Triples {
       .select(Seq(col("eventId").as("subj"), col("role").as("pred"),
         col("canonical").as("obj")) ++ lineage: _*)
     // set semantics: an event can carry the same (role, text) twice, and
-    // two distinct mention texts can canonicalize to one form — dedup on
-    // the triple identity only (lineage is functionally dependent on the
-    // subject, so the kept row is deterministic in content)
-    val argTriples =
-      if (distinct) argTriplesRaw.dropDuplicates("subj", "pred", "obj")
-      else argTriplesRaw
+    // two distinct mention texts can canonicalize to one form — dedup the
+    // whole row: lineage is NOT functionally dependent on the subject when
+    // one (repo, path) appears under two commits, and each copy keeps its
+    // own contentSha
+    val argTriples = if (distinct) argTriplesRaw.distinct() else argTriplesRaw
 
     // (event, hasDuration, D) for non-blank durations (J2 output)
     val durTriples = events.filter(col("duration") =!= "")
@@ -129,11 +145,8 @@ object Triples {
           array_join(slice(col("tokens"), col("n.start") + 1,
             col("n.end") - col("n.start") + 1), " ")).as("obj")) ++ lineage: _*)
     // set semantics: the same surface entity recurs within a document
-    // (~10% of rows at bench scale); subj is the document, so lineage is
-    // again functionally dependent and the dedup is content-deterministic
-    val entTriples =
-      if (distinct) entTriplesRaw.dropDuplicates("subj", "pred", "obj")
-      else entTriplesRaw
+    // (~10% of rows at bench scale); whole-row dedup, as for arg triples
+    val entTriples = if (distinct) entTriplesRaw.distinct() else entTriplesRaw
 
     // (event, sameAs, canonicalEvent) — event linking: block on
     // (repo, trigger lemma, type); canonical id = min eventId in block.
@@ -161,38 +174,6 @@ object Triples {
       .unionByName(specTriples).unionByName(relTriples)
       .unionByName(entTriples).unionByName(sameAs)
     (union, Seq(events, formMap, blockCanon))
-  }
-
-  /** End-to-end: source files → triples (lazy; see emit). */
-  def fromFiles(spark: SparkSession, files: Dataset[SourceFile]): DataFrame =
-    emit(spark, Pipeline.annotate(spark, files))
-
-  /** End-to-end, materialized, intermediates released (see emitCommitted). */
-  def fromFilesCommitted(spark: SparkSession, files: Dataset[SourceFile],
-      numPartitions: Int = 0): DataFrame =
-    emitCommitted(spark, Pipeline.annotate(spark, files), numPartitions)
-
-  /** Set-semantics committed emit, materialized via an EAGER
-    * localCheckpoint in a single pass — no intermediate persist of the raw
-    * union. Deduplication happens PER BRANCH inside the emit (arg and
-    * entity triples, the only two branches whose rows can repeat — every
-    * other branch emits at most one row per event id or per distinct
-    * (sentKey, l, r) pair by construction), so only ~40% of the union's
-    * rows cross a dedup shuffle instead of the whole six-string frame
-    * (the round-4 variant globally dropDuplicates'd all 527k rows; a
-    * DistinctEmitSpec pins branch-dedup ≡ global-dedup). The checkpoint
-    * truncates lineage, so repeated queries against the returned frame
-    * plan against a flat LogicalRDD instead of re-canonicalizing the
-    * whole pipeline DAG (measured ~9 s of driver time per query on the
-    * persisted-lineage variant). Every pipeline intermediate cache is
-    * released before returning. */
-  def fromFilesDistinctCommitted(spark: SparkSession,
-      files: Dataset[SourceFile]): DataFrame = {
-    val ann = Pipeline.annotate(spark, files)
-    val (out, caches) = emitWithCaches(spark, ann, distinct = true)
-    val snapped = out.localCheckpoint()
-    (caches ++ ann.caches).foreach(_.unpersist())
-    snapped
   }
 
   /** Changelog between two KG snapshots: (op ∈ {add, del}, subj, pred,

@@ -524,8 +524,8 @@ object Dedup {
     *
     * CC strategy mirrors link/Canonicalize: the pair graph is usually
     * TINY relative to the corpus (bounded by the near-dup rate), so up to
-    * `maxLocalEdges` pairs a driver-local union-find solves it exactly
-    * in one collect; larger graphs fall back to the distributed min-label
+    * `maxLocalEdges` pairs its driver-local union-find (over an index of
+    * the collected vertex ids) solves it exactly in one collect; larger graphs fall back to the distributed min-label
     * propagation loop. Both yield the identical min-id labeling. */
   def dedupClusters(docs: DataFrame, pairs: DataFrame,
       idCol: String = "doc_id", textCol: String = "text",
@@ -538,17 +538,13 @@ object Dedup {
     val comp: DataFrame =
       if (collected.length <= maxLocalEdges) {
         val vids = collected.flatMap(e => Seq(e._1, e._2)).distinct
-        val parent = scala.collection.mutable.Map(vids.map(v => v -> v): _*)
-        def find(x: Long): Long = {
-          var r = x
-          while (parent(r) != r) r = parent(r)
-          var c = x
-          while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
-          r
-        }
-        for ((s, d) <- collected) parent(find(s)) = find(d)
-        val minOfRoot = vids.groupBy(find).map { case (r, ms) => r -> ms.min }
-        vids.toSeq.map(v => (v, minOfRoot(find(v)))).toDF("vid", "cluster_id")
+        val index = vids.zipWithIndex.toMap
+        val uf = new graft.link.Canonicalize.UnionFind(vids.length)
+        for ((s, d) <- collected) uf.union(index(s), index(d))
+        val minOfRoot = vids.indices.groupBy(uf.find)
+          .map { case (r, ms) => r -> ms.map(i => vids(i)).min }
+        vids.indices.map(i => (vids(i), minOfRoot(uf.find(i))))
+          .toDF("vid", "cluster_id")
       } else {
         val e = edges.toDF("src", "dst")
         val verts = e.select(col("src").as("vid"))

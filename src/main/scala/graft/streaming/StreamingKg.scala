@@ -21,7 +21,10 @@ import graft.text.Text
   *
   * The streaming path runs the NARROW subset of the DAG (sentence split,
   * tagging, per-event argument decode, duration, speculation — all
-  * per-sentence, shuffle-free, so they run identically under micro-batch).
+  * per-sentence, shuffle-free, so they run identically under micro-batch)
+  * through the same per-file and per-sentence functions as the batch
+  * builds: every narrow triple is a batch triple, role triples up to
+  * argument canonicalization (StreamingSpec pins both).
   * Cross-sentence ops (TempRel endpoint alignment across components,
   * canonicalization, sameAs linking) are batch compaction over the sink —
   * the standard lambda split, and the reason the batch pipeline commits
@@ -38,34 +41,29 @@ object StreamingKg {
 
   /** Narrow per-sentence triple extraction — legal on a streaming Dataset
     * (flatMap only, no shuffle). Works identically on batch inputs, which
-    * is how the equivalence test pins the semantics. */
+    * is how the equivalence test pins the semantics. Shares the batch
+    * front end ([[Pipeline.fileSentences]], [[Pipeline.tagSentence]],
+    * [[Pipeline.triggerEvents]]) and emits the per-sentence subset of
+    * `Triples.emit`: each trigger's own duration, argument text as
+    * tagged (not canonicalized), no U1-injected events, no relations. */
   def narrowTriples(spark: SparkSession, files: Dataset[StampedFile]): Dataset[StampedTriple] = {
     import spark.implicits._
     files.flatMap { f =>
-      val sha = Text.sha256(f.content)
-      Text.naturalText(f.lang, f.content).flatMap { case (lineNum, text) =>
-        Text.sentSplit(text).zipWithIndex.flatMap { case (sent, senNum) =>
-          val tokens = Text.tokenize(sent)
-          val sentKey = Pipeline.sentKeyOf(f.repo, f.path, lineNum, senNum)
-          val ner = Taggers.nerSpans(tokens)
-          val triggers = Taggers.triggerSpans(tokens, ner)
-          val cues = Taggers.negationCues(tokens)
-          val scope = Taggers.negationScope(tokens, cues)
-          def t3(s: String, p: String, o: String) =
-            StampedTriple(f.ts, s, p, o, f.repo, f.path, sha)
-          val eventTriples = triggers.flatMap { tr =>
-            val eid = Pipeline.eventIdOf(sentKey, tr.start)
-            val args = Taggers.argumentSpans(tokens, ner, tr)
-            val dur = Taggers.durationOf(tr.text)
-            Seq(t3(eid, "hasType", tr.eventType)) ++
-              args.map(a => t3(eid, a.role, a.text)) ++
-              (if (dur.nonEmpty) Seq(t3(eid, "hasDuration", dur)) else Nil) ++
-              (if (scope.lift(tr.start).contains(1)) Seq(t3(eid, "speculated", "true")) else Nil)
-          }
-          val entTriples = ner.map(nsp => t3(s"${f.repo}/${f.path}", "hasEntity",
-            s"${nsp.label}:${Text.spanText(tokens, nsp.start, nsp.end)}"))
-          eventTriples ++ entTriples
+      Pipeline.fileSentences(f.repo, f.path, f.lang, f.content).flatMap { s =>
+        val t = Pipeline.tagSentence(s)
+        def t3(subj: String, p: String, o: String) =
+          StampedTriple(f.ts, subj, p, o, f.repo, f.path, s.contentSha)
+        val eventTriples = Pipeline.triggerEvents(t).flatMap { e =>
+          val dur = Taggers.durationOf(e.trigText)
+          Seq(t3(e.eventId, "hasType", e.eventType)) ++
+            e.args.map(a => t3(e.eventId, a.role, a.text)) ++
+            (if (dur.nonEmpty) Seq(t3(e.eventId, "hasDuration", dur)) else Nil) ++
+            (if (t.negationScope.lift(e.trigStart).contains(1))
+              Seq(t3(e.eventId, "speculated", "true")) else Nil)
         }
+        val entTriples = t.ner.map(nsp => t3(s"${f.repo}/${f.path}", "hasEntity",
+          s"${nsp.label}:${Text.spanText(t.tokens, nsp.start, nsp.end)}"))
+        eventTriples ++ entTriples
       }
     }
   }

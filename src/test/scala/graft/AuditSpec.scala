@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.corpus.Synth
 import graft.kg.Triples
+import graft.model.SourceFile
 
 /** integrityAudit (q58): clean pipeline output audits empty; each planted
   * violation class is caught, and nothing else rides along. */
@@ -13,8 +14,7 @@ class AuditSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("clean pipeline triples audit to zero violations") {
-    val tri = Triples.fromFilesDistinctCommitted(spark,
-      Synth.corpus(spark, 40L, 6))
+    val tri = Triples.fromFiles(spark, Synth.corpus(spark, 40L, 6))
     assert(Triples.integrityAudit(tri).isEmpty)
   }
 
@@ -43,26 +43,10 @@ class AuditSpec extends AnyFunSuite {
   }
 
   test("hostile content survives the full pipeline: clean audit, escaped RDF, lineage intact") {
-    import graft.model.SourceFile
-    // content a real source-code corpus throws at an ingester: tabs,
-    // CRLF, unicode quotes, an empty file, a single huge line, and a
-    // normal sentence as the control — the pipeline must not crash,
-    // must audit clean, and the N-Triples sink must leave no raw
-    // control characters in its serialized lines
-    val hostile = Seq(
-      SourceFile("r0", "a/tabs.py", "c0", "py",
-        "# The\tmeeting\thappened\tbefore\tthe\tattack.\n"),
-      SourceFile("r0", "b/crlf.go", "c1", "go",
-        "// The war ended.\r\n// Then the talks began.\r\n"),
-      SourceFile("r0", "c/uni.rs", "c2", "rs",
-        "// “The strike” lasted days — maybe weeks."),
-      SourceFile("r0", "d/empty.md", "c3", "md", ""),
-      SourceFile("r0", "e/huge.c", "c4", "c",
-        "// " + Seq.fill(500)("word").mkString(" ") + " attack ."),
-      SourceFile("r0", "f/ctrl.js", "c5", "js",
-        "// before\u0000after the \"election\" ended.")
-    ).toDS()
-    val tri = Triples.fromFilesDistinctCommitted(spark, hostile)
+    // the pipeline must not crash, must audit clean, and the N-Triples
+    // sink must leave no raw control characters in its serialized lines
+    val hostile = AuditSpec.hostileFiles.toDS()
+    val tri = Triples.fromFiles(spark, hostile)
     tri.count() // materializes without throwing
     assert(Triples.integrityAudit(tri).isEmpty)
     // every emitted triple keeps its lineage stamp
@@ -74,4 +58,23 @@ class AuditSpec extends AnyFunSuite {
     assert(lines.forall(l => !l.exists(c => c == '\t' || c == '\n' || c == '\r')))
     assert(lines.forall(l => l.endsWith("\" .") || l.endsWith("> .")))
   }
+}
+
+object AuditSpec {
+  /** Content a real source-code corpus throws at an ingester: tabs, CRLF,
+    * unicode quotes, an empty file, a single huge line, and a normal
+    * sentence as the control. */
+  val hostileFiles: Seq[SourceFile] = Seq(
+    SourceFile("r0", "a/tabs.py", "c0", "py",
+      "# The\tmeeting\thappened\tbefore\tthe\tattack.\n"),
+    SourceFile("r0", "b/crlf.go", "c1", "go",
+      "// The war ended.\r\n// Then the talks began.\r\n"),
+    SourceFile("r0", "c/uni.rs", "c2", "rs",
+      "// “The strike” lasted days — maybe weeks."),
+    SourceFile("r0", "d/empty.md", "c3", "md", ""),
+    SourceFile("r0", "e/huge.c", "c4", "c",
+      "// " + Seq.fill(500)("word").mkString(" ") + " attack ."),
+    SourceFile("r0", "f/ctrl.js", "c5", "js",
+      "// before\u0000after the \"election\" ended.")
+  )
 }

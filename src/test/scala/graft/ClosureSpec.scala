@@ -71,8 +71,7 @@ class ClosureSpec extends AnyFunSuite {
   }
 
   test("pipeline closure converges under the cap on a real corpus") {
-    val tri = Triples.fromFilesDistinctCommitted(spark,
-      Synth.corpus(spark, 40L, 6))
+    val tri = Triples.fromFiles(spark, Synth.corpus(spark, 40L, 6))
     val canon = tri.filter(col("pred") === "sameAs")
       .select(col("subj").as("ev"), col("obj").as("canon"))
     val raw = tri.filter(col("pred") === "BEFORE")

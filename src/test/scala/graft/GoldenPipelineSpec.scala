@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.corpus.Synth
 import graft.gold.GoldDeriver
-import graft.kg.Triples
+import graft.kg.{Pipeline, Triples}
 import graft.text.Text
 import graft.T6
 
@@ -22,7 +22,7 @@ class GoldenPipelineSpec extends AnyFunSuite {
 
   lazy val pipelineTriples: Set[T6] = {
     val files = Synth.corpus(spark, NFiles, Spf)
-    Triples.fromFiles(spark, files).as[T6].collect().toSet
+    Triples.emit(spark, Pipeline.annotate(spark, files)).as[T6].collect().toSet
   }
 
   lazy val goldTriples: Set[T6] =
@@ -89,12 +89,12 @@ class GoldenPipelineSpec extends AnyFunSuite {
     assert(anchored, "some doc lost its zero-anchored predicate")
   }
 
-  test("branch-level dedup in fromFilesDistinctCommitted equals the global triple SET") {
+  test("branch-level dedup in Triples.fromFiles equals the global triple SET") {
     // the distinct snapshot dedups only the two branches that can repeat
     // (arg + entity triples); this pins that shortcut to exact global
     // set semantics — any branch that ever grows duplicate rows fails here
     val files = Synth.corpus(spark, NFiles, Spf)
-    val branchDedup = Triples.fromFilesDistinctCommitted(spark, files)
+    val branchDedup = Triples.fromFiles(spark, files)
       .as[T6].collect().toSet
     assert(branchDedup == pipelineTriples) // pipelineTriples is set(emit)
   }

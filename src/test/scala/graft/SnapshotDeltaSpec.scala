@@ -18,10 +18,8 @@ class SnapshotDeltaSpec extends AnyFunSuite {
       df.select("subj", "pred", "obj").distinct().collect()
         .map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
 
-    val current = Triples.fromFilesDistinctCommitted(
-      spark, Synth.corpus(spark, 8L, 3))
-    val prior = Triples.fromFilesDistinctCommitted(
-      spark, Synth.corpus(spark, 4L, 3))
+    val current = Triples.fromFiles(spark, Synth.corpus(spark, 8L, 3))
+    val prior = Triples.fromFiles(spark, Synth.corpus(spark, 4L, 3))
     val cur = tripleSet(current)
     val pri = tripleSet(prior)
     assert(cur.nonEmpty && pri.nonEmpty)

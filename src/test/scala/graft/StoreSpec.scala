@@ -6,7 +6,7 @@ import scala.util.Try
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.corpus.Synth
-import graft.kg.{Pipeline, Store}
+import graft.kg.{Pipeline, Store, Triples}
 import graft.model.SourceFile
 
 /** Checkpoint/resume + quarantine semantics (north rule: "resumable from
@@ -65,6 +65,21 @@ class StoreSpec extends AnyFunSuite {
     assert(t1 == t2)
   }
 
+  test("rerun resumes under an input signature holding a quote and a backslash") {
+    // the manifest stores the signature escaped; a raw read-back never
+    // matched it, so every rerun recomputed every stage
+    val root = tmp()
+    val sig = "in\\put\"x"
+    val t1 = Pipeline.runCheckpointed(spark, Synth.corpus(spark, NFiles, Spf),
+      root, sig).as[T6].collect().toSet
+    assert(Store.readManifest(root, "sentences").map(_._1).contains(sig))
+    val poison = Synth.corpus(spark, NFiles, Spf)
+      .map { f => require(false, "stage recomputed despite committed manifest"); f }
+    val t2 = Pipeline.runCheckpointed(spark, poison, root, sig)
+      .as[T6].collect().toSet
+    assert(t1 == t2)
+  }
+
   test("kill-after-stage-k: deleting later snapshots resumes from last committed") {
     val root = tmp()
     val t1 = triplesOf(root, Synth.corpus(spark, NFiles, Spf))
@@ -116,5 +131,26 @@ class StoreSpec extends AnyFunSuite {
     assert(n2 == n1)
     val m = Files.readString(Store.manifestPath(root, "triples"))
     assert(m.contains("\"metrics\"") && m.contains("\"wall_sec\""))
+  }
+
+  test("in-memory Triples.fromFiles and the committed build give the same " +
+      "triple set") {
+    // the Synth corpus, hostile content, and every Synth (repo, path)
+    // again under a second commit with new content
+    val synth = Synth.corpus(spark, NFiles, Spf)
+    val spf = Spf // a local, so the closure does not capture the suite
+    val twoCommits = synth.unionByName(synth.map(f => f.copy(commit = "c2",
+      content = Synth.contentFor(f.repo, f.path + ".v2", f.lang, spf))))
+    val inputs = Seq("synth" -> synth,
+      "hostile" -> AuditSpec.hostileFiles.toDS(), "twoCommits" -> twoCommits)
+    for ((name, files) <- inputs) {
+      val inMemory = Triples.fromFiles(spark, files).as[T6].collect().toSet
+      val committed = Pipeline.runCheckpointed(spark, files, tmp(), name)
+        .distinct().as[T6].collect().toSet
+      assert(inMemory.nonEmpty, name)
+      assert(inMemory == committed, s"$name: in-memory only " +
+        s"${(inMemory -- committed).take(3)}, committed only " +
+        s"${(committed -- inMemory).take(3)}")
+    }
   }
 }

@@ -37,6 +37,24 @@ class StreamingSpec extends AnyFunSuite {
     assert(batch.nonEmpty)
   }
 
+  test("every narrow triple is a batch triple (role triples by subject " +
+      "and role: batch canonicalizes the argument text)") {
+    val files = Synth.corpus(spark, 24L, 4)
+    val narrow = StreamingKg.narrowTriples(spark, files.map(f =>
+      StampedFile(new Timestamp(0L), f.repo, f.path, f.commit, f.lang, f.content)))
+      .collect()
+    val batch = graft.kg.Triples.fromFiles(spark, files).as[T6].collect().toSet
+    val exact = Set("hasType", "hasDuration", "speculated", "hasEntity")
+    val (fixed, roles) = narrow.partition(t => exact(t.pred))
+    assert(fixed.map(_.pred).toSet.contains("hasType") && roles.nonEmpty)
+    val missing = fixed.map(t => T6(t.subj, t.pred, t.obj, t.repo, t.path,
+      t.contentSha)).filterNot(batch)
+    assert(missing.isEmpty, missing.take(5).mkString("; "))
+    val batchRoles = batch.map(t => (t.subj, t.pred))
+    val missingRoles = roles.map(t => (t.subj, t.pred)).filterNot(batchRoles)
+    assert(missingRoles.isEmpty, missingRoles.take(5).mkString("; "))
+  }
+
   test("watermarked windowed counts aggregate per 5-minute window") {
     val mem = MemoryStream[StampedFile](spark)
     mem.addData(stamped(0, 1), stamped(1, 2), stamped(2, 7), stamped(3, 8))
