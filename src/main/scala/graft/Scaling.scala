@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 import graft.corpus.Synth
 import graft.kg.{Pipeline, Triples}
 
@@ -29,9 +27,8 @@ import graft.kg.{Pipeline, Triples}
   */
 object Scaling {
 
-  case class Run(cores: Int, sec: Double, triples: Long, sentences: Long) {
+  case class Run(cores: Int, sec: Double, triples: Long) {
     def triplesPerSec: Double = triples / sec
-    def sentencesPerSec: Double = sentences / sec
   }
 
   /** CPU count seen before any pinning — the unpin mask is derived from
@@ -73,25 +70,15 @@ object Scaling {
 
   def runOnce(cores: Int, nFiles: Long, spf: Int, pinned: Boolean): Run = {
     if (pinned) pin(s"0-${cores - 1}")
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(s"graft-scaling-$cores")
-      .config("spark.sql.shuffle.partitions", cores * 2)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(cores, shufflePartitions = cores * 2)
     try {
       val files = Synth.corpus(spark, nFiles, spf)
       // warm-up: JIT + codegen caches, tiny slice (excluded from timing)
       Triples.emit(spark, Pipeline.annotate(spark, Synth.corpus(spark, 8, 2))).count()
-      val nSentences = nFiles * spf
       val t0 = System.nanoTime()
       val nTriples = Triples.emit(spark, Pipeline.annotate(spark, files)).count()
       val sec = (System.nanoTime() - t0) / 1e9
-      Run(cores, sec, nTriples, nSentences)
+      Run(cores, sec, nTriples)
     } finally spark.stop()
   }
 

@@ -7,7 +7,7 @@ import org.apache.spark.sql.expressions.Window
 
 import graft.corpus.Synth
 import graft.kg.{Pipeline, Triples}
-import graft.ops.{Decontaminate, Dedup, Multimodal, Packing, Sampling, Similarity, TextAnalysis}
+import graft.ops.{Decontaminate, Dedup, Packing, Sampling, Similarity, TextAnalysis}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -143,10 +143,6 @@ object SparkEntry {
         col("a.doc") === col("b.doc") && col("a.v") < col("b.v"))
       .select(col("a.v").as("s"), col("b.v").as("o")).distinct()
   }
-
-  /** Unique memory-sink names for q56's streaming replay (one per call —
-    * memory sinks are session-registered tables). */
-  private val q56Counter = new java.util.concurrent.atomic.AtomicInteger(0)
 
   private val GoldenCorpora =
     Seq("test_ace", "test_tbd", "dev_ace", "dev_tbd", "train_tbd")
@@ -417,106 +413,6 @@ object SparkEntry {
       val query = emb.filter(col("vec_id") === 0)
         .select("embedding").collect()(0).getSeq[Float](0)
       Similarity.annTopK(emb, query, 10) // nPlanes adaptive to corpus size
-    }),
-    "q19_media_features" -> ((s, dir) => {
-      // Multimodal feature extraction with a FULL hash oracle: planted
-      // payloads whose raw bytes are pure integer formulas of
-      // (media_id, position) — real binary PPM images (BT.601 luminance
-      // histogram via ImageCodec decode), real PCM-16 WAVs (amplitude
-      // histogram via AudioCodec decode), and video payloads through the
-      // declared stub (16-bin byte histogram). The DuckDB oracle
-      // re-derives every pixel/sample/byte from the same formulas and
-      // mirrors the histogram integer math end-to-end; emitting COUNTS
-      // (feature × element total, rounded) keeps the compare integral.
-      // The rng-based synthetic corpus stays covered by MultimodalSpec.
-      import s.implicits._
-      val images = Seq((1L, 8, 8), (2L, 12, 5), (3L, 16, 16), (4L, 7, 9),
-        (5L, 10, 3), (6L, 16, 2))
-      val imageRows = images.map { case (id, w, h) =>
-        val rgb = new Array[Byte](w * h * 3)
-        var p = 0
-        var y = 0
-        while (y < h) {
-          var x = 0
-          while (x < w) {
-            rgb(p) = ((x * 31 + y * 7 + id) % 256).toByte
-            rgb(p + 1) = ((x * 13 + y * 17 + 2 * id) % 256).toByte
-            rgb(p + 2) = (((x + y) * 5 + 3 * id) % 256).toByte
-            p += 3; x += 1
-          }
-          y += 1
-        }
-        Multimodal.MediaRow(id, "image",
-          graft.ops.ImageCodec.encodePpm(w, h, rgb),
-          Multimodal.MediaMeta(w, h, 3, 0, 0))
-      }
-      val audios = Seq((11L, 200), (12L, 333), (13L, 512))
-      val audioRows = audios.map { case (id, n) =>
-        val samples = Array.tabulate(n) { t =>
-          (((t.toLong * t * 7919 + t * 131 + id * 17) % 65536) - 32768).toShort
-        }
-        Multimodal.MediaRow(id, "audio",
-          graft.ops.AudioCodec.encodeWav(8000, samples),
-          Multimodal.MediaMeta(0, 0, 1, 8000, n * 1000 / 8000))
-      }
-      val videos = Seq((21L, 300), (22L, 517))
-      val videoRows = videos.map { case (id, n) =>
-        val payload = Array.tabulate(n) { j =>
-          ((j.toLong * j * 31 + j * 7 + id) % 256).toByte
-        }
-        Multimodal.MediaRow(id, "video", payload,
-          Multimodal.MediaMeta(128, 96, 3, 0, 1000))
-      }
-      // REAL Y4M videos through the VideoCodec decode path (luma
-      // histogram); ids 21/22 above stay non-Y4M so the declared
-      // compressed-video stub fallback keeps an oracled row too
-      val y4ms = Seq((23L, 16, 8, 5), (24L, 32, 16, 3))
-      val y4mRows = y4ms.map { case (id, w, h, nf) =>
-        val cw = (w + 1) / 2; val ch = (h + 1) / 2
-        val frames = (0 until nf).map { f =>
-          val luma = Array.tabulate(w * h)(i =>
-            ((i.toLong * 7 + f * 13 + id) % 256).toByte)
-          val u = Array.tabulate(cw * ch)(i =>
-            ((i.toLong * 3 + f + id) % 256).toByte)
-          val v = Array.tabulate(cw * ch)(i =>
-            ((i.toLong * 5 + f + 2 * id) % 256).toByte)
-          luma ++ u ++ v
-        }
-        Multimodal.MediaRow(id, "video",
-          graft.ops.VideoCodec.encodeY4m(w, h, "420jpeg", frames),
-          Multimodal.MediaMeta(w, h, 3, 0, nf * 40))
-      }
-      // REAL LZW-compressed video through the GifCodec decode path:
-      // palette and per-pixel index are both pure integer formulas the
-      // oracle re-derives; the payload bytes themselves are genuinely
-      // LZW-compressed (a wrong decode shifts the luma histogram)
-      val gifPal = Array.tabulate(8)(k =>
-        ((k * 37 + 11) % 256, (k * 53 + 23) % 256, (k * 29 + 5) % 256))
-      val gifs = Seq((25L, 9, 7, 4), (26L, 13, 5, 3))
-      val gifRows = gifs.map { case (id, w, h, nf) =>
-        val frames = (0 until nf).map { f =>
-          Array.tabulate(w * h)(i => ((i * 3 + f * 5 + id) % 8).toByte)
-        }
-        Multimodal.MediaRow(id, "video",
-          graft.ops.GifCodec.encode(w, h, gifPal, frames),
-          Multimodal.MediaMeta(w, h, 3, 0, nf * 40))
-      }
-      val totals = (images.map { case (id, w, h) => (id, (w * h).toLong) } ++
-        audios.map { case (id, n) => (id, n.toLong) } ++
-        videos.map { case (id, n) => (id, n.toLong) } ++
-        y4ms.map { case (id, w, h, nf) => (id, (w * h * nf).toLong) } ++
-        gifs.map { case (id, w, h, nf) => (id, (w * h * nf).toLong) })
-        .toDF("media_id", "total")
-      val media =
-        s.createDataset(imageRows ++ audioRows ++ videoRows ++ y4mRows
-          ++ gifRows)
-      Multimodal.extractFeatures(media).toDF()
-        .select(col("media_id"), col("kind"),
-          posexplode(col("features")).as(Seq("bin", "v")))
-        .join(broadcast(totals), Seq("media_id"))
-        .select(col("media_id"), col("kind"), col("bin"),
-          round(col("v") * col("total")).cast("long").as("cnt"))
-        .orderBy("media_id", "bin")
     }),
     "q24_json_props" -> ((s, dir) =>
       // S3-analog: schema'd JSON parse of an embedded JSON column
@@ -1719,34 +1615,30 @@ object SparkEntry {
       val sentinel = Seq(stamp(files.head).copy(
         ts = new java.sql.Timestamp(base + 6L * 3600 * 1000),
         path = "src/sentinel/file999999.md"))
-      val mem = MemoryStream[StampedFile](s)
+      // The stream runs in its own session, whose SQL conf is the caller's
+      // except for the shuffle-partition count, so nothing planned on the
+      // caller's session meanwhile sees that count. It sizes the state
+      // store to STATE VOLUME, not to the core count: two chained stateful
+      // operators over three micro-batches commit a checkpoint delta per
+      // state partition per operator per batch — at one partition per core
+      // that is 6 × cores state-store commits to count a few thousand
+      // keys, nearly all fixed I/O latency. Partition count never changes
+      // the counts (state is key-hashed).
+      val ss = s.newSession()
+      s.conf.getAll.foreach { case (k, v) => if (ss.conf.isModifiable(k)) ss.conf.set(k, v) }
+      ss.conf.set("spark.sql.shuffle.partitions", 8L)
+      val mem = MemoryStream[StampedFile](ss)
       val counts = StreamingKg.windowedDistinctTripleCounts(
-        StreamingKg.narrowTriples(s, mem.toDS()),
+        StreamingKg.narrowTriples(ss, mem.toDS()),
         Seq("hasType", "hasDuration", "speculated", "hasEntity"))
-      val sinkName = s"q56sink_${q56Counter.incrementAndGet()}"
-      // State-store partition count is sized to STATE VOLUME, not to the
-      // session's core count: this query runs two chained stateful
-      // operators over three micro-batches, and every state partition
-      // commits a checkpoint delta per operator per batch — at the
-      // session default (one partition per core) that is 6 × cores
-      // state-store commits to count a few thousand keys, nearly all
-      // fixed I/O latency. Partition count never changes the counts
-      // (state is key-hashed); production streams set
-      // spark.graft.streamShufflePartitions to match their key volume.
-      val streamParts =
-        s.conf.get("spark.graft.streamShufflePartitions", "8")
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", streamParts)
+      val q = counts.writeStream.format("memory").queryName("q56sink")
+        .outputMode(OutputMode.Append()).start()
       try {
-        val q = counts.writeStream.format("memory").queryName(sinkName)
-          .outputMode(OutputMode.Append()).start()
-        try {
-          mem.addData(batch1); q.processAllAvailable()
-          mem.addData(late); q.processAllAvailable()
-          mem.addData(sentinel); q.processAllAvailable()
-        } finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      s.table(sinkName)
+        mem.addData(batch1); q.processAllAvailable()
+        mem.addData(late); q.processAllAvailable()
+        mem.addData(sentinel); q.processAllAvailable()
+      } finally q.stop()
+      ss.table("q56sink")
         .select(
           date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("window_start"),
           date_format(col("window.end"), "yyyy-MM-dd HH:mm:ss").as("window_end"),
@@ -1810,8 +1702,8 @@ object SparkEntry {
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops
-    * (KG pipeline, LSH/minhash/simhash signatures, custom expression,
-    * synthetic media) → driver records a weaker rows-only check. */
+    * (KG pipeline, LSH/minhash/simhash signatures, custom expression)
+    * → driver records a weaker rows-only check. */
   /** q36's tokenizer CTE chain (Text.tokenize re-derived in DuckDB),
     * factored so the chain — ending at `perdoc(doc_id, alltoks)` — is
     * reusable by q49's wordpiece oracle. */
@@ -3368,58 +3260,6 @@ object SparkEntry {
         "WHEN 600000 THEN '6000_s8' ELSE 'unknown' END FROM lineitem) || '/%') " +
         "SELECT doc, event, CAST(start_pt AS DOUBLE) AS start_pt, " +
         "CAST(duration AS DOUBLE) AS duration FROM gold ORDER BY doc, event"),
-
-    // q19: every planted pixel/sample/byte re-derived from the same
-    // integer formulas, histogram integer math mirrored end-to-end
-    // (BT.601 luminance (r*299+g*587+b*114)//1000 then //16; amplitude
-    // abs(sample)//2048 capped at 15; stub byte histogram byte//16);
-    // zero bins materialize via the bins cross join.
-    "q19_media_features" ->
-      """WITH img(media_id, w, h) AS (VALUES (1, 8, 8), (2, 12, 5), (3, 16, 16), (4, 7, 9), (5, 10, 3), (6, 16, 2)),
-        |aud(media_id, n) AS (VALUES (11, 200), (12, 333), (13, 512)),
-        |vid(media_id, n) AS (VALUES (21, 300), (22, 517)),
-        |y4m(media_id, w, h, nf) AS (VALUES (23, 16, 8, 5), (24, 32, 16, 3)),
-        |gif(media_id, w, h, nf) AS (VALUES (25, 9, 7, 4), (26, 13, 5, 3)),
-        |pix AS (SELECT media_id, w, unnest(range(w * h)) AS i FROM img),
-        |pxy AS (SELECT media_id, i % w AS x, i // w AS y FROM pix),
-        |prgb AS (SELECT media_id,
-        |                (x * 31 + y * 7 + media_id) % 256 AS r,
-        |                (x * 13 + y * 17 + 2 * media_id) % 256 AS g,
-        |                ((x + y) * 5 + 3 * media_id) % 256 AS b
-        |         FROM pxy),
-        |samp AS (SELECT media_id, unnest(range(n)) AS t FROM aud),
-        |vbyte AS (SELECT media_id, unnest(range(n)) AS j FROM vid),
-        |yf AS (SELECT media_id, w, h, unnest(range(nf)) AS f FROM y4m),
-        |ybyte AS (SELECT media_id, f, unnest(range(w * h)) AS i FROM yf),
-        |gff AS (SELECT media_id, w, h, unnest(range(nf)) AS f FROM gif),
-        |gpx AS (SELECT media_id, f, unnest(range(w * h)) AS i FROM gff),
-        |gk AS (SELECT media_id, (i * 3 + f * 5 + media_id) % 8 AS k FROM gpx),
-        |elems AS (
-        |  SELECT media_id, ((r * 299 + g * 587 + b * 114) // 1000) // 16 AS bin FROM prgb
-        |  UNION ALL
-        |  SELECT media_id,
-        |         least(15, abs(((t * t * 7919 + t * 131 + media_id * 17) % 65536) - 32768) // 2048) AS bin
-        |  FROM samp
-        |  UNION ALL
-        |  SELECT media_id, ((j * j * 31 + j * 7 + media_id) % 256) // 16 AS bin FROM vbyte
-        |  UNION ALL
-        |  SELECT media_id, ((i * 7 + f * 13 + media_id) % 256) // 16 AS bin FROM ybyte
-        |  UNION ALL
-        |  SELECT media_id,
-        |         ((((k * 37 + 11) % 256) * 299 + ((k * 53 + 23) % 256) * 587
-        |           + ((k * 29 + 5) % 256) * 114) // 1000) // 16 AS bin
-        |  FROM gk),
-        |cnts AS (SELECT media_id, bin, count(*) AS cnt FROM elems GROUP BY media_id, bin),
-        |bins AS (SELECT unnest(range(16)) AS bin),
-        |allm AS (SELECT media_id, 'image' AS kind FROM img
-        |         UNION ALL SELECT media_id, 'audio' FROM aud
-        |         UNION ALL SELECT media_id, 'video' FROM vid
-        |         UNION ALL SELECT media_id, 'video' FROM y4m
-        |         UNION ALL SELECT media_id, 'video' FROM gif)
-        |SELECT a.media_id, a.kind, b.bin, COALESCE(c.cnt, 0) AS cnt
-        |FROM allm a CROSS JOIN bins b
-        |LEFT JOIN cnts c ON c.media_id = a.media_id AND c.bin = b.bin
-        |ORDER BY a.media_id, b.bin""".stripMargin,
 
     "q30_golden_spans" ->
       """WITH f AS (SELECT regexp_extract(filename, '([a-z_]+)\.pred\.json', 1) AS src, json(content) AS j

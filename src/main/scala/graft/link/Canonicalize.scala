@@ -3,6 +3,7 @@ package graft.link
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -56,9 +57,10 @@ object Canonicalize {
     c.substr(lit(1), length(c) - lit(dropRight))
 
   /** Connected components by label propagation: iterative DataFrame
-    * self-join, localCheckpoint between iterations (cuts lineage), driver
-    * convergence check via count — SURVEY.md §4. Vertices: (vid); edges:
-    * (src, dst), undirected. Returns (vid, component). */
+    * self-join, localCheckpoint between iterations (cuts lineage; each
+    * superseded round's blocks are dropped), driver convergence check via
+    * count — SURVEY.md §4. Vertices: (vid); edges: (src, dst), undirected.
+    * Returns (vid, component), a local checkpoint. */
   def connectedComponents(spark: SparkSession, vertices: DataFrame,
       edges: DataFrame, maxIter: Int = 12): DataFrame = {
     val undirected = edges.select(col("src"), col("dst"))
@@ -86,6 +88,7 @@ object Canonicalize {
           .limit(1).count()
         converged = changed == 0
       }
+      dropCheckpoint(labels)
       labels = next
       iter += 1
     }
@@ -98,6 +101,13 @@ object Canonicalize {
           s"raise maxIter")
     undirected.unpersist()
     labels
+  }
+
+  /** Frees the blocks behind an eager `localCheckpoint` of `df`, which
+    * nothing may read afterwards. */
+  private def dropCheckpoint(df: DataFrame): Unit = df.queryExecution.logical match {
+    case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+    case _ =>
   }
 
   /** Union-find over `0 until n` with path compression — the driver-local
@@ -123,8 +133,9 @@ object Canonicalize {
     * `spark.graft.maxLocalCCForms` (default 100k), one guarded collect
     * brings them to the driver, which solves containment, components and
     * canonical forms itself and returns the map as a local relation; a
-    * larger vocabulary runs the distributed label-propagation loop. Both
-    * paths emit the same map — equality is unit-tested. */
+    * larger vocabulary runs the distributed label-propagation loop and
+    * returns the map persisted, for the caller to unpersist. Both paths
+    * emit the same map — equality is unit-tested. */
   def canonicalForms(spark: SparkSession, mentions: DataFrame): DataFrame =
     canonicalFormsCounted(spark, mentions)._1
 
@@ -153,6 +164,7 @@ object Canonicalize {
     } else {
       val cached = forms.persist()
       val nForms = cached.count() // materializes the cache for all consumers
+      // the map comes back materialized, so nothing reads the forms again
       val map = distributedMap(spark, cached)
       cached.unpersist()
       (map, nForms)
@@ -210,7 +222,9 @@ object Canonicalize {
 
   /** The distributed solve over (repo, text, block, kept) forms: pairwise
     * containment edges within each kept block, label-propagation
-    * components, canonical form per component. */
+    * components, canonical form per component. The map is returned
+    * persisted and materialized, with the components' blocks dropped;
+    * the caller unpersists it. */
   private def distributedMap(spark: SparkSession, blocked: DataFrame): DataFrame = {
     val forms = blocked
       .withColumn("vid", concat(col("repo"), lit("\u0000"), col("text")))
@@ -239,10 +253,14 @@ object Canonicalize {
       .agg(min(struct((lit(1000) - length(col("text"))).as("negLen"),
         col("text").as("t"))).as("best"))
       .select(col("component"), col("best.t").as("canonical"))
-    withComp.join(canon, Seq("component"))
+    val map = withComp.join(canon, Seq("component"))
       .select("repo", "text", "canonical")
       .unionByName(forms.filter(!col("kept"))
         .select(col("repo"), col("text"), col("text").as("canonical")))
+      .persist()
+    map.count()
+    dropCheckpoint(comps)
+    map
   }
 
   /** Block refinement behind `canonicalForms`' quadratic cap: distinct

@@ -57,22 +57,6 @@ case class Event(
   * (reference joint_model.py:585-586). */
 case class Relation(left: Int, right: Int, label: String)
 
-/** Full per-sentence annotation — the reference's dict record
-  * (main.py:146-230) as one typed row. */
-case class SentenceAnn(
-    repo: String,
-    path: String,
-    contentSha: String,
-    lineNum: Int,
-    senNum: Int,
-    sentence: String,
-    tokens: Seq[String],
-    events: Seq[Event],
-    ner: Seq[NerSpan],
-    relations: Seq[Relation],
-    negationCue: Seq[Int],
-    negationScope: Seq[Int])
-
 /** Output triple row; subj/obj are canonical ids or literals, with lineage
   * columns carried through (FIXTURES.md §3). */
 case class Triple(

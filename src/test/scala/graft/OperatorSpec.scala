@@ -297,9 +297,11 @@ class OperatorSpec extends AnyFunSuite {
     val localMap = Canonicalize.canonicalForms(spark, mentions)
     val localPath = collect(localMap)
     spark.conf.set("spark.graft.maxLocalCCForms", "0")
-    try (localPath, collect(Canonicalize.canonicalForms(spark, mentions)),
-      isLocalRelation(localMap))
-    finally spark.conf.unset("spark.graft.maxLocalCCForms")
+    val distMap =
+      try Canonicalize.canonicalForms(spark, mentions)
+      finally spark.conf.unset("spark.graft.maxLocalCCForms")
+    try (localPath, collect(distMap), isLocalRelation(localMap))
+    finally Seq(localMap, distMap).foreach(_.unpersist())
   }
 
   test("canonicalForms: local and distributed CC paths emit the same map") {
@@ -341,6 +343,27 @@ class OperatorSpec extends AnyFunSuite {
     assert(!local, "the edge guard must fall back to the distributed loop")
     assert(localPath == distPath)
     assert(localPath.values.toSet == Set((1 to 11).map(i => s"a$i").mkString(" ") + " x"))
+  }
+
+  test("canonicalForms distributed path: consuming the map does not " +
+      "re-run the form pipeline") {
+    // every evaluation of a mention row ticks the accumulator: once the
+    // map is returned, reading it must not evaluate the mentions again
+    val evals = spark.sparkContext.longAccumulator("mention-evals")
+    val tick = udf { (t: String) => evals.add(1); t }.asNondeterministic()
+    val mentions = Seq(("r1", "George Pataki"), ("r1", "Pataki"),
+      ("r1", "the convoy"), ("r1", "a convoy"), ("r2", "Pataki"))
+      .toDF("repo", "text").select(col("repo"), tick(col("text")).as("text"))
+    spark.conf.set("spark.graft.maxLocalCCForms", "0")
+    val (map, nForms) =
+      try Canonicalize.canonicalFormsCounted(spark, mentions)
+      finally spark.conf.unset("spark.graft.maxLocalCCForms")
+    val built = evals.value
+    val rows = map.as[(String, String, String)].collect()
+    assert(evals.value == built, s"${evals.value - built} mention rows re-evaluated")
+    assert(rows.length == nForms && nForms == 5)
+    assert(rows.toSet(("r1", "Pataki", "George Pataki")))
+    map.unpersist()
   }
 
   test("canonicalForms: hot-lemma block is capped, audited, and " +
@@ -427,7 +450,7 @@ class OperatorSpec extends AnyFunSuite {
     assert(orphans.isEmpty, s"oracles without queries: $orphans")
     // pinned so a future edit that drops a query or oracle fails loudly
     // (update BOTH numbers AND the README/SURVEY counts when adding)
-    assert(qs.size == 95, s"queries: ${qs.size}")
-    assert(os.size == 92, s"oracles: ${os.size}")
+    assert(qs.size == 94, s"queries: ${qs.size}")
+    assert(os.size == 91, s"oracles: ${os.size}")
   }
 }

@@ -3,11 +3,11 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-import graft.ops.{Decontaminate, Dedup, ImageCodec, Multimodal, RollingFingerprint, Sampling, Similarity, TextAnalysis}
+import graft.ops.{Decontaminate, Dedup, RollingFingerprint, Sampling, Similarity, TextAnalysis}
 
 /** Training-data pipeline operators: dedup (exact / MinHash-LSH / SimHash /
   * n-gram Jaccard / embedding-cosine), ANN similarity search, text
-  * analysis, multimodal plumbing. */
+  * analysis. */
 class OpsSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -424,241 +424,6 @@ class OpsSpec extends AnyFunSuite {
       .groupBy("lang").count().as[(String, Long)].collect().toMap
     assert(math.abs(strat("en") - 333) < 80, s"en: ${strat("en")}")
     assert(math.abs(strat("de") - 3333) < 300, s"de: ${strat("de")}")
-  }
-
-  test("image codec: PPM roundtrip, BMP decode, real resize") {
-    // 3x2 test image, distinct pixels
-    val rgb = Array[Byte](
-      10, 20, 30, 40, 50, 60, 70, 80, 90,
-      -1, 0, 1, 100, -100, 50, 0, 0, -1)
-    val ppm = ImageCodec.encodePpm(3, 2, rgb)
-    assert(ImageCodec.decode(ppm).exists { case (w, h, px) =>
-      w == 3 && h == 2 && px.sameElements(rgb) })
-    // BMP of the same pixels decodes to the identical RGB layout
-    // (exercises BGR order, bottom-up rows, 4-byte row padding: 3px*3B=9
-    // pads to 12)
-    val bmp = ImageCodec.encodeBmp(3, 2, rgb)
-    assert(ImageCodec.decode(bmp).exists { case (w, h, px) =>
-      w == 3 && h == 2 && px.sameElements(rgb) })
-    // comment in PPM header is honored
-    val withComment = ("P6\n# a comment\n3 2\n255\n".getBytes("US-ASCII") ++ rgb)
-    assert(ImageCodec.decode(withComment).exists(_._3.sameElements(rgb)))
-    // garbage stays undecodable, never throws
-    assert(ImageCodec.decode(Array[Byte](1, 2, 3)).isEmpty)
-    assert(ImageCodec.decode("BMxx".getBytes).isEmpty)
-    // real resize: downsample 4x4 -> 2x2 picks nearest source pixels
-    val big = Array.tabulate(4 * 4 * 3)(i => (i * 5).toByte)
-    val small = ImageCodec.resizeNearest(4, 4, big, 2, 2)
-    assert(small.length == 2 * 2 * 3)
-    assert(small.slice(0, 3).sameElements(big.slice(0, 3))) // (0,0)
-    // resized media rows re-encode as decodable PPM with updated meta
-    val media = Multimodal.syntheticMedia(spark, 12L)
-    for (m <- Multimodal.resizeImages(media, maxSide = 20).collect()
-         if m.kind == "image") {
-      assert(math.max(m.meta.width, m.meta.height) <= 20)
-      val dec = ImageCodec.decode(m.payload)
-      assert(dec.exists { case (w, h, _) =>
-        w == m.meta.width && h == m.meta.height })
-    }
-  }
-
-  test("audio codec: WAV roundtrip, chunk walking, malformed fallback") {
-    import graft.ops.AudioCodec
-    val samples = Array[Short](0, 100, -100, 32767, -32768, 5, -5, 12000)
-    val wav = AudioCodec.encodeWav(8000, samples)
-    assert(wav.length == 44 + samples.length * 2)
-    val Some((sr, ch, dec)) = AudioCodec.decodeWav(wav)
-    assert(sr == 8000 && ch == 1 && dec.sameElements(samples))
-    // an extra chunk before data is walked over, not tripped over
-    val extra = "LIST".getBytes("US-ASCII") ++
-      Array[Byte](4, 0, 0, 0) ++ "INFO".getBytes("US-ASCII")
-    val withChunk = wav.slice(0, 36) ++ extra ++ wav.slice(36, wav.length)
-    // fix RIFF size field (bytes 4-7) for the inserted 12 bytes
-    val riffLen = wav.length - 8 + extra.length
-    for (i <- 0 until 4) withChunk(4 + i) = ((riffLen >> (8 * i)) & 0xff).toByte
-    assert(AudioCodec.decodeWav(withChunk).exists(_._3.sameElements(samples)))
-    // garbage / truncated / non-PCM stays undecodable, never throws
-    assert(AudioCodec.decodeWav(Array[Byte](1, 2, 3)).isEmpty)
-    assert(AudioCodec.decodeWav("RIFFxxxxWAVE".getBytes ++ new Array[Byte](40)).isEmpty)
-    val nonPcm = wav.clone(); nonPcm(20) = 3 // format tag != 1
-    assert(AudioCodec.decodeWav(nonPcm).isEmpty)
-    // property: decode(encode(x)) == x over 200 random seeded signals
-    val rng = new scala.util.Random(99)
-    for (_ <- 1 to 200) {
-      val xs = Array.fill(rng.nextInt(400))(rng.nextInt(65536).toShort)
-      val sr = 1 + rng.nextInt(48000)
-      val Some((gotSr, _, got)) = AudioCodec.decodeWav(AudioCodec.encodeWav(sr, xs))
-      assert(gotSr == sr && got.sameElements(xs))
-    }
-  }
-
-  test("VideoCodec: Y4M round-trip, colorspace plane math, hostile headers") {
-    import graft.ops.VideoCodec
-    val (w, h) = (6, 4)
-    val cw = 3; val ch = 2
-    val frames = (0 until 3).map { f =>
-      Array.tabulate(w * h)(i => (i * 7 + f).toByte) ++
-        Array.tabulate(cw * ch)(i => (i + f).toByte) ++
-        Array.tabulate(cw * ch)(i => (i * 2 + f).toByte)
-    }
-    val enc = VideoCodec.encodeY4m(w, h, "420jpeg", frames)
-    val Some((gw, gh, luma)) = VideoCodec.decodeY4m(enc)
-    assert(gw == w && gh == h && luma.length == 3)
-    for (f <- 0 until 3)
-      assert(luma(f).sameElements(frames(f).take(w * h)))
-    // C444: full chroma planes
-    val f444 = Seq(Array.tabulate(w * h * 3)(i => i.toByte))
-    val Some((_, _, l444)) = VideoCodec.decodeY4m(
-      VideoCodec.encodeY4m(w, h, "444", f444))
-    assert(l444.head.sameElements(f444.head.take(w * h)))
-    // default colorspace (no C token) is 420jpeg
-    val noC = new String(enc, "US-ASCII").replace(" C420jpeg", "")
-    assert(VideoCodec.decodeY4m(noC.getBytes("US-ASCII")).isDefined)
-    // histogram = luma bytes only, L1-normalized
-    val hist = VideoCodec.lumaHistogram(luma)
-    assert(math.abs(hist.sum - 1.0f) < 1e-5)
-    // hostile: bad magic / unsupported colorspace / huge dims / truncated
-    // frame / garbage after header / overflow-sized W token
-    assert(VideoCodec.decodeY4m("YUV4MPEG3 W2 H2\nFRAME\nxxxx".getBytes).isEmpty)
-    assert(VideoCodec.decodeY4m("YUV4MPEG2 W2 H2 Cmjpeg\nFRAME\nxxxx".getBytes).isEmpty)
-    assert(VideoCodec.decodeY4m("YUV4MPEG2 W1048577 H1048577\nFRAME\n".getBytes).isEmpty)
-    assert(VideoCodec.decodeY4m("YUV4MPEG2 W99999999999999999999 H2\nFRAME\n".getBytes).isEmpty)
-    assert(VideoCodec.decodeY4m(enc.dropRight(1)).isEmpty, "truncated last frame")
-    assert(VideoCodec.decodeY4m(("YUV4MPEG2 W2 H2 C444\nNOTFRAME\n" + "x" * 12).getBytes).isEmpty)
-    assert(Multimodal.decodeFeatures("video", enc).length == 16)
-    // frame sampling uses DECODED luma frames for Y4M payloads
-    val media = spark.createDataset(Seq(
-      Multimodal.MediaRow(1L, "video", enc, Multimodal.MediaMeta(w, h, 3, 0, 120))))(
-      org.apache.spark.sql.Encoders.product[Multimodal.MediaRow])
-    val got = Multimodal.sampleFrames(media, stride = 2).collect()
-      .sortBy(_.frame_idx)
-    assert(got.map(_.frame_idx).toSeq == Seq(0, 2))
-    assert(got.forall(_.payload.length == w * h))
-  }
-
-  test("codec fuzz: hostile headers (Int-wrap dims, negative offsets, " +
-      "truncated chunks) never throw — decodeFeatures always falls back") {
-    import graft.ops.AudioCodec
-    def le32(v: Int): Array[Byte] =
-      Array(v, v >> 8, v >> 16, v >> 24).map(_.toByte)
-    // PPM: w*h*3 wraps Int (46341² * 3 ≈ 6.4e9); digit-run overflow; zero
-    val hostilePpms = Seq(
-      "P6\n46341 46341\n255\n", "P6\n999999999 999999999\n255\n",
-      "P6\n99999999999999999999 2\n255\n", "P6\n0 5\n255\n",
-      "P6\n9 9\n255\n" /* needs 243 pixel bytes, payload has 32 */
-    ).map(h => h.getBytes("US-ASCII") ++ Array.fill[Byte](32)(1))
-    // BMP: negative dataOff; hRaw = Int.MinValue; w*3 wraps
-    def bmp(dataOff: Int, w: Int, h: Int): Array[Byte] =
-      "BM".getBytes ++ le32(0) ++ le32(0) ++ le32(dataOff) ++ le32(40) ++
-        le32(w) ++ le32(h) ++ Array[Byte](1, 0, 24, 0) ++ le32(0) ++
-        Array.fill[Byte](64)(2)
-    val hostileBmps = Seq(bmp(-1, 4, 4), bmp(54, 4, Int.MinValue),
-      bmp(54, 0x7ffffff0, 2), bmp(Int.MaxValue, 4, 4))
-    for (p <- hostilePpms ++ hostileBmps) {
-      assert(ImageCodec.decode(p).isEmpty, "hostile image must not decode")
-      assert(Multimodal.decodeFeatures("image", p).length == 16)
-    }
-    // WAV: chunk len near Int.MaxValue wraps off + 8 + len; len = -2
-    val good = AudioCodec.encodeWav(8000, Array[Short](1, 2, 3))
-    for (badLen <- Seq(Int.MaxValue - 4, Int.MaxValue, -2)) {
-      val w = good.clone()
-      System.arraycopy(le32(badLen), 0, w, 16, 4) // fmt chunk length
-      assert(AudioCodec.decodeWav(w).isEmpty)
-      val w2 = good.clone()
-      System.arraycopy(le32(badLen), 0, w2, 40, 4) // data chunk length
-      assert(AudioCodec.decodeWav(w2).isEmpty)
-      assert(Multimodal.decodeFeatures("audio", w2).length == 16)
-    }
-    // random fuzz: pure noise + bit-flipped valid payloads; the contract is
-    // "never throws, 16 features out" — not "never decodes"
-    val rng = new scala.util.Random(0xfade)
-    val validPpm = ImageCodec.encodePpm(4, 4, Array.fill[Byte](48)(3))
-    val validGif = graft.ops.GifCodec.encode(6, 5,
-      Array.tabulate(4)(k => (k * 60, k * 50, k * 40)),
-      Seq(Array.tabulate(30)(i => (i % 4).toByte)))
-    for (i <- 1 to 300) {
-      val p =
-        if (i % 4 == 0) Array.fill[Byte](rng.nextInt(200))(rng.nextInt(256).toByte)
-        else {
-          val base = (i % 4 match {
-            case 1 => validPpm
-            case 2 => good
-            case _ => validGif
-          }).clone()
-          for (_ <- 0 to rng.nextInt(8))
-            base(rng.nextInt(base.length)) = rng.nextInt(256).toByte
-          base
-        }
-      assert(Multimodal.decodeFeatures("image", p).length == 16)
-      assert(Multimodal.decodeFeatures("audio", p).length == 16)
-      assert(Multimodal.decodeFeatures("video", p).length == 16)
-    }
-  }
-
-  test("multimodal: audio features come from DECODED samples (amplitude " +
-      "histogram), not payload bytes") {
-    import graft.ops.AudioCodec
-    val media = Multimodal.syntheticMedia(spark, 9L)
-    val auds = media.filter(_.kind == "audio").collect()
-    assert(auds.nonEmpty)
-    for (m <- auds) {
-      val Some((sr, _, samples)) = AudioCodec.decodeWav(m.payload)
-      assert(sr == m.meta.sampleRate)
-      assert(m.meta.durationMs == samples.length * 1000 / sr)
-      val expected = AudioCodec.amplitudeHistogram(samples).toSeq
-      val got = Multimodal.decodeFeatures(m.kind, m.payload).toSeq
-      assert(got == expected)
-      assert(got != Multimodal.fakeDecodeFeatures(m.payload).toSeq)
-    }
-    // malformed audio payload falls through to the stub, never throws
-    val junk = Array.fill[Byte](64)(7)
-    assert(Multimodal.decodeFeatures("audio", junk).toSeq ==
-      Multimodal.fakeDecodeFeatures(junk).toSeq)
-  }
-
-  test("multimodal: image features come from DECODED pixels (luminance " +
-      "histogram), not payload bytes") {
-    val media = Multimodal.syntheticMedia(spark, 9L)
-    val imgs = media.filter(_.kind == "image").collect()
-    assert(imgs.nonEmpty)
-    for (m <- imgs) {
-      val Some((_, _, rgb)) = ImageCodec.decode(m.payload)
-      val expected = ImageCodec.luminanceHistogram(rgb).toSeq
-      val got = Multimodal.decodeFeatures(m.kind, m.payload).toSeq
-      assert(got == expected)
-      // and differs from the stub byte histogram (header bytes included)
-      assert(got != Multimodal.fakeDecodeFeatures(m.payload).toSeq)
-    }
-  }
-
-  test("multimodal: batched feature extraction preserves schema and determinism") {
-    val media = Multimodal.syntheticMedia(spark, 100L)
-    val feats = Multimodal.extractFeatures(media)
-    assert(feats.schema.fieldNames.toSeq == Seq("media_id", "kind", "features"))
-    val rows = feats.collect()
-    assert(rows.length == 100)
-    assert(rows.forall(_.features.length == 16))
-    // L1-normalized histograms
-    assert(rows.forall(r => math.abs(r.features.sum - 1.0f) < 1e-3))
-    // determinism across partitionings
-    val again = Multimodal.extractFeatures(media.repartition(13)).collect()
-      .sortBy(_.media_id).map(_.features)
-    assert(rows.sortBy(_.media_id).map(_.features).toSeq == again.toSeq)
-  }
-
-  test("multimodal: resize caps image dimensions; frame sampling strides video") {
-    val media = Multimodal.syntheticMedia(spark, 60L)
-    val resized = Multimodal.resizeImages(media, maxSide = 100).collect()
-    for (m <- resized if m.kind == "image")
-      assert(math.max(m.meta.width, m.meta.height) <= 256) // originals ≤ 256
-    val small = Multimodal.resizeImages(media, maxSide = 64).collect()
-    for (m <- small if m.kind == "image")
-      assert(math.max(m.meta.width, m.meta.height) <= 64)
-    val frames = Multimodal.sampleFrames(media, stride = 2).collect()
-    assert(frames.nonEmpty)
-    assert(frames.forall(_.frame_idx % 2 == 0))
-    val vids = media.filter(_.kind == "video").count()
-    assert(frames.map(_.media_id).distinct.length == vids)
   }
 
   test("decontamination: planted eval 8-gram flags the doc; clean + short docs don't") {

@@ -47,12 +47,19 @@ class StoreSpec extends AnyFunSuite {
 
   test("a committed build leaves no cached blocks behind") {
     // a long-lived session must not pile up storage per build: after the
-    // build and a count over its triples, no RDD the build cached is left
-    val before = spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
-    Pipeline.runCheckpointed(spark, Synth.corpus(spark, NFiles, Spf), tmp(), Sig)
-      .count()
-    val left = spark.sparkContext.getRDDStorageInfo.filterNot(i => before(i.id))
-    assert(left.isEmpty, left.map(i => s"${i.name} ${i.memSize} B").mkString("; "))
+    // build and a count over its triples, no RDD the build cached is left —
+    // on the driver-local canonicalization path and on the distributed one
+    for (maxLocalCCForms <- Seq(None, Some("0"))) {
+      maxLocalCCForms.foreach(spark.conf.set("spark.graft.maxLocalCCForms", _))
+      try {
+        val before = spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
+        Pipeline.runCheckpointed(spark, Synth.corpus(spark, NFiles, Spf), tmp(), Sig)
+          .count()
+        val left = spark.sparkContext.getRDDStorageInfo.filterNot(i => before(i.id))
+        assert(left.isEmpty, s"maxLocalCCForms=$maxLocalCCForms: " +
+          left.map(i => s"${i.name} ${i.memSize} B").mkString("; "))
+      } finally spark.conf.unset("spark.graft.maxLocalCCForms")
+    }
   }
 
   test("rerun resumes every committed stage — compute closures never invoked") {

@@ -243,4 +243,24 @@ class StreamingSpec extends AnyFunSuite {
       .map(t => (t.subj, t.pred, t.obj)).distinct().count()
     assert(rows.filter(_._1 == "10:00").map(_._3).sum == batch)
   }
+
+  test("q56 runs its stream without touching the caller session's conf") {
+    // the caller's shuffle-partition count, read at every job start while
+    // q56 runs, must be the value it had before — a concurrently planned
+    // query on this session would otherwise inherit the stream's count
+    val own = spark.conf.get("spark.sql.shuffle.partitions")
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        seen.add(spark.conf.get("spark.sql.shuffle.partitions"))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val rows =
+      try SparkEntry.queries("q56_stream_window")(spark, "unused").collect()
+      finally spark.sparkContext.removeSparkListener(listener)
+    assert(rows.nonEmpty)
+    assert(!seen.isEmpty)
+    assert(seen.toArray.forall(_ == own), s"reads: ${seen.toArray.distinct.mkString(",")}; own: $own")
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == own)
+  }
 }
