@@ -7,18 +7,20 @@ import org.apache.spark.sql.expressions.Window
 
 import graft.corpus.Synth
 import graft.kg.{Pipeline, Triples}
-import graft.ops.{Decontaminate, Dedup, Packing, Sampling, Similarity, TextAnalysis}
+import graft.ops.{Dedup, Packing, Sampling, Similarity, TextAnalysis}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract (SURVEY.md §7): every named query, and the DuckDB
+  * oracle that checks it.
   *
   * Queries fall in two families:
   *   - `kg_*`: the KG-construction pipeline over the deterministic
-  *     synthetic source-file corpus (not SQL-expressible; correctness is
-  *     covered by the golden P/R gate in GoldenPipelineSpec — driver
-  *     records rows-only checks);
-  *   - `q*`: relational / dedup / similarity / text operators over the
-  *     driver's parquet tables, each with a DuckDB oracle in `oracleSql`
-  *     where ANSI SQL can express it.
+  *     synthetic source-file corpus (or the golden annotation corpora),
+  *     value-checked against SQL over the independently derived gold
+  *     triple set;
+  *   - `q*`: the pipeline's stages, text operators and relational
+  *     operators over the driver's parquet tables.
+  *
+  * Every query has an oracle in `oracleSql`.
   */
 object SparkEntry {
 
@@ -207,7 +209,7 @@ object SparkEntry {
   /** One entry per implemented operator from SURVEY.md §2 (+ the
     * training-data ops the engine adds). */
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // ---- KG pipeline (rows-only; golden P/R in ScalaTest) ----
+    // ---- KG pipeline (oracle: SQL over the gold triple set) ----
     "kg_triples_by_pred" -> ((s, dir) =>
       triplesFor(s, dir).groupBy(col("pred")).agg(count(lit(1)).as("n"))
         .orderBy("pred")),
@@ -392,15 +394,6 @@ object SparkEntry {
       TextAnalysis.withTokenCounts(t(s, dir, "documents"))
         .select(col("doc_id"), col("ws_tokens"), col("bpe_ish_tokens"))
         .orderBy("doc_id")),
-    "q11_minhash_neardups" -> ((s, dir) =>
-      Dedup.minhashNearDups(t(s, dir, "documents"), n = 3, threshold = 0.5)
-        .orderBy("a", "b")),
-    "q12_simhash_neardups" -> ((s, dir) =>
-      Dedup.simhashNearDups(t(s, dir, "documents"), maxDist = 3)
-        .orderBy("a", "b")),
-    "q13_ngram_jaccard" -> ((s, dir) =>
-      Dedup.ngramJaccardPairs(t(s, dir, "documents"), n = 3, threshold = 0.5)
-        .orderBy("a", "b")),
     "q15_langid_dist" -> ((s, dir) =>
       TextAnalysis.withLangId(t(s, dir, "documents"))
         .groupBy(col("lang_pred")).agg(count(lit(1)).as("n"))
@@ -408,12 +401,6 @@ object SparkEntry {
     "q17_fingerprint" -> ((s, dir) =>
       TextAnalysis.withFingerprint(t(s, dir, "documents"))
         .select("doc_id", "fingerprint").orderBy("doc_id")),
-    "q18_ann_topk" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val query = emb.filter(col("vec_id") === 0)
-        .select("embedding").collect()(0).getSeq[Float](0)
-      Similarity.annTopK(emb, query, 10) // nPlanes adaptive to corpus size
-    }),
     "q24_json_props" -> ((s, dir) =>
       // S3-analog: schema'd JSON parse of an embedded JSON column
       t(s, dir, "events")
@@ -424,19 +411,6 @@ object SparkEntry {
         .groupBy(col("event_type"))
         .agg(sum(col("props_p.k")).as("sum_k"), count(lit(1)).as("n"))
         .orderBy("event_type")),
-    "q23_embed_neardup" -> ((s, dir) =>
-      // exact all-pairs cosine (oracle-checkable recall ground truth);
-      // threshold 0.4 is data-driven: the synthetic embeddings are near-
-      // orthogonal (max pair cos ≈ 0.51 at sf0.01), so a 0.95 "near-dup"
-      // bar matches nothing — 0.4 selects the genuinely closest pairs
-      Similarity.exactNearDupPairs(t(s, dir, "embeddings"), threshold = 0.4)
-        .orderBy("a", "b")),
-    "q26_embed_neardup_lsh" -> ((s, dir) =>
-      // the scale path for q23: banded multi-table hyperplane LSH with
-      // corpus-adaptive planes + bucket cap; approximate (recall vs q23
-      // is reported by Bench), hence rows-only for the driver
-      Similarity.nearDupPairs(t(s, dir, "embeddings"), threshold = 0.4)
-        .orderBy("a", "b")),
     "q25_quality" -> ((s, dir) =>
       TextAnalysis.withQuality(t(s, dir, "documents"))
         .select(col("doc_id"), col("n_words"), col("mean_word_len"),
@@ -718,15 +692,6 @@ object SparkEntry {
           "pred_text")
         .orderBy("src", "rec_idx", "root_idx")
     }),
-    "q32_dedup_clusters" -> ((s, dir) =>
-      // cluster resolution over the exact n-gram Jaccard pairs (q13):
-      // connected components -> cluster_id = min member, keep = longest
-      // text. The oracle replays the q13 pair SQL, then union-find as a
-      // recursive CTE and the same canonical-selection window.
-      Dedup.dedupClusters(
-        t(s, dir, "documents"),
-        Dedup.ngramJaccardPairs(t(s, dir, "documents"), n = 3, threshold = 0.5))
-        .orderBy("doc_id")),
     "q31_contained_args" -> ((s, dir) => {
       // J6 (interval-containment match) as a real non-equi JOIN, driver-
       // checked: golden argument spans matched to the golden entity span
@@ -1047,16 +1012,6 @@ object SparkEntry {
           "span_text")
         .orderBy("src", "rec_idx", "kind", "start_tok", "end_tok", "label")
     }),
-    "q29_ann_ivf" -> ((s, dir) => {
-      // IVF ANN: data-adaptive coarse quantizer (deterministic k-means,
-      // sqrt(n) centroids) — the clustered-corpus scale path beside the
-      // q18 hyperplane LSH; approximate (recall vs q14 brute force is
-      // reported by Bench as ivf_recall_at_10), hence rows-only
-      val emb = t(s, dir, "embeddings")
-      val query = emb.filter(col("vec_id") === 0)
-        .select("embedding").collect()(0).getSeq[Float](0)
-      Similarity.ivfTopK(emb, query, 10, nProbe = 16)
-    }),
     "q28_stratified_sample" -> ((s, dir) =>
       // deterministic stratified sampling (data mixing): keep 100‰ of
       // English docs, 500‰ of everything else — membership is a pure
@@ -1208,35 +1163,6 @@ object SparkEntry {
         s"q53: fact scan lost its dynamic pruning subquery; plan:\n${plan.take(1500)}")
       out
     }),
-    "q54_incremental_neardup" -> ((s, dir) => {
-      // Incremental near-dup — the continuous-ingest shape: the corpus
-      // (doc_id % 10 != 0) commits its df-capped shingle index ONCE as a
-      // table bucketed on the shingle hash; the new batch (doc_id % 10
-      // == 0) joins against that on-disk partitioning, so at 100 TB the
-      // corpus side never re-shuffles and corpus text is never re-read.
-      // Exact Jaccard over the capped universe, hash-checked against a
-      // from-scratch DuckDB re-derivation of the same cross pairs.
-      val docs = t(s, dir, "documents")
-      Dedup.commitShingleIndex(docs.filter(col("doc_id") % 10 =!= 0),
-        "g54_index", n = 3, maxShingleDf = 100, buckets = 8)
-      Dedup.incrementalJaccardPairs(s, "g54_index",
-        docs.filter(col("doc_id") % 10 === 0), n = 3, threshold = 0.5)
-        .orderBy("new_id", "corpus_id")
-    }),
-
-    "q59_decontaminate" -> ((s, dir) => {
-      // Benchmark decontamination: the eval set is a deterministic slice
-      // of the corpus (doc_id % 37 == 0 — in production: the benchmark
-      // suite), broadcast as distinct 8-grams; every training doc reports
-      // its collision count. Non-degenerate by construction: the corpus's
-      // planted near-dup templates put real 8-gram overlap across the
-      // eval boundary.
-      val docs = t(s, dir, "documents")
-      Decontaminate.overlapReport(
-        docs.filter(col("doc_id") % 37 =!= 0),
-        docs.filter(col("doc_id") % 37 === 0), n = 8)
-        .orderBy("doc_id")
-    }),
 
     "q60_repetition" -> ((s, dir) =>
       // Gopher-style repetition quality signals, one narrow per-row
@@ -1246,18 +1172,6 @@ object SparkEntry {
           col("top_bigram_frac"), col("dup_trigram_frac"),
           col("low_diversity"), col("repetitive"))
         .orderBy("doc_id")),
-
-    "q61_quantized_knn" -> ((s, dir) => {
-      // int8-quantized brute-force top-k: exact integer math end-to-end
-      // (the one float divide/multiply pair is IEEE-identical in any
-      // engine), so unlike the float path this ANN compression step gets
-      // a full hash oracle. Recall vs the float top-k (q14) is graded in
-      // Bench as quant_recall_at_10.
-      val q = Similarity.quantizeInt8(t(s, dir, "embeddings"))
-      val qrow = q.filter(col("vec_id") === 0)
-        .select("qvec").collect()(0).getSeq[Int](0)
-      Similarity.quantizedTopK(q, qrow, 10)
-    }),
 
     "kg_bgp" -> ((s, dir) => {
       // the downstream KG query surface: a 3-pattern conjunctive query
@@ -1486,23 +1400,13 @@ object SparkEntry {
 
     "q72_sketch_distinct" -> ((s, dir) =>
       // HLL++ cardinality sketch under a hash-oracled error-band
-      // contract (the q26-contract pattern lifted to a full oracle):
-      // the hashed row carries the exact distinct count and an
+      // contract: the hashed row carries the exact distinct count and an
       // integer-math flag that the sketch landed within 10% of it; the
       // sketch's raw value (implementation-specific) never enters the
       // hash. At 100 TB the sketch is the only viable distinct path —
       // this audit is how you validate it on a sample first.
       graft.ops.Stats.sketchDistinctAudit(t(s, dir, "events"))
         .orderBy("event_type")),
-
-    "q63_dup_ngrams" -> ((s, dir) =>
-      // cross-document duplicated word-10-gram audit (the exact-substring
-      // dedup signal, Lee et al. 2022 ExactSubstr at word-gram
-      // granularity): per doc, how many gram positions also occur in
-      // another document — integer math end-to-end (dup_ppm via `div`),
-      // so the row set carries a full hash oracle.
-      Dedup.crossDocNgramDup(t(s, dir, "documents"), k = 10)
-        .orderBy("doc_id")),
 
     "q64_seq_packing" -> ((s, dir) =>
       // GPT-style sequence packing (concat-then-chunk at 128 tokens):
@@ -1515,25 +1419,6 @@ object SparkEntry {
         TextAnalysis.withTokenCounts(t(s, dir, "documents")),
         seqLen = 128)
         .orderBy("doc_id")),
-
-    "q73_edit_pairs" -> ((s, dir) =>
-      // exact Levenshtein-<=2 similarity self-join over the distinct
-      // part-name vocabulary via segment-pigeonhole candidates (PassJoin)
-      // + codegen levenshtein verify — the string half of the ER matcher
-      // (q74 is the token-set half). Exact by construction, so the
-      // brute-force DuckDB levenshtein join is a full hash oracle.
-      graft.ops.EditJoin.editDistancePairs(t(s, dir, "part"), d = 2)
-        .orderBy("a", "b")),
-
-    "q74_prefix_jaccard" -> ((s, dir) =>
-      // EXACT shingle-set Jaccard >= 1/2 join via AllPairs/PPJoin prefix
-      // filtering — the exactness-preserving complement of q13's df-cap:
-      // hot shingles sort to the END of the global frequency order and
-      // never enter the candidate join; verification runs on full sorted
-      // set arrays. All-integer (j_bp basis points) -> full hash oracle.
-      Dedup.prefixJaccardPairs(t(s, dir, "documents"), n = 3,
-        tNum = 1, tDen = 2)
-        .orderBy("a", "b")),
 
     "q62_freq_quality" -> ((s, dir) =>
       // corpus-frequency quality scoring (quantized CCNet-style LM
@@ -1700,10 +1585,6 @@ object SparkEntry {
       |      JOIN dv b ON a.doc = b.doc AND a.v < b.v),
       |und AS (SELECT s, o FROM e UNION SELECT o, s FROM e)""".stripMargin
 
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omitted for non-SQL-expressible ops
-    * (KG pipeline, LSH/minhash/simhash signatures, custom expression)
-    * → driver records a weaker rows-only check. */
   /** q36's tokenizer CTE chain (Text.tokenize re-derived in DuckDB),
     * factored so the chain — ending at `perdoc(doc_id, alltoks)` — is
     * reusable by q49's wordpiece oracle. */
@@ -1894,6 +1775,10 @@ object SparkEntry {
       |  LEFT JOIN g1 m1 ON m2.typ IS NULL AND t.tokens[w.cur] = m1.w1
       |  WHERE w.cur <= t.n)""".stripMargin
 
+  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
+    * the same parquet tables (or, for `kg_*`, on the exported gold triple
+    * set). Every query has one: the key sets of `queries` and `oracleSql`
+    * are equal, so a query cannot be added without its oracle. */
   def oracleSql: Map[String, String] = Map(
     // ---- composed-pipeline value checks (kg_* over the synthetic
     // corpus). The oracle aggregates the INDEPENDENTLY DERIVED gold
@@ -2454,39 +2339,6 @@ object SparkEntry {
         |       ELSE array_to_string(tokens[sp : ep], ' ') END AS pred_text
         |FROM spans ORDER BY src, rec_idx, root_idx""".stripMargin,
 
-    // q32: q13's exact-Jaccard pair derivation + union-find as a
-    // recursive CTE + the canonical-selection window, all in SQL.
-    "q32_dedup_clusters" ->
-      """WITH RECURSIVE w AS (SELECT doc_id, regexp_split_to_array(lower(text), '\s+') AS w
-        |  FROM documents),
-        |g AS (SELECT doc_id,
-        |    unnest(list_distinct([array_to_string(w[i:i+2], ' ')
-        |                          for i in range(1, len(w) - 1)])) AS g
-        |  FROM w WHERE len(w) >= 3),
-        |df AS (SELECT g, COUNT(*) AS df FROM g GROUP BY 1),
-        |kept AS (SELECT doc_id, t.g FROM g t JOIN df USING (g) WHERE df <= 100),
-        |n AS (SELECT doc_id, COUNT(*) AS nsh FROM kept GROUP BY 1),
-        |cand AS (SELECT l.doc_id AS a, r.doc_id AS b, COUNT(*) AS common
-        |  FROM kept l JOIN kept r ON l.g = r.g AND l.doc_id < r.doc_id
-        |  GROUP BY 1, 2),
-        |prs AS (SELECT a, b FROM cand JOIN n na ON na.doc_id = a JOIN n nb ON nb.doc_id = b
-        |  WHERE common::DOUBLE / (na.nsh + nb.nsh - common) >= 0.5),
-        |edges AS (SELECT a AS src, b AS dst FROM prs UNION ALL SELECT b, a FROM prs),
-        |verts AS (SELECT DISTINCT src AS v FROM edges),
-        |reach(v, lbl) AS (SELECT v, v FROM verts
-        |  UNION SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.v),
-        |comp AS (SELECT v, MIN(lbl) AS cluster_id FROM reach GROUP BY v),
-        |lens AS (SELECT doc_id, length(text) AS tlen FROM documents),
-        |ranked AS (SELECT c.v AS doc_id, c.cluster_id, l.tlen,
-        |    row_number() OVER (PARTITION BY c.cluster_id ORDER BY l.tlen DESC, c.v) AS rn
-        |  FROM comp c JOIN lens l ON l.doc_id = c.v),
-        |clustered AS (SELECT doc_id, cluster_id, CASE WHEN rn = 1 THEN 1 ELSE 0 END AS keep FROM ranked),
-        |singles AS (SELECT doc_id, doc_id AS cluster_id, 1 AS keep FROM documents
-        |  WHERE doc_id NOT IN (SELECT v FROM comp))
-        |SELECT CAST(doc_id AS BIGINT) AS doc_id, CAST(cluster_id AS BIGINT) AS cluster_id, CAST(keep AS INTEGER) AS keep
-        |FROM (SELECT * FROM clustered UNION ALL SELECT * FROM singles)
-        |ORDER BY doc_id""".stripMargin,
-
     // q31: the interval-containment join re-derived as plain SQL.
     "q31_contained_args" ->
       """WITH f AS (SELECT json(content) AS j FROM read_text('/root/reference/component/Duration/Mu_test_data/test_ace.pred.json')),
@@ -2638,35 +2490,6 @@ object SparkEntry {
         "WHERE pred IN ('hasType', 'hasDuration', 'speculated', 'hasEntity') " +
         "ORDER BY subj, pred, obj"),
 
-    // q59: decontamination re-derived with the q13-proven gram
-    // construction (same tokenization, same distinct-per-doc semantics);
-    // the eval split (doc_id % 37) and the one-hit rule are mirrored
-    // verbatim, and the fractions divide the same exact integers.
-    "q59_decontaminate" ->
-      """WITH w AS (SELECT doc_id, regexp_split_to_array(lower(text), '\s+') AS w
-        |  FROM documents WHERE doc_id % 37 <> 0),
-        |gl AS (SELECT doc_id,
-        |    CASE WHEN len(w) >= 8
-        |         THEN list_distinct([array_to_string(w[i:i+7], ' ')
-        |                             for i in range(1, len(w) - 6)])
-        |         ELSE []::VARCHAR[] END AS grams FROM w),
-        |ew AS (SELECT regexp_split_to_array(lower(text), '\s+') AS w
-        |  FROM documents WHERE doc_id % 37 = 0),
-        |ev AS (SELECT DISTINCT unnest(list_distinct(
-        |      [array_to_string(w[i:i+7], ' ') for i in range(1, len(w) - 6)])) AS gram
-        |  FROM ew WHERE len(w) >= 8),
-        |ex AS (SELECT doc_id, unnest(grams) AS gram FROM gl),
-        |hits AS (SELECT ex.doc_id, COUNT(*) AS eval_hits
-        |  FROM ex JOIN ev USING (gram) GROUP BY 1)
-        |SELECT gl.doc_id, len(gl.grams)::BIGINT AS n_grams,
-        |  COALESCE(h.eval_hits, 0)::BIGINT AS eval_hits,
-        |  CASE WHEN len(gl.grams) = 0 THEN 0.0
-        |       ELSE ROUND(COALESCE(h.eval_hits, 0)::DOUBLE / len(gl.grams), 4)
-        |       END AS overlap_frac,
-        |  CASE WHEN COALESCE(h.eval_hits, 0) > 0 THEN 1 ELSE 0 END AS contaminated
-        |FROM gl LEFT JOIN hits h ON gl.doc_id = h.doc_id
-        |ORDER BY gl.doc_id""".stripMargin,
-
     // q60: run counting re-derived the RELATIONAL way (gram unnest +
     // GROUP BY + MAX/SUM) against the engine's per-row sort-and-fold —
     // two independent algorithms for the same counts; flags are integer
@@ -2704,34 +2527,6 @@ object SparkEntry {
         |FROM base b LEFT JOIN bc ON b.doc_id = bc.doc_id
         |            LEFT JOIN tc ON b.doc_id = tc.doc_id
         |ORDER BY b.doc_id""".stripMargin,
-
-    // q61: the quantization is re-derived element-for-element (exact
-    // float→double casts, one IEEE divide+multiply, half-away-from-zero
-    // round — identical in both engines), then integer dot products and
-    // one final double division; ordering uses the FULL-precision score
-    // (qualified column, q14 discipline) before the display rounding.
-    "q61_quantized_knn" ->
-      """WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        |m AS (SELECT vec_id, v, list_max(list_transform(v, x -> abs(x))) AS m FROM v),
-        |q AS (SELECT vec_id,
-        |    CASE WHEN m = 0 OR m IS NULL THEN list_transform(v, x -> 0)
-        |         ELSE list_transform(v, x -> CAST(round(x * (127.0 / m)) AS INT))
-        |         END AS qv
-        |  FROM m),
-        |qq AS (SELECT qv AS qqv FROM q WHERE vec_id = 0),
-        |s AS (SELECT vec_id,
-        |    list_sum(list_transform(list_zip(qv, qqv),
-        |      p -> CAST(p[1] AS BIGINT) * CAST(p[2] AS BIGINT))) AS dot,
-        |    list_sum(list_transform(qv, x -> CAST(x AS BIGINT) * CAST(x AS BIGINT))) AS na,
-        |    list_sum(list_transform(qqv, x -> CAST(x AS BIGINT) * CAST(x AS BIGINT))) AS nb
-        |  FROM q, qq),
-        |sc AS (SELECT vec_id,
-        |    CASE WHEN na = 0 OR nb = 0 THEN 0.0
-        |         ELSE dot::DOUBLE / (sqrt(na::DOUBLE) * sqrt(nb::DOUBLE)) END AS qcos
-        |  FROM s),
-        |top AS (SELECT vec_id, qcos FROM sc ORDER BY qcos DESC, vec_id LIMIT 10)
-        |SELECT vec_id, ROUND(qcos, 4) AS qcos
-        |FROM top ORDER BY top.qcos DESC, vec_id""".stripMargin,
 
     // kg_bgp: the identical conjunction as SQL self-joins over the gold
     // triple set (bag semantics over a set store on both sides — join
@@ -3091,31 +2886,6 @@ object SparkEntry {
         |  1::BIGINT AS sketch_in_band
         |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
 
-    // q63: the same gram construction relationally — list slicing for
-    // the 10-grams, HAVING count(DISTINCT doc_id) >= 2 for the cross-doc
-    // test, `//` integer division for the exact ppm.
-    "q63_dup_ngrams" ->
-      """WITH toks AS (SELECT doc_id,
-        |    list_filter(string_split(text, ' '), t -> t <> '') AS toks
-        |  FROM documents),
-        |grams AS (SELECT doc_id, unnest(CASE WHEN len(toks) >= 10
-        |    THEN list_transform(range(1, len(toks) - 8),
-        |                        i -> array_to_string(toks[i:i+9], ' '))
-        |    ELSE []::VARCHAR[] END) AS gram FROM toks),
-        |dup AS (SELECT gram FROM grams GROUP BY gram
-        |        HAVING count(DISTINCT doc_id) >= 2),
-        |tot AS (SELECT doc_id, count(*)::BIGINT AS n_grams FROM grams GROUP BY doc_id),
-        |dd AS (SELECT doc_id, count(*)::BIGINT AS dup_grams FROM grams
-        |       WHERE gram IN (SELECT gram FROM dup) GROUP BY doc_id)
-        |SELECT d.doc_id,
-        |  COALESCE(tot.n_grams, 0)::BIGINT AS n_grams,
-        |  COALESCE(dd.dup_grams, 0)::BIGINT AS dup_grams,
-        |  CASE WHEN COALESCE(tot.n_grams, 0) = 0 THEN 0::BIGINT
-        |       ELSE COALESCE(dd.dup_grams, 0)::BIGINT * 1000000 // tot.n_grams END AS dup_ppm
-        |FROM (SELECT doc_id FROM documents) d
-        |LEFT JOIN tot USING (doc_id) LEFT JOIN dd USING (doc_id)
-        |ORDER BY d.doc_id""".stripMargin,
-
     // q64: the same packing layout from ONE global window (the oracle
     // can afford the single-task shape the engine must avoid) — same
     // ws-token definition as q16, `//`+`%` integer arithmetic.
@@ -3447,110 +3217,6 @@ object SparkEntry {
         |       ELSE LEN(regexp_split_to_array(TRIM(text), '\s+')) END AS ws_tokens,
         |  LEN(regexp_extract_all(text, '[A-Za-z]+|[0-9]|[^A-Za-z0-9\s]')) AS bpe_ish_tokens
         |FROM documents ORDER BY doc_id""".stripMargin,
-    // q11: the oracle is EXACT n-gram Jaccard >= 0.5 over all pairs; the
-    // engine's LSH (16 minhashes, 4 bands) is probabilistic, but on this
-    // corpus the only pairs above 0.5 are near-identical templates whose
-    // band-collision probability is ~1 — verified: LSH finds exactly the
-    // exact-Jaccard pair set at sf0.001/sf0.01 (deterministic seeded
-    // hashes, so this equality is stable, not a lucky draw).
-    "q11_minhash_neardups" ->
-      """WITH w AS (SELECT doc_id, regexp_split_to_array(lower(text), '\s+') AS w
-        |  FROM documents),
-        |g AS (SELECT doc_id,
-        |    unnest(list_distinct([array_to_string(w[i:i+2], ' ')
-        |                          for i in range(1, len(w) - 1)])) AS g
-        |  FROM w WHERE len(w) >= 3),
-        |n AS (SELECT doc_id, COUNT(*) AS nsh FROM g GROUP BY 1),
-        |pairs AS (SELECT l.doc_id AS a, r.doc_id AS b, COUNT(*) AS common
-        |  FROM g l JOIN g r ON l.g = r.g AND l.doc_id < r.doc_id GROUP BY 1, 2)
-        |SELECT a, b,
-        |  ROUND(common::DOUBLE / (na.nsh + nb.nsh - common), 4) AS jaccard
-        |FROM pairs JOIN n na ON na.doc_id = a JOIN n nb ON nb.doc_id = b
-        |WHERE common::DOUBLE / (na.nsh + nb.nsh - common) >= 0.5
-        |ORDER BY 1, 2""".stripMargin,
-    // q13: exact Jaccard over the df-capped shingle universe — the cap
-    // (df <= 100) is part of the operator's semantics and is mirrored
-    // here, so engine and oracle agree at ANY scale, not just when the
-    // cap never fires.
-    "q13_ngram_jaccard" ->
-      """WITH w AS (SELECT doc_id, regexp_split_to_array(lower(text), '\s+') AS w
-        |  FROM documents),
-        |g AS (SELECT doc_id,
-        |    unnest(list_distinct([array_to_string(w[i:i+2], ' ')
-        |                          for i in range(1, len(w) - 1)])) AS g
-        |  FROM w WHERE len(w) >= 3),
-        |df AS (SELECT g, COUNT(*) AS df FROM g GROUP BY 1),
-        |kept AS (SELECT doc_id, t.g FROM g t JOIN df USING (g) WHERE df <= 100),
-        |n AS (SELECT doc_id, COUNT(*) AS nsh FROM kept GROUP BY 1),
-        |pairs AS (SELECT l.doc_id AS a, r.doc_id AS b, COUNT(*) AS common
-        |  FROM kept l JOIN kept r ON l.g = r.g AND l.doc_id < r.doc_id
-        |  GROUP BY 1, 2)
-        |SELECT a, b,
-        |  ROUND(common::DOUBLE / (na.nsh + nb.nsh - common), 4) AS jaccard
-        |FROM pairs JOIN n na ON na.doc_id = a JOIN n nb ON nb.doc_id = b
-        |WHERE common::DOUBLE / (na.nsh + nb.nsh - common) >= 0.5
-        |ORDER BY 1, 2""".stripMargin,
-    // q73: the segment-pigeonhole candidate generation is exact (no false
-    // negatives) and verification removes false positives, so brute-force
-    // levenshtein over the distinct vocabulary IS the result.
-    "q73_edit_pairs" ->
-      """WITH n AS (SELECT p_name AS s, COUNT(*) AS w FROM part
-        |  WHERE p_name IS NOT NULL GROUP BY 1)
-        |SELECT a.s AS a, b.s AS b,
-        |  levenshtein(a.s, b.s) AS dist, a.w AS wa, b.w AS wb
-        |FROM n a JOIN n b ON a.s < b.s
-        |WHERE levenshtein(a.s, b.s) <= 2
-        |ORDER BY 1, 2""".stripMargin,
-    // q74: prefix filtering is exact over the UNCAPPED shingle universe,
-    // so the oracle is the q13 brute force without the df cap, with the
-    // rational threshold and basis-point quantization in integer math.
-    "q74_prefix_jaccard" ->
-      """WITH w AS (SELECT doc_id, regexp_split_to_array(lower(text), '\s+') AS w
-        |  FROM documents),
-        |g AS (SELECT doc_id,
-        |    unnest(list_distinct([array_to_string(w[i:i+2], ' ')
-        |                          for i in range(1, len(w) - 1)])) AS g
-        |  FROM w WHERE len(w) >= 3),
-        |n AS (SELECT doc_id, COUNT(*) AS nsh FROM g GROUP BY 1),
-        |p AS (SELECT l.doc_id AS a, r.doc_id AS b, COUNT(*) AS common
-        |  FROM g l JOIN g r ON l.g = r.g AND l.doc_id < r.doc_id
-        |  GROUP BY 1, 2)
-        |SELECT a, b, common, na.nsh AS na, nb.nsh AS nb,
-        |  (common * 10000) // (na.nsh + nb.nsh - common) AS j_bp
-        |FROM p JOIN n na ON na.doc_id = a JOIN n nb ON nb.doc_id = b
-        |WHERE common * 2 >= (na.nsh + nb.nsh - common) * 1
-        |ORDER BY 1, 2""".stripMargin,
-    // q12: exact all-pairs simhash Hamming <= 3 — the engine's 4×15-bit
-    // band blocking is pigeonhole-EXACT at maxDist 3, so the banded result
-    // equals this brute-force oracle. The word-hash family is Karp-Rabin
-    // mod 2^61-1 (the q17 trick), reproduced here in HUGEINT.
-    "q12_simhash_neardups" ->
-      """WITH RECURSIVE pw(j, p) AS (
-        |  SELECT 0, 1::HUGEINT
-        |  UNION ALL
-        |  SELECT j + 1, (p * 1000003::HUGEINT) % 2305843009213693951::HUGEINT
-        |  FROM pw WHERE j < 31),
-        |pows AS (SELECT list(p ORDER BY j) AS pl FROM pw),
-        |w AS (SELECT doc_id,
-        |    list_filter(regexp_split_to_array(lower(text), '\s+'), x -> x <> '') AS ws
-        |  FROM documents),
-        |h AS (SELECT doc_id,
-        |    [CAST(list_sum([unicode(wd[i+1])::HUGEINT * pl[least(length(wd), 32) - i]
-        |                    for i in range(0, least(length(wd), 32))])
-        |          % 2305843009213693951::HUGEINT AS BIGINT)
-        |     for wd in ws] AS hs
-        |  FROM w, pows),
-        |s AS (SELECT doc_id,
-        |    CAST(list_sum([CASE WHEN list_sum([CASE WHEN ((hh >> b) & 1) = 1 THEN 1 ELSE -1 END
-        |                                  for hh in hs]) > 0
-        |              THEN (1::BIGINT << b) ELSE 0 END
-        |              for b in range(0, 60)]) AS BIGINT) AS sig
-        |  FROM h)
-        |SELECT a.doc_id AS a, b.doc_id AS b,
-        |  CAST(bit_count(xor(a.sig, b.sig)) AS INT) AS hamming
-        |FROM s a JOIN s b ON a.doc_id < b.doc_id
-        |WHERE bit_count(xor(a.sig, b.sig)) <= 3
-        |ORDER BY 1, 2""".stripMargin,
     "q15_langid_dist" ->
       """WITH scored AS (
         |  SELECT doc_id, text,
@@ -3607,7 +3273,7 @@ object SparkEntry {
         |ORDER BY doc_id""".stripMargin,
     // q51: the SQL-surface query re-derived function-free — the q17
     // rolling-hash CTE for rolling_fingerprint plus
-    // list_cosine_similarity on DOUBLE[] (the q23 convention) for
+    // list_cosine_similarity on DOUBLE[] for
     // cosine_similarity, over the same doc_id/vec_id equi-joins.
     "q51_sql_functions" ->
       """WITH RECURSIVE pw(j, p) AS (
@@ -3654,34 +3320,6 @@ object SparkEntry {
         |  COUNT(DISTINCT user_id) AS users
         |FROM events e JOIN dim USING (event_type)
         |GROUP BY 1 ORDER BY 1""".stripMargin,
-    // q54: the incremental cross-pair Jaccard re-derived from scratch —
-    // the committed-index path must equal a direct recomputation. Same
-    // shingling as the q13 oracle; the df cap is CORPUS-df, applied to
-    // both sides (stop-shingles drop from batch sets too).
-    "q54_incremental_neardup" ->
-      """WITH w AS (SELECT doc_id, regexp_split_to_array(lower(text), '\s+') AS w
-        |  FROM documents),
-        |g AS (SELECT doc_id,
-        |    unnest(list_distinct([array_to_string(w[i:i+2], ' ')
-        |                          for i in range(1, len(w) - 1)])) AS g
-        |  FROM w WHERE len(w) >= 3),
-        |cg AS (SELECT * FROM g WHERE doc_id % 10 <> 0),
-        |bg AS (SELECT * FROM g WHERE doc_id % 10 = 0),
-        |df AS (SELECT g, COUNT(*) AS df FROM cg GROUP BY 1),
-        |keptc AS (SELECT doc_id, t.g FROM cg t JOIN df USING (g) WHERE df <= 100),
-        |keptb AS (SELECT doc_id, g FROM bg
-        |  WHERE g NOT IN (SELECT g FROM df WHERE df > 100)),
-        |nc AS (SELECT doc_id, COUNT(*) AS n FROM keptc GROUP BY 1),
-        |nb AS (SELECT doc_id, COUNT(*) AS n FROM keptb GROUP BY 1),
-        |pairs AS (SELECT b.doc_id AS new_id, c.doc_id AS corpus_id,
-        |    COUNT(*) AS common
-        |  FROM keptb b JOIN keptc c ON b.g = c.g GROUP BY 1, 2)
-        |SELECT new_id, corpus_id,
-        |  ROUND(common::DOUBLE / (nb.n + nc.n - common), 4) AS jaccard
-        |FROM pairs JOIN nb ON nb.doc_id = new_id
-        |JOIN nc ON nc.doc_id = corpus_id
-        |WHERE common::DOUBLE / (nb.n + nc.n - common) >= 0.5
-        |ORDER BY 1, 2""".stripMargin,
     // q55: the K3 batch plan re-derived with SQL window functions — same
     // ws-token length as q16, same grouping (doc_id % 16), rank by len
     // desc / doc_id asc, batches of 8, pad_waste = n*max-sum.
@@ -3723,13 +3361,6 @@ object SparkEntry {
         |WHERE ((doc_id * 2654435761 + 12345) % 1000003) % 1000 <
         |  CASE WHEN lang = 'en' THEN 100 ELSE 500 END
         |ORDER BY doc_id""".stripMargin,
-    "q23_embed_neardup" ->
-      """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings)
-        |SELECT a.vec_id AS a, b.vec_id AS b,
-        |  ROUND(list_cosine_similarity(a.v, b.v), 4) AS cos
-        |FROM e a JOIN e b ON a.vec_id < b.vec_id
-        |WHERE list_cosine_similarity(a.v, b.v) >= 0.4
-        |ORDER BY 1, 2""".stripMargin,
     "q25_quality" ->
       """WITH f AS (
         |  SELECT doc_id,

@@ -306,7 +306,7 @@ object Pipeline {
     // trigger positions come from the CACHED tagged frame, not from
     // `events`: the events subtree runs per-event argument Viterbi, and
     // evaluating it a second time just to read (sentKey, trigStart) was
-    // ~20% of total pipeline task time (QBench round 3) — the tagged
+    // ~20% of total pipeline task time (round-3 profile) — the tagged
     // triggers carry the same key set for free
     val triggerKeys = tagged
       .select(col("sentKey"), explode(col("triggers")).as("tr"))

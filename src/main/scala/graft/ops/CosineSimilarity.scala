@@ -12,11 +12,11 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   *
   * The higher-order-function formulation (`aggregate(zip_with(...))`) is
   * semantically identical but HOFs evaluate INTERPRETED in Spark — lambda
-  * per element, boxed doubles. On the all-pairs near-dup join that is
-  * millions of 64-element cosines and dominated the q23/q26 bench
-  * (82 s at sf0.1). This expression runs the same double-accumulated
-  * loop (cast each float to double, multiply, left-to-right sum — the
-  * identical floating-point result) inside generated code.
+  * per element, boxed doubles. On an all-pairs join that is millions of
+  * 64-element cosines (82 s at sf0.1). This expression runs the same
+  * double-accumulated loop (cast each float to double, multiply,
+  * left-to-right sum — the identical floating-point result) inside
+  * generated code.
   */
 case class CosineSimilarity(left: Expression, right: Expression)
     extends BinaryExpression with ExpectsInputTypes {

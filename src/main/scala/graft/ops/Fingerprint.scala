@@ -76,9 +76,9 @@ object RollingFingerprint {
 
   /** (a*b) mod (2^61-1) without BigInteger: 2^64 ≡ 2^3 (mod 2^61-1), so
     * fold the 128-bit product hi:lo as (lo mod M) + (hi*8 + lo>>>61).
-    * Shared with Dedup's Karp-Rabin word hash (the oracle-expressible
-    * hash family — DuckDB HUGEINT reproduces it exactly). */
-  private[ops] def mulMod(a: Long, b: Long): Long = {
+    * DuckDB's HUGEINT reproduces it exactly, which keeps the hash
+    * oracle-expressible. */
+  private def mulMod(a: Long, b: Long): Long = {
     val hi = Math.multiplyHigh(a, b)
     val lo = a * b
     var r = (lo & Mod) + ((hi << 3) | (lo >>> 61))

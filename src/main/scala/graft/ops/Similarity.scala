@@ -3,21 +3,9 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Similarity search over an embedding column (`array<float>`).
-  *
-  * Baseline: brute-force cosine top-k, expressed entirely in Catalyst
-  * higher-order functions (`zip_with` for the dot product, `aggregate` for
-  * the norms) — whole-stage-codegen'd, no UDF, so the scan+score is one
-  * fused stage; the only shuffle is the top-k (a TakeOrderedAndProject,
-  * not a full sort).
-  *
-  * Scale path: LSH-bucketed ANN — offline signature = sign bits of
-  * `nPlanes` seeded random hyperplanes; a query probes its own bucket plus
-  * all buckets at Hamming distance 1 (multi-probe), then brute-forces only
-  * inside the probed buckets. Bucket assignment is one narrow map; the
-  * probe is a semi-join on bucket id. At 10^12 rows the probed fraction is
-  * 2^-nPlanes × (nPlanes+1), independent of corpus size.
-  */
+/** Brute-force cosine top-k over an embedding column (`array<float>`):
+  * the scan+score is one fused codegen stage; the only shuffle is the
+  * top-k (a TakeOrderedAndProject, not a full sort). */
 object Similarity {
 
   /** Cosine similarity between an embedding column and a literal query
@@ -34,413 +22,4 @@ object Similarity {
       .orderBy(col("cos").desc, col(idCol))
       .limit(k)
       .select(col(idCol), round(col("cos"), 4).as("cos"))
-
-  // ---- LSH-bucketed ANN ----
-
-  /** Deterministic pseudo-random hyperplanes (seeded, dimension `dim`). */
-  def hyperplanes(dim: Int, nPlanes: Int, seed: Long = 42L): Array[Array[Float]] = {
-    val rng = new scala.util.Random(seed)
-    Array.fill(nPlanes)(Array.fill(dim)((rng.nextDouble() * 2 - 1).toFloat))
-  }
-
-  /** Sign-bit bucket id for each embedding row (narrow map, no shuffle). */
-  def withBucket(embeddings: DataFrame, planes: Array[Array[Float]],
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val spark = embeddings.sparkSession
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(planes)
-    embeddings.select(col(idCol).cast("long"), col(vecCol)).as[(Long, Seq[Float])]
-      .mapPartitions { it =>
-        val ps = bc.value
-        it.map { case (id, v) =>
-          (id, bucketOf(v.toArray, ps))
-        }
-      }.toDF(idCol, "bucket")
-  }
-
-  def bucketOf(v: Array[Float], planes: Array[Array[Float]]): Int = {
-    var b = 0
-    var i = 0
-    while (i < planes.length) {
-      var dot = 0.0
-      val p = planes(i)
-      var j = 0
-      val n = math.min(p.length, v.length)
-      while (j < n) { dot += p(j) * v(j); j += 1 }
-      if (dot >= 0) b |= (1 << i)
-      i += 1
-    }
-    b
-  }
-
-  /** Shared default table count for the multi-table LSH surface —
-    * `nearDupPairs`, `lshBuckets` and `lshDroppedBuckets` must agree or
-    * the audit view inspects a different configuration than the
-    * operator it audits. */
-  val DefaultTables = 8
-
-  /** Planes needed so the EXPECTED bucket occupancy stays near
-    * `targetBucket` rows: 2^planes buckets over n rows. Grows with the
-    * corpus (log2), so within-bucket work is corpus-size-independent —
-    * the property a fixed nPlanes lacks at 10^12 rows. Floor of 4 keeps
-    * small test corpora non-degenerate; ceiling of 31 keeps the sign-bit
-    * signature inside a positive Int (beyond ~5·10^11 rows the expected
-    * bucket size grows linearly instead — widen the bucket id to Long
-    * before raising the cap, or shard the corpus). */
-  def adaptivePlanes(n: Long, targetBucket: Long = 256L): Int =
-    math.min(31, math.max(4,
-      math.ceil(math.log(math.max(1.0, n.toDouble / targetBucket)) /
-        math.log(2.0)).toInt))
-
-  /** ANN top-k: probe the query's bucket and all buckets within Hamming
-    * distance `probeHamming` (multi-probe LSH), then exact cosine inside
-    * the probed set. `nPlanes <= 0` → adaptive (scales with corpus size).
-    *
-    * Probed fraction = C(planes,0..h)/2^planes — it SHRINKS as the corpus
-    * (and with it `planes`) grows: h=2 probes 11/16 at 4 planes (500-row
-    * test corpus) but 79/4096 ≈ 2% at 12 planes (10^6 rows) and 0.003% at
-    * 22 planes (10^9 rows), while multi-probe keeps recall high (sign-LSH
-    * bucket boundaries miss near-neighbors that differ in 1-2 bits). */
-  def annTopK(embeddings: DataFrame, query: Seq[Float], k: Int,
-      nPlanes: Int = 0, probeHamming: Int = 2, idCol: String = "vec_id",
-      vecCol: String = "embedding", corpusSize: Long = -1L): DataFrame = {
-    // corpusSize lets a query-serving loop precompute the count once
-    // instead of paying a driver-blocking count() per query
-    val planes0 = if (nPlanes > 0) nPlanes
-      else adaptivePlanes(
-        if (corpusSize > 0) corpusSize else embeddings.count(),
-        targetBucket = 64L)
-    val dim = query.length
-    val planes = hyperplanes(dim, planes0)
-    val qb = bucketOf(query.toArray, planes)
-    // generate the Hamming ball combinatorially (enumerating all 2^planes
-    // buckets would cost 4M driver iterations at 22 planes)
-    def ball(center: Int, h: Int, fromBit: Int): Seq[Int] =
-      if (h == 0) Seq(center)
-      else center +: (fromBit until planes0).flatMap(i =>
-        ball(center ^ (1 << i), h - 1, i + 1))
-    val probes = ball(qb, probeHamming, 0).distinct
-    val buckets = withBucket(embeddings, planes, idCol, vecCol)
-    val probed = embeddings.join(
-      buckets.filter(col("bucket").isin(probes: _*)).select(idCol), Seq(idCol),
-      "left_semi")
-    bruteForceTopK(probed, query, k, idCol, vecCol)
-  }
-
-  /** Double-accumulated cosine between two float-array columns — the
-    * native codegen expression (HOF `aggregate`/`zip_with` evaluate
-    * interpreted; on millions of pair-cosines that is the difference
-    * between 82 s and a few seconds at sf0.1). Arithmetic is identical
-    * to the HOF form, so oracle hashes are unchanged. */
-  private def pairCos(va: Column, vb: Column): Column =
-    CosineSimilarity.cosine_similarity(va, vb)
-
-  /** EXACT embedding near-dup pairs: all-pairs cosine >= threshold. The
-    * O(n²) verification baseline (and the recall ground truth for the LSH
-    * path) — at corpus scale use `nearDupPairs`; this one is for bounded
-    * slices and oracle checks. */
-  def exactNearDupPairs(embeddings: DataFrame, threshold: Double,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val l = embeddings.select(col(idCol).as("a"), col(vecCol).as("va"))
-    val r = embeddings.select(col(idCol).as("b"), col(vecCol).as("vb"))
-    l.join(r, col("a") < col("b"))
-      .withColumn("cos", pairCos(col("va"), col("vb")))
-      .filter(col("cos") >= threshold)
-      .select(col("a"), col("b"), round(col("cos"), 4).as("cos"))
-  }
-
-  /** Embedding-cosine near-duplicate pairs (the 5th dedup strategy):
-    * banded multi-table LSH — `nTables` independent hyperplane tables;
-    * a pair is a candidate if it shares a bucket in ANY table (recall
-    * 1-(1-p^planes)^tables, the same band trick as MinHash) — then exact
-    * cosine verification inside buckets. With P planes per table and T
-    * tables, recall = 1-(1-p^P)^T for per-plane agreement p; at the true
-    * near-dup threshold (cos >= 0.95, p >= 0.9) the 4-plane floor with
-    * T=8 gives ≈ 0.99997 (p^P falls as P grows with the corpus — raise T
-    * to compensate at extreme scale). Bench reports measured pair recall
-    * in BOTH regimes: planted cos≥0.95 clones (the operator's contract)
-    * and the synthetic corpus whose closest pairs sit at cos ≈ 0.4-0.5 —
-    * a deliberately adversarial regime for sign-LSH (p ≈ 0.63).
-    *
-    * `nPlanes <= 0` → adaptive: planes grow log2 with the corpus so
-    * expected bucket size stays constant (a fixed 6 planes = 64 buckets
-    * is O(n²/64) pair work at 10^9 rows — the scale-killer this fixes).
-    * `maxBucket` caps degenerate buckets (all-equal embeddings): buckets
-    * larger than the cap are dropped from pairing — count them with
-    * `lshDroppedBuckets` on the same frame, no silent truncation. */
-  def nearDupPairs(embeddings: DataFrame, threshold: Double = 0.95,
-      nPlanes: Int = 0, nTables: Int = DefaultTables, maxBucket: Int = 1000,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    // eager snapshot: the bucket assignment feeds the size aggregate AND
-    // (through kept) both candidate join sides — without it the nTables×
-    // hyperplane mapPartitions pass re-executes per consumer (the same
-    // recompute-hygiene class as Dedup's signature snapshots)
-    val bucketed = lshBuckets(embeddings, nPlanes, nTables, idCol, vecCol)
-      .localCheckpoint(true)
-    val sizes = bucketed.groupBy("table", "bucket")
-      .agg(count(lit(1)).as("bsz"))
-    val kept = bucketed.join(sizes.filter(col("bsz") <= maxBucket),
-      Seq("table", "bucket"))
-    val l = kept.select(col("table"), col("bucket"), col(idCol).as("a"))
-    val r = kept.select(col("table"), col("bucket"), col(idCol).as("b"))
-    // dedup candidates on (a,b) BEFORE verification (same shape as
-    // Dedup.minhashCandidates): a pair sharing buckets in k of the
-    // nTables tables pays ONE cosine, and the vectors join in once by id
-    // instead of riding the bucket shuffle ×nTables
-    val cand = l.join(r, Seq("table", "bucket")).filter(col("a") < col("b"))
-      .select("a", "b").distinct()
-    val va = embeddings.select(col(idCol).cast("long").as("a"),
-      col(vecCol).as("va"))
-    val vb = embeddings.select(col(idCol).cast("long").as("b"),
-      col(vecCol).as("vb"))
-    cand.join(va, Seq("a")).join(vb, Seq("b"))
-      .select(col("a"), col("b"),
-        round(pairCos(col("va"), col("vb")), 4).as("cos"))
-      .filter(col("cos") >= threshold)
-  }
-
-  /** One row per (table, row): the multi-table LSH bucket id assignment
-    * (ids only — verification joins vectors back by id) shared by
-    * `nearDupPairs` and `lshDroppedBuckets`. `corpusSize`/`dim` let a
-    * caller that already knows them skip the count()/first() jobs. */
-  def lshBuckets(embeddings: DataFrame, nPlanes: Int = 0,
-      nTables: Int = DefaultTables, idCol: String = "vec_id",
-      vecCol: String = "embedding", corpusSize: Long = -1L,
-      dim: Int = -1): DataFrame = {
-    val planes0 = if (nPlanes > 0) nPlanes
-      else adaptivePlanes(if (corpusSize > 0) corpusSize
-        else embeddings.count())
-    val spark = embeddings.sparkSession
-    import spark.implicits._
-    val dim0 = if (dim > 0) dim
-      else embeddings.select(size(col(vecCol))).first().getInt(0)
-    val tables = (0 until nTables)
-      .map(t => hyperplanes(dim0, planes0, seed = 42L + t)).toArray
-    val bc = spark.sparkContext.broadcast(tables)
-    embeddings.select(col(idCol).cast("long"), col(vecCol))
-      .as[(Long, Seq[Float])]
-      .mapPartitions { it =>
-        val ts = bc.value
-        it.flatMap { case (id, v) =>
-          val arr = v.toArray
-          ts.indices.map(t => (t, bucketOf(arr, ts(t)), id))
-        }
-      }.toDF("table", "bucket", idCol)
-  }
-
-  /** Buckets the `maxBucket` cap would drop, with sizes — the audit view
-    * of nearDupPairs' truncation (same DefaultTables, so it audits the
-    * configuration nearDupPairs actually runs). */
-  def lshDroppedBuckets(embeddings: DataFrame, nPlanes: Int = 0,
-      nTables: Int = DefaultTables, maxBucket: Int = 1000,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    lshBuckets(embeddings, nPlanes, nTables, idCol, vecCol)
-      .groupBy("table", "bucket").agg(count(lit(1)).as("bsz"))
-      .filter(col("bsz") > maxBucket)
-
-  // ---- IVF (inverted-file) ANN — the second scale path ----
-  //
-  // Sign-LSH (above) partitions by random hyperplanes; IVF partitions by a
-  // DATA-ADAPTIVE coarse quantizer (k-means centroids), which wins when
-  // the corpus is clustered (real embedding corpora are): a query probes
-  // the nProbe nearest lists, so the scanned fraction is ~nProbe/k and
-  // each list is a semantically coherent region instead of a random
-  // halfspace cell. Classical IVF sizing: k ≈ sqrt(n) centroids, so both
-  // the centroid scan (k) and the probed rows (nProbe·n/k) grow as
-  // sqrt(n) — at 10^9 rows that is ~31k centroids and ~31k rows scanned
-  // per probe, vs 10^9 for brute force.
-
-  /** Nearest centroid index by cosine (ties → lowest index). */
-  def nearestCentroid(v: Array[Float], cents: Array[Array[Float]]): Int = {
-    var best = 0; var bestCos = Double.MinValue
-    var vn = 0.0
-    var j = 0
-    while (j < v.length) { vn += v(j).toDouble * v(j); j += 1 }
-    val vnorm = math.sqrt(vn)
-    var c = 0
-    while (c < cents.length) {
-      val p = cents(c)
-      var dot = 0.0; var pn = 0.0
-      var i = 0
-      val n = math.min(p.length, v.length)
-      while (i < n) { dot += p(i).toDouble * v(i); pn += p(i).toDouble * p(i); i += 1 }
-      val cos = if (pn == 0.0 || vnorm == 0.0) -2.0 else dot / (math.sqrt(pn) * vnorm)
-      if (cos > bestCos) { bestCos = cos; best = c }
-      c += 1
-    }
-    best
-  }
-
-  /** Centroid count for a corpus of n rows: the classical sqrt(n) IVF
-    * sizing, floored for tiny test corpora. */
-  def adaptiveCentroids(n: Long): Int =
-    math.max(4, math.min(65536, math.ceil(math.sqrt(n.toDouble)).toInt))
-
-  /** Deterministic k-means coarse quantizer. Seeds are the k rows with
-    * the smallest xxhash64(id) — a uniform, partitioning-independent
-    * sample — refined by `iters` Lloyd iterations. Each iteration is one
-    * narrow pass (assignment against broadcast centroids, per-partition
-    * partial sums) plus a k-row shuffle of pre-aggregated (sum, count)
-    * pairs — NO full-vector shuffle, so an iteration's cost is one corpus
-    * scan regardless of k. Empty clusters keep their previous centroid.
-    * Train once offline and reuse via the `centroids` parameter of
-    * `ivfTopK` in a query-serving loop. */
-  def trainCentroids(embeddings: DataFrame, k: Int, iters: Int = 4,
-      idCol: String = "vec_id", vecCol: String = "embedding"): Array[Array[Float]] = {
-    val spark = embeddings.sparkSession
-    import spark.implicits._
-    val ds = embeddings.select(col(idCol).cast("long"), col(vecCol))
-      .as[(Long, Seq[Float])]
-    var cents: Array[Array[Float]] = embeddings
-      .select(col(vecCol), xxhash64(col(idCol).cast("long")).as("h"))
-      .orderBy("h").limit(k) // TakeOrdered: no global sort materialized
-      .select(col(vecCol)).as[Seq[Float]].collect().map(_.toArray)
-    var it = 0
-    while (it < iters && cents.nonEmpty) {
-      val bc = spark.sparkContext.broadcast(cents)
-      // (cluster, partial sum, partial count) per partition — at most
-      // numPartitions × k tiny rows reach the reduce
-      val partials = ds.mapPartitions { rows =>
-        val cs = bc.value
-        val sums = Array.ofDim[Array[Double]](cs.length)
-        val cnts = new Array[Long](cs.length)
-        rows.foreach { case (_, v) =>
-          val a = v.toArray
-          val c = nearestCentroid(a, cs)
-          if (sums(c) == null) sums(c) = new Array[Double](a.length)
-          val s = sums(c)
-          var j = 0
-          val n = math.min(s.length, a.length)
-          while (j < n) { s(j) += a(j); j += 1 }
-          cnts(c) += 1
-        }
-        sums.indices.iterator.filter(cnts(_) > 0)
-          .map(c => (c, (sums(c).toSeq, cnts(c))))
-      }
-      val merged = partials.groupByKey(_._1)
-        .reduceGroups { (x: (Int, (Seq[Double], Long)), y: (Int, (Seq[Double], Long))) =>
-          val (sa, ca) = x._2; val (sb, cb) = y._2
-          (x._1, (sa.zip(sb).map { case (p, q) => p + q }, ca + cb))
-        }
-        .map { case (c, (_, (s, n))) => (c, s.map(v => (v / n).toFloat)) }
-        .collect().toMap
-      cents = cents.indices.map(c =>
-        merged.get(c).map(_.toArray).getOrElse(cents(c))).toArray
-      bc.unpersist()
-      it += 1
-    }
-    cents
-  }
-
-  /** Inverted-list assignment: one narrow map over broadcast centroids →
-    * (id, list). At scale this column is what you'd bucket/partition the
-    * stored table by, so a probe is a partition-pruned scan. */
-  def ivfAssign(embeddings: DataFrame, cents: Array[Array[Float]],
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val spark = embeddings.sparkSession
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(cents)
-    embeddings.select(col(idCol).cast("long"), col(vecCol))
-      .as[(Long, Seq[Float])]
-      .mapPartitions { rows =>
-        val cs = bc.value
-        rows.map { case (id, v) => (id, nearestCentroid(v.toArray, cs)) }
-      }.toDF(idCol, "list")
-  }
-
-  /** IVF ANN top-k: rank centroids by cosine to the query driver-side
-    * (k centroids ≈ sqrt(n) — tiny), probe the `nProbe` nearest lists,
-    * exact cosine inside the probed rows only. `centroids` — pass a
-    * pretrained quantizer to skip training, and `assigned` — a
-    * precomputed `ivfAssign` frame (ideally written out bucketed by
-    * `list`) to skip the per-query assignment scan: the query-serving
-    * shape is train once, assign once, then each query touches only the
-    * probed lists. `k <= 0` → adaptive sqrt(corpus). With nProbe >= k
-    * every list is probed and the result equals brute force exactly
-    * (tested). */
-  def ivfTopK(embeddings: DataFrame, query: Seq[Float], kNN: Int,
-      nProbe: Int = 4, k: Int = 0, iters: Int = 4,
-      centroids: Array[Array[Float]] = null,
-      assigned: DataFrame = null,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      corpusSize: Long = -1L): DataFrame = {
-    val cents =
-      if (centroids != null) centroids
-      else {
-        val n = if (corpusSize > 0) corpusSize else embeddings.count()
-        val k0 = if (k > 0) k else adaptiveCentroids(n)
-        trainCentroids(embeddings, k0, iters, idCol, vecCol)
-      }
-    val q = query.toArray
-    val probes = cents.indices
-      .sortBy { c =>
-        val p = cents(c)
-        var dot = 0.0; var pn = 0.0; var qn = 0.0
-        var i = 0
-        val n = math.min(p.length, q.length)
-        while (i < n) {
-          dot += p(i).toDouble * q(i); pn += p(i).toDouble * p(i)
-          qn += q(i).toDouble * q(i); i += 1
-        }
-        if (pn == 0.0 || qn == 0.0) 2.0 else -dot / math.sqrt(pn * qn)
-      }
-      .take(math.max(1, nProbe)).map(Int.box)
-    val assign0 =
-      if (assigned != null) assigned
-      else ivfAssign(embeddings, cents, idCol, vecCol)
-    val probed = embeddings.join(
-      assign0.filter(col("list").isin(probes: _*)).select(idCol),
-      Seq(idCol), "left_semi")
-    bruteForceTopK(probed, query, kNN, idCol, vecCol)
-  }
-
-  // ---- int8 scalar quantization ----
-
-  /** Symmetric per-vector int8 scalar quantization: `q_i =
-    * round(x_i * (127 / max|x|))` — the standard 4× compression for a
-    * 100 TB embedding store (scan bandwidth and memory shrink 4×; dot
-    * products become integer SIMD). Entirely integer-or-exact math after
-    * the one scale division, so a quantized-space query is
-    * hash-reproducible by an independent engine — no float-accumulation
-    * ambiguity (float→double casts are exact; one IEEE divide and one
-    * multiply per element are identical everywhere; round is
-    * half-away-from-zero on both Spark and the oracle). Zero vectors
-    * quantize to zeros. Narrow map, no shuffle, stays in codegen. */
-  def quantizeInt8(embeddings: DataFrame, idCol: String = "vec_id",
-      vecCol: String = "embedding"): DataFrame = {
-    val v = transform(col(vecCol), x => x.cast("double"))
-    val m = array_max(transform(v, x => abs(x)))
-    val qv = when(m === 0.0 || m.isNull,
-        transform(v, _ => lit(0)))
-      .otherwise(transform(v, x => round(x * (lit(127.0) / m)).cast("int")))
-    embeddings.select(col(idCol), qv.as("qvec"))
-  }
-
-  /** Cosine in quantized space against a literal quantized query:
-    * integer dot products / norms (exact, order-independent), one double
-    * division at the end. */
-  def quantizedCosine(qvec: Column, query: Seq[Int]): Column = {
-    val q = typedlit(query)
-    val dot = aggregate(
-      zip_with(qvec, q, (a, b) => a.cast("long") * b.cast("long")),
-      lit(0L), (acc, x) => acc + x)
-    val na = aggregate(
-      transform(qvec, a => a.cast("long") * a.cast("long")),
-      lit(0L), (acc, x) => acc + x)
-    val nb = query.map(x => x.toLong * x.toLong).sum
-    when(na === 0L || lit(nb) === 0L, lit(0.0))
-      .otherwise(dot / (sqrt(na.cast("double")) * sqrt(lit(nb.toDouble))))
-  }
-
-  /** Brute-force top-k in QUANTIZED space (`quantizeInt8` output):
-    * ranking runs on int8 vectors — the memory-bound regime's fast path —
-    * and is exactly reproducible (integer dots). Same plan shape as
-    * `bruteForceTopK`: fused scan+score, TakeOrderedAndProject top-k. */
-  def quantizedTopK(quantized: DataFrame, query: Seq[Int], k: Int,
-      idCol: String = "vec_id", qvecCol: String = "qvec"): DataFrame =
-    quantized
-      .select(col(idCol), quantizedCosine(col(qvecCol), query).as("qcos"))
-      .orderBy(col("qcos").desc, col(idCol))
-      .limit(k)
-      .select(col(idCol), round(col("qcos"), 4).as("qcos"))
 }

@@ -14,10 +14,10 @@ import org.apache.spark.sql.functions._
   * exchange → final agg at any scale.
   *
   * SKETCH CONTRACT — `sketchDistinctAudit` makes the HLL++ cardinality
-  * sketch driver-checkable the q26-contract way, lifted to a FULL hash
-  * oracle: the output carries the exact distinct count (DuckDB
-  * re-derives it) plus an integer-math pass flag asserting the sketch
-  * landed within `bandPct` percent of exact. The sketch VALUE never
+  * sketch driver-checkable with a FULL hash oracle: the output carries
+  * the exact distinct count (DuckDB re-derives it) plus an integer-math
+  * pass flag asserting the sketch landed within `bandPct` percent of
+  * exact. The sketch VALUE never
   * enters the hashed columns (it is implementation-specific); the
   * CONTRACT does — a Spark upgrade that broke approx_count_distinct's
   * advertised error would fail the hash. At 100 TB the sketch is the

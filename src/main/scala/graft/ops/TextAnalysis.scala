@@ -231,9 +231,8 @@ object TextAnalysis {
     * ("train") is the canonical map-side-combine token count, so vocab
     * size tracks the token DOMAIN (Heaps' law), not corpus size. Pass 2
     * scores on (doc, token)-DISTINCT rows — the hottest token ("the")
-    * contributes at most ONE row per document, the same key-cardinality
-    * class as the q13 gram joins — and hot keys fall to the AQE
-    * skew-join fallback already pinned for this session. The global
+    * contributes at most ONE row per document — and hot keys fall to the
+    * AQE skew-join fallback already pinned for this session. The global
     * total N comes from a narrow scan-and-sum (no explode). In the
     * one-shot declarative form the corpus text is read three times
     * (train, score, N); at production scale the trained vocab is the

@@ -157,8 +157,8 @@ object StreamingKg {
     * sha256 was already seen within the watermark horizon.
     * `dropDuplicatesWithinWatermark` evicts state past the watermark —
     * REQUIRED at 10^12-file scale, where an unbounded seen-set cannot
-    * exist; duplicates that recur beyond the horizon are the batch
-    * compactor's job (`Dedup.exactDrops` over committed snapshots), the
+    * exist; duplicates that recur beyond the horizon pass through, and
+    * dropping them is a batch pass over the committed snapshots — the
     * same lambda split as the other cross-sentence ops. */
   def dedupedFiles(files: Dataset[StampedFile],
       watermark: String = "10 minutes"): Dataset[StampedFile] = {

@@ -446,11 +446,11 @@ class OperatorSpec extends AnyFunSuite {
   test("driver contract: every oracle key has a query; surface counts pinned") {
     val qs = SparkEntry.queries.keySet
     val os = SparkEntry.oracleSql.keySet
-    val orphans = os.diff(qs)
-    assert(orphans.isEmpty, s"oracles without queries: $orphans")
-    // pinned so a future edit that drops a query or oracle fails loudly
-    // (update BOTH numbers AND the README/SURVEY counts when adding)
-    assert(qs.size == 94, s"queries: ${qs.size}")
-    assert(os.size == 91, s"oracles: ${os.size}")
+    // every query has an oracle and every oracle a query
+    assert(qs == os, s"queries without oracles: ${qs.diff(os)}; " +
+      s"oracles without queries: ${os.diff(qs)}")
+    // pinned so a future edit that drops a query fails loudly
+    // (update the number AND the README/SURVEY counts when adding)
+    assert(qs.size == 80, s"queries: ${qs.size}")
   }
 }

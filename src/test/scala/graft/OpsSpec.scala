@@ -3,11 +3,12 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-import graft.ops.{Decontaminate, Dedup, RollingFingerprint, Sampling, Similarity, TextAnalysis}
+import graft.ops.{Dedup, RollingFingerprint, Sampling, Similarity, TextAnalysis}
 
-/** Training-data pipeline operators: dedup (exact / MinHash-LSH / SimHash /
-  * n-gram Jaccard / embedding-cosine), ANN similarity search, text
-  * analysis. */
+/** Training-data operators: exact dedup, brute-force cosine top-k,
+  * language id, quality and token counts, fingerprints, PII redaction,
+  * sampling, repetition and frequency signals, sequence packing, the
+  * native cosine expression and the timeline fit. */
 class OpsSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -30,45 +31,6 @@ class OpsSpec extends AnyFunSuite {
     assert(drops == Set((1L, 0L)))
   }
 
-  test("minhash LSH: near-dups found, verified jaccard >= threshold") {
-    val pairs = Dedup.minhashNearDups(docsWithDups, n = 3, threshold = 0.5)
-      .as[(Long, Long, Double)].collect().map(p => (p._1, p._2)).toSet
-    assert(pairs.contains((0L, 1L))) // exact dup always survives
-    assert(pairs.contains((0L, 2L)) || pairs.contains((0L, 5L)),
-      s"expected near-dup pair, got $pairs")
-    assert(!pairs.exists(p => p._1 == 3L || p._2 == 3L))
-    assert(!pairs.exists(p => p._1 == 4L || p._2 == 4L))
-  }
-
-  test("minhash determinism: same signatures under different partitioning") {
-    val a = Dedup.minhashBands(docsWithDups.repartition(1)).orderBy("doc_id").collect()
-    val b = Dedup.minhashBands(docsWithDups.repartition(7)).orderBy("doc_id").collect()
-    assert(a.map(_.toString).toSeq == b.map(_.toString).toSeq)
-  }
-
-  test("simhash: identical docs at distance 0; near-dups within 3; unrelated far") {
-    val sig = Dedup.simhash(docsWithDups).as[(Long, Long)].collect().toMap
-    assert(sig(0L) == sig(1L))
-    val pairs = Dedup.simhashNearDups(docsWithDups, maxDist = 3)
-      .select("a", "b").as[(Long, Long)].collect().toSet
-    assert(pairs.contains((0L, 1L)))
-    assert(!pairs.contains((0L, 3L)) && !pairs.contains((3L, 4L)))
-  }
-
-  test("ngram jaccard inverted-index join matches brute-force jaccard") {
-    val pairs = Dedup.ngramJaccardPairs(docsWithDups, n = 3, threshold = 0.5)
-      .as[(Long, Long, Double)].collect()
-    val texts = docsWithDups.as[(Long, String)].collect().toMap
-    def sh(s: String) = s.split(" ").sliding(3).map(_.mkString(" ")).toSet
-    for ((a, b, j) <- pairs) {
-      val (sa, sb) = (sh(texts(a)), sh(texts(b)))
-      val expected = sa.intersect(sb).size.toDouble / sa.union(sb).size
-      assert(math.abs(j - expected) < 1e-3, s"pair ($a,$b)")
-      assert(j >= 0.5)
-    }
-    assert(pairs.exists(p => p._1 == 0L && p._2 == 1L))
-  }
-
   test("brute-force cosine top-k via zip_with/aggregate expressions") {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val query = emb.filter(col("vec_id") === 0)
@@ -79,160 +41,6 @@ class OpsSpec extends AnyFunSuite {
     assert(top.head._1 == 0L) // self-similarity = 1.0 tops the list
     assert(math.abs(top.head._2 - 1.0) < 1e-3)
     assert(top.map(_._2).toSeq == top.map(_._2).toSeq.sortBy(-(_: Double)))
-  }
-
-  test("ANN top-k: self always found; high overlap with brute force") {
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val query = emb.filter(col("vec_id") === 7)
-      .select("embedding").as[Seq[Float]].head()
-    val bf = Similarity.bruteForceTopK(emb, query, 10).as[(Long, Double)].collect()
-    val ann = Similarity.annTopK(emb, query, 10, nPlanes = 4).as[(Long, Double)].collect()
-    assert(ann.map(_._1).contains(7L))
-    // the sf0.001 embeddings are uniform-random 64-d, so "neighbors" are
-    // near-random (cos ≈ 0.3) — the hardest case for sign-LSH; Hamming-2
-    // multi-probe must recover most of the true top-10
-    val overlap = bf.map(_._1).toSet.intersect(ann.map(_._1).toSet).size
-    assert(overlap >= 6, s"ANN/BF overlap only $overlap/10")
-    // the probe must restrict the candidate set (here 11/16 buckets; the
-    // fraction C(p,<=2)/2^p shrinks with adaptive planes: <2% at 12
-    // planes / 10^6 rows, <3e-5 at 22 planes / 10^9 rows)
-    val planes = Similarity.hyperplanes(query.length, 4)
-    val qb = Similarity.bucketOf(query.toArray, planes)
-    val h2 = (0 until 16).filter(b => Integer.bitCount(b ^ qb) <= 2)
-    val probed = Similarity.withBucket(emb, planes)
-      .filter(col("bucket").isin(h2: _*)).count()
-    assert(probed < emb.count(), s"probed $probed rows — no restriction")
-    assert((1.0 + 12 + 12 * 11 / 2) / (1 << 12) < 0.02) // scale fraction
-  }
-
-  test("IVF ANN: probe-all equals brute force exactly; few probes restrict scan") {
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val query = emb.filter(col("vec_id") === 7)
-      .select("embedding").as[Seq[Float]].head()
-    val k = 8
-    val cents = Similarity.trainCentroids(emb, k, iters = 3)
-    assert(cents.length == k)
-    // nProbe >= k probes every inverted list -> EXACT brute-force result
-    val bf = Similarity.bruteForceTopK(emb, query, 10).as[(Long, Double)].collect().toSeq
-    val all = Similarity.ivfTopK(emb, query, 10, nProbe = k, centroids = cents)
-      .as[(Long, Double)].collect().toSeq
-    assert(all == bf, "probe-all IVF must equal brute force")
-    // few probes: self found, candidate set restricted to the probed lists
-    val few = Similarity.ivfTopK(emb, query, 10, nProbe = 2, centroids = cents)
-      .as[(Long, Double)].collect()
-    assert(few.map(_._1).contains(7L))
-    val assigned = Similarity.ivfAssign(emb, cents)
-    val listSizes = assigned.groupBy("list").count().as[(Int, Long)].collect().toMap
-    val total = listSizes.values.sum
-    assert(total == emb.count())
-    assert(listSizes.size > 1, "degenerate quantizer: one list")
-    // deterministic: retraining yields identical centroids
-    val cents2 = Similarity.trainCentroids(emb, k, iters = 3)
-    assert(cents.map(_.toSeq).toSeq == cents2.map(_.toSeq).toSeq)
-    // serving shape: precomputed assignment gives the identical result
-    val pre = Similarity.ivfAssign(emb, cents)
-    val served = Similarity.ivfTopK(emb, query, 10, nProbe = 2,
-      centroids = cents, assigned = pre).as[(Long, Double)].collect().toSeq
-    assert(served == few.toSeq)
-  }
-
-  test("IVF quantizer: clustered corpus recalls true neighbors with 1 probe") {
-    // two tight, well-separated clusters: IVF's data-adaptive lists put
-    // each cluster in its own region, so ONE probe finds all neighbors —
-    // the case where a data-blind hyperplane cut can split a cluster
-    val rng = new scala.util.Random(7)
-    def around(center: Array[Float], n: Int, base: Long) =
-      (0 until n).map { i =>
-        (base + i, center.map(x => x + (rng.nextFloat() - 0.5f) * 0.05f).toSeq)
-      }
-    val c1 = Array.fill(16)(1.0f); val c2 = Array.fill(16)(-1.0f)
-    val rows = around(c1, 30, 0L) ++ around(c2, 30, 100L)
-    val emb = rows.toDF("vec_id", "embedding")
-    val cents = Similarity.trainCentroids(emb, 2, iters = 4)
-    val q = rows.find(_._1 == 5L).get._2
-    val got = Similarity.ivfTopK(emb, q, 10, nProbe = 1, centroids = cents)
-      .as[(Long, Double)].collect().map(_._1).toSet
-    val bf = Similarity.bruteForceTopK(emb, q, 10)
-      .as[(Long, Double)].collect().map(_._1).toSet
-    assert(got == bf, s"1-probe IVF missed in-cluster neighbors: $got vs $bf")
-  }
-
-  test("embedding-cosine near-dup pairs: planted duplicate vector found") {
-    val base = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-      .limit(50)
-    val clone = base.filter(col("vec_id") === 3)
-      .select((col("vec_id") + 10000).as("vec_id"), col("embedding"), col("label"))
-    val pairs = Similarity.nearDupPairs(base.unionByName(clone), threshold = 0.999)
-      .as[(Long, Long, Double)].collect().toSet
-    assert(pairs.exists(p => p._1 == 3L && p._2 == 10003L), s"got $pairs")
-  }
-
-  test("dedup clusters: transitive closure, longest-text canonical, singletons kept") {
-    val docs = Seq(
-      (1L, "short copy"), (2L, "short copy but slightly longer text"),
-      (3L, "short copy"), (10L, "pair one"), (11L, "pair one"),
-      (50L, "alone and unique here")).toDF("doc_id", "text")
-    // pair evidence: 1-2 and 2-3 (transitive -> {1,2,3}); 10-11
-    val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("a", "b")
-    val out = Dedup.dedupClusters(docs, pairs)
-      .as[(Long, Long, Int)].collect().sortBy(_._1)
-    assert(out.map(_._1).toSeq == Seq(1L, 2L, 3L, 10L, 11L, 50L))
-    // transitive cluster {1,2,3} labeled by min id 1; doc 2 (longest) kept
-    assert(out.filter(r => Set(1L, 2L, 3L)(r._1)).forall(_._2 == 1L))
-    val keep = out.map(r => r._1 -> r._3).toMap
-    assert(keep(2L) == 1 && keep(1L) == 0 && keep(3L) == 0)
-    // equal-length tie in {10,11} -> smallest id kept
-    assert(keep(10L) == 1 && keep(11L) == 0)
-    // singleton: own cluster, kept
-    assert(out.find(_._1 == 50L).get == ((50L, 50L, 1)))
-    // local and distributed CC paths agree
-    val dist = Dedup.dedupClusters(docs, pairs, maxLocalEdges = 0)
-      .as[(Long, Long, Int)].collect().sortBy(_._1)
-    assert(dist.toSeq == out.toSeq)
-  }
-
-  test("minhash hot-bucket cap: degenerate bucket dropped, audited, not silent") {
-    // adversarial: 40 identical boilerplate docs -> every band bucket has
-    // 40 members -> 780 candidate pairs per band without the cap (k²)
-    val boiler = (0L until 40L).map(i => (i, "exact same boilerplate header text repeated in every document"))
-    val normal = Seq((100L, "one normal document with its own distinct content here"),
-      (101L, "one normal document with its own distinct content here"))
-    val docs = (boiler ++ normal).toDF("doc_id", "text")
-    val bands = Dedup.minhashBands(docs)
-    // cap below the hot-bucket size: boilerplate pairs are dropped...
-    val capped = Dedup.minhashCandidates(bands, maxBucket = 10)
-      .as[(Long, Long)].collect().toSet
-    assert(!capped.exists(p => p._1 < 40L && p._2 < 40L), s"hot pairs leaked: $capped")
-    // ...but the normal near-dup pair survives (its bucket is size 2)
-    assert(capped.contains((100L, 101L)))
-    // and the drop is auditable, not silent
-    val dropped = Dedup.minhashDroppedBuckets(bands, maxBucket = 10).collect()
-    assert(dropped.nonEmpty && dropped.forall(_.getAs[Long]("bsz") == 40L))
-    // with the cap above the bucket size, nothing is dropped
-    assert(Dedup.minhashDroppedBuckets(bands, maxBucket = 500).count() == 0)
-  }
-
-  test("ngram jaccard df cap: consistent capped-universe semantics + audit") {
-    // shingle "aa bb cc" appears in ALL 6 docs -> df 6 > cap 5 -> excluded
-    // from numerator AND denominator for every doc
-    val docs = Seq(
-      (0L, "aa bb cc dd ee ff"),
-      (1L, "aa bb cc dd ee gg"),
-      (2L, "aa bb cc xx yy zz"),
-      (3L, "aa bb cc pp qq rr"),
-      (4L, "aa bb cc ss tt uu"),
-      (5L, "aa bb cc vv ww kk")).toDF("doc_id", "text")
-    val dropped = Dedup.droppedShingles(docs, n = 3, maxShingleDf = 5)
-      .as[(String, Long)].collect().toMap
-    assert(dropped == Map("aa bb cc" -> 6L))
-    val pairs = Dedup.ngramJaccardPairs(docs, n = 3, threshold = 0.3,
-      maxShingleDf = 5).as[(Long, Long, Double)].collect()
-    // docs 0/1 share capped-universe shingles {bb cc dd, cc dd ee} of 3
-    // each -> J = 2/4 = 0.5; their uncapped J would be 3/5 = 0.6
-    val j01 = pairs.find(p => p._1 == 0L && p._2 == 1L).map(_._3)
-    assert(j01.contains(0.5), s"got $j01")
-    // docs 0/2 share ONLY the capped shingle -> no pair at all
-    assert(!pairs.exists(p => p._1 == 0L && p._2 == 2L))
   }
 
   test("langId Catalyst plan agrees row-for-row with the Scala reference") {
@@ -249,32 +57,6 @@ class OpsSpec extends AnyFunSuite {
     val t = TextAnalysis.withLangId(tie).select("lang_pred").as[String].head()
     assert(t == "fr")
     assert(TextAnalysis.predictLang("la la la", TextAnalysis.Stopwords) == "fr")
-  }
-
-  test("exact embed near-dup is the LSH recall ground truth") {
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val exact = Similarity.exactNearDupPairs(emb, threshold = 0.4)
-      .as[(Long, Long, Double)].collect()
-    assert(exact.nonEmpty)
-    assert(exact.forall(_._3 >= 0.4))
-    val lsh = Similarity.nearDupPairs(emb, threshold = 0.4)
-      .as[(Long, Long, Double)].collect().toSet
-    // every LSH pair is a true pair (verification is exact within buckets)
-    val exactSet = exact.map(p => (p._1, p._2)).toSet
-    assert(lsh.forall(p => exactSet.contains((p._1, p._2))))
-    // dedup-before-verify: each pair appears ONCE even when it shares
-    // buckets in several tables, and its cosine equals the exact one
-    val lshList = Similarity.nearDupPairs(emb, threshold = 0.4)
-      .as[(Long, Long, Double)].collect()
-    assert(lshList.map(p => (p._1, p._2)).distinct.length == lshList.length)
-    val exactCos = exact.map(p => (p._1, p._2) -> p._3).toMap
-    assert(lshList.forall(p => exactCos((p._1, p._2)) == p._3))
-    // adaptive planes: bucket count grows log2 with corpus size, clamped
-    // to 31 (Int sign-bit safety for the bucket id)
-    assert(Similarity.adaptivePlanes(500L) == 4) // floor
-    assert(Similarity.adaptivePlanes(1L << 20, 256L) == 12)
-    assert(Similarity.adaptivePlanes(1L << 30, 256L) == 22)
-    assert(Similarity.adaptivePlanes(Long.MaxValue, 64L) == 31) // clamp
   }
 
   test("langId: heuristic recovers majority of driver-labelled languages") {
@@ -426,30 +208,6 @@ class OpsSpec extends AnyFunSuite {
     assert(math.abs(strat("de") - 3333) < 300, s"de: ${strat("de")}")
   }
 
-  test("decontamination: planted eval 8-gram flags the doc; clean + short docs don't") {
-    // eval doc shares one exact 8-gram window with training doc 10
-    val shared = "alpha bravo charlie delta echo foxtrot golf hotel"
-    val train = Seq(
-      (10L, s"prefix words here $shared and then a distinct suffix tail"),
-      (11L, "totally clean training document with no overlapping gram content at all whatsoever"),
-      (12L, "too short to gram")) // < 8 tokens -> n_grams = 0
-      .toDF("doc_id", "text")
-    val eval_ = Seq((0L, s"benchmark question text $shared answer choice")).toDF("doc_id", "text")
-    val rep = Decontaminate.overlapReport(train, eval_, n = 8)
-      .orderBy("doc_id").collect()
-    assert(rep.length == 3)
-    val byId = rep.map(r => r.getLong(0) -> r).toMap
-    assert(byId(10L).getAs[Int]("contaminated") == 1)
-    assert(byId(10L).getAs[Long]("eval_hits") == 1L) // exactly the planted window
-    assert(byId(11L).getAs[Int]("contaminated") == 0)
-    assert(byId(11L).getAs[Long]("eval_hits") == 0L)
-    assert(byId(12L).getAs[Long]("n_grams") == 0L)
-    assert(byId(12L).getAs[Double]("overlap_frac") == 0.0)
-    // overlap_frac = hits / distinct grams of the doc
-    val g10 = byId(10L).getAs[Long]("n_grams").toDouble
-    assert(math.abs(byId(10L).getAs[Double]("overlap_frac") - math.rint(1.0 / g10 * 1e4) / 1e4) < 1e-9)
-  }
-
   test("repetition signals: fold-based run counts match brute-force Scala on each row") {
     // healthy prose must be LONG enough that an all-distinct top bigram
     // (count 1) sits under the 10% threshold — short docs flag trivially
@@ -525,60 +283,6 @@ class OpsSpec extends AnyFunSuite {
     assert(got(0L).getInt(5) == 0)
     // rare tokens carry MORE bits than common ones (the LM-filter signal)
     assert(got(7L).getDouble(4) > got(0L).getDouble(4))
-  }
-
-  test("int8 quantization: values bounded, zero-safe, self is rank-1, recall vs float high") {
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-      .limit(200)
-    val q = Similarity.quantizeInt8(emb)
-    // bounds: every component in [-127, 127]; max-|x| component hits ±127
-    val flat = q.select(explode(col("qvec"))).as[Int].collect()
-    assert(flat.forall(v => v >= -127 && v <= 127))
-    assert(flat.exists(v => v == 127 || v == -127))
-    // zero vector quantizes to zeros (no NaN from 0-division)
-    val z = Similarity.quantizeInt8(
-      Seq((999L, Seq.fill(8)(0.0f))).toDF("vec_id", "embedding"))
-      .select("qvec").as[Seq[Int]].head()
-    assert(z.forall(_ == 0))
-    // self-query: vec 0 is its own nearest neighbor at qcos 1.0
-    val qrow = q.filter(col("vec_id") === 0).select("qvec").as[Seq[Int]].head()
-    val top = Similarity.quantizedTopK(q, qrow, 10).collect()
-    assert(top.head.getLong(0) == 0L && top.head.getDouble(1) == 1.0)
-    // quantized top-10 overlaps float brute-force top-10 heavily (int8
-    // keeps ~2 decimal digits of each component; ordering is stable for
-    // non-adversarial gaps)
-    val query = emb.filter(col("vec_id") === 0).select("embedding").as[Seq[Float]].head()
-    val bf = Similarity.bruteForceTopK(emb, query, 10)
-      .select("vec_id").as[Long].collect().toSet
-    val quant = top.map(_.getLong(0)).toSet
-    assert(quant.intersect(bf).size >= 8, s"recall ${quant.intersect(bf).size}/10")
-  }
-
-  test("crossDocNgramDup: cross-doc duplicated k-grams, exact ppm, short-doc guard") {
-    // k=4. doc 0 and doc 1 share the 4-gram "a b c d" (both positions
-    // dup); doc 2 repeats "x y z w" WITHIN itself only — within-doc
-    // repetition must NOT count as cross-doc duplication; doc 3 is
-    // shorter than k (zero grams, dup_ppm 0); doc 4 shares nothing.
-    val docs = Seq(
-      (0L, "a b c d e"),      // grams: "a b c d", "b c d e"
-      (1L, "z a b c d"),      // grams: "z a b c", "a b c d"
-      (2L, "x y z w x y z w"),// 5 grams, all self-only
-      (3L, "too short"),      // 0 grams
-      (4L, "p q r s t")       // 2 grams, unique
-    ).toDF("doc_id", "text")
-    val got = Dedup.crossDocNgramDup(docs, k = 4)
-      .as[(Long, Long, Long, Long)].collect()
-      .map { case (id, a, b, c) => id -> ((a, b, c)) }.toMap
-    assert(got(0L) == ((2L, 1L, 500000L)))  // 1 of 2 positions dup
-    assert(got(1L) == ((2L, 1L, 500000L)))
-    assert(got(2L) == ((5L, 0L, 0L)))       // within-doc only: not dup
-    assert(got(3L) == ((0L, 0L, 0L)))       // short-doc guard
-    assert(got(4L) == ((2L, 0L, 0L)))
-    // partition-independence: same answer at 7 partitions
-    val re = Dedup.crossDocNgramDup(docs.repartition(7), k = 4)
-      .as[(Long, Long, Long, Long)].collect()
-      .map { case (id, a, b, c) => id -> ((a, b, c)) }.toMap
-    assert(re == got)
   }
 
   test("packSequences: two-pass prefix sum == local scan; boundary spans; empty docs") {
