@@ -50,28 +50,25 @@ object Probe {
       "isolate [reps] [query ...] | timeline [cores] [nFiles] [committed]"
 
   /** The queries `plans` writes when none are named. */
-  val AuditedQueries: Seq[String] = Seq("q1_agg", "q2_join_broadcast",
-    "q3_window_latest", "q6_nearest_join", "q7_pairs_per_day",
-    "q10_range_join", "q14_knn_bruteforce", "q15_langid_dist",
-    "q16_token_stats", "q22_semi_by_brand", "q25_quality",
-    "q27_pii_redact", "q28_stratified_sample", "q30_golden_spans",
-    "kg_timeline_golden", "q31_contained_args", "q33_copular_predicates",
-    "q34_negation_scope", "q35_head_evidence", "q36_tokenize",
-    "q37_sentsplit", "q38_gazetteer_ner", "q39_trigger_spans",
+  val AuditedQueries: Seq[String] = Seq("q15_langid_dist", "q16_token_stats",
+    "q25_quality", "q27_pii_redact", "q28_stratified_sample",
+    "q30_golden_spans", "kg_timeline_golden", "q31_contained_args",
+    "q33_copular_predicates", "q34_negation_scope", "q35_head_evidence",
+    "q36_tokenize", "q37_sentsplit", "q38_gazetteer_ner", "q39_trigger_spans",
     "q40_argument_spans", "q41_align_inject", "q42_duration_speculation",
-    "q43_ner_eval", "q51_sql_functions", "q52_bucketed_join",
-    "q53_partition_pruned", "kg_snapshot_delta",
-    "q55_batch_plan", "kg_temporal_closure", "q57_corpus_stats",
-    "q58_integrity_audit", "q60_repetition", "q62_freq_quality", "kg_bgp",
-    "kg_bgp_optional", "kg_ntriples", "kg_pagerank", "kg_provenance",
-    "q64_seq_packing", "q65_tfidf_topk", "q66_bpe_pairs", "q67_phrase_pmi",
-    "kg_labelprop", "kg_degree_dist", "q68_sessionize", "q69_rollup",
-    "q70_cube", "q71_zorder", "q72_sketch_distinct", "kg_triangles",
-    "kg_kcore", "kg_edge_jaccard", "kg_truss")
+    "q43_ner_eval", "q51_sql_functions", "kg_snapshot_delta",
+    "q55_batch_plan", "kg_temporal_closure", "q58_integrity_audit",
+    "q60_repetition", "q62_freq_quality", "kg_bgp", "kg_bgp_optional",
+    "kg_ntriples", "kg_pagerank", "kg_provenance", "q64_seq_packing",
+    "q65_tfidf_topk", "q66_bpe_pairs", "q67_phrase_pmi", "kg_labelprop",
+    "kg_degree_dist", "kg_triangles", "kg_kcore", "kg_edge_jaccard",
+    "kg_truss")
 
   /** The command line as a [[Mode]], or the reason it is not one. `env`
     * supplies `SPARK_GRAFT_SF_DIR` (`isolate`'s sf dir, `plans`' default)
-    * and `SPARK_GRAFT_CPUS` (`isolate`'s cores, default 32). */
+    * and `SPARK_GRAFT_CPUS` (`isolate`'s cores, default 32). Query names
+    * that are not [[SparkEntry.queries]] keys are rejected here, before
+    * any session starts. */
   def parse(args: Seq[String], env: Map[String, String]): Either[String, Mode] = {
     def positive(s: String) = Try(s.toInt).toOption.filter(_ > 0)
     def count(arg: Option[String], default: Int, what: String) =
@@ -79,10 +76,16 @@ object Probe {
         positive(a).toRight(s"$what: '$a' is not a positive number"))
     def sfDir(arg: Option[String]) = arg.orElse(env.get("SPARK_GRAFT_SF_DIR"))
       .toRight("no sfDir: pass one or set SPARK_GRAFT_SF_DIR")
+    def known(queries: Seq[String]) =
+      queries.filterNot(SparkEntry.queries.contains) match {
+        case Seq() => Right(queries)
+        case unknown => Left(s"unknown queries: ${unknown.mkString(", ")}")
+      }
     args match {
       case "plans" +: rest =>
-        sfDir(rest.lift(0)).map(Plans(_, rest.lift(1).getOrElse("/tmp/plans.txt"),
-          if (rest.length > 2) rest.drop(2) else AuditedQueries))
+        for (d <- sfDir(rest.lift(0));
+             qs <- known(if (rest.length > 2) rest.drop(2) else AuditedQueries))
+          yield Plans(d, rest.lift(1).getOrElse("/tmp/plans.txt"), qs)
       case "isolate" +: rest =>
         // the rep count is optional: a first word that is not a positive
         // number is already a query name
@@ -90,8 +93,9 @@ object Probe {
           case Some(r) => (r, rest.tail)
           case None => (2, rest)
         }
-        for (d <- sfDir(None); c <- count(env.get("SPARK_GRAFT_CPUS"), 32, "SPARK_GRAFT_CPUS"))
-          yield Isolate(d, c, reps, queries)
+        for (d <- sfDir(None); c <- count(env.get("SPARK_GRAFT_CPUS"), 32, "SPARK_GRAFT_CPUS");
+             qs <- known(queries))
+          yield Isolate(d, c, reps, qs)
       case "timeline" +: rest =>
         for (c <- count(rest.lift(0), 32, "cores"); n <- count(rest.lift(1), 24000, "nFiles"))
           yield Timeline(c, n, rest.lift(2).contains("committed"))

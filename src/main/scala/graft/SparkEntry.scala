@@ -3,11 +3,10 @@ import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.sql.{SparkSession, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 
 import graft.corpus.Synth
 import graft.kg.{Pipeline, Triples}
-import graft.ops.{Dedup, Packing, Sampling, Similarity, TextAnalysis}
+import graft.ops.{Packing, Sampling, TextAnalysis}
 
 /** Driver contract (SURVEY.md §7): every named query, and the DuckDB
   * oracle that checks it.
@@ -17,8 +16,9 @@ import graft.ops.{Dedup, Packing, Sampling, Similarity, TextAnalysis}
   *     synthetic source-file corpus (or the golden annotation corpora),
   *     value-checked against SQL over the independently derived gold
   *     triple set;
-  *   - `q*`: the pipeline's stages, text operators and relational
-  *     operators over the driver's parquet tables.
+  *   - `q*`: the pipeline's stages (replayed over the golden corpora or
+  *     the synthetic corpus) and the text operators over the driver's
+  *     `documents` table.
   *
   * Every query has an oracle in `oracleSql`.
   */
@@ -206,8 +206,8 @@ object SparkEntry {
       .drop("duration", "speculation").as[Pipeline.EventRow]
   }
 
-  /** One entry per implemented operator from SURVEY.md §2 (+ the
-    * training-data ops the engine adds). */
+  /** Every named query: the `kg_*` family, the pipeline-stage queries
+    * and the text operators. */
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ---- KG pipeline (oracle: SQL over the gold triple set) ----
     "kg_triples_by_pred" -> ((s, dir) =>
@@ -273,123 +273,7 @@ object SparkEntry {
         .select("subj", "pred", "obj").orderBy("subj", "pred", "obj")
     }),
 
-    // ---- relational operators with DuckDB oracles ----
-    "q1_agg" -> ((s, dir) =>
-      t(s, dir, "lineitem").groupBy(col("l_returnflag"), col("l_linestatus"))
-        .agg(
-          round(sum(col("l_quantity"))).cast("long").as("sum_qty"),
-          sum(round(col("l_extendedprice") * 100).cast("long")).as("sum_price_cents"),
-          count(lit(1)).as("n"))
-        .orderBy("l_returnflag", "l_linestatus")),
-    "q2_join_broadcast" -> ((s, dir) => {
-      val o = t(s, dir, "orders")
-      val c = t(s, dir, "customer")
-      o.join(broadcast(c), o("o_custkey") === c("c_custkey"))
-        .groupBy(col("c_mktsegment"))
-        .agg(count(lit(1)).as("n_orders"),
-          sum(round(col("o_totalprice") * 100).cast("long")).as("rev_cents"))
-        .orderBy("c_mktsegment")
-    }),
-    "q3_window_latest" -> ((s, dir) => {
-      val e = t(s, dir, "events")
-      val w = Window.partitionBy("user_id")
-        .orderBy(col("ts").desc, col("event_id").desc)
-      e.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-        .groupBy(col("event_type")).agg(count(lit(1)).as("n_users"))
-        .orderBy("event_type")
-    }),
-    "q4_dedup_exact_stats" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      val dupGroups = Dedup.exactGroups(d)
-      d.agg(
-        count(lit(1)).as("n_docs"),
-        countDistinct(sha2(col("text"), 256)).as("n_distinct"))
-        .withColumn("n_dup_groups", lit(dupGroups.count()))
-    }),
-    "q5_topk" -> ((s, dir) =>
-      t(s, dir, "documents")
-        .orderBy(col("n_chars").desc, col("doc_id"))
-        .limit(10)
-        .select("doc_id", "n_chars")),
-    "q6_nearest_join" -> ((s, dir) => {
-      // J1-analog as-of/nearest join on the events stream: for each
-      // purchase, the nearest click of the same user within ±600s
-      val e = t(s, dir, "events")
-      val p = e.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("event_id").as("p_id"), col("ts").as("p_ts"))
-      val c = e.filter(col("event_type") === "click")
-        .select(col("user_id"), col("event_id").as("c_id"), col("ts").as("c_ts"))
-      val joined = p.join(c, Seq("user_id"))
-        .withColumn("dt", abs(col("p_ts").cast("timestamp").cast("double") -
-          col("c_ts").cast("timestamp").cast("double")))
-        .filter(col("dt") <= 600.0)
-      val w = Window.partitionBy("p_id").orderBy(col("dt"), col("c_id"))
-      joined.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-        .select(col("p_id"), col("c_id"), round(col("dt")).cast("long").as("dt"))
-        .orderBy("p_id")
-    }),
-    "q7_pairs_per_day" -> ((s, dir) => {
-      // J4-analog theta self-join: ordered same-user same-day event pairs
-      val e = t(s, dir, "events")
-        .select(col("user_id"), col("event_id"),
-          date_format(col("ts"), "yyyy-MM-dd").as("day"))
-      val l = e.select(col("user_id"), col("day"), col("event_id").as("a"))
-      val r = e.select(col("user_id"), col("day"), col("event_id").as("b"))
-      l.join(r, Seq("user_id", "day")).filter(col("a") < col("b"))
-        .groupBy("user_id", "day").agg(count(lit(1)).as("n_pairs"))
-        .orderBy("user_id", "day")
-    }),
-    "q8_union_anti" -> ((s, dir) => {
-      // U1-analog: customers without orders injected alongside those with
-      val c = t(s, dir, "customer")
-      val o = t(s, dir, "orders")
-      val withO = c.join(o, c("c_custkey") === o("o_custkey"), "left_semi")
-        .agg(count(lit(1)).as("n")).withColumn("status", lit("has_orders"))
-      val withoutO = c.join(o, c("c_custkey") === o("o_custkey"), "left_anti")
-        .agg(count(lit(1)).as("n")).withColumn("status", lit("no_orders"))
-      withO.unionByName(withoutO).select("status", "n").orderBy("status")
-    }),
-    "q9_mean_threshold" -> ((s, dir) =>
-      // A1-analog keyed mean-threshold
-      t(s, dir, "events").groupBy("user_id")
-        .agg(avg(col("value")).as("mean_value"))
-        .filter(col("mean_value") > 50.0)
-        .select(col("user_id")).orderBy("user_id")),
-    "q10_range_join" -> ((s, dir) => {
-      // J5/J6-analog interval-containment join
-      val li = t(s, dir, "lineitem")
-      val o = t(s, dir, "orders")
-      li.join(o, li("l_orderkey") === o("o_orderkey") &&
-          li("l_shipdate") >= o("o_orderdate") &&
-          li("l_shipdate") <= o("o_orderdate") + expr("INTERVAL 30 DAYS"))
-        .groupBy(date_format(col("o_orderdate"), "yyyy-MM").as("month"))
-        .agg(count(lit(1)).as("n")).orderBy("month")
-    }),
-    "q20_crosstab" -> ((s, dir) =>
-      // A5/A7-analog confusion-matrix counts
-      t(s, dir, "events")
-        .groupBy(col("event_type"), dayofweek(col("ts")).as("dow"))
-        .agg(count(lit(1)).as("n")).orderBy("event_type", "dow")),
-    "q21_first_event" -> ((s, dir) =>
-      // W2-analog order-preserving dedup: first event per user
-      t(s, dir, "events").groupBy("user_id")
-        .agg(min(col("event_id")).as("first_event"))
-        .orderBy("user_id")),
-    "q22_semi_by_brand" -> ((s, dir) => {
-      val p = t(s, dir, "part")
-      val li = t(s, dir, "lineitem")
-      p.join(li, p("p_partkey") === li("l_partkey"), "left_semi")
-        .groupBy("p_brand").agg(count(lit(1)).as("n_parts_used"))
-        .orderBy("p_brand")
-    }),
-
-    // ---- training-data ops over documents/embeddings ----
-    "q14_knn_bruteforce" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val query = emb.filter(col("vec_id") === 0)
-        .select("embedding").collect()(0).getSeq[Float](0)
-      Similarity.bruteForceTopK(emb, query, 10)
-    }),
+    // ---- text operators over the documents table ----
     "q16_token_stats" -> ((s, dir) =>
       TextAnalysis.withTokenCounts(t(s, dir, "documents"))
         .select(col("doc_id"), col("ws_tokens"), col("bpe_ish_tokens"))
@@ -401,16 +285,6 @@ object SparkEntry {
     "q17_fingerprint" -> ((s, dir) =>
       TextAnalysis.withFingerprint(t(s, dir, "documents"))
         .select("doc_id", "fingerprint").orderBy("doc_id")),
-    "q24_json_props" -> ((s, dir) =>
-      // S3-analog: schema'd JSON parse of an embedded JSON column
-      t(s, dir, "events")
-        .withColumn("props_p", from_json(col("props"),
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("k",
-              org.apache.spark.sql.types.LongType)))))
-        .groupBy(col("event_type"))
-        .agg(sum(col("props_p.k")).as("sum_k"), count(lit(1)).as("n"))
-        .orderBy("event_type")),
     "q25_quality" -> ((s, dir) =>
       TextAnalysis.withQuality(t(s, dir, "documents"))
         .select(col("doc_id"), col("n_words"), col("mean_word_len"),
@@ -1107,63 +981,6 @@ object SparkEntry {
               |JOIN g51_embeddings f ON f.vec_id = d.doc_id + 1
               |ORDER BY d.doc_id""".stripMargin)
     }),
-    "q52_bucketed_join" -> ((s, dir) => {
-      // The 100-TB co-located-join mechanism, driver-checkable: lineitem
-      // and orders are committed ONCE as parquet tables bucketed+sorted
-      // on the order key (that write pays the only shuffle), then the
-      // join AND the per-order aggregate read the on-disk hash
-      // partitioning — the join/agg subtree carries NO Exchange (pinned
-      // at plan level in BucketedSpec); values hash-checked against a
-      // plain DuckDB join.
-      import graft.ops.Bucketed
-      Bucketed.write(t(s, dir, "lineitem")
-        .select("l_orderkey", "l_quantity", "l_extendedprice"),
-        "g52_lineitem", "l_orderkey", 8)
-      Bucketed.write(t(s, dir, "orders")
-        .select("o_orderkey", "o_orderstatus"),
-        "g52_orders", "o_orderkey", 8)
-      s.table("g52_lineitem")
-        .join(s.table("g52_orders"),
-          col("l_orderkey") === col("o_orderkey"))
-        .groupBy("l_orderkey", "o_orderstatus")
-        .agg(
-          round(sum(col("l_quantity"))).cast("long").as("sum_qty"),
-          sum(round(col("l_extendedprice") * 100).cast("long")).as("price_cents"),
-          count(lit(1)).as("n"))
-        .orderBy("l_orderkey")
-    }),
-    "q53_partition_pruned" -> ((s, dir) => {
-      // Dynamic partition pruning, driver-checkable: events is committed
-      // ONCE partitioned on disk by event_type (at 100 TB: by day/source
-      // — the layout that makes every selective query skip most of the
-      // table), then joined to a dim derived with a selective predicate.
-      // Catalyst inserts a dynamicpruningexpression into the fact scan's
-      // PartitionFilters — partitions outside the dim's broadcast result
-      // never leave disk. The require() makes the driver row itself fail
-      // if the pruning subquery is ever missing from the plan; values are
-      // hash-checked against a plain DuckDB join on the unpartitioned
-      // table (layout must be value-invisible).
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_dpp_q53").toString
-      t(s, dir, "events").write.mode("overwrite")
-        .partitionBy("event_type").parquet(root)
-      val dim = t(s, dir, "events")
-        .filter(col("event_type") < lit("m"))
-        .select("event_type").distinct()
-      val out = s.read.parquet(root)
-        .join(dim, "event_type")
-        .groupBy("event_type")
-        .agg(
-          count(lit(1)).as("n"),
-          sum(round(col("value") * 100).cast("long")).as("value_cents"),
-          countDistinct(col("user_id")).as("users"))
-        .orderBy("event_type")
-      val plan = out.queryExecution.executedPlan.toString
-      require(plan.contains("dynamicpruning"),
-        s"q53: fact scan lost its dynamic pruning subquery; plan:\n${plan.take(1500)}")
-      out
-    }),
-
     "q60_repetition" -> ((s, dir) =>
       // Gopher-style repetition quality signals, one narrow per-row
       // expression (sort-and-fold run counting — no gram explode+shuffle).
@@ -1352,62 +1169,6 @@ object SparkEntry {
       TextAnalysis.phrasePmi(t(s, dir, "documents"),
         minCount = 3, topN = 100)),
 
-    "q68_sessionize" -> ((s, dir) =>
-      // gap-based sessionization over the event stream (30-min gap, the
-      // batch twin of streaming session windows): per-user lag +
-      // running-sum windows + one aggregate, all on the SAME user_id
-      // partitioning — one Exchange end-to-end. Exact microsecond
-      // integer timestamps both sides, so the full session layout
-      // carries a hash oracle; ties break on event_id.
-      graft.ops.Sessions.sessionize(t(s, dir, "events"))
-        .orderBy("user_id", "session_idx")),
-
-    "q69_rollup" -> ((s, dir) =>
-      // OLAP grouping-sets surface (the Expand-operator family):
-      // rollup over (returnflag, linestatus) with grouping_id
-      // disambiguating the NULL-as-total levels — subtotals and grand
-      // total in ONE pass over the scan (Spark expands rows, partial
-      // aggregation still applies map-side).
-      t(s, dir, "lineitem")
-        .rollup(col("l_returnflag"), col("l_linestatus"))
-        .agg(
-          grouping_id().cast("long").as("gid"),
-          count(lit(1)).as("n_rows"),
-          sum(col("l_quantity").cast("long")).as("sum_qty"))
-        .select(col("gid"),
-          coalesce(col("l_returnflag"), lit("ALL")).as("returnflag"),
-          coalesce(col("l_linestatus"), lit("ALL")).as("linestatus"),
-          col("n_rows"), col("sum_qty"))
-        .orderBy(col("gid"), col("returnflag"), col("linestatus"))),
-
-    "q70_cube" -> ((s, dir) =>
-      // CUBE completes the grouping-sets lattice q69 opened (all 2^n
-      // combinations via the same one-pass Expand): per (lang, source)
-      // cells plus both one-dim margins plus the grand total, with
-      // grouping_id disambiguating the NULL-as-total levels.
-      graft.ops.Stats.cubeDocStats(t(s, dir, "documents"))
-        .orderBy(col("gid"), col("lang"), col("source"))),
-
-    "q71_zorder" -> ((s, dir) =>
-      // Z-order data layout (the OPTIMIZE ZORDER analog): Morton-code
-      // interleave of (user bucket, hour bucket) via mask-ladder bit
-      // spreads — per-row integer projections, zero exchanges for the
-      // assignment — then one agg per file bucket proving the pruning
-      // property: every bucket spans <= 31 values in EACH dimension,
-      // the min/max column-stats bound a format would use to skip files.
-      graft.ops.Layout.zOrderLayout(t(s, dir, "events"))
-        .orderBy("file_bucket")),
-
-    "q72_sketch_distinct" -> ((s, dir) =>
-      // HLL++ cardinality sketch under a hash-oracled error-band
-      // contract: the hashed row carries the exact distinct count and an
-      // integer-math flag that the sketch landed within 10% of it; the
-      // sketch's raw value (implementation-specific) never enters the
-      // hash. At 100 TB the sketch is the only viable distinct path —
-      // this audit is how you validate it on a sample first.
-      graft.ops.Stats.sketchDistinctAudit(t(s, dir, "events"))
-        .orderBy("event_type")),
-
     "q64_seq_packing" -> ((s, dir) =>
       // GPT-style sequence packing (concat-then-chunk at 128 tokens):
       // per doc, where its tokens land after the corpus is concatenated
@@ -1449,18 +1210,6 @@ object SparkEntry {
         triplesFor(s, dir).select("subj", "pred", "obj")
           .unionByName(planted))
         .orderBy("violation", "subj", "pred", "obj")
-    }),
-
-    "q57_corpus_stats" -> ((s, dir) => {
-      // Corpus statistics: EXACT interpolated quantiles + distinct
-      // counts per language (the analytics a curation pipeline charts
-      // per shard). Oracle: DuckDB quantile_cont — the same
-      // index = p*(n-1) linear interpolation as Spark's percentile.
-      // The sketch twins (approx_percentile / approx_count_distinct)
-      // are graded against these exact answers in OpsSpec.
-      TextAnalysis.corpusStats(
-        TextAnalysis.withTokenCounts(t(s, dir, "documents")))
-        .orderBy("lang")
     }),
 
     "q56_stream_window" -> ((s, dir) => {
@@ -2225,7 +1974,6 @@ object SparkEntry {
     // the no-anchor zeros fallback as a LEFT JOIN + COALESCE.
     "q50_trigger_query" -> q50TriggerQuerySql,
 
-
     // q35: headEvidence re-derived in SQL — irregular-lemma VALUES,
     // normLemma CASE chain, lexicon membership, the -ed morphology
     // heuristic, and the A1 mean>0.5 decision.
@@ -2812,80 +2560,6 @@ object SparkEntry {
         |         JOIN uni uy ON uy.tok = bgc.y, tot
         |ORDER BY cnt DESC, bigram LIMIT 100""".stripMargin,
 
-    // q68: identical gap/running-sum windows — epoch_us matches
-    // unix_micros exactly (integer microseconds, UTC both sides).
-    "q68_sessionize" ->
-      """WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS tsu FROM events),
-        |g AS (SELECT user_id, event_id, tsu,
-        |    CASE WHEN lag(tsu) OVER w IS NULL
-        |           OR tsu - lag(tsu) OVER w > 1800000000 THEN 1 ELSE 0 END AS ns
-        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY tsu, event_id)),
-        |s AS (SELECT user_id, tsu,
-        |    SUM(ns) OVER (PARTITION BY user_id ORDER BY tsu, event_id
-        |      ROWS UNBOUNDED PRECEDING) AS session_idx
-        |  FROM g)
-        |SELECT user_id, session_idx::BIGINT AS session_idx,
-        |  COUNT(*)::BIGINT AS n_events,
-        |  MIN(tsu)::BIGINT AS start_us, MAX(tsu)::BIGINT AS end_us,
-        |  (MAX(tsu) - MIN(tsu))::BIGINT AS duration_us
-        |FROM s GROUP BY 1, 2 ORDER BY user_id, session_idx""".stripMargin,
-
-    // q69: GROUP BY ROLLUP with the same GROUPING bitmask convention
-    // (first column = most significant bit) and NULLs coalesced to the
-    // same sentinel; quantities cast to BIGINT pre-sum (integral
-    // doubles), exact both sides.
-    "q69_rollup" ->
-      """SELECT GROUPING(l_returnflag, l_linestatus)::BIGINT AS gid,
-        |  COALESCE(l_returnflag, 'ALL') AS returnflag,
-        |  COALESCE(l_linestatus, 'ALL') AS linestatus,
-        |  COUNT(*)::BIGINT AS n_rows,
-        |  SUM(CAST(l_quantity AS BIGINT))::BIGINT AS sum_qty
-        |FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)
-        |ORDER BY gid, returnflag, linestatus""".stripMargin,
-
-    // q70: GROUP BY CUBE with the same GROUPING bitmask and sentinel
-    // conventions as q69 — all-integer aggregates, exact both sides.
-    "q70_cube" ->
-      """SELECT GROUPING(lang, source)::BIGINT AS gid,
-        |  COALESCE(lang, 'ALL') AS lang,
-        |  COALESCE(source, 'ALL') AS source,
-        |  COUNT(*)::BIGINT AS n_docs,
-        |  SUM(n_chars)::BIGINT AS sum_chars,
-        |  MAX(n_chars)::BIGINT AS max_chars
-        |FROM documents GROUP BY CUBE (lang, source)
-        |ORDER BY gid, lang, source""".stripMargin,
-
-    // q71: the identical mask-ladder Morton spread re-derived with
-    // BIGINT `<<`/`&`/`|` — exact integer math end-to-end; epoch_us //
-    // 3600000000 matches Spark's unix_micros div (positive timestamps).
-    "q71_zorder" ->
-      """WITH d AS (SELECT user_id % 1024 AS xb,
-        |    (epoch_us(ts) // 3600000000) % 1024 AS yb FROM events),
-        |s1 AS (SELECT xb, yb, ((xb | (xb << 8)) & 16711935) AS x,
-        |    ((yb | (yb << 8)) & 16711935) AS y FROM d),
-        |s2 AS (SELECT xb, yb, ((x | (x << 4)) & 252645135) AS x,
-        |    ((y | (y << 4)) & 252645135) AS y FROM s1),
-        |s3 AS (SELECT xb, yb, ((x | (x << 2)) & 858993459) AS x,
-        |    ((y | (y << 2)) & 858993459) AS y FROM s2),
-        |s4 AS (SELECT xb, yb, ((x | (x << 1)) & 1431655765) AS x,
-        |    ((y | (y << 1)) & 1431655765) AS y FROM s3),
-        |b AS (SELECT xb, yb, (x | (y << 1)) >> 10 AS file_bucket FROM s4)
-        |SELECT file_bucket::BIGINT AS file_bucket,
-        |  COUNT(*)::BIGINT AS n_rows,
-        |  MIN(xb)::BIGINT AS x_min, MAX(xb)::BIGINT AS x_max,
-        |  MIN(yb)::BIGINT AS y_min, MAX(yb)::BIGINT AS y_max,
-        |  (MAX(xb) - MIN(xb))::BIGINT AS x_span,
-        |  (MAX(yb) - MIN(yb))::BIGINT AS y_span
-        |FROM b GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // q72: the oracle re-derives the exact distinct count and pins the
-    // contract flag to 1 — a sketch outside its 10% band fails the hash.
-    "q72_sketch_distinct" ->
-      """SELECT event_type,
-        |  COUNT(DISTINCT user_id)::BIGINT AS n_exact,
-        |  1::BIGINT AS sketch_in_band
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-
     // q64: the same packing layout from ONE global window (the oracle
     // can afford the single-task shape the engine must avoid) — same
     // ws-token definition as q16, `//`+`%` integer arithmetic.
@@ -2972,22 +2646,6 @@ object SparkEntry {
           |    ('ORG','WEA','VEH','GPE','LOC','FAC','PER'))
           |SELECT violation, subj, pred, obj FROM v
           |ORDER BY violation, subj, pred, obj""".stripMargin),
-
-    // q57: quantile_cont is DuckDB's continuous interpolated quantile —
-    // the same definition as Spark's exact percentile; both sides round
-    // to 4 dp. Length expression identical to q16's ws_tokens.
-    "q57_corpus_stats" ->
-      """WITH lens AS (SELECT lang,
-        |    CAST(CASE WHEN LENGTH(TRIM(text)) = 0 THEN 0
-        |         ELSE LEN(regexp_split_to_array(TRIM(text), '\s+')) END AS BIGINT) AS len
-        |  FROM documents)
-        |SELECT lang, COUNT(*) AS n_docs,
-        |  COUNT(DISTINCT len) AS n_distinct_len,
-        |  MAX(len) AS max_len,
-        |  ROUND(quantile_cont(len, 0.5), 4) AS p50,
-        |  ROUND(quantile_cont(len, 0.9), 4) AS p90,
-        |  ROUND(quantile_cont(len, 0.99), 4) AS p99
-        |FROM lens GROUP BY lang ORDER BY lang""".stripMargin,
 
     // q56: the windowed counts re-derived from gold with the same
     // idx-derived stamping — minute = file idx % 37, window = 5-minute
@@ -3134,83 +2792,6 @@ object SparkEntry {
         |  SELECT * FROM hasType UNION ALL SELECT * FROM argT
         |  UNION ALL SELECT * FROM hasEnt UNION ALL SELECT * FROM sameAs)
         |ORDER BY subj, pred, obj""".stripMargin,
-    "q1_agg" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  CAST(ROUND(SUM(l_quantity)) AS BIGINT) AS sum_qty,
-        |  CAST(SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT)) AS BIGINT) AS sum_price_cents,
-        |  COUNT(*) AS n
-        |FROM lineitem GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "q2_join_broadcast" ->
-      """SELECT c_mktsegment, COUNT(*) AS n_orders,
-        |  CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS rev_cents
-        |FROM orders JOIN customer ON o_custkey = c_custkey
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q3_window_latest" ->
-      """WITH ranked AS (
-        |  SELECT event_type,
-        |    ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
-        |  FROM events)
-        |SELECT event_type, COUNT(*) AS n_users FROM ranked WHERE rn = 1
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q4_dedup_exact_stats" ->
-      """SELECT COUNT(*) AS n_docs, COUNT(DISTINCT sha256(text)) AS n_distinct,
-        |  (SELECT COUNT(*) FROM (SELECT sha256(text) h FROM documents
-        |    GROUP BY 1 HAVING COUNT(*) > 1)) AS n_dup_groups
-        |FROM documents""".stripMargin,
-    "q5_topk" ->
-      "SELECT doc_id, n_chars FROM documents ORDER BY n_chars DESC, doc_id LIMIT 10",
-    "q6_nearest_join" ->
-      """WITH p AS (SELECT user_id, event_id p_id, ts p_ts FROM events WHERE event_type='purchase'),
-        |c AS (SELECT user_id, event_id c_id, ts c_ts FROM events WHERE event_type='click'),
-        |j AS (SELECT p_id, c_id,
-        |    CAST(ROUND(ABS(epoch(p_ts) - epoch(c_ts))) AS BIGINT) AS dt,
-        |    ROW_NUMBER() OVER (PARTITION BY p_id
-        |      ORDER BY ABS(epoch(p_ts) - epoch(c_ts)), c_id) AS rn
-        |  FROM p JOIN c USING (user_id)
-        |  WHERE ABS(epoch(p_ts) - epoch(c_ts)) <= 600.0)
-        |SELECT p_id, c_id, dt FROM j WHERE rn = 1 ORDER BY p_id""".stripMargin,
-    "q7_pairs_per_day" ->
-      """WITH e AS (SELECT user_id, event_id, strftime(ts, '%Y-%m-%d') AS day FROM events)
-        |SELECT a.user_id, a.day, COUNT(*) AS n_pairs
-        |FROM e a JOIN e b ON a.user_id = b.user_id AND a.day = b.day AND a.event_id < b.event_id
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "q8_union_anti" ->
-      """SELECT 'has_orders' AS status, COUNT(*) AS n FROM customer
-        |  WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-        |UNION ALL
-        |SELECT 'no_orders' AS status, COUNT(*) AS n FROM customer
-        |  WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-        |ORDER BY 1""".stripMargin,
-    "q9_mean_threshold" ->
-      """SELECT user_id FROM events GROUP BY 1
-        |HAVING AVG(value) > 50.0 ORDER BY 1""".stripMargin,
-    "q10_range_join" ->
-      """SELECT strftime(o_orderdate, '%Y-%m') AS month, COUNT(*) AS n
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |WHERE l_shipdate >= o_orderdate
-        |  AND l_shipdate <= o_orderdate + INTERVAL 30 DAY
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q20_crosstab" ->
-      """SELECT event_type, CAST(dayofweek(ts) + 1 AS INT) AS dow, COUNT(*) AS n
-        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "q21_first_event" ->
-      "SELECT user_id, MIN(event_id) AS first_event FROM events GROUP BY 1 ORDER BY 1",
-    "q22_semi_by_brand" ->
-      """SELECT p_brand, COUNT(*) AS n_parts_used FROM part
-        |WHERE EXISTS (SELECT 1 FROM lineitem WHERE l_partkey = p_partkey)
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q14_knn_bruteforce" ->
-      """WITH q AS (SELECT embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id = 0)
-        |SELECT vec_id,
-        |  ROUND(list_cosine_similarity(embedding::DOUBLE[], qv), 4) AS cos
-        |FROM embeddings, q
-        |ORDER BY list_cosine_similarity(embedding::DOUBLE[], qv) DESC, vec_id
-        |LIMIT 10""".stripMargin,
-    "q24_json_props" ->
-      """SELECT event_type,
-        |  CAST(SUM(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS sum_k,
-        |  COUNT(*) AS n
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
     "q16_token_stats" ->
       """SELECT doc_id,
         |  CASE WHEN LENGTH(TRIM(text)) = 0 THEN 0
@@ -3302,24 +2883,6 @@ object SparkEntry {
         |JOIN e ON e.vec_id = fp.doc_id
         |JOIN e f ON f.vec_id = fp.doc_id + 1
         |ORDER BY fp.doc_id""".stripMargin,
-    // q52: the bucketed join re-derived as a plain join — bucketing must
-    // be a pure physical-layout property with zero value impact.
-    "q52_bucketed_join" ->
-      """SELECT l_orderkey, o_orderstatus,
-        |  CAST(ROUND(SUM(l_quantity)) AS BIGINT) AS sum_qty,
-        |  CAST(SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT)) AS BIGINT) AS price_cents,
-        |  COUNT(*) AS n
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY 1, 2 ORDER BY 1""".stripMargin,
-    // q53: the partition-pruned join re-derived over the unpartitioned
-    // table — on-disk layout must be a pure physical property.
-    "q53_partition_pruned" ->
-      """WITH dim AS (SELECT DISTINCT event_type FROM events WHERE event_type < 'm')
-        |SELECT e.event_type, COUNT(*) AS n,
-        |  CAST(SUM(CAST(ROUND(value * 100) AS BIGINT)) AS BIGINT) AS value_cents,
-        |  COUNT(DISTINCT user_id) AS users
-        |FROM events e JOIN dim USING (event_type)
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
     // q55: the K3 batch plan re-derived with SQL window functions — same
     // ws-token length as q16, same grouping (doc_id % 16), rank by len
     // desc / doc_id asc, batches of 8, pad_waste = n*max-sum.

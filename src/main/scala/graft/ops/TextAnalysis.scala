@@ -101,26 +101,6 @@ object TextAnalysis {
         size(regexp_extract_all(t, lit("[A-Za-z]+|[0-9]|[^A-Za-z0-9\\s]"), lit(0))))
   }
 
-  /** Per-group corpus statistics over a length column: doc count,
-    * distinct lengths, max, and EXACT interpolated quantiles
-    * (p50/p90/p99 — `percentile` keeps a per-distinct-value count map,
-    * so cost scales with the length DOMAIN, which is bounded, not with
-    * corpus size; one partial-aggregated shuffle on the group key). For
-    * an unbounded domain the sketch path is `approx_percentile` /
-    * `approx_count_distinct` — OpsSpec grades both sketches against
-    * these exact answers on the same data. Quantiles round to 4 dp so
-    * the DuckDB `quantile_cont` mirror compares exactly. */
-  def corpusStats(docs: DataFrame, lenCol: String = "ws_tokens",
-      groupCol: String = "lang"): DataFrame = {
-    docs.groupBy(col(groupCol))
-      .agg(count(lit(1)).as("n_docs"),
-        count_distinct(col(lenCol)).as("n_distinct_len"),
-        max(col(lenCol)).cast("long").as("max_len"),
-        round(expr(s"percentile($lenCol, 0.5)"), 4).as("p50"),
-        round(expr(s"percentile($lenCol, 0.9)"), 4).as("p90"),
-        round(expr(s"percentile($lenCol, 0.99)"), 4).as("p99"))
-  }
-
   /** Winnowing-style document fingerprint (native Expression). */
   def withFingerprint(docs: DataFrame, textCol: String = "text",
       window: Int = RollingFingerprint.DefaultWindow): DataFrame =

@@ -170,40 +170,6 @@ class CurationGraphSpec extends AnyFunSuite {
     }
   }
 
-  // ---- sessionization ----
-
-  test("sessionize: gap splits, microsecond math, per-user independence") {
-    import java.sql.Timestamp
-    def ts(min: Long, us: Long = 0): Timestamp =
-      new Timestamp(min * 60000 + us / 1000) // ms precision is enough here
-    val events = Seq(
-      (1L, ts(0), 10L),   // u10 s1
-      (2L, ts(10), 10L),  // u10 s1 (gap 10min)
-      (3L, ts(41), 10L),  // u10 s2 (gap 31min > 30)
-      (4L, ts(5), 20L),   // u20 s1 — other user, independent
-      (5L, ts(35), 20L)   // u20 s1 (gap exactly 30min is NOT a split)
-    ).toDF("event_id", "ts", "user_id")
-    val out = graft.ops.Sessions.sessionize(events)
-      .orderBy("user_id", "session_idx")
-      .select("user_id", "session_idx", "n_events", "duration_us")
-      .as[(Long, Long, Long, Long)].collect().toSeq
-    assert(out == Seq(
-      (10L, 1L, 2L, 10L * 60 * 1000000),
-      (10L, 2L, 1L, 0L),
-      (20L, 1L, 2L, 30L * 60 * 1000000)))
-  }
-
-  test("sessionize: identical timestamps tie-break on event_id, single session") {
-    import java.sql.Timestamp
-    val t0 = new Timestamp(1000000L)
-    val events = Seq((7L, t0, 1L), (3L, t0, 1L), (5L, t0, 1L))
-      .toDF("event_id", "ts", "user_id")
-    val out = graft.ops.Sessions.sessionize(events)
-      .select("user_id", "session_idx", "n_events", "duration_us")
-      .as[(Long, Long, Long, Long)].collect().toSeq
-    assert(out == Seq((1L, 1L, 3L, 0L)))
-  }
-
   // ---- degree distribution ----
 
   test("nodeDegrees + degreeHistogram: hand-computed full-outer merge") {

@@ -451,6 +451,6 @@ class OperatorSpec extends AnyFunSuite {
       s"oracles without queries: ${os.diff(qs)}")
     // pinned so a future edit that drops a query fails loudly
     // (update the number AND the README/SURVEY counts when adding)
-    assert(qs.size == 80, s"queries: ${qs.size}")
+    assert(qs.size == 57, s"queries: ${qs.size}")
   }
 }

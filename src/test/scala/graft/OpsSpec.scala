@@ -3,45 +3,14 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-import graft.ops.{Dedup, RollingFingerprint, Sampling, Similarity, TextAnalysis}
+import graft.ops.{RollingFingerprint, Sampling, TextAnalysis}
 
-/** Training-data operators: exact dedup, brute-force cosine top-k,
-  * language id, quality and token counts, fingerprints, PII redaction,
-  * sampling, repetition and frequency signals, sequence packing, the
-  * native cosine expression and the timeline fit. */
+/** Text operators: language id, quality and token counts, fingerprints,
+  * PII redaction, sampling, repetition and frequency signals, sequence
+  * packing, the native cosine expression and the timeline fit. */
 class OpsSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  def docsWithDups = Seq(
-    (0L, "the quick brown fox jumps over the lazy dog near the river bank"),
-    (1L, "the quick brown fox jumps over the lazy dog near the river bank"), // exact dup of 0
-    (2L, "the quick brown fox jumps over the lazy dog near the river bend"), // near dup
-    (3L, "completely different content about spark shuffle partitions and skew"),
-    (4L, "another unrelated document mentioning catalyst optimizer rules only"),
-    (5L, "the quick brown fox jumps over the lazy dog near the river bank today") // near dup
-  ).toDF("doc_id", "text")
-
-  test("exact dedup: sha256 hash-groupBy finds the duplicate group") {
-    val groups = Dedup.exactGroups(docsWithDups).collect()
-    assert(groups.length == 1)
-    assert(groups.head.getAs[Long]("n_dups") == 2)
-    assert(groups.head.getAs[Long]("keep_id") == 0)
-    val drops = Dedup.exactDrops(docsWithDups).as[(Long, Long)].collect().toSet
-    assert(drops == Set((1L, 0L)))
-  }
-
-  test("brute-force cosine top-k via zip_with/aggregate expressions") {
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val query = emb.filter(col("vec_id") === 0)
-      .select("embedding").as[Seq[Float]].head()
-    val top = Similarity.bruteForceTopK(emb, query, 5)
-      .as[(Long, Double)].collect()
-    assert(top.length == 5)
-    assert(top.head._1 == 0L) // self-similarity = 1.0 tops the list
-    assert(math.abs(top.head._2 - 1.0) < 1e-3)
-    assert(top.map(_._2).toSeq == top.map(_._2).toSeq.sortBy(-(_: Double)))
-  }
 
   test("langId Catalyst plan agrees row-for-row with the Scala reference") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")

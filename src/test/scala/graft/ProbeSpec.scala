@@ -9,12 +9,12 @@ class ProbeSpec extends AnyFunSuite {
   private val env = Map("SPARK_GRAFT_SF_DIR" -> "sf", "SPARK_GRAFT_CPUS" -> "8")
 
   test("isolate: the rep count is optional ahead of the query names") {
-    assert(Probe.parse(Seq("isolate", "q1_agg"), env) ==
-      Right(Isolate("sf", 8, 2, Seq("q1_agg"))))
-    assert(Probe.parse(Seq("isolate", "3", "q1_agg"), env) ==
-      Right(Isolate("sf", 8, 3, Seq("q1_agg"))))
+    assert(Probe.parse(Seq("isolate", "kg_triples_by_pred"), env) ==
+      Right(Isolate("sf", 8, 2, Seq("kg_triples_by_pred"))))
+    assert(Probe.parse(Seq("isolate", "3", "kg_triples_by_pred"), env) ==
+      Right(Isolate("sf", 8, 3, Seq("kg_triples_by_pred"))))
     assert(Probe.parse(Seq("isolate"), env) == Right(Isolate("sf", 8, 2, Nil)))
-    assert(Probe.parse(Seq("isolate", "q1_agg"), Map.empty).isLeft,
+    assert(Probe.parse(Seq("isolate", "kg_triples_by_pred"), Map.empty).isLeft,
       "isolate reads its sf dir from the environment")
   }
 
@@ -25,6 +25,13 @@ class ProbeSpec extends AnyFunSuite {
       Right(Plans("d", "o.txt", Seq("kg_bgp", "kg_truss"))))
     assert(Probe.parse(Seq("plans"), Map.empty).isLeft)
     assert(Probe.AuditedQueries.forall(SparkEntry.queries.contains))
+  }
+
+  test("plans and isolate reject unknown query names before any session") {
+    assert(Probe.parse(Seq("isolate", "3", "kg_triples_by_pred", "bogus"), env) ==
+      Left("unknown queries: bogus"))
+    assert(Probe.parse(Seq("plans", "d", "o.txt", "bogus", "kg_bgp", "nope"), env) ==
+      Left("unknown queries: bogus, nope"))
   }
 
   test("timeline: defaults, committed flag, malformed numbers; unknown mode") {
