@@ -1,76 +1,12 @@
 package graft
 
-import org.apache.spark.sql.{GraftBridge, SparkSession, SparkSessionExtensions}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, IntegerLiteral}
+import org.apache.spark.sql.SparkSessionExtensions
 
-import graft.ops.{CosineSimilarity, RollingFingerprint}
-
-/** SQL surface for the engine's native Catalyst expressions — the
-  * standard Spark extension-library pattern: a
-  * `SparkSessionExtensions => Unit` class named in `spark.sql.extensions`
-  * (spark-submit `--conf spark.sql.extensions=graft.GraftExtensions` on a
-  * cluster), which injects the functions into every new session's
-  * FunctionRegistry so pure-SQL pipelines can call them. The reference
-  * exposes its scalar ops only through Python call sites
-  * (ref: project/APIs/main.py:60-101); at 100 TB the consumer is just as
-  * often a SQL job, so the engine registers:
-  *
-  *   - `rolling_fingerprint(text[, window])` — winnowing min rolling
-  *     hash (`ops/Fingerprint.scala`), window defaults to 32.
-  *   - `cosine_similarity(array<float>, array<float>)` — codegen cosine
-  *     (`ops/CosineSimilarity.scala`).
-  *
-  * Both run the exact same Expression nodes as the Column API, so SQL
-  * and DataFrame call sites stay whole-stage-codegen'd and hash-identical.
-  */
+/** A session extension that injects nothing: no graft query needs a SQL
+  * function or an optimizer rule of its own. The class stays only because
+  * `perfbench/src/main/scala/graftbench/Session.scala` names it in
+  * `spark.sql.extensions`, and only a change to the benchmark itself may
+  * edit perfbench. Once that session stops naming it, this class goes. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    GraftFunctions.descriptions.foreach(ext.injectFunction)
-    ext.injectOptimizerRule(_ => FingerprintNormalizeElision)
-  }
-}
-
-/** The function descriptions, plus a registration path for sessions that
-  * already exist (a library user who didn't configure
-  * `spark.sql.extensions` can call `GraftFunctions.register(spark)`). */
-object GraftFunctions {
-
-  private def fingerprintBuilder(args: Seq[Expression]): Expression =
-    args match {
-      case Seq(text) => RollingFingerprint(text, RollingFingerprint.DefaultWindow)
-      case Seq(text, IntegerLiteral(w)) => RollingFingerprint(text, w)
-      case Seq(_, w) => throw new IllegalArgumentException(
-        s"rolling_fingerprint window must be an integer literal, got $w")
-      case _ => throw new IllegalArgumentException(
-        s"rolling_fingerprint expects (text[, window]), got ${args.length} arguments")
-    }
-
-  private def cosineBuilder(args: Seq[Expression]): Expression =
-    args match {
-      case Seq(a, b) => CosineSimilarity(a, b)
-      case _ => throw new IllegalArgumentException(
-        s"cosine_similarity expects exactly 2 arguments, got ${args.length}")
-    }
-
-  /** (identifier, info, builder) triples in the shape
-    * `SparkSessionExtensions.injectFunction` consumes. */
-  val descriptions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] =
-    Seq(
-      (FunctionIdentifier("rolling_fingerprint"),
-        new ExpressionInfo(classOf[RollingFingerprint].getCanonicalName,
-          "rolling_fingerprint"),
-        fingerprintBuilder _),
-      (FunctionIdentifier("cosine_similarity"),
-        new ExpressionInfo(classOf[CosineSimilarity].getCanonicalName,
-          "cosine_similarity"),
-        cosineBuilder _),
-    )
-
-  /** Register into an EXISTING session (idempotent — re-registering
-    * overwrites with the same builder). */
-  def register(spark: SparkSession): Unit =
-    descriptions.foreach { case (ident, info, builder) =>
-      GraftBridge.registerFunction(spark, ident, info, builder)
-    }
+  override def apply(ext: SparkSessionExtensions): Unit = ()
 }

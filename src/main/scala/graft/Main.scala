@@ -39,7 +39,6 @@ object Main {
     val spark = SparkSession.builder()
       .appName("graft-kg-build")
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
       .getOrCreate()
     val (n, wall) = run(spark, input, outRoot)
     // q(): paths with quotes/backslashes must not produce invalid JSON

@@ -6,7 +6,6 @@ import org.apache.spark.sql.functions._
 
 import graft.corpus.Synth
 import graft.kg.{Pipeline, Triples}
-import graft.ops.{Packing, Sampling, TextAnalysis}
 
 /** Driver contract (SURVEY.md §7): every named query, and the DuckDB
   * oracle that checks it.
@@ -16,9 +15,8 @@ import graft.ops.{Packing, Sampling, TextAnalysis}
   *     synthetic source-file corpus (or the golden annotation corpora),
   *     value-checked against SQL over the independently derived gold
   *     triple set;
-  *   - `q*`: the pipeline's stages (replayed over the golden corpora or
-  *     the synthetic corpus) and the text operators over the driver's
-  *     `documents` table.
+  *   - `q*`: the pipeline's stages, replayed over the golden corpora,
+  *     the synthetic corpus or the driver's `documents` table.
   *
   * Every query has an oracle in `oracleSql`.
   */
@@ -206,8 +204,8 @@ object SparkEntry {
       .drop("duration", "speculation").as[Pipeline.EventRow]
   }
 
-  /** Every named query: the `kg_*` family, the pipeline-stage queries
-    * and the text operators. */
+  /** Every named query: the `kg_*` family and the pipeline-stage
+    * queries. */
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ---- KG pipeline (oracle: SQL over the gold triple set) ----
     "kg_triples_by_pred" -> ((s, dir) =>
@@ -273,42 +271,6 @@ object SparkEntry {
         .select("subj", "pred", "obj").orderBy("subj", "pred", "obj")
     }),
 
-    // ---- text operators over the documents table ----
-    "q16_token_stats" -> ((s, dir) =>
-      TextAnalysis.withTokenCounts(t(s, dir, "documents"))
-        .select(col("doc_id"), col("ws_tokens"), col("bpe_ish_tokens"))
-        .orderBy("doc_id")),
-    "q15_langid_dist" -> ((s, dir) =>
-      TextAnalysis.withLangId(t(s, dir, "documents"))
-        .groupBy(col("lang_pred")).agg(count(lit(1)).as("n"))
-        .orderBy("lang_pred")),
-    "q17_fingerprint" -> ((s, dir) =>
-      TextAnalysis.withFingerprint(t(s, dir, "documents"))
-        .select("doc_id", "fingerprint").orderBy("doc_id")),
-    "q25_quality" -> ((s, dir) =>
-      TextAnalysis.withQuality(t(s, dir, "documents"))
-        .select(col("doc_id"), col("n_words"), col("mean_word_len"),
-          col("punct_ratio"), col("stopword_ratio"), col("quality_score"))
-        .orderBy("doc_id")),
-    "q27_pii_redact" -> ((s, dir) => {
-      // PII scrubbing (training-data hygiene): the corpus itself carries
-      // no PII, so deterministic planted rows (mirrored verbatim in the
-      // oracle's VALUES) exercise every pattern; the corpus rows verify
-      // the redaction is exactly identity on clean text
-      import s.implicits._
-      val planted = Seq(
-        (9000001L, "contact john.doe@example.com or jane_smith+tag@mail.co.uk today"),
-        (9000002L, "server at 192.168.1.100 and 10.0.0.1 responded"),
-        (9000003L, "call 555-123-4567 or 555 987 6543 now"),
-        (9000004L, "mixed: admin@test.org from 172.16.254.3 phone 800-555-0199"))
-        .toDF("doc_id", "text")
-      val all = t(s, dir, "documents").select(col("doc_id"), col("text"))
-        .unionByName(planted)
-      TextAnalysis.withPiiRedaction(all)
-        .select(col("doc_id"), col("n_emails"), col("n_ips"),
-          col("n_phones"), sha2(col("redacted"), 256).as("redacted_sha"))
-        .orderBy("doc_id")
-    }),
     "q40_argument_spans" -> ((s, dir) => {
       // The argument tagging stage — the most intricate rule stage
       // (clause segmentation, RoleMap subject/object roles, ACE
@@ -797,30 +759,6 @@ object SparkEntry {
         .dropDuplicates()
         .orderBy("subj", "pred", "obj")
     }),
-    "q46_csv_roundtrip" -> ((s, dir) => {
-      // S5 (CSV sinks) made driver-checkable: a projection of the
-      // documents table — extended with a payload column that FORCES the
-      // quoting path (embedded quote, delimiter, newline, leading quote)
-      // — goes out through the real sink (Sources.writeCsv) and back in
-      // with an explicit schema; the oracle computes the same projection
-      // straight off the parquet. Any quoting/escaping/multiline bug in
-      // either direction of the round-trip fails the hash.
-      import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_csv_q46").toString
-      val docs = s.read.parquet(s"$dir/documents.parquet")
-        .select(col("doc_id"), col("lang"),
-          concat(lit("\""), substring(col("text"), 1, 40), lit("\",\n'"),
-            col("lang")).as("payload"))
-      graft.sources.Sources.writeCsv(docs, tmp)
-      s.read.option("header", "true").option("multiLine", "true")
-        .schema(StructType(Seq(
-          StructField("doc_id", LongType),
-          StructField("lang", StringType),
-          StructField("payload", StringType))))
-        .csv(tmp)
-        .orderBy("doc_id")
-    }),
     "q47_timeline_fit" -> ((s, dir) => {
       // A8 with the REFERENCE's objective (timelinemodule.py:103-216):
       // per-doc Adam fit of (start, duration) on the binomial-CE +
@@ -886,14 +824,6 @@ object SparkEntry {
           "span_text")
         .orderBy("src", "rec_idx", "kind", "start_tok", "end_tok", "label")
     }),
-    "q28_stratified_sample" -> ((s, dir) =>
-      // deterministic stratified sampling (data mixing): keep 100‰ of
-      // English docs, 500‰ of everything else — membership is a pure
-      // arithmetic function of doc_id, identical under any partitioning
-      Sampling.stratifiedSample(t(s, dir, "documents"), "doc_id", "lang",
-        Map("en" -> 100), defaultPermille = 500, salt = 12345L)
-        .select(col("doc_id"), col("lang"))
-        .orderBy("doc_id")),
     "q49_wordpiece_pool" -> ((s, dir) => {
       // P2 (wordpiece re-tok + align map) + A2 (subword→word pooling)
       // made REAL and driver-checkable. Mirrors the reference exactly:
@@ -964,31 +894,6 @@ object SparkEntry {
         .toDF("src", "rec_idx", "event_idx", "n_tri", "query_max")
         .orderBy("src", "rec_idx", "event_idx")
     }),
-    "q51_sql_functions" -> ((s, dir) => {
-      // §2.8 through the SQL surface: both native Expressions resolved
-      // from the session FunctionRegistry — injected by GraftExtensions
-      // via spark.sql.extensions (the cluster `--conf` path; Verify/Bench
-      // builders set it), NOT the Column API — proving a pure-SQL
-      // consumer gets the same codegen'd operators, hash-identical to
-      // the DuckDB re-derivation.
-      t(s, dir, "documents").createOrReplaceTempView("g51_documents")
-      t(s, dir, "embeddings").createOrReplaceTempView("g51_embeddings")
-      s.sql("""SELECT d.doc_id,
-              |  rolling_fingerprint(d.text, 32) AS fp,
-              |  ROUND(cosine_similarity(e.embedding, f.embedding), 4) AS cos_next
-              |FROM g51_documents d
-              |JOIN g51_embeddings e ON e.vec_id = d.doc_id
-              |JOIN g51_embeddings f ON f.vec_id = d.doc_id + 1
-              |ORDER BY d.doc_id""".stripMargin)
-    }),
-    "q60_repetition" -> ((s, dir) =>
-      // Gopher-style repetition quality signals, one narrow per-row
-      // expression (sort-and-fold run counting — no gram explode+shuffle).
-      TextAnalysis.withRepetitionSignals(t(s, dir, "documents"))
-        .select(col("doc_id"), col("n_tokens"), col("distinct_frac"),
-          col("top_bigram_frac"), col("dup_trigram_frac"),
-          col("low_diversity"), col("repetitive"))
-        .orderBy("doc_id")),
 
     "kg_bgp" -> ((s, dir) => {
       // the downstream KG query surface: a 3-pattern conjunctive query
@@ -1144,55 +1049,9 @@ object SparkEntry {
         k = 7, rounds = 2)
         .orderBy("s", "o")),
 
-    "q65_tfidf_topk" -> ((s, dir) =>
-      // TF-IDF top-5 terms per document with the bin()-length
-      // integer-quantized idf (exact integers end-to-end — a float log
-      // idf could never hash-match across engines). Per-doc row_number
-      // window: top-k selection is per-group, scales with the corpus.
-      TextAnalysis.tfidfTopK(t(s, dir, "documents"), k = 5)
-        .orderBy("doc_id", "rank")),
-
-    "q66_bpe_pairs" -> ((s, dir) =>
-      // first-round BPE merge table (Sennrich 2016): corpus-wide
-      // adjacent char-pair counts, computed over the word VOCABULARY
-      // weighted by frequency — the char explode touches each distinct
-      // word once, not once per occurrence. Total order (cnt desc, pair
-      // asc) + cap, so the merge table carries a full hash oracle.
-      TextAnalysis.bpePairStats(t(s, dir, "documents"), topN = 50)),
-
-    "q67_phrase_pmi" -> ((s, dir) =>
-      // collocation mining (word2vec-phrases style): adjacent-token
-      // bigrams with integer-quantized PMI (bitlen(cnt_xy*N) -
-      // bitlen(cnt_x*cnt_y)) — the bigram build is a narrow zip of the
-      // token array with its own tail, no self-join; unigram counts
-      // join in twice; exact integers end-to-end, full hash oracle.
-      TextAnalysis.phrasePmi(t(s, dir, "documents"),
-        minCount = 3, topN = 100)),
-
-    "q64_seq_packing" -> ((s, dir) =>
-      // GPT-style sequence packing (concat-then-chunk at 128 tokens):
-      // per doc, where its tokens land after the corpus is concatenated
-      // in doc_id order — computed as a TWO-PASS distributed prefix sum
-      // (block cumsum + block-offset join), never a single global
-      // window; all-integer, so the packing layout carries a full hash
-      // oracle (a plain SUM OVER (ORDER BY) re-derivation in DuckDB).
-      Packing.packSequences(
-        TextAnalysis.withTokenCounts(t(s, dir, "documents")),
-        seqLen = 128)
-        .orderBy("doc_id")),
-
-    "q62_freq_quality" -> ((s, dir) =>
-      // corpus-frequency quality scoring (quantized CCNet-style LM
-      // filter): train-on-self unigram counts, score by hapax/rare
-      // occurrence fractions + integer-quantized self-information —
-      // all-exact math, so this perplexity-family filter carries a
-      // full hash oracle (a float log-sum never could).
-      TextAnalysis.frequencyQuality(t(s, dir, "documents"))
-        .orderBy("doc_id")),
-
     "q58_integrity_audit" -> ((s, dir) => {
       // The publishing data-quality gate (Triples.integrityAudit) on the
-      // composed pipeline output, tested the q27 way: plant one known
+      // composed pipeline output, tested by planting: one known
       // violation per check alongside the (clean) pipeline triples — the
       // audit must find EXACTLY the planted set, and the oracle
       // re-derives every check in SQL over gold ∪ the same plants. A
@@ -1301,9 +1160,8 @@ object SparkEntry {
       // value-checked: batches of 8 by ws-token length desc, pad_waste
       // = n*max-sum per batch. The oracle re-derives the whole plan
       // with SQL window functions.
-      graft.kg.Pipeline.batchPadPlan(
-        TextAnalysis.withTokenCounts(t(s, dir, "documents")),
-        col("doc_id") % 16, col("ws_tokens"), col("doc_id"), batchSize = 8)
+      Pipeline.batchPadPlan(t(s, dir, "documents"), col("doc_id") % 16,
+        Pipeline.wsTokens(col("text")), col("doc_id"), batchSize = 8)
         .orderBy("grp", "batch_id")
     })
   )
@@ -2238,44 +2096,6 @@ object SparkEntry {
         "WHERE pred IN ('hasType', 'hasDuration', 'speculated', 'hasEntity') " +
         "ORDER BY subj, pred, obj"),
 
-    // q60: run counting re-derived the RELATIONAL way (gram unnest +
-    // GROUP BY + MAX/SUM) against the engine's per-row sort-and-fold —
-    // two independent algorithms for the same counts; flags are integer
-    // comparisons on both sides so no float boundary exists.
-    "q60_repetition" ->
-      """WITH w AS (SELECT doc_id,
-        |    list_filter(regexp_split_to_array(lower(text), '\s+'), x -> x <> '') AS t
-        |  FROM documents),
-        |base AS (SELECT doc_id, t, len(t) AS n,
-        |    CASE WHEN len(t) >= 2 THEN [array_to_string(t[i:i+1], ' ')
-        |                                for i in range(1, len(t))]
-        |         ELSE []::VARCHAR[] END AS bgs,
-        |    CASE WHEN len(t) >= 3 THEN [array_to_string(t[i:i+2], ' ')
-        |                                for i in range(1, len(t) - 1)]
-        |         ELSE []::VARCHAR[] END AS tgs
-        |  FROM w),
-        |bc AS (SELECT doc_id, MAX(c) AS bt FROM (
-        |    SELECT doc_id, g, COUNT(*) AS c
-        |    FROM (SELECT doc_id, unnest(bgs) AS g FROM base) GROUP BY 1, 2)
-        |  GROUP BY 1),
-        |tc AS (SELECT doc_id, SUM(CASE WHEN c > 1 THEN c ELSE 0 END) AS td FROM (
-        |    SELECT doc_id, g, COUNT(*) AS c
-        |    FROM (SELECT doc_id, unnest(tgs) AS g FROM base) GROUP BY 1, 2)
-        |  GROUP BY 1)
-        |SELECT b.doc_id, b.n::BIGINT AS n_tokens,
-        |  CASE WHEN b.n = 0 THEN 0.0
-        |       ELSE ROUND(len(list_distinct(b.t))::DOUBLE / b.n, 4) END AS distinct_frac,
-        |  CASE WHEN len(b.bgs) = 0 THEN 0.0
-        |       ELSE ROUND(COALESCE(bc.bt, 0)::DOUBLE / len(b.bgs), 4) END AS top_bigram_frac,
-        |  CASE WHEN len(b.tgs) = 0 THEN 0.0
-        |       ELSE ROUND(COALESCE(tc.td, 0)::DOUBLE / len(b.tgs), 4) END AS dup_trigram_frac,
-        |  CASE WHEN len(list_distinct(b.t)) * 2 < b.n THEN 1 ELSE 0 END AS low_diversity,
-        |  CASE WHEN COALESCE(bc.bt, 0) * 10 > len(b.bgs)
-        |         OR COALESCE(tc.td, 0) * 20 > len(b.tgs) THEN 1 ELSE 0 END AS repetitive
-        |FROM base b LEFT JOIN bc ON b.doc_id = bc.doc_id
-        |            LEFT JOIN tc ON b.doc_id = tc.doc_id
-        |ORDER BY b.doc_id""".stripMargin,
-
     // kg_bgp: the identical conjunction as SQL self-joins over the gold
     // triple set (bag semantics over a set store on both sides — join
     // multiplicity must agree row-for-row)
@@ -2508,110 +2328,6 @@ object SparkEntry {
           |ORDER BY 1, 2""".stripMargin
     },
 
-    // q65: the same per-(doc,token) combine / df aggregate / bin()-length
-    // integer idf / per-doc row_number ranking — same ws-token and
-    // bin-log2 definitions as q62.
-    "q65_tfidf_topk" ->
-      """WITH w AS (SELECT doc_id,
-        |    list_filter(regexp_split_to_array(lower(text), '\s+'), x -> x <> '') AS t
-        |  FROM documents),
-        |pd AS (SELECT doc_id, tok, COUNT(*)::BIGINT AS occ
-        |  FROM (SELECT doc_id, unnest(t) AS tok FROM w) GROUP BY 1, 2),
-        |dfreq AS (SELECT tok, COUNT(*)::BIGINT AS df FROM pd GROUP BY 1),
-        |nd AS (SELECT COUNT(*)::BIGINT AS n_docs FROM documents),
-        |sc AS (SELECT pd.doc_id, pd.tok, pd.occ, dfreq.df,
-        |    (pd.occ * (1 + length(bin(nd.n_docs)) - length(bin(dfreq.df))))::BIGINT AS score
-        |  FROM pd JOIN dfreq USING (tok), nd),
-        |rk AS (SELECT *, row_number() OVER
-        |    (PARTITION BY doc_id ORDER BY score DESC, tok) AS rank FROM sc)
-        |SELECT doc_id, rank::BIGINT AS rank, tok, occ, df, score
-        |FROM rk WHERE rank <= 5 ORDER BY doc_id, rank""".stripMargin,
-
-    // q66: the same vocab-weighted pair expansion relationally —
-    // unnest(range) for the positions, substr for the 2-char pairs,
-    // one weighted GROUP BY; occurrence-level COUNT(*) equals the
-    // engine's vocab-weighted SUM by construction.
-    "q66_bpe_pairs" ->
-      """WITH w AS (SELECT unnest(list_filter(
-        |    regexp_split_to_array(lower(text), '\s+'), x -> length(x) >= 2)) AS w
-        |  FROM documents),
-        |pos AS (SELECT w, unnest(range(1, length(w))) AS i FROM w),
-        |pr AS (SELECT substr(w, CAST(i AS INTEGER), 2) AS pair FROM pos)
-        |SELECT pair, COUNT(*)::BIGINT AS cnt FROM pr
-        |GROUP BY 1 ORDER BY cnt DESC, pair LIMIT 50""".stripMargin,
-
-    // q67: adjacent bigrams via 1-based list indexing, unigram counts
-    // joined twice, the same bin()-length PMI quantization as q62/q65.
-    "q67_phrase_pmi" ->
-      """WITH w AS (SELECT doc_id,
-        |    list_filter(regexp_split_to_array(lower(text), '\s+'), x -> x <> '') AS t
-        |  FROM documents),
-        |uni AS (SELECT tok, COUNT(*)::BIGINT AS cnt
-        |  FROM (SELECT unnest(t) AS tok FROM w) GROUP BY 1),
-        |tot AS (SELECT SUM(cnt)::BIGINT AS n_total FROM uni),
-        |bg AS (SELECT t[i] AS x, t[i + 1] AS y
-        |  FROM (SELECT t, unnest(range(1, len(t))) AS i FROM w)),
-        |bgc AS (SELECT x, y, COUNT(*)::BIGINT AS cnt_xy FROM bg
-        |  GROUP BY 1, 2 HAVING COUNT(*) >= 3)
-        |SELECT bgc.x || ' ' || bgc.y AS bigram, bgc.cnt_xy AS cnt,
-        |  (length(bin(bgc.cnt_xy * tot.n_total))
-        |    - length(bin(ux.cnt * uy.cnt)))::BIGINT AS pmi_bits
-        |FROM bgc JOIN uni ux ON ux.tok = bgc.x
-        |         JOIN uni uy ON uy.tok = bgc.y, tot
-        |ORDER BY cnt DESC, bigram LIMIT 100""".stripMargin,
-
-    // q64: the same packing layout from ONE global window (the oracle
-    // can afford the single-task shape the engine must avoid) — same
-    // ws-token definition as q16, `//`+`%` integer arithmetic.
-    "q64_seq_packing" ->
-      """WITH tc AS (SELECT doc_id,
-        |    (CASE WHEN LENGTH(TRIM(text)) = 0 THEN 0
-        |          ELSE LEN(regexp_split_to_array(TRIM(text), '\s+')) END)::BIGINT AS toks
-        |  FROM documents),
-        |p AS (SELECT doc_id, toks,
-        |    COALESCE(SUM(toks) OVER (ORDER BY doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)::BIGINT AS prefix
-        |  FROM tc)
-        |SELECT doc_id, toks AS n_tokens,
-        |  prefix // 128 AS start_seq,
-        |  prefix % 128 AS start_off,
-        |  (CASE WHEN toks = 0 THEN 0
-        |        ELSE (prefix + toks - 1) // 128 - prefix // 128 + 1
-        |   END)::BIGINT AS seqs_spanned
-        |FROM p ORDER BY doc_id""".stripMargin,
-
-    // q62: the frequency table, bit-lengths, and per-doc sums re-derived
-    // relationally; bin()-length integer log2 is identical in both
-    // engines (verified: bin(5)='101' in Spark and DuckDB), fractions
-    // divide the same exact integers, flags are integer comparisons.
-    "q62_freq_quality" ->
-      """WITH w AS (SELECT doc_id,
-        |    list_filter(regexp_split_to_array(lower(text), '\s+'), x -> x <> '') AS t
-        |  FROM documents),
-        |pd AS (SELECT doc_id, tok, COUNT(*)::BIGINT AS occ
-        |  FROM (SELECT doc_id, unnest(t) AS tok FROM w) GROUP BY 1, 2),
-        |vocab AS (SELECT tok, SUM(occ)::BIGINT AS cnt FROM pd GROUP BY 1),
-        |tot AS (SELECT SUM(cnt)::BIGINT AS n_total FROM vocab),
-        |sc AS (SELECT pd.doc_id,
-        |    SUM(occ)::BIGINT AS n_tokens,
-        |    SUM(CASE WHEN cnt = 1 THEN occ ELSE 0 END)::BIGINT AS hapax_hits,
-        |    SUM(CASE WHEN cnt <= 5 THEN occ ELSE 0 END)::BIGINT AS rare_hits,
-        |    SUM(occ * (length(bin(n_total)) - length(bin(cnt))))::BIGINT AS sum_bits
-        |  FROM pd JOIN vocab USING (tok), tot GROUP BY 1)
-        |SELECT d.doc_id,
-        |  COALESCE(sc.n_tokens, 0)::BIGINT AS n_tokens,
-        |  CASE WHEN COALESCE(sc.n_tokens, 0) = 0 THEN 0.0
-        |       ELSE ROUND(sc.hapax_hits::DOUBLE / sc.n_tokens, 4) END AS hapax_frac,
-        |  CASE WHEN COALESCE(sc.n_tokens, 0) = 0 THEN 0.0
-        |       ELSE ROUND(sc.rare_hits::DOUBLE / sc.n_tokens, 4) END AS rare_frac,
-        |  CASE WHEN COALESCE(sc.n_tokens, 0) = 0 THEN 0.0
-        |       ELSE ROUND(sc.sum_bits::DOUBLE / sc.n_tokens, 4) END AS avg_bits,
-        |  CASE WHEN COALESCE(sc.n_tokens, 0) > 0
-        |         AND COALESCE(sc.rare_hits, 0) * 10 >= sc.n_tokens
-        |       THEN 1 ELSE 0 END AS noisy
-        |FROM (SELECT doc_id FROM documents) d LEFT JOIN sc USING (doc_id)
-        |ORDER BY d.doc_id""".stripMargin,
-
     // q58: every integrity check re-derived in SQL over gold ∪ the same
     // planted violations; vocab literals mirror Ontology (DurationClasses,
     // EntTypes, TempRel labels minus VAGUE/NONE).
@@ -2666,14 +2382,6 @@ object SparkEntry {
         "    '%Y-%m-%d %H:%M:%S') AS window_end, " +
         "  pred, COUNT(*) AS n " +
         "FROM st GROUP BY wmin, pred ORDER BY window_start, pred"),
-
-    // q46: the oracle computes the adversarial payload straight off the
-    // parquet — chr(34)=", chr(10)=\n, chr(39)=' — so the compare is
-    // sink-round-trip vs no-round-trip
-    "q46_csv_roundtrip" ->
-      ("SELECT doc_id, lang, chr(34) || substring(text, 1, 40) || chr(34) " +
-        "|| ',' || chr(10) || chr(39) || lang AS payload " +
-        "FROM documents ORDER BY doc_id"),
 
     // q47: the gold-side timeline fit (GoldDeriver.goldTimelines — the
     // independent mirror of the reference-loss Adam optimizer, run over
@@ -2792,100 +2500,10 @@ object SparkEntry {
         |  SELECT * FROM hasType UNION ALL SELECT * FROM argT
         |  UNION ALL SELECT * FROM hasEnt UNION ALL SELECT * FROM sameAs)
         |ORDER BY subj, pred, obj""".stripMargin,
-    "q16_token_stats" ->
-      """SELECT doc_id,
-        |  CASE WHEN LENGTH(TRIM(text)) = 0 THEN 0
-        |       ELSE LEN(regexp_split_to_array(TRIM(text), '\s+')) END AS ws_tokens,
-        |  LEN(regexp_extract_all(text, '[A-Za-z]+|[0-9]|[^A-Za-z0-9\s]')) AS bpe_ish_tokens
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "q15_langid_dist" ->
-      """WITH scored AS (
-        |  SELECT doc_id, text,
-        |    list_filter(regexp_split_to_array(lower(text), '\W+'),
-        |                x -> x <> '') AS words,
-        |    length(regexp_replace(text, '[^\x{4E00}-\x{9FFF}]', '', 'g')) AS cjk
-        |  FROM documents),
-        |hits AS (
-        |  SELECT *,
-        |    len(list_filter(words, x -> list_contains(
-        |      ['the','a','of','and','to','in','is','it','that','was'], x))) AS h_en,
-        |    len(list_filter(words, x -> list_contains(
-        |      ['der','die','das','und','ist','ein','eine','zu','den','nicht'], x))) AS h_de,
-        |    len(list_filter(words, x -> list_contains(
-        |      ['le','la','les','et','est','un','une','dans','que','pas'], x))) AS h_fr,
-        |    len(list_filter(words, x -> list_contains(
-        |      ['el','la','los','y','es','un','una','en','que','no'], x))) AS h_es
-        |  FROM scored),
-        |lang AS (
-        |  SELECT CASE
-        |    WHEN text IS NULL OR length(text) = 0 THEN 'und'
-        |    WHEN cjk * 20 >= length(text) THEN 'zh'
-        |    WHEN len(words) = 0 THEN 'und'
-        |    WHEN greatest(h_en, h_de, h_fr, h_es) = 0 THEN 'und'
-        |    WHEN h_fr = greatest(h_en, h_de, h_fr, h_es) THEN 'fr'
-        |    WHEN h_es = greatest(h_en, h_de, h_fr, h_es) THEN 'es'
-        |    WHEN h_en = greatest(h_en, h_de, h_fr, h_es) THEN 'en'
-        |    ELSE 'de' END AS lang_pred
-        |  FROM hits)
-        |SELECT lang_pred, COUNT(*) AS n FROM lang GROUP BY 1 ORDER BY 1""".stripMargin,
-    // q17: the native RollingFingerprint Expression (Karp-Rabin mod
-    // 2^61-1, min over 32-char windows) re-derived in pure SQL — DuckDB's
-    // HUGEINT carries the 122-bit intermediate products exactly.
-    "q17_fingerprint" ->
-      """WITH RECURSIVE pw(j, p) AS (
-        |  SELECT 0, 1::HUGEINT
-        |  UNION ALL
-        |  SELECT j + 1, (p * 1000003::HUGEINT) % 2305843009213693951::HUGEINT
-        |  FROM pw WHERE j < 31),
-        |pows AS (SELECT list(p ORDER BY j DESC) AS pl FROM pw),
-        |norm AS (SELECT doc_id,
-        |    trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS s
-        |  FROM documents)
-        |SELECT doc_id,
-        |  CASE WHEN length(s) = 0 THEN 0
-        |  ELSE CAST(list_min([
-        |      list_sum([unicode(s[i+j])::HUGEINT
-        |                * pl[33 - least(32, length(s)) + j]
-        |                for j in range(0, least(32, length(s)))])
-        |        % 2305843009213693951::HUGEINT
-        |      for i in range(1, length(s) - least(32, length(s)) + 2)]) AS BIGINT)
-        |  END AS fingerprint
-        |FROM norm, pows
-        |ORDER BY doc_id""".stripMargin,
-    // q51: the SQL-surface query re-derived function-free — the q17
-    // rolling-hash CTE for rolling_fingerprint plus
-    // list_cosine_similarity on DOUBLE[] for
-    // cosine_similarity, over the same doc_id/vec_id equi-joins.
-    "q51_sql_functions" ->
-      """WITH RECURSIVE pw(j, p) AS (
-        |  SELECT 0, 1::HUGEINT
-        |  UNION ALL
-        |  SELECT j + 1, (p * 1000003::HUGEINT) % 2305843009213693951::HUGEINT
-        |  FROM pw WHERE j < 31),
-        |pows AS (SELECT list(p ORDER BY j DESC) AS pl FROM pw),
-        |norm AS (SELECT doc_id,
-        |    trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS s
-        |  FROM documents),
-        |fp AS (SELECT doc_id,
-        |  CASE WHEN length(s) = 0 THEN 0
-        |  ELSE CAST(list_min([
-        |      list_sum([unicode(s[i+j])::HUGEINT
-        |                * pl[33 - least(32, length(s)) + j]
-        |                for j in range(0, least(32, length(s)))])
-        |        % 2305843009213693951::HUGEINT
-        |      for i in range(1, length(s) - least(32, length(s)) + 2)]) AS BIGINT)
-        |  END AS fp
-        |  FROM norm, pows),
-        |e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings)
-        |SELECT fp.doc_id, fp.fp,
-        |  ROUND(list_cosine_similarity(e.v, f.v), 4) AS cos_next
-        |FROM fp
-        |JOIN e ON e.vec_id = fp.doc_id
-        |JOIN e f ON f.vec_id = fp.doc_id + 1
-        |ORDER BY fp.doc_id""".stripMargin,
-    // q55: the K3 batch plan re-derived with SQL window functions — same
-    // ws-token length as q16, same grouping (doc_id % 16), rank by len
-    // desc / doc_id asc, batches of 8, pad_waste = n*max-sum.
+    // q55: the K3 batch plan re-derived with SQL window functions — the
+    // ws-token length of Pipeline.wsTokens, the same grouping (doc_id %
+    // 16), rank by len desc / doc_id asc, batches of 8, pad_waste =
+    // n*max-sum.
     "q55_batch_plan" ->
       """WITH lens AS (SELECT doc_id % 16 AS grp,
         |    CAST(CASE WHEN LENGTH(TRIM(text)) = 0 THEN 0
@@ -2898,60 +2516,6 @@ object SparkEntry {
         |SELECT grp, batch_id, COUNT(*) AS n_rows,
         |  MAX(len) AS max_len, CAST(SUM(len) AS BIGINT) AS sum_len,
         |  CAST(COUNT(*) * MAX(len) - SUM(len) AS BIGINT) AS pad_waste
-        |FROM ranked GROUP BY grp, batch_id ORDER BY grp, batch_id""".stripMargin,
-    "q27_pii_redact" ->
-      """WITH planted(doc_id, text) AS (VALUES
-        |  (9000001, 'contact john.doe@example.com or jane_smith+tag@mail.co.uk today'),
-        |  (9000002, 'server at 192.168.1.100 and 10.0.0.1 responded'),
-        |  (9000003, 'call 555-123-4567 or 555 987 6543 now'),
-        |  (9000004, 'mixed: admin@test.org from 172.16.254.3 phone 800-555-0199')),
-        |all_docs AS (SELECT doc_id, text FROM documents
-        |  UNION ALL SELECT doc_id, text FROM planted)
-        |SELECT doc_id,
-        |  CAST(len(regexp_extract_all(text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS INT) AS n_emails,
-        |  CAST(len(regexp_extract_all(text, '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b')) AS INT) AS n_ips,
-        |  CAST(len(regexp_extract_all(text, '\b\d{3}[-. ]\d{3}[-. ]\d{4}\b')) AS INT) AS n_phones,
-        |  sha256(
-        |    regexp_replace(
-        |      regexp_replace(
-        |        regexp_replace(text,
-        |          '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-        |        '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b', '<IP>', 'g'),
-        |      '\b\d{3}[-. ]\d{3}[-. ]\d{4}\b', '<PHONE>', 'g')) AS redacted_sha
-        |FROM all_docs ORDER BY doc_id""".stripMargin,
-    "q28_stratified_sample" ->
-      """SELECT doc_id, lang FROM documents
-        |WHERE ((doc_id * 2654435761 + 12345) % 1000003) % 1000 <
-        |  CASE WHEN lang = 'en' THEN 100 ELSE 500 END
-        |ORDER BY doc_id""".stripMargin,
-    "q25_quality" ->
-      """WITH f AS (
-        |  SELECT doc_id,
-        |    LEN(regexp_split_to_array(text, '\s+')) AS n_words,
-        |    LENGTH(text) AS n_chars,
-        |    LENGTH(text) - LENGTH(regexp_replace(text, '[[:punct:]]', '', 'g'))
-        |      AS punct,
-        |    LEN(list_filter(regexp_split_to_array(text, '\s+'),
-        |      x -> list_contains(
-        |        ['the','a','of','and','to','in','is','it','that','was'],
-        |        lower(x)))) AS stop_hits
-        |  FROM documents),
-        |r AS (
-        |  SELECT doc_id, n_words,
-        |    CASE WHEN n_words > 0 THEN n_chars::DOUBLE / n_words ELSE 0.0 END
-        |      AS mwl,
-        |    CASE WHEN n_chars > 0 THEN punct::DOUBLE / n_chars ELSE 0.0 END
-        |      AS pr,
-        |    CASE WHEN n_words > 0 THEN stop_hits::DOUBLE / n_words ELSE 0.0 END
-        |      AS sr
-        |  FROM f)
-        |SELECT doc_id, n_words,
-        |  ROUND(mwl, 4) AS mean_word_len,
-        |  ROUND(pr, 4) AS punct_ratio,
-        |  ROUND(sr, 4) AS stopword_ratio,
-        |  ROUND((CASE WHEN n_words >= 5 THEN 1.0 ELSE n_words / 5.0 END)
-        |    * (1.0 - LEAST(pr * 4, 1.0))
-        |    * (0.5 + LEAST(sr * 2, 0.5)), 4) AS quality_score
-        |FROM r ORDER BY doc_id""".stripMargin
+        |FROM ranked GROUP BY grp, batch_id ORDER BY grp, batch_id""".stripMargin
   )
 }

@@ -155,6 +155,12 @@ object Pipeline {
         col("n_rows") * col("max_len") - col("sum_len"))
   }
 
+  /** The whitespace token count q55 batches by: 0 for empty or blank
+    * text, otherwise the number of `\s+`-separated pieces of the trimmed
+    * text. */
+  def wsTokens(text: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    when(length(trim(text)) === 0, 0).otherwise(size(split(trim(text), "\\s+")))
+
   // ---- stage 3: X1 event expansion + per-event argument tagging ----
 
   /** One row per decoded trigger (the reference's expand_sents,

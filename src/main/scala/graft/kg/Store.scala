@@ -73,10 +73,19 @@ object Store {
     if (!Files.exists(p)) None
     else {
       val s = Files.readString(p)
-      // string fields are written escaped by `q`: match escaped strings
-      def str(field: String): Option[String] =
-        ("\"" + field + "\":\"((?:[^\"\\\\]|\\\\.)*)\"").r
-          .findFirstMatchIn(s).map(m => unescape(m.group(1)))
+      // string fields are written escaped by `q`: scan to the first
+      // unescaped quote. Not a regex: an alternation loop recurses once
+      // per character and overflows the thread stack on a schema of a
+      // few KB.
+      def str(field: String): Option[String] = {
+        val key = q(field) + ":\""
+        Some(s.indexOf(key)).filter(_ >= 0).map(_ + key.length).flatMap { from =>
+          var i = from
+          while (i < s.length && s.charAt(i) != '"')
+            i += (if (s.charAt(i) == '\\') 2 else 1)
+          if (i < s.length) Some(unescape(s.substring(from, i))) else None
+        }
+      }
       val rows = "\"rows\":(\\d+)".r.findFirstMatchIn(s).map(_.group(1).toLong)
       for (a <- str("inputSig"); b <- rows; c <- str("schema")) yield (a, b, c)
     }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 
-import graft.link.Canonicalize
+import graft.link.{Canonicalize, SkewJoin}
 import graft.model._
 
 /** Triple materialization (FIXTURES.md §3): the KG reading of the
@@ -160,7 +160,7 @@ object Triples {
       .groupBy(col("repo"), col("trigLemma"), col("eventType"))
       .agg(min(col("eventId")).as("canonicalId"))
       .persist() // if the gate must count it, the join reuses the cache
-    val sameAs = graft.ops.SkewJoin.gatedJoin(typed, blockCanon,
+    val sameAs = SkewJoin.gatedJoin(typed, blockCanon,
       Seq("repo", "trigLemma", "eventType"),
       saltSource = Seq("eventId"), maxBroadcastRows = maxBroadcastRows,
       // one row per distinct block <= one per event: the already-

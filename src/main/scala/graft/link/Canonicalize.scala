@@ -313,7 +313,7 @@ object Canonicalize {
   def rewrite(mentions: DataFrame, formMap: DataFrame,
       maxBroadcastRows: Long = 1000000L,
       formMapRows: Long = Long.MaxValue): DataFrame =
-    graft.ops.SkewJoin.gatedJoin(mentions, formMap, Seq("repo", "text"),
+    SkewJoin.gatedJoin(mentions, formMap, Seq("repo", "text"),
       saltSource = mentions.columns.toSeq, joinType = "left",
       maxBroadcastRows = maxBroadcastRows,
       // a caller that already knows the map's cardinality (canonical-

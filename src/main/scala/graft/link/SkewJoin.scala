@@ -1,4 +1,4 @@
-package graft.ops
+package graft.link
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._

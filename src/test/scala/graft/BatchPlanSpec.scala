@@ -6,7 +6,8 @@ import org.apache.spark.sql.functions._
 import graft.kg.Pipeline
 
 /** K3's batching policy, value-checked (batchPadPlan — the driver-visible
-  * companion of the narrow sortWithinPartitions inside tagStage). */
+  * companion of the narrow sortWithinPartitions inside tagStage), and the
+  * whitespace token count q55 batches by. */
 class BatchPlanSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -54,5 +55,13 @@ class BatchPlanSpec extends AnyFunSuite {
       .orderBy("batch_id").as[(Long, Long, Long, Long, Long, Long)].collect()
     assert(a.sameElements(b))
     assert(a.map(_._3).toSeq == Seq(2L, 2L, 1L))
+  }
+
+  test("wsTokens: a six-word sentence, empty text, punctuation-only text") {
+    val got = Seq((1L, "The cat sat on the mat."), (2L, ""), (3L, "!!! ??? ..."))
+      .toDF("doc_id", "text")
+      .select(col("doc_id"), Pipeline.wsTokens(col("text")))
+      .as[(Long, Int)].collect().toMap
+    assert(got == Map(1L -> 6, 2L -> 0, 3L -> 3))
   }
 }

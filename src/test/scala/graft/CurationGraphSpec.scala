@@ -4,99 +4,14 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
 import graft.kg.Triples
-import graft.ops.TextAnalysis
 
-/** Round-5 closing additions: corpus term statistics (TF-IDF top-k, BPE
-  * pair table, PMI collocations) and KG graph analytics (min-label
-  * propagation, degree distribution). Every expectation is hand-computed
-  * on paper-sized inputs — the same integer math the DuckDB oracles
-  * re-derive at scale. */
+/** KG graph analytics: min-label propagation, degree distribution,
+  * triangles, edge Jaccard, k-core and k-truss peeling. Every expectation
+  * is hand-computed on paper-sized inputs — the same integer math the
+  * DuckDB oracles re-derive at scale. */
 class CurationGraphSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  // ---- TF-IDF top-k ----
-
-  test("tfidfTopK: hand-computed integer scores, per-doc ranking, ties on token") {
-    val docs = Seq(
-      (1L, "apple banana apple"),
-      (2L, "banana cherry"),
-      (3L, "apple date")
-    ).toDF("doc_id", "text")
-    // N=3 (bitlen 2); df: apple 2, banana 2 (bitlen 2 -> idf 1);
-    // cherry 1, date 1 (bitlen 1 -> idf 2)
-    val out = TextAnalysis.tfidfTopK(docs, k = 5)
-      .orderBy("doc_id", "rank")
-      .as[(Long, Long, String, Long, Long, Long)].collect()
-    assert(out.toSeq == Seq(
-      (1L, 1L, "apple", 2L, 2L, 2L),
-      (1L, 2L, "banana", 1L, 2L, 1L),
-      (2L, 1L, "cherry", 1L, 1L, 2L),
-      (2L, 2L, "banana", 1L, 2L, 1L),
-      (3L, 1L, "date", 1L, 1L, 2L),
-      (3L, 2L, "apple", 1L, 2L, 1L)))
-  }
-
-  test("tfidfTopK: k caps the per-doc rows; equal scores break ties on token asc") {
-    val docs = Seq((1L, "b a c"), (2L, "z")).toDF("doc_id", "text")
-    // all three doc-1 tokens have occ 1, df 1 -> equal scores: tie on token
-    val out = TextAnalysis.tfidfTopK(docs, k = 2)
-      .orderBy("doc_id", "rank")
-      .as[(Long, Long, String, Long, Long, Long)].collect()
-    assert(out.map(r => (r._1, r._2, r._3)).toSeq ==
-      Seq((1L, 1L, "a"), (1L, 2L, "b"), (2L, 1L, "z")))
-  }
-
-  // ---- BPE pair statistics ----
-
-  test("bpePairStats: vocab-weighted char-pair counts, total order, cap") {
-    val docs = Seq((1L, "aab AAB"), (2L, "ab x")).toDF("doc_id", "text")
-    // lowercased words (len >= 2): aab x2, ab x1; "x" dropped (len 1)
-    // pairs: aab -> aa, ab (x2 each); ab -> ab (x1)  =>  ab 3, aa 2
-    val out = TextAnalysis.bpePairStats(docs, topN = 50)
-      .as[(String, Long)].collect().toSeq
-    assert(out == Seq(("ab", 3L), ("aa", 2L)))
-    val capped = TextAnalysis.bpePairStats(docs, topN = 1)
-      .as[(String, Long)].collect().toSeq
-    assert(capped == Seq(("ab", 3L)))
-  }
-
-  test("bpePairStats: weighted-vocab result equals occurrence-level recount") {
-    val docs = Seq(
-      (1L, "spark spark shuffle partition partition partition"),
-      (2L, "shuffle spark skew")).toDF("doc_id", "text")
-    val out = TextAnalysis.bpePairStats(docs, topN = 1000)
-      .as[(String, Long)].collect().toMap
-    // brute-force occurrence-level recount in plain Scala
-    val words = docs.as[(Long, String)].collect()
-      .flatMap(_._2.toLowerCase.split("\\s+")).filter(_.length >= 2)
-    val brute = words.flatMap(w => w.sliding(2))
-      .groupBy(identity).map { case (p, xs) => p -> xs.length.toLong }
-    assert(out == brute)
-  }
-
-  // ---- PMI collocations ----
-
-  test("phrasePmi: hand-computed quantized PMI over an alternating corpus") {
-    val docs = Seq((1L, "x y x y x y x y")).toDF("doc_id", "text")
-    // bigrams: (x,y) x4, (y,x) x3; uni: x 4, y 4; N=8
-    // (x y): bitlen(4*8=32)=6 - bitlen(4*4=16)=5 -> 1
-    // (y x): bitlen(3*8=24)=5 - bitlen(16)=5     -> 0
-    val out = TextAnalysis.phrasePmi(docs, minCount = 3, topN = 100)
-      .as[(String, Long, Long)].collect().toSeq
-    assert(out == Seq(("x y", 4L, 1L), ("y x", 3L, 0L)))
-  }
-
-  test("phrasePmi: minCount filters, bigrams never cross documents") {
-    val docs = Seq(
-      (1L, "a b"), (2L, "a b"), (3L, "a b"),
-      (4L, "b c"), // only once -> below minCount 3
-      (5L, "a"), (6L, "b") // single-token docs emit no bigrams
-    ).toDF("doc_id", "text")
-    val out = TextAnalysis.phrasePmi(docs, minCount = 3, topN = 100)
-      .as[(String, Long, Long)].collect().toSeq
-    assert(out.map(r => (r._1, r._2)) == Seq(("a b", 3L)))
-  }
 
   // ---- label propagation ----
 
@@ -122,24 +37,6 @@ class CurationGraphSpec extends AnyFunSuite {
     val out = Triples.labelProp(e, iters = 3)
       .as[(String, String)].collect().toMap
     assert(out.values.toSet == Set("a"))
-  }
-
-  // ---- plan-shape pins (the 100 TB discipline, not just correctness) ----
-
-  test("q65 plan: per-partition top-k pruning (WindowGroupLimit) before the rank shuffle") {
-    val docs = Seq((1L, "a b c")).toDF("doc_id", "text")
-    val plan = TextAnalysis.tfidfTopK(docs, k = 5)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("WindowGroupLimit"),
-      s"expected WindowGroupLimit pushdown; plan:\n${plan.take(800)}")
-  }
-
-  test("q66 plan: distributed top-N (TakeOrderedAndProject), never a global Sort+Limit") {
-    val docs = Seq((1L, "ab cd")).toDF("doc_id", "text")
-    val plan = TextAnalysis.bpePairStats(docs, topN = 50)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("TakeOrderedAndProject"),
-      s"expected TakeOrderedAndProject; plan:\n${plan.take(800)}")
   }
 
   test("labelProp: random graphs at iters >= diameter match local union-find components") {

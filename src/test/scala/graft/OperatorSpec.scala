@@ -451,6 +451,27 @@ class OperatorSpec extends AnyFunSuite {
       s"oracles without queries: ${os.diff(qs)}")
     // pinned so a future edit that drops a query fails loudly
     // (update the number AND the README/SURVEY counts when adding)
-    assert(qs.size == 57, s"queries: ${qs.size}")
+    assert(qs.size == 43, s"queries: ${qs.size}")
+  }
+
+  test("each sf fixture's lineitem row count picks the gold corpus its name synthesizes") {
+    // the synthetic-corpus oracles choose their gold corpus by lineitem's
+    // row count (WHEN <rows> THEN '<nFiles>_s<spf>'); the queries size
+    // the corpus from the dir name (Synth.sizeForSfDir), so a fixture
+    // whose row count maps elsewhere would check against the wrong gold
+    val pick = raw"WHEN (\d+) THEN '([^']+)'".r
+      .findAllMatchIn(SparkEntry.oracleSql("kg_triples_by_pred"))
+      .map(m => m.group(1).toLong -> m.group(2)).toMap
+    assert(pick.size == 3, s"WHEN pairs: $pick")
+    // the fixture root SparkEntry.entry reads its sf0.001 dir from
+    val fixtures = Option(new java.io.File("/root/testdata").listFiles).toSeq
+      .flatten.filter(_.getName.startsWith("sf")).sortBy(_.getName)
+    assume(fixtures.nonEmpty, "no sf fixtures present")
+    for (dir <- fixtures) {
+      val rows = spark.read.parquet(s"$dir/lineitem.parquet").count()
+      val (nFiles, spf) = graft.corpus.Synth.sizeForSfDir(dir.getPath)
+      assert(pick.get(rows).contains(s"${nFiles}_s$spf"),
+        s"$dir: lineitem has $rows rows, which picks ${pick.get(rows)}")
+    }
   }
 }

@@ -1,10 +1,13 @@
 package graft
 
+import java.nio.file.Files
+
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.Probe.{Isolate, Plans, Timeline}
 
-/** `Probe`'s command line, parsed without a session. */
+/** `Probe`'s command line, parsed without a session, and `plans` run
+  * over a query that fails. */
 class ProbeSpec extends AnyFunSuite {
   private val env = Map("SPARK_GRAFT_SF_DIR" -> "sf", "SPARK_GRAFT_CPUS" -> "8")
 
@@ -32,6 +35,20 @@ class ProbeSpec extends AnyFunSuite {
       Left("unknown queries: bogus"))
     assert(Probe.parse(Seq("plans", "d", "o.txt", "bogus", "kg_bgp", "nope"), env) ==
       Left("unknown queries: bogus, nope"))
+  }
+
+  test("plans: a failing query gets a FAILED section and the file is still written") {
+    // q55 reads documents.parquet, which this dir lacks; kg_triples_by_pred
+    // synthesizes its corpus from the dir name alone (sf0.001's 60 files)
+    val dir = Files.createTempDirectory("probe_sf0.001_")
+    val out = dir.resolve("plans.txt")
+    Probe.plans(TestSpark.spark, Plans(dir.toString, out.toString,
+      Seq("q55_batch_plan", "kg_triples_by_pred")))
+    val text = Files.readString(out)
+    val failed = text.indexOf("===== q55_batch_plan =====\nFAILED: ")
+    val planned = text.indexOf("===== kg_triples_by_pred =====\n")
+    assert(failed >= 0 && planned > failed, text.take(600))
+    assert(text.substring(planned).contains("Physical Plan"), text.take(600))
   }
 
   test("timeline: defaults, committed flag, malformed numbers; unknown mode") {

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.corpus.Synth
 import graft.kg.{Pipeline, Triples}
-import graft.ops.SkewJoin
+import graft.link.SkewJoin
 
 /** Skew handling under the adversarial hot-lemma distribution the corpus
   * plants by construction (Synth.SkewFraction = 25% of trigger draws forced

@@ -87,6 +87,18 @@ class StoreSpec extends AnyFunSuite {
     assert(t1 == t2)
   }
 
+  test("readManifest reads back string fields hundreds of KB long") {
+    // a real stage schema is a few KB; these fields are far longer, with
+    // an escape every few characters, so a per-character recursive
+    // match cannot pass on stack luck
+    val root = tmp()
+    val sig = "si\"g\\" * 60000
+    val schema = "{\"type\":\"struct\"}" * 20000
+    Store.writeManifest(root,
+      Store.Manifest("long", sig, 7L, Seq("r" -> 7L), 0L, schema))
+    assert(Store.readManifest(root, "long") == Some((sig, 7L, schema)))
+  }
+
   test("kill-after-stage-k: deleting later snapshots resumes from last committed") {
     val root = tmp()
     val t1 = triplesOf(root, Synth.corpus(spark, NFiles, Spf))

@@ -127,66 +127,6 @@ class StreamingSpec extends AnyFunSuite {
     assert(!out.exists(_.path.startsWith("copy/")))
   }
 
-  test("text-analysis ops (langid/quality/PII) run unchanged on a stream " +
-      "and match the batch result row-for-row") {
-    // the training-data projections are narrow Catalyst expressions, so
-    // the SAME function composes under readStream with no code changes —
-    // the property that lets one pipeline definition serve both the
-    // backfill (batch) and the live feed (streaming)
-    import graft.ops.TextAnalysis
-    val docs = Seq(
-      (1L, "The quick brown fox jumps over the lazy dog near the river bank."),
-      (2L, "contact john.doe@example.com or call 555-123-4567 today"),
-      (3L, "server 192.168.1.100 responded; el rapido zorro marron salta"),
-      (4L, ""))
-    def analyze(df: org.apache.spark.sql.DataFrame) =
-      TextAnalysis.withPiiRedaction(
-        TextAnalysis.withQuality(TextAnalysis.withLangId(df)))
-        .select("doc_id", "lang_pred", "quality_score", "n_emails",
-          "n_ips", "n_phones", "redacted")
-    val batch = analyze(docs.toDF("doc_id", "text")).collect().toSet
-
-    val mem = MemoryStream[(Long, String)](spark)
-    mem.addData(docs.take(2): _*)
-    mem.addData(docs.drop(2): _*)
-    val q = analyze(mem.toDS().toDF("doc_id", "text"))
-      .writeStream.format("memory").queryName("textops_out")
-      .outputMode(OutputMode.Append()).start()
-    q.processAllAvailable()
-    q.stop()
-    val streamed = spark.table("textops_out").collect().toSet
-    assert(streamed == batch)
-    assert(batch.size == 4)
-  }
-
-  test("stratified sampling runs unchanged on a stream and matches the " +
-      "batch sample row-for-row") {
-    // membership is pure key arithmetic (no shuffle, no state), so the
-    // SAME stratifiedSample call serves backfill and live feed — and the
-    // micro-batch boundary cannot change the decision for any row
-    import graft.ops.Sampling
-    val rows = (0L until 400L).map(i =>
-      (i, if (i % 4 == 0) "en" else if (i % 4 == 1) "de" else "fr"))
-    def sample(df: org.apache.spark.sql.DataFrame) =
-      Sampling.stratifiedSample(df, "doc_id", "lang",
-        Map("en" -> 100, "de" -> 500), defaultPermille = 900, salt = 7L)
-    val batch = sample(rows.toDF("doc_id", "lang")).collect().toSet
-    val mem = MemoryStream[(Long, String)](spark)
-    mem.addData(rows.take(150): _*)
-    mem.addData(rows.drop(150): _*) // split across micro-batches
-    val q = sample(mem.toDS().toDF("doc_id", "lang"))
-      .writeStream.format("memory").queryName("sample_out")
-      .outputMode(OutputMode.Append()).start()
-    q.processAllAvailable()
-    q.stop()
-    val streamed = spark.table("sample_out").collect().toSet
-    assert(streamed == batch)
-    // the strata rates actually bite: en ~10%, de ~50%, default ~90%
-    val byLang = batch.groupBy(_.getString(1)).view.mapValues(_.size).toMap
-    assert(byLang("en") < 25 && byLang("de") > 30 && byLang("fr") > 70,
-      s"per-stratum counts off: $byLang")
-  }
-
   test("file sink with checkpoint: AvailableNow drains and commits exactly once") {
     val dir = java.nio.file.Files.createTempDirectory("graft-stream").toString
     val mem = MemoryStream[StampedFile](spark)
