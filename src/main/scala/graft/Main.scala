@@ -16,10 +16,11 @@ import graft.model.SourceFile
   *   - `<input>`: a parquet path holding the north-rule source table
   *     (repo, path, commit, lang, content), or `synth:<nFiles>[:<spf>]`
   *     for the deterministic synthetic corpus;
-  *   - `<outRoot>`: the snapshot root — every stage commits an
-  *     Iceberg-style partitioned snapshot + manifest there
-  *     (Pipeline.runCheckpointed / kg.Store), so a rerun with the same
-  *     input resumes from the last committed stage.
+  *   - `<outRoot>`: the snapshot root — each of the three stages
+  *     (`quarantine`, `annotated`, `triples`) commits an Iceberg-style
+  *     partitioned snapshot + manifest there (Pipeline.runCheckpointed /
+  *     kg.Store), so a rerun with the same input resumes from the
+  *     committed stages.
   *
   * Unlike the driver mains (Bench/Verify/Scaling), NO master or
   * parallelism is hardcoded here: the SparkSession comes from the ambient

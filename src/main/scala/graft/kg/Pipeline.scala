@@ -23,16 +23,17 @@ import graft.text.Text
   * The front end is defined once, per file and per sentence:
   * [[fileSentences]] (sha256, natural text, sentence split, tokens) and
   * [[tagSentence]] (NER, triggers, negation cue and scope). The in-memory
-  * build ([[annotate]]), the committed build ([[runCheckpointed]], via
-  * [[extract]] and [[tagStage]]) and the streaming narrow triples all
-  * call them.
+  * build ([[annotate]], via [[tagStage]]), the committed build
+  * ([[runCheckpointed]], via [[extract]] and [[annotatedStage]]) and the
+  * streaming narrow triples all call them.
   *
   * Every annotate step (A1 heads, J4 pairs, J1 alignment, P7/J3 endpoint
   * mapping, U1 injection, J2 durations, P9 speculation) reads only one
   * sentence — the reference annotates sentence by sentence,
   * project/APIs/main.py:23-242. The pipeline therefore runs them as one
-  * pure per-sentence kernel, [[annotateSentence]], inside two narrow
-  * flatMaps over the tagged frame ([[annotateFrom]]): no join, no
+  * pure per-sentence kernel, [[annotateSentence]]: in memory inside two
+  * narrow flatMaps over the tagged frame ([[annotateFrom]]), committed in
+  * the same mapPartitions as the tagger ([[annotatedStage]]). No join, no
   * shuffle, no cache. The relational operators below (`headsNarrow`,
   * `relationCandidates`, `scoreRelations`, `filterRelations`,
   * `alignHeads`, `mapRelationEndpoints`, `injectTempRelOnlyEvents`,
@@ -117,12 +118,14 @@ object Pipeline {
     * no shuffle. */
   def tagStage(spark: SparkSession, sents: Dataset[Sentence]): Dataset[TaggedSentence] = {
     import spark.implicits._
-    // K3: length-sorted batching (joint_model.py:62 pad_collate) — groups
-    // similar-length sentences so a batched scorer pads minimally; narrow
-    // (within-partition) sort, no shuffle
-    sents.sortWithinPartitions(size(col("tokens")).desc)
-      .mapPartitions(_.map(tagSentence))
+    lengthSorted(sents).mapPartitions(_.map(tagSentence))
   }
+
+  /** K3: length-sorted batching (joint_model.py:62 pad_collate) — groups
+    * similar-length sentences so a batched scorer pads minimally; narrow
+    * (within-partition) sort, no shuffle. */
+  private def lengthSorted(sents: Dataset[Sentence]): Dataset[Sentence] =
+    sents.sortWithinPartitions(size(col("tokens")).desc)
 
   /** K3's batching SEMANTICS made driver-visible. The physical K3 op in
     * [[tagStage]] is a narrow `sortWithinPartitions` — deliberately
@@ -394,6 +397,23 @@ object Pipeline {
   case class SentenceAnnotation(events: Seq[EnrichedEvent],
       relations: Seq[RelationRow])
 
+  /** One row of the committed `annotated` stage: a [[TaggedSentence]] with
+    * its [[annotateSentence]] output nested in it. */
+  case class AnnotatedSentence(
+      repo: String,
+      path: String,
+      contentSha: String,
+      lineNum: Int,
+      senNum: Int,
+      sentKey: String,
+      tokens: Seq[String],
+      ner: Seq[NerSpan],
+      triggers: Seq[Trigger],
+      negationCue: Seq[Int],
+      negationScope: Seq[Int],
+      events: Seq[EnrichedEvent],
+      relations: Seq[RelationRow])
+
   /** The annotate layer for one sentence, as pure code: exactly the rows
     * the relational composition `enrich(injectTempRelOnlyEvents(...))` and
     * `mapRelationEndpoints(filterRelations(scoreRelations(...)))` produces
@@ -490,8 +510,6 @@ object Pipeline {
     // round-trip + columnar cache write of the whole corpus (measured:
     // per-sentence tagging compute is ~0.15 ms while the stage cost
     // ~1.3 ms/row — the difference was Dataset encode/cache machinery).
-    // The COMMITTED path (runCheckpointed/extract) still materializes the
-    // sentence stage — there the stored snapshot is the point.
     // persist (columnar cache), not localCheckpoint: tried both — the
     // checkpoint skips the columnar encode but loses column pruning, and
     // the tagged frame's downstream consumers (the two annotate flatMaps,
@@ -599,33 +617,61 @@ object Pipeline {
     Annotated(tagged, events, relations, caches = Seq(base.toDF()))
   }
 
-  /** Checkpoint-resumable end-to-end run (north rule): every stage commits
-    * an Iceberg-style snapshot + manifest via Store; a rerun resumes from
-    * the last committed stage — compute closures of committed stages are
-    * never invoked. Returns the triple DataFrame (committed). */
+  /** The narrow layers in one pass: K3's length sort, then per sentence
+    * [[tagSentence]] and [[annotateSentence]], one [[AnnotatedSentence]]
+    * row each. Narrow — no shuffle. */
+  def annotatedStage(spark: SparkSession,
+      sents: Dataset[Sentence]): Dataset[AnnotatedSentence] = {
+    import spark.implicits._
+    lengthSorted(sents).mapPartitions(_.map { s =>
+      val t = tagSentence(s)
+      val a = annotateSentence(t)
+      AnnotatedSentence(t.repo, t.path, t.contentSha, t.lineNum, t.senNum,
+        t.sentKey, t.tokens, t.ner, t.triggers, t.negationCue,
+        t.negationScope, a.events, a.relations)
+    })
+  }
+
+  /** An [[annotatedStage]] frame read as the three frames emit consumes:
+    * the tagged sentences without the nested arrays, and the events and
+    * relations exploded out of them. */
+  def annotatedFrames(spark: SparkSession, annotated: DataFrame): Annotated = {
+    import spark.implicits._
+    Annotated(annotated.drop("events", "relations").as[TaggedSentence],
+      annotated.select(explode(col("events")).as("e")).select(col("e.*")),
+      annotated.select(explode(col("relations")).as("r")).select(col("r.*")))
+  }
+
+  /** Checkpoint-resumable end-to-end run (north rule). Three stages commit
+    * an Iceberg-style snapshot + manifest via Store: `quarantine` (the
+    * extraction failures), `annotated` ([[annotatedStage]]: tagging and
+    * annotation in one pass, its manifest recording the nested event count
+    * under `events`) and `triples` (emit over [[annotatedFrames]] of the
+    * committed `annotated` snapshot). A rerun resumes from the committed
+    * stages — their compute closures are never invoked. Returns the triple
+    * DataFrame (committed). */
   def runCheckpointed(spark: SparkSession, files: Dataset[SourceFile],
       root: String, inputSig: String): DataFrame = {
     import spark.implicits._
-    // the extraction cache feeds both the quarantine and the sentences
+    // one extraction cache feeds both the quarantine and the annotated
     // commits; it is released once both are on disk. runStage skips the
-    // body on resume, so nothing was cached then.
+    // body of a committed stage, so a resume caches nothing.
     var extracted: Option[Dataset[SentOrErr]] = None
-    val sents = Store.runStage(spark, root, "sentences", inputSig) {
+    def extraction: Dataset[SentOrErr] = extracted.getOrElse {
       val e = extract(spark, files).persist()
       extracted = Some(e)
-      // quarantine commits alongside (same pass over the input)
-      Store.runStage(spark, root, "quarantine", inputSig) {
-        e.flatMap(_.err).toDF()
-      }
-      e.flatMap(_.sent).toDF()
-    }.as[Sentence]
+      e
+    }
+    Store.runStage(spark, root, "quarantine", inputSig) {
+      extraction.flatMap(_.err).toDF()
+    }
+    // the event count rides on the lineage aggregate; `events.trigStart`
+    // reads one int leaf of the nested events
+    val annotated = Store.runStageCounting(spark, root, "annotated", inputSig,
+        Seq("events" -> size(col("events.trigStart")))) {
+      annotatedStage(spark, extraction.flatMap(_.sent)).toDF()
+    }
     extracted.foreach(_.unpersist())
-    val tagged = Store.runStage(spark, root, "tagged", inputSig) {
-      tagStage(spark, sents).toDF()
-    }.as[TaggedSentence]
-    val ann = annotateFrom(spark, tagged)
-    val events = Store.runStage(spark, root, "events", inputSig)(ann.events)
-    val rels = Store.runStage(spark, root, "relations", inputSig)(ann.relations)
     // capture emit's intermediate caches (events/formMap/blockCanon) so
     // they release once the stage snapshot is committed — the lazy
     // Triples.emit otherwise leaves them persisted for the session's
@@ -634,8 +680,8 @@ object Pipeline {
     var emitCaches: Seq[DataFrame] = Nil
     val out = Store.runStage(spark, root, "triples", inputSig) {
       val (frame, caches) =
-        Triples.emitWithCaches(spark, Annotated(tagged, events, rels),
-          committedEvents = Store.readManifest(root, "events").map(_._2))
+        Triples.emitWithCaches(spark, annotatedFrames(spark, annotated),
+          committedEvents = Store.readCount(root, "annotated", "events"))
       emitCaches = caches
       frame
     }

@@ -2,7 +2,7 @@ package graft.kg
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Iceberg-style stage store: partitioned parquet + snapshot manifests with
@@ -25,11 +25,13 @@ object Store {
 
   /** `metrics`: (partition, parquetFiles, bytes) per first-level output
     * partition — the snapshot-size side of the per-partition lineage the
-    * north rule asks for; `wallSec` is the stage's compute+write time. */
+    * north rule asks for; `wallSec` is the stage's compute+write time;
+    * `counts`: named totals over the snapshot, each written as its own
+    * top-level key (see [[runStageCounting]]). */
   case class Manifest(stage: String, inputSig: String, rows: Long,
       lineage: Seq[(String, Long)], committedAtNanos: Long,
       schemaJson: String, metrics: Seq[(String, Long, Long)] = Seq.empty,
-      wallSec: Double = 0.0)
+      wallSec: Double = 0.0, counts: Seq[(String, Long)] = Seq.empty)
 
   private[graft] def q(s: String): String =
     "\"" + s.flatMap {
@@ -58,6 +60,7 @@ object Store {
         s"${q("rows")}:${m.rows},${q("lineage")}:$lineageJson," +
         s"${q("metrics")}:$metricsJson," +
         s"${q("wall_sec")}:${m.wallSec}," +
+        m.counts.map { case (k, n) => s"${q(k)}:$n," }.mkString +
         s"${q("committedAtNanos")}:${m.committedAtNanos}," +
         s"${q("schema")}:${q(m.schemaJson)}}"
     val tmp = dir.resolve(s"${m.stage}.json.tmp")
@@ -66,13 +69,26 @@ object Store {
       StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
   }
 
+  private def manifestText(root: String, stage: String): Option[String] =
+    Some(manifestPath(root, stage)).filter(Files.exists(_)).map(Files.readString)
+
+  /** The first integer field `key` of a manifest text. String fields are
+    * escaped by `q`, so their content never matches; the nested lineage
+    * and metrics objects use only `partition`, `rows`, `files` and
+    * `bytes`, and the top-level `rows` is written before them. */
+  private def longField(s: String, key: String): Option[Long] =
+    (java.util.regex.Pattern.quote(q(key) + ":") + "(\\d+)").r
+      .findFirstMatchIn(s).map(_.group(1).toLong)
+
+  /** A named total the stage's manifest records (see [[runStageCounting]]),
+    * or None when the stage is uncommitted or records no such count. */
+  def readCount(root: String, stage: String, key: String): Option[Long] =
+    manifestText(root, stage).flatMap(longField(_, key))
+
   /** Minimal field extraction (manifests are engine-written, flat JSON).
     * Returns (inputSig, rows, schemaJson). */
-  def readManifest(root: String, stage: String): Option[(String, Long, String)] = {
-    val p = manifestPath(root, stage)
-    if (!Files.exists(p)) None
-    else {
-      val s = Files.readString(p)
+  def readManifest(root: String, stage: String): Option[(String, Long, String)] =
+    manifestText(root, stage).flatMap { s =>
       // string fields are written escaped by `q`: scan to the first
       // unescaped quote. Not a regex: an alternation loop recurses once
       // per character and overflows the thread stack on a schema of a
@@ -86,10 +102,9 @@ object Store {
           if (i < s.length) Some(unescape(s.substring(from, i))) else None
         }
       }
-      val rows = "\"rows\":(\\d+)".r.findFirstMatchIn(s).map(_.group(1).toLong)
-      for (a <- str("inputSig"); b <- rows; c <- str("schema")) yield (a, b, c)
+      for (a <- str("inputSig"); b <- longField(s, "rows"); c <- str("schema"))
+        yield (a, b, c)
     }
-  }
 
   private def unescape(s: String): String = {
     val sb = new StringBuilder
@@ -116,7 +131,16 @@ object Store {
     * invoked; otherwise the stage computes, writes partitioned parquet,
     * and commits its manifest atomically. */
   def runStage(spark: SparkSession, root: String, stage: String,
-      inputSig: String)(compute: => DataFrame): DataFrame = {
+      inputSig: String)(compute: => DataFrame): DataFrame =
+    runStageCounting(spark, root, stage, inputSig, Nil)(compute)
+
+  /** [[runStage]] whose manifest also records, under each name of
+    * `counts`, the sum of its column over the committed snapshot. The sums
+    * ride on the lineage aggregate that re-reads the snapshot anyway, so
+    * they cost no extra job; [[readCount]] reads them back. */
+  private[kg] def runStageCounting(spark: SparkSession, root: String, stage: String,
+      inputSig: String, counts: Seq[(String, Column)])(
+      compute: => DataFrame): DataFrame = {
     val dataPath = s"$root/$stage"
     readManifest(root, stage) match {
       case Some((sig, _, schemaJson)) if sig == inputSig =>
@@ -141,16 +165,21 @@ object Store {
         val writer = clustered.write.mode("overwrite")
         (if (hasRepo) writer.partitionBy("repo") else writer).parquet(dataPath)
         val committed = spark.read.schema(df.schema).parquet(dataPath)
-        val lineage: Seq[(String, Long)] =
-          if (hasRepo)
-            committed.groupBy("repo").count()
-              .collect().map(r => (r.getString(0), r.getLong(1))).toSeq.sortBy(_._1)
-          else Seq(("*", committed.count()))
+        val aggs = count(lit(1)) +:
+          counts.map { case (_, c) => coalesce(sum(c), lit(0L)) }
+        val grouped =
+          if (hasRepo) committed.groupBy("repo") else committed.groupBy()
+        val off = if (hasRepo) 1 else 0
+        val perPartition = grouped.agg(aggs.head, aggs.tail: _*).collect()
+        val lineage: Seq[(String, Long)] = perPartition.map { r =>
+          (if (hasRepo) r.getString(0) else "*", r.getLong(off)) }.toSeq.sortBy(_._1)
+        val totals = counts.map(_._1).zipWithIndex.map { case (name, i) =>
+          name -> perPartition.map(_.getLong(off + 1 + i)).sum }
         val rows = lineage.map(_._2).sum
         val wallSec = (System.nanoTime() - t0) / 1e9
         writeManifest(root, Manifest(stage, inputSig, rows, lineage,
           System.nanoTime(), df.schema.json, partitionMetrics(dataPath),
-          wallSec))
+          wallSec, totals))
         committed
     }
   }

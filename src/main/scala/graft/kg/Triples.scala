@@ -63,9 +63,9 @@ object Triples {
   def fromFiles(spark: SparkSession, files: Dataset[SourceFile]): DataFrame =
     materialize(spark, Pipeline.annotate(spark, files), distinct = true)
 
-  /** `committedEvents`: the row count of `ann.events` when they are a
-    * committed snapshot — re-reading the snapshot is cheaper than caching
-    * it, and the known count resolves the broadcast gates. */
+  /** `committedEvents`: the row count of `ann.events` when they are read
+    * from a committed snapshot — re-reading the snapshot is cheaper than
+    * caching it, and the known count resolves the broadcast gates. */
   private[kg] def emitWithCaches(spark: SparkSession,
       ann: Pipeline.Annotated, distinct: Boolean = false,
       committedEvents: Option[Long] = None): (DataFrame, Seq[DataFrame]) = {

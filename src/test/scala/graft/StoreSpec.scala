@@ -1,8 +1,11 @@
 package graft
 
-import java.nio.file.{Files, Path}
-import scala.util.Try
+import java.nio.file.Files
+import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.functions.{col, explode}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.corpus.Synth
@@ -24,23 +27,35 @@ class StoreSpec extends AnyFunSuite {
     p.toString
   }
 
-  def triplesOf(root: String, files: org.apache.spark.sql.Dataset[SourceFile]): Set[T6] =
+  def triplesOf(root: String, files: Dataset[SourceFile]): Set[T6] =
     Pipeline.runCheckpointed(spark, files, root, Sig).as[T6].collect().toSet
+
+  /** Every triple row, duplicates kept, in one fixed order. */
+  def rowsOf(triples: DataFrame): Seq[T6] =
+    triples.as[T6].collect().toSeq
+      .sortBy(t => (t.subj, t.pred, t.obj, t.repo, t.path, t.contentSha))
+
+  /** The input with every row failing when read: a run over it must not
+    * recompute any stage that reads the input. */
+  def poisoned(files: Dataset[SourceFile]): Dataset[SourceFile] =
+    files.map { f => require(false, "stage recomputed despite committed manifest"); f }
+
+  val Stages = Seq("quarantine", "annotated", "triples")
 
   test("full run commits a manifest per stage with per-partition lineage") {
     val root = tmp()
     val t = triplesOf(root, Synth.corpus(spark, NFiles, Spf))
     assert(t.nonEmpty)
-    for (stage <- Seq("sentences", "quarantine", "tagged", "events", "relations", "triples"))
+    for (stage <- Stages)
       assert(Store.readManifest(root, stage).isDefined, s"manifest for $stage")
-    val manifest = Files.readString(Store.manifestPath(root, "sentences"))
+    val manifest = Files.readString(Store.manifestPath(root, "annotated"))
     assert(manifest.contains("\"lineage\""))
     assert(manifest.contains("\"partition\""))
     // per-partition metrics: non-zero bytes/files per repo=* partition,
     // and a stage wall time
     assert(manifest.contains("\"metrics\"") && manifest.contains("\"bytes\""))
     assert(manifest.contains("\"wall_sec\""))
-    val metrics = Store.partitionMetrics(s"$root/sentences")
+    val metrics = Store.partitionMetrics(s"$root/annotated")
     assert(metrics.nonEmpty && metrics.forall { case (p, f, b) =>
       p.startsWith("repo=") && f > 0 && b > 0 })
   }
@@ -65,10 +80,8 @@ class StoreSpec extends AnyFunSuite {
   test("rerun resumes every committed stage — compute closures never invoked") {
     val root = tmp()
     val t1 = triplesOf(root, Synth.corpus(spark, NFiles, Spf))
-    // poisoned input: any recompute of the sentences stage would throw
-    val poison = Synth.corpus(spark, NFiles, Spf)
-      .map { f => require(false, "stage recomputed despite committed manifest"); f }
-    val t2 = triplesOf(root, poison)
+    // poisoned input: any recompute of a stage reading it would throw
+    val t2 = triplesOf(root, poisoned(Synth.corpus(spark, NFiles, Spf)))
     assert(t1 == t2)
   }
 
@@ -79,10 +92,9 @@ class StoreSpec extends AnyFunSuite {
     val sig = "in\\put\"x"
     val t1 = Pipeline.runCheckpointed(spark, Synth.corpus(spark, NFiles, Spf),
       root, sig).as[T6].collect().toSet
-    assert(Store.readManifest(root, "sentences").map(_._1).contains(sig))
-    val poison = Synth.corpus(spark, NFiles, Spf)
-      .map { f => require(false, "stage recomputed despite committed manifest"); f }
-    val t2 = Pipeline.runCheckpointed(spark, poison, root, sig)
+    assert(Store.readManifest(root, "annotated").map(_._1).contains(sig))
+    val t2 = Pipeline.runCheckpointed(spark,
+      poisoned(Synth.corpus(spark, NFiles, Spf)), root, sig)
       .as[T6].collect().toSet
     assert(t1 == t2)
   }
@@ -101,16 +113,78 @@ class StoreSpec extends AnyFunSuite {
 
   test("kill-after-stage-k: deleting later snapshots resumes from last committed") {
     val root = tmp()
-    val t1 = triplesOf(root, Synth.corpus(spark, NFiles, Spf))
-    // simulate a crash after 'tagged': later stages uncommitted
-    for (stage <- Seq("events", "relations", "triples")) {
-      Files.delete(Store.manifestPath(root, stage))
-      // data dir may remain (a torn write) — resume must overwrite it
-    }
-    val poison = Synth.corpus(spark, NFiles, Spf)
-      .map { f => require(false, "resumed run must not rescan the input"); f }
-    val t2 = triplesOf(root, poison)
+    val t1 = rowsOf(Pipeline.runCheckpointed(spark,
+      Synth.corpus(spark, NFiles, Spf), root, Sig))
+    // simulate a crash after 'annotated': the triples data dir remains (a
+    // torn write) — resume must overwrite it
+    Files.delete(Store.manifestPath(root, "triples"))
+    val t2 = rowsOf(Pipeline.runCheckpointed(spark,
+      poisoned(Synth.corpus(spark, NFiles, Spf)), root, Sig))
     assert(t1 == t2, "resumed output must be identical")
+  }
+
+  test("kill after quarantine: annotated and triples recompute, the " +
+      "quarantine snapshot is kept") {
+    val bad = Seq(SourceFile("badrepo", "bad/path.scala", "c0ffee", "scala", null)).toDS()
+    val files = Synth.corpus(spark, NFiles, Spf).unionByName(bad)
+    val root = tmp()
+    val t1 = rowsOf(Pipeline.runCheckpointed(spark, files, root, Sig))
+    val quarantine = Files.readString(Store.manifestPath(root, "quarantine"))
+    for (stage <- Seq("annotated", "triples"))
+      Files.delete(Store.manifestPath(root, stage))
+    val t2 = rowsOf(Pipeline.runCheckpointed(spark, files, root, Sig))
+    assert(t1 == t2, "resumed output must be identical")
+    // a recompute rewrites the manifest (commit time, wall time)
+    assert(Files.readString(Store.manifestPath(root, "quarantine")) == quarantine)
+  }
+
+  test("the annotated manifest records the exact event count, and a " +
+      "resume from it gives the same triples") {
+    val synth = Synth.corpus(spark, NFiles, Spf)
+    val spf = Spf // a local, so the closure does not capture the suite
+    val twoCommits = synth.unionByName(synth.map(f => f.copy(commit = "c2",
+      content = Synth.contentFor(f.repo, f.path + ".v2", f.lang, spf))))
+    val inputs = Seq("synth" -> synth,
+      "hostile" -> AuditSpec.hostileFiles.toDS(), "twoCommits" -> twoCommits)
+    for ((name, files) <- inputs) {
+      val root = tmp()
+      val t1 = rowsOf(Pipeline.runCheckpointed(spark, files, root, name))
+      val events = spark.read.parquet(s"$root/annotated")
+        .select(explode(col("events"))).count()
+      assert(Store.readCount(root, "annotated", "events") == Some(events), name)
+      Files.delete(Store.manifestPath(root, "triples"))
+      val t2 = rowsOf(Pipeline.runCheckpointed(spark, poisoned(files), root, name))
+      assert(t1 == t2, s"$name: resumed output must be identical")
+    }
+  }
+
+  test("a cold committed build runs at most 20 Spark jobs") {
+    // each stage commit runs the rebalance and write jobs and the two of
+    // the lineage aggregate; committing sentences, tagged, events and
+    // relations apart instead of one annotated stage ran 31 jobs here
+    val sc = spark.sparkContext
+    val groups = new LinkedBlockingQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    }
+    // the bus delivers events in order, so every job of the build arrives
+    // between the two marker jobs
+    def marker(id: String): Unit = {
+      sc.setJobGroup(id, id)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+    }
+    sc.addSparkListener(listener)
+    try {
+      marker("build-begin")
+      Pipeline.runCheckpointed(spark, Synth.corpus(spark, NFiles, Spf), tmp(), Sig)
+      marker("build-end")
+      val jobs = Iterator.continually(Option(groups.poll(60, TimeUnit.SECONDS))
+          .getOrElse(fail("no job event within 60 s")))
+        .dropWhile(_ != "build-begin").drop(1).takeWhile(_ != "build-end").size
+      assert(jobs <= 20, s"$jobs jobs")
+    } finally sc.removeSparkListener(listener)
   }
 
   test("input-signature mismatch forces recompute") {
@@ -141,8 +215,7 @@ class StoreSpec extends AnyFunSuite {
       "and a rerun resumes from the manifests") {
     val root = tmp()
     val (n1, _) = Main.run(spark, s"synth:$NFiles:$Spf", root)
-    for (stage <- Seq("sentences", "quarantine", "tagged", "events",
-        "relations", "triples"))
+    for (stage <- Stages)
       assert(Store.readManifest(root, stage).isDefined, s"manifest $stage")
     assert(n1 > 0)
     // rerun: resumed output identical; manifests carry the metrics fields
