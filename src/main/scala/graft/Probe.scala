@@ -10,15 +10,12 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
-import graft.corpus.Synth
-import graft.kg.{Pipeline, Triples}
-
 /** Profiling probes over the engine, one mode per question:
   *
   * {{{
   * runMain graft.Probe plans    [sfDir] [outFile] [query ...]
   * runMain graft.Probe isolate  [reps] [query ...]
-  * runMain graft.Probe timeline [cores] [nFiles] [committed]
+  * runMain graft.Probe timeline [cores] [nFiles]
   * }}}
   *
   *   - `plans`: `explain("formatted")` of SparkEntry queries into one
@@ -30,11 +27,11 @@ import graft.kg.{Pipeline, Triples}
   *     every query), one `XBENCH` line per run; sf dir and cores come from
   *     `SPARK_GRAFT_SF_DIR` and `SPARK_GRAFT_CPUS` (default 32), as for
   *     `Bench`;
-  *   - `timeline`: one KG build over `nFiles` Synth files (default 24000)
-  *     at `local[cores]` (default 32), with a `JOB` line per Spark job
-  *     (wall, driver gap since the previous job, callsite) and the top
-  *     `STAGE`s by task time; `committed` builds the materialized triple
-  *     set and re-aggregates it instead of the lazy `emit`.
+  *   - `timeline`: one [[Main.run]] build (the committed
+  *     `Pipeline.runCheckpointed` path) over `nFiles` Synth files (default
+  *     24000) at `local[cores]` (default 32), into a temp root removed
+  *     afterwards, with a `JOB` line per Spark job (wall, driver gap since
+  *     the previous job, callsite) and the top `STAGE`s by task time.
   */
 object Probe {
 
@@ -43,12 +40,11 @@ object Probe {
       queries: Seq[String]) extends Mode
   final case class Isolate(sfDir: String, cores: Int, reps: Int,
       queries: Seq[String]) extends Mode
-  final case class Timeline(cores: Int, nFiles: Int,
-      committed: Boolean) extends Mode
+  final case class Timeline(cores: Int, nFiles: Int) extends Mode
 
   val Usage: String =
     "usage: graft.Probe plans [sfDir] [outFile] [query ...] | " +
-      "isolate [reps] [query ...] | timeline [cores] [nFiles] [committed]"
+      "isolate [reps] [query ...] | timeline [cores] [nFiles]"
 
   /** The queries `plans` writes when none are named. */
   val AuditedQueries: Seq[String] = Seq("q30_golden_spans",
@@ -94,9 +90,9 @@ object Probe {
         for (d <- sfDir(None); c <- count(env.get("SPARK_GRAFT_CPUS"), 32, "SPARK_GRAFT_CPUS");
              qs <- known(queries))
           yield Isolate(d, c, reps, qs)
-      case "timeline" +: rest =>
+      case "timeline" +: rest if rest.length <= 2 =>
         for (c <- count(rest.lift(0), 32, "cores"); n <- count(rest.lift(1), 24000, "nFiles"))
-          yield Timeline(c, n, rest.lift(2).contains("committed"))
+          yield Timeline(c, n)
       case _ => Left(Usage)
     }
   }
@@ -180,26 +176,10 @@ object Probe {
           println(f"JOB ${j.jobId}%4d wall=${(now - t0) / 1e9}%7.2f gap=$gap%6.2f  $site")
         }
     })
-    val files = Synth.corpus(spark, t.nFiles, 8)
-    val t0 = System.nanoTime()
-    val n =
-      if (t.committed) {
-        // the materialized triple set, then repeated aggregates against it
-        val distinct = Triples.fromFiles(spark, files)
-        val c = distinct.count()
-        println(f"PROBE committed+dedup wall=${(System.nanoTime() - t0) / 1e9}%.1f")
-        for (i <- 1 to 3) {
-          val tq = System.nanoTime()
-          distinct.groupBy("pred").count().count()
-          println(f"PROBE agg$i wall=${(System.nanoTime() - tq) / 1e9}%.2f")
-        }
-        val plan = distinct.groupBy("pred").count()
-          .queryExecution.executedPlan.toString
-        println("PROBE planHasCache=" + plan.contains("InMemory") +
-          " planHead=" + plan.linesIterator.take(12).mkString(" / ").take(600))
-        c
-      } else Triples.emit(spark, Pipeline.annotate(spark, files)).count()
-    val wall = (System.nanoTime() - t0) / 1e9
+    val root = Files.createTempDirectory("graft_timeline")
+    val (n, wall) =
+      try Main.run(spark, s"synth:${t.nFiles}:8", root.toString)
+      finally org.apache.commons.io.FileUtils.deleteDirectory(root.toFile)
     println(f"PROBE wall=$wall%.1f totalTaskSec=${stageTime.values.sum / 1000.0}%.1f triples=$n")
     stageTime.toSeq.sortBy(-_._2).take(25).foreach { case (id, ms) =>
       println(f"STAGE $id ${ms / 1000.0}%8.1f s  ${stageName.getOrElse(id, "?")}")

@@ -2,13 +2,13 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import graft.corpus.Synth
-import graft.kg.{Pipeline, Triples}
-
 /** Two-parallelism scaling evidence for the north rule: the SAME KG job on
-  * the SAME deterministic input at local[N] and local[4N] (the sandbox
-  * proxy for N vs 4N executors, per the driver instruction), reporting
-  * throughput at both and efficiency = thr(4N) / (4 × thr(N)).
+  * the SAME deterministic input at local[N] and local[4N] (a single-host
+  * proxy for N vs 4N executors), reporting throughput at both and
+  * efficiency = thr(4N) / (4 × thr(N)). The job is the build `graft.Main`
+  * runs ([[Main.run]]: the committed `Pipeline.runCheckpointed` path),
+  * into a fresh snapshot root per run that is deleted afterwards, so no
+  * run resumes another's committed stages.
   *
   * Round-2 protocol (replaces round 1's single-sample argument):
   *   - REPEATED, INTERLEAVED runs (low, high, low, high, ...) so shared-
@@ -72,12 +72,14 @@ object Scaling {
     if (pinned) pin(s"0-${cores - 1}")
     val spark = LocalSession(cores, shufflePartitions = cores * 2)
     try {
-      val files = Synth.corpus(spark, nFiles, spf)
+      def build(n: Long, s: Int): (Long, Double) = {
+        val root = Files.createTempDirectory("graft_scaling")
+        try Main.run(spark, s"synth:$n:$s", root.toString)
+        finally org.apache.commons.io.FileUtils.deleteDirectory(root.toFile)
+      }
       // warm-up: JIT + codegen caches, tiny slice (excluded from timing)
-      Triples.emit(spark, Pipeline.annotate(spark, Synth.corpus(spark, 8, 2))).count()
-      val t0 = System.nanoTime()
-      val nTriples = Triples.emit(spark, Pipeline.annotate(spark, files)).count()
-      val sec = (System.nanoTime() - t0) / 1e9
+      build(8, 2)
+      val (nTriples, sec) = build(nFiles, spf)
       Run(cores, sec, nTriples)
     } finally spark.stop()
   }
@@ -133,7 +135,7 @@ object Scaling {
       s"""
          |## Measured scaling (pinned repeat-median + warm-up, graft.Scaling, ${java.time.LocalDate.now()})
          |
-         |Same job (KG pipeline → triple count), same deterministic input
+         |Same job (graft.Main's committed build → triple count), same deterministic input
          |($nFiles files × $spf sentences, ${lows.head.triples} triples), one fresh
          |SparkSession per run, JVM `taskset`-pinned to exactly N CPUs for a
          |local[N] run, one discarded warm-up pair (JIT), then arms

@@ -721,44 +721,6 @@ object SparkEntry {
         .dropDuplicates()
         .orderBy("subj", "pred", "obj")
     }),
-    "q45_streaming_triples" -> ((s, dir) => {
-      // §2.9 (streaming) made driver-checkable: the REAL Structured
-      // Streaming path — readStream over a parquet directory →
-      // StreamingKg.startFileSink (narrow per-sentence triple extraction,
-      // exactly-once parquet sink + checkpointLocation, AvailableNow
-      // trigger) — over the sf0.001 synthetic corpus, then the sink read
-      // back. The emitted set is the streaming-expressible predicate
-      // subset (hasType / hasDuration / speculated / hasEntity — the
-      // narrow, shuffle-free stages; arg canonicalization and
-      // cross-sentence linking are the batch compactor's lambda half),
-      // hash-checked against the same independently derived gold TSV as
-      // the batch pipeline: batch and stream must agree with GOLD, not
-      // merely with each other.
-      import s.implicits._
-      import graft.streaming.StreamingKg
-      val (nFiles, spf) = (60L, 6)
-      val tmp = java.nio.file.Files.createTempDirectory("graft_stream_q45")
-      val inDir = tmp.resolve("in").toString
-      val outDir = tmp.resolve("out").toString
-      val ckDir = tmp.resolve("ck").toString
-      val ts = java.sql.Timestamp.valueOf("2026-01-01 00:00:00")
-      Synth.corpus(s, nFiles, spf)
-        .map(f => StreamingKg.StampedFile(ts, f.repo, f.path, f.commit,
-          f.lang, f.content))
-        .write.mode("overwrite").parquet(inDir)
-      val schema =
-        org.apache.spark.sql.Encoders.product[StreamingKg.StampedFile].schema
-      val streamIn = s.readStream.schema(schema).parquet(inDir)
-        .as[StreamingKg.StampedFile]
-      val q = StreamingKg.startFileSink(s, streamIn, outDir, ckDir)
-      q.awaitTermination()
-      s.read.parquet(outDir)
-        .filter(col("pred").isin("hasType", "hasDuration", "speculated",
-          "hasEntity"))
-        .select("subj", "pred", "obj")
-        .dropDuplicates()
-        .orderBy("subj", "pred", "obj")
-    }),
     "q47_timeline_fit" -> ((s, dir) => {
       // A8 with the REFERENCE's objective (timelinemodule.py:103-216):
       // per-doc Adam fit of (start, duration) on the binomial-CE +
@@ -1069,74 +1031,6 @@ object SparkEntry {
         triplesFor(s, dir).select("subj", "pred", "obj")
           .unionByName(planted))
         .orderBy("violation", "subj", "pred", "obj")
-    }),
-
-    "q56_stream_window" -> ((s, dir) => {
-      // §2.9 watermark semantics made driver-checkable END-TO-END: a
-      // 3-micro-batch MemoryStream replay — (1) the full golden-synth
-      // corpus, each file stamped minute (idx % 37) so triples spread
-      // over eight 5-minute windows; (2) LATE rows (ts <= 9 min, windows
-      // long past the 10-min watermark) whose content is swapped with a
-      // neighbor file so ACCEPTING them would change counts — the
-      // watermark must drop them; (3) a sentinel 6 h ahead that pushes
-      // the watermark past every real window so append mode finalizes
-      // them all (the sentinel's own window stays open and never emits).
-      // The oracle re-derives the distinct windowed counts from the gold
-      // TSV with the same idx-derived stamping — so a bug in late-drop,
-      // dedup, window assignment, or finalization fails the hash.
-      import s.implicits._
-      import graft.streaming.StreamingKg
-      import graft.streaming.StreamingKg.StampedFile
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      import org.apache.spark.sql.streaming.OutputMode
-      val base = java.sql.Timestamp.valueOf("2026-01-01 00:00:00").getTime
-      val idxRe = "file(\\d+)".r
-      def idxOf(path: String): Long =
-        idxRe.findFirstMatchIn(path).map(_.group(1).toLong).getOrElse(0L)
-      def stamp(f: graft.model.SourceFile) = StampedFile(
-        new java.sql.Timestamp(base + (idxOf(f.path) % 37) * 60000L),
-        f.repo, f.path, f.commit, f.lang, f.content)
-      // golden-fixed corpus (like q45): 60 files — driver-side replay is
-      // the test-harness shape, not the production path (startFileSink)
-      val files = Synth.corpus(s, 60L, 6).collect()
-      val byIdx = files.map(f => idxOf(f.path) -> f).toMap
-      val batch1 = files.toSeq.map(stamp)
-      val late = files.toSeq.filter(f => idxOf(f.path) % 37 <= 9).map { f =>
-        val donor = byIdx((idxOf(f.path) + 1) % 60)
-        stamp(f).copy(lang = donor.lang, content = donor.content)
-      }
-      val sentinel = Seq(stamp(files.head).copy(
-        ts = new java.sql.Timestamp(base + 6L * 3600 * 1000),
-        path = "src/sentinel/file999999.md"))
-      // The stream runs in its own session, whose SQL conf is the caller's
-      // except for the shuffle-partition count, so nothing planned on the
-      // caller's session meanwhile sees that count. It sizes the state
-      // store to STATE VOLUME, not to the core count: two chained stateful
-      // operators over three micro-batches commit a checkpoint delta per
-      // state partition per operator per batch — at one partition per core
-      // that is 6 × cores state-store commits to count a few thousand
-      // keys, nearly all fixed I/O latency. Partition count never changes
-      // the counts (state is key-hashed).
-      val ss = s.newSession()
-      s.conf.getAll.foreach { case (k, v) => if (ss.conf.isModifiable(k)) ss.conf.set(k, v) }
-      ss.conf.set("spark.sql.shuffle.partitions", 8L)
-      val mem = MemoryStream[StampedFile](ss)
-      val counts = StreamingKg.windowedDistinctTripleCounts(
-        StreamingKg.narrowTriples(ss, mem.toDS()),
-        Seq("hasType", "hasDuration", "speculated", "hasEntity"))
-      val q = counts.writeStream.format("memory").queryName("q56sink")
-        .outputMode(OutputMode.Append()).start()
-      try {
-        mem.addData(batch1); q.processAllAvailable()
-        mem.addData(late); q.processAllAvailable()
-        mem.addData(sentinel); q.processAllAvailable()
-      } finally q.stop()
-      ss.table("q56sink")
-        .select(
-          date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("window_start"),
-          date_format(col("window.end"), "yyyy-MM-dd HH:mm:ss").as("window_end"),
-          col("pred"), col("n"))
-        .orderBy("window_start", "pred")
     }),
 
     "kg_temporal_closure" -> ((s, dir) => {
@@ -2074,7 +1968,7 @@ object SparkEntry {
         |JOIN tok t ON t.src = l.src AND t.ri = l.ri
         |ORDER BY sent_key, trig_start""".stripMargin,
 
-    // q44/q45 run at a FIXED corpus size (60 files × 6 sentences — the
+    // q44 runs at a FIXED corpus size (60 files × 6 sentences — the
     // sf0.001 shape) regardless of the scale directory, so the oracle
     // pins the n60_s6 gold export instead of recovering the size from
     // the lineitem row count the way the kg_* oracles do. graft.Verify
@@ -2084,17 +1978,6 @@ object SparkEntry {
         "delim='\\t', header=true, all_varchar=true, filename=true) " +
         "WHERE filename LIKE '%/n60_s6/%') " +
         "SELECT DISTINCT subj, pred, obj FROM gold ORDER BY subj, pred, obj"),
-    // the streaming-expressible predicate subset: the narrow per-sentence
-    // stages (type, duration, speculation, entities); canonicalized args,
-    // sameAs linking and TempRel alignment are cross-sentence batch
-    // compaction by design (StreamingKg scaladoc)
-    "q45_streaming_triples" ->
-      ("WITH gold AS (SELECT * FROM read_csv('/tmp/graft_gold/*/gold_triples.tsv', " +
-        "delim='\\t', header=true, all_varchar=true, filename=true) " +
-        "WHERE filename LIKE '%/n60_s6/%') " +
-        "SELECT DISTINCT subj, pred, obj FROM gold " +
-        "WHERE pred IN ('hasType', 'hasDuration', 'speculated', 'hasEntity') " +
-        "ORDER BY subj, pred, obj"),
 
     // kg_bgp: the identical conjunction as SQL self-joins over the gold
     // triple set (bag semantics over a set store on both sides — join
@@ -2362,26 +2245,6 @@ object SparkEntry {
           |    ('ORG','WEA','VEH','GPE','LOC','FAC','PER'))
           |SELECT violation, subj, pred, obj FROM v
           |ORDER BY violation, subj, pred, obj""".stripMargin),
-
-    // q56: the windowed counts re-derived from gold with the same
-    // idx-derived stamping — minute = file idx % 37, window = 5-minute
-    // floor; DISTINCT triple per window (the stream dedups within the
-    // watermark), counts per (window, pred). Late/corrupted and sentinel
-    // rows appear ONLY on the Spark side — the watermark must erase them
-    // for the hash to match.
-    "q56_stream_window" ->
-      ("WITH gold AS (SELECT * FROM read_csv('/tmp/graft_gold/*/gold_triples.tsv', " +
-        "delim='\\t', header=true, all_varchar=true, filename=true) " +
-        "WHERE filename LIKE '%/n60_s6/%'), " +
-        "st AS (SELECT DISTINCT subj, pred, obj, " +
-        "  (CAST(regexp_extract(path, 'file(\\d+)', 1) AS BIGINT) % 37) // 5 * 5 AS wmin " +
-        "  FROM gold WHERE pred IN ('hasType','hasDuration','speculated','hasEntity')) " +
-        "SELECT strftime(TIMESTAMP '2026-01-01 00:00:00' + wmin * INTERVAL 1 MINUTE, " +
-        "    '%Y-%m-%d %H:%M:%S') AS window_start, " +
-        "  strftime(TIMESTAMP '2026-01-01 00:00:00' + (wmin + 5) * INTERVAL 1 MINUTE, " +
-        "    '%Y-%m-%d %H:%M:%S') AS window_end, " +
-        "  pred, COUNT(*) AS n " +
-        "FROM st GROUP BY wmin, pred ORDER BY window_start, pred"),
 
     // q47: the gold-side timeline fit (GoldDeriver.goldTimelines — the
     // independent mirror of the reference-loss Adam optimizer, run over

@@ -15,8 +15,8 @@ object Verify {
     // driver's DuckDB pass can read it regardless of query order
     val (nFiles, spf) = graft.corpus.Synth.sizeForSfDir(sfDir)
     graft.gold.GoldDeriver.exportTsv(nFiles, spf)
-    // q44/q45 run at the fixed sf0.001 corpus shape at every scale
-    // directory — their oracles pin the n60_s6 export
+    // q44 runs at the fixed sf0.001 corpus shape at every scale
+    // directory — its oracle pins the n60_s6 export
     graft.gold.GoldDeriver.exportTsv(60L, 6)
     // kg_snapshot_delta diffs against the half-corpus snapshot
     graft.gold.GoldDeriver.exportTsv(math.max(1L, nFiles / 2), spf)

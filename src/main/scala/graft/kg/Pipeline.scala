@@ -23,9 +23,9 @@ import graft.text.Text
   * The front end is defined once, per file and per sentence:
   * [[fileSentences]] (sha256, natural text, sentence split, tokens) and
   * [[tagSentence]] (NER, triggers, negation cue and scope). The in-memory
-  * build ([[annotate]], via [[tagStage]]), the committed build
-  * ([[runCheckpointed]], via [[extract]] and [[annotatedStage]]) and the
-  * streaming narrow triples all call them.
+  * build ([[annotate]], via [[tagStage]]) and the committed build
+  * ([[runCheckpointed]], via [[extract]] and [[annotatedStage]]) both call
+  * them.
   *
   * Every annotate step (A1 heads, J4 pairs, J1 alignment, P7/J3 endpoint
   * mapping, U1 injection, J2 durations, P9 speculation) reads only one
@@ -175,7 +175,7 @@ object Pipeline {
   }
 
   /** X1 for one sentence: one event per trigger, arguments tagged. */
-  private[graft] def triggerEvents(t: TaggedSentence): Seq[EventRow] =
+  private def triggerEvents(t: TaggedSentence): Seq[EventRow] =
     t.triggers.map { tr =>
       val args = Taggers.argumentSpans(t.tokens, t.ner, tr)
       EventRow(t.repo, t.path, t.contentSha, t.lineNum, t.senNum, t.sentKey,

@@ -451,7 +451,7 @@ class OperatorSpec extends AnyFunSuite {
       s"oracles without queries: ${os.diff(qs)}")
     // pinned so a future edit that drops a query fails loudly
     // (update the number AND the README/SURVEY counts when adding)
-    assert(qs.size == 43, s"queries: ${qs.size}")
+    assert(qs.size == 41, s"queries: ${qs.size}")
   }
 
   test("each sf fixture's lineitem row count picks the gold corpus its name synthesizes") {

@@ -51,10 +51,11 @@ class ProbeSpec extends AnyFunSuite {
     assert(text.substring(planned).contains("Physical Plan"), text.take(600))
   }
 
-  test("timeline: defaults, committed flag, malformed numbers; unknown mode") {
-    assert(Probe.parse(Seq("timeline"), Map.empty) == Right(Timeline(32, 24000, false)))
+  test("timeline: defaults, malformed numbers, extra words; unknown mode") {
+    assert(Probe.parse(Seq("timeline"), Map.empty) == Right(Timeline(32, 24000)))
+    assert(Probe.parse(Seq("timeline", "4", "400"), Map.empty) == Right(Timeline(4, 400)))
     assert(Probe.parse(Seq("timeline", "4", "400", "committed"), Map.empty) ==
-      Right(Timeline(4, 400, true)))
+      Left(Probe.Usage))
     assert(Probe.parse(Seq("timeline", "four"), Map.empty).isLeft)
     assert(Probe.parse(Seq("bench"), env) == Left(Probe.Usage))
     assert(Probe.parse(Nil, env) == Left(Probe.Usage))
