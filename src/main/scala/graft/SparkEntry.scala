@@ -354,10 +354,12 @@ object SparkEntry {
       // lossy load, or a broadcast of the wrong table hash-fails.
       import s.implicits._
       import graft.tag.{Checkpoint, Taggers}
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_ckpt_q48").toString
-      val file = Checkpoint.write(Checkpoint.fromOntology, tmp)
-      val bc = s.sparkContext.broadcast(Checkpoint.load(file))
+      val tmp = java.nio.file.Files.createTempDirectory("graft_ckpt_q48")
+      // the load reads the file eagerly: nothing needs the directory after it
+      val model =
+        try Checkpoint.load(Checkpoint.write(Checkpoint.fromOntology, tmp.toString))
+        finally org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
+      val bc = s.sparkContext.broadcast(model)
       goldenAnn(s)
         .select(col("src"), col("rec_idx").cast("long"), col("tokens"))
         .flatMap { r =>

@@ -1,7 +1,6 @@
 package graft.kg
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 
 import graft.link.{Canonicalize, SkewJoin}
@@ -88,21 +87,16 @@ object Triples {
         col("eventType").as("obj")) ++ lineage: _*)
 
     // (event, ROLE, canonicalized arg text) — coref-canonicalized (J5).
-    // formMap is cached: the broadcast-or-salt gate inside rewrite counts
-    // it, and recomputing the CC loop for the join would be a second full
-    // canonicalization
-    val maxBroadcastRows =
-      spark.conf.get("spark.graft.maxBroadcastRows", "1000000").toLong
+    // formMap comes back local or persisted, with its row count: the
+    // rewrite's broadcast-or-salt gate needs no count job, and the join
+    // does not re-run the canonicalization
+    val maxBroadcastRows = SkewJoin.maxBroadcastRows(spark)
     val argMentions = events
       .select((Seq(col("eventId"), explode(col("args")).as("arg")) ++ lineage): _*)
       .select(Seq(col("eventId"), col("arg.role").as("role"),
         col("arg.text").as("text")) ++ lineage: _*)
-    val (formMap0, nForms) =
+    val (formMap, nForms) =
       Canonicalize.canonicalFormsCounted(spark, argMentions)
-    // a driver-local map is already a local relation: nothing to cache
-    val formMap =
-      if (formMap0.queryExecution.logical.isInstanceOf[LocalRelation]) formMap0
-      else formMap0.persist()
     val argTriplesRaw = Canonicalize.rewrite(argMentions, formMap,
       maxBroadcastRows, formMapRows = nForms)
       .select(Seq(col("eventId").as("subj"), col("role").as("pred"),

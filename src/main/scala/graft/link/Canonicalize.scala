@@ -2,10 +2,8 @@ package graft.link
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Entity-linking / canonicalization stage (north rule; reference analog is
@@ -15,23 +13,20 @@ import org.apache.spark.unsafe.types.UTF8String
   *      crucial scale trick: pairwise similarity runs over DISTINCT surface
   *      forms, not over mentions. Mention counts grow with the corpus
   *      (10^12 files), but distinct surface forms per block grow with the
-  *      vocabulary, so the O(k²) similarity join is bounded regardless of
+  *      vocabulary, so the O(k²) pairwise check is bounded regardless of
   *      corpus size. The skewed part — assigning every mention to its
   *      cluster — is a join against the (small) form→canonical map, done
   *      as a broadcast join (or salted join when the map outgrows the
   *      broadcast threshold, see SkewJoin).
   *   2. pairwise similarity: token-set containment between forms sharing a
   *      block (coref.py's exact-span match generalized);
-  *   3. connected components: a driver-local union-find when the distinct
-  *      forms fit `spark.graft.maxLocalCCForms` (they are vocabulary-
-  *      bounded, and a dozen label-propagation jobs of scheduling overhead
-  *      would sit in the serial fraction that caps N→4N scaling);
-  *      otherwise iterative DataFrame self-join with AQE (north star names
-  *      this explicitly) — label propagation to the component-minimum id;
+  *   3. connected components: containment edges exist only inside a kept
+  *      (repo, block), so every component lies in one block. One keyed
+  *      pass groups each block's forms and solves it on its executor with
+  *      a union-find — no iteration, no driver-side solve;
   *   4. canonical form per component = longest text, ties to the
   *      lexicographically smallest (the A6 argmin analog, coref.py:38-52).
-  * Blocking (step 1) always runs in Catalyst; steps 2-4 run on the driver
-  * or distributed, with one result.
+  * Blocking (step 1) runs in Catalyst; steps 2-4 run per block.
   */
 object Canonicalize {
 
@@ -56,62 +51,8 @@ object Canonicalize {
   private def expr_substr(c: Column, dropRight: Int): Column =
     c.substr(lit(1), length(c) - lit(dropRight))
 
-  /** Connected components by label propagation: iterative DataFrame
-    * self-join, localCheckpoint between iterations (cuts lineage; each
-    * superseded round's blocks are dropped), driver convergence check via
-    * count — SURVEY.md §4. Vertices: (vid); edges: (src, dst), undirected.
-    * Returns (vid, component), a local checkpoint. */
-  def connectedComponents(spark: SparkSession, vertices: DataFrame,
-      edges: DataFrame, maxIter: Int = 12): DataFrame = {
-    val undirected = edges.select(col("src"), col("dst"))
-      .union(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .persist()
-    undirected.count() // materialize once; every iteration joins against it
-    var labels = vertices.select(col("vid"), col("vid").as("component"))
-      .localCheckpoint()
-    var iter = 0
-    var converged = false
-    while (iter < maxIter && !converged) {
-      val msgs = undirected
-        .join(labels, undirected("src") === labels("vid"))
-        .select(col("dst").as("vid"), col("component"))
-      val next = labels.select("vid", "component").union(msgs)
-        .groupBy("vid").agg(min("component").as("component"))
-        .localCheckpoint()
-      // convergence check every other iteration: each check is one extra
-      // (tiny) driver-blocking job; min-label propagation is monotone, so
-      // checking late never changes the fixpoint
-      if (iter % 2 == 1 || iter == maxIter - 1) {
-        val changed = next.alias("n")
-          .join(labels.alias("o"), Seq("vid"))
-          .filter(col("n.component") =!= col("o.component"))
-          .limit(1).count()
-        converged = changed == 0
-      }
-      dropCheckpoint(labels)
-      labels = next
-      iter += 1
-    }
-    if (!converged)
-      // a component with diameter > maxIter would be silently split into
-      // several canonical clusters — surface it instead
-      org.slf4j.LoggerFactory.getLogger(getClass)
-        .warn(s"connectedComponents: label propagation did NOT converge " +
-          s"after $maxIter iterations — some components may be split; " +
-          s"raise maxIter")
-    undirected.unpersist()
-    labels
-  }
-
-  /** Frees the blocks behind an eager `localCheckpoint` of `df`, which
-    * nothing may read afterwards. */
-  private def dropCheckpoint(df: DataFrame): Unit = df.queryExecution.logical match {
-    case r: LogicalRDD => r.rdd.unpersist(blocking = false)
-    case _ =>
-  }
-
-  /** Union-find over `0 until n` with path compression — the driver-local
-    * component solve of [[canonicalFormsCounted]]. */
+  /** Union-find over `0 until n` with path compression — the component
+    * solve of [[solveBlock]]. */
   private[graft] final class UnionFind(n: Int) {
     private val parent = Array.tabulate(n)(identity)
     def find(x: Int): Int = {
@@ -124,151 +65,78 @@ object Canonicalize {
     def union(a: Int, b: Int): Unit = parent(find(a)) = find(b)
   }
 
-  /** Canonical-form map over mention texts: (repo, text) -> canonical.
-    * `mentions` needs columns (repo, text). The returned map is one row per
-    * distinct (repo, text).
+  /** Canonical-form map over mention texts: (repo, text) -> canonical,
+    * one row per distinct (repo, text), and that row count. `mentions`
+    * needs columns (repo, text).
     *
-    * Blocking always runs in Catalyst ([[refineBlocks]]). The rest is
-    * size-gated: when the distinct forms fit under
-    * `spark.graft.maxLocalCCForms` (default 100k), one guarded collect
-    * brings them to the driver, which solves containment, components and
-    * canonical forms itself and returns the map as a local relation; a
-    * larger vocabulary runs the distributed label-propagation loop and
-    * returns the map persisted, for the caller to unpersist. Both paths
-    * emit the same map — equality is unit-tested. */
-  def canonicalForms(spark: SparkSession, mentions: DataFrame): DataFrame =
-    canonicalFormsCounted(spark, mentions)._1
-
-  /** [[canonicalForms]] plus the distinct-form count it already computes
-    * internally (one row per distinct (repo, text) — exactly the emitted
-    * map's cardinality): callers feeding the map to a gated join can pass
-    * the count as the gate's upper bound and skip the gate's own count()
-    * job — one fewer driver-blocking barrier per emit. */
+    * One grouped pass: [[refineBlocks]] keys every form to its
+    * (repo, block, kept), each kept block's forms are collected into one
+    * group (the blocking window already partitions on (repo, block), so
+    * the grouping adds no shuffle), and [[solveBlock]] solves the group on
+    * its executor. A form of a block over the cap is a group of its own,
+    * so a hot block is never collected into one row. The finished map
+    * comes back as a local relation when it has at most
+    * `spark.graft.maxBroadcastRows` rows — [[rewrite]]'s broadcast would
+    * collect it anyway — and otherwise persisted and counted, for the
+    * caller to unpersist. The count lets the caller resolve [[rewrite]]'s
+    * gate without a job of its own. */
   def canonicalFormsCounted(spark: SparkSession,
       mentions: DataFrame): (DataFrame, Long) = {
-    val maxBlock =
-      spark.conf.get("spark.graft.maxBlockForms", "1000").toInt
-    val maxLocal =
-      spark.conf.get("spark.graft.maxLocalCCForms", "100000").toLong
-    val forms = refineBlocks(mentions, maxBlock)
-    // the guard: at most maxLocal + 1 forms ever reach the driver
-    val collected = forms.take(math.min(maxLocal, Int.MaxValue - 1L).toInt + 1)
-    if (collected.length <= maxLocal) {
-      val nForms = collected.length.toLong
-      // a degenerate block could still make the edges quadratic: past
-      // 4 edges per form the components go to the distributed loop
-      val map = solveLocal(spark, collected, maxEdges = 4L * math.max(nForms, 1L))
-        .getOrElse(distributedMap(spark,
-          spark.createDataFrame(collected.toSeq.asJava, forms.schema)))
-      (map, nForms)
-    } else {
-      val cached = forms.persist()
-      val nForms = cached.count() // materializes the cache for all consumers
-      // the map comes back materialized, so nothing reads the forms again
-      val map = distributedMap(spark, cached)
-      cached.unpersist()
-      (map, nForms)
+    import spark.implicits._
+    val maxBlock = spark.conf.get("spark.graft.maxBlockForms", "1000").toInt
+    val maxRows = SkewJoin.maxBroadcastRows(spark)
+    val map = refineBlocks(mentions, maxBlock)
+      .groupBy(col("repo"), col("block"), col("kept"), when(!col("kept"), col("text")))
+      .agg(collect_list("text"))
+      .as[(String, String, Boolean, String, Seq[String])]
+      .flatMap { case (repo, _, kept, _, texts) => solveBlock(repo, texts, kept) }
+      .toDF("repo", "text", "canonical")
+    val head = map.take(math.min(maxRows, Int.MaxValue - 1L).toInt + 1)
+    if (head.length <= maxRows)
+      (spark.createDataFrame(head.toSeq.asJava, map.schema), head.length.toLong)
+    else {
+      val cached = map.persist()
+      (cached, cached.count())
     }
   }
 
-  /** The driver-local solve over collected [[refineBlocks]] rows (repo,
-    * text, block, kept): token-set containment within each kept
-    * (repo, block), union-find components, and per component the longest
-    * text by code points, ties to the smallest in UTF-8 binary order (the
-    * `min(struct(1000 - length(text), text))` of [[distributedMap]]).
-    * Forms outside a kept block map to themselves. Returns the map as a
-    * local relation, or None once the containment edges exceed
-    * `maxEdges`. */
-  private def solveLocal(spark: SparkSession, forms: Array[Row],
-      maxEdges: Long): Option[DataFrame] = {
-    // distributedMap keys components on concat(repo, NUL, text): a form
-    // with a null repo or text has a null vertex id and joins no component
-    val kept = forms.filter(r => r.getBoolean(3) && !r.isNullAt(0) && !r.isNullAt(1))
-    val texts = kept.map(_.getString(1))
-    val tokens = texts.map(_.split(" ", -1))
-    val tokenSets = tokens.map(_.toSet)
-    // edges exist only within a (repo, block)
-    val blocks = kept.indices
-      .groupBy(i => (kept(i).getString(0), kept(i).getString(2))).values
-    val uf = new UnionFind(kept.length)
-    var edges = 0L
-    for (block <- blocks; Seq(a, b) <- block.combinations(2)) {
-      val (small, big) =
-        if (tokenSets(a).size <= tokenSets(b).size) (tokenSets(a), tokenSets(b))
-        else (tokenSets(b), tokenSets(a))
-      if (small.count(big) == math.min(tokens(a).length, tokens(b).length)) {
-        edges += 1
-        if (edges > maxEdges) return None
-        uf.union(a, b)
+  /** The map rows of one group. In a kept block: token-set containment
+    * between every pair of forms (as many shared distinct tokens as the
+    * shorter form has tokens), union-find components, and per component
+    * the longest text by code points, ties to the smallest in UTF-8 binary
+    * order. A form of a block over the cap maps to itself. */
+  private def solveBlock(repo: String, forms: Seq[String],
+      kept: Boolean): Seq[(String, String, String)] =
+    if (!kept) forms.map(t => (repo, t, t))
+    else {
+      val texts = forms.toIndexedSeq
+      val tokens = texts.map(_.split(" ", -1))
+      val sets = tokens.map(_.toSet)
+      val uf = new UnionFind(texts.length)
+      for (a <- texts.indices; b <- a + 1 until texts.length) {
+        val (small, big) =
+          if (sets(a).size <= sets(b).size) (sets(a), sets(b)) else (sets(b), sets(a))
+        if (small.count(big) == math.min(tokens(a).length, tokens(b).length))
+          uf.union(a, b)
+      }
+      val utf8 = texts.map(UTF8String.fromString)
+      texts.indices.groupBy(uf.find).values.toSeq.flatMap { members =>
+        val best = texts(members.minBy(utf8)(CanonicalOrder))
+        members.map(i => (repo, texts(i), best))
       }
     }
-    val utf8 = texts.map(UTF8String.fromString)
-    val canonical = kept.indices.groupBy(uf.find).values.flatMap { members =>
-      val best = members.minBy(utf8)(CanonicalOrder)
-      members.map(i => Row(kept(i).getString(0), texts(i), texts(best)))
-    }
-    val identity = forms.filterNot(_.getBoolean(3))
-      .map(r => Row(r.getString(0), r.getString(1), r.getString(1)))
-    Some(spark.createDataFrame((canonical ++ identity).toSeq.asJava, MapSchema))
-  }
 
   /** Longest by code points first, then smallest in UTF-8 binary order. */
   private val CanonicalOrder: Ordering[UTF8String] =
     Ordering.by[UTF8String, Int](u => -u.numChars)
       .orElse(Ordering.fromLessThan(_.compareTo(_) < 0))
 
-  private val MapSchema = StructType(Seq("repo", "text", "canonical")
-    .map(StructField(_, StringType)))
-
-  /** The distributed solve over (repo, text, block, kept) forms: pairwise
-    * containment edges within each kept block, label-propagation
-    * components, canonical form per component. The map is returned
-    * persisted and materialized, with the components' blocks dropped;
-    * the caller unpersists it. */
-  private def distributedMap(spark: SparkSession, blocked: DataFrame): DataFrame = {
-    val forms = blocked
-      .withColumn("vid", concat(col("repo"), lit("\u0000"), col("text")))
-    // pairwise similarity within a KEPT block: token-set containment. The
-    // `kept` gate bounds the per-(repo, block) join fan-out at maxBlock²
-    // (≤1M comparisons in the one task a hot block lands on — never
-    // corpus-quadratic). Dropped forms fall back to identity canonical
-    // below, audited by `droppedBlocks`: they can only be under-merged,
-    // never silently mis-merged.
-    val inBlock = forms.filter(col("kept"))
-    val a = inBlock.select(col("repo"), col("block"), col("vid").as("src"),
-      split(col("text"), " ").as("ta"))
-    val b = inBlock.select(col("repo"), col("block"), col("vid").as("dst"),
-      split(col("text"), " ").as("tb"))
-    val edges = a.join(b, Seq("repo", "block"))
-      .filter(col("src") < col("dst"))
-      .filter(size(array_intersect(col("ta"), col("tb"))) ===
-        least(size(col("ta")), size(col("tb"))))
-      .select("src", "dst")
-    val comps = connectedComponents(spark, inBlock.select("vid"), edges)
-    // AQE picks the join strategy (comps grows with forms)
-    val withComp = inBlock.join(comps, Seq("vid"))
-    // canonical per component: longest text, ties -> lexicographically min
-    val canon = withComp
-      .groupBy("component")
-      .agg(min(struct((lit(1000) - length(col("text"))).as("negLen"),
-        col("text").as("t"))).as("best"))
-      .select(col("component"), col("best.t").as("canonical"))
-    val map = withComp.join(canon, Seq("component"))
-      .select("repo", "text", "canonical")
-      .unionByName(forms.filter(!col("kept"))
-        .select(col("repo"), col("text"), col("text").as("canonical")))
-      .persist()
-    map.count()
-    dropCheckpoint(comps)
-    map
-  }
-
-  /** Block refinement behind `canonicalForms`' quadratic cap: distinct
+  /** Block refinement behind [[canonicalFormsCounted]]' quadratic cap: distinct
     * (repo, text) forms keyed by `blockKey`; a block holding more than
     * `maxBlock` distinct forms (a hot lemma — every mention ending in
     * "said", a common surname) is split on a secondary key (the lowercased
     * first token); a sub-block STILL over the cap is marked `kept = false`
-    * and falls out of the pairwise join entirely. Blocks within the cap
+    * and falls out of the pairwise check entirely. Blocks within the cap
     * keep their original key, so normal-corpus output is unchanged.
     * Returns (repo, text, block, kept). */
   private[graft] def refineBlocks(mentions: DataFrame,
@@ -293,7 +161,7 @@ object Canonicalize {
     refined.withColumn("kept", bsz2 <= maxBlock)
   }
 
-  /** Audit view of `canonicalForms`' cap (the `maxBucket` /
+  /** Audit view of [[canonicalFormsCounted]]' cap (the `maxBucket` /
     * `maxShingleDf` pattern — no silent truncation): one row per
     * (repo, block) whose refined sub-block still exceeds `maxBlockForms`,
     * with its distinct-form count. Forms in these blocks stay
@@ -308,8 +176,9 @@ object Canonicalize {
     * coref.py:80-119). The map side is distinct surface forms — usually
     * small — but NOT vocabulary-bounded when arguments contain names, so
     * the join is gated: broadcast below `maxBroadcastRows`, salted
-    * shuffle join (hot forms spread over 16 reducers) above. Callers
-    * should cache `formMap`; the gate counts it. */
+    * shuffle join (hot forms spread over 16 reducers) above. Pass
+    * [[canonicalFormsCounted]]' map and count: the map is already local
+    * or persisted, and the count resolves the gate without a job. */
   def rewrite(mentions: DataFrame, formMap: DataFrame,
       maxBroadcastRows: Long = 1000000L,
       formMapRows: Long = Long.MaxValue): DataFrame =

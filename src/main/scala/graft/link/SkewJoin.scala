@@ -1,6 +1,6 @@
 package graft.link
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Explicit skew-salted equi-join (north rule: "skew salting on hot
@@ -38,6 +38,12 @@ object SkewJoin {
   def saltedJoin(skewed: DataFrame, other: DataFrame, key: String,
       salts: Int, saltSource: Seq[String]): DataFrame =
     saltedJoin(skewed, other, Seq(key), salts, saltSource)
+
+  /** `spark.graft.maxBroadcastRows` (default 1M): the largest build side
+    * [[gatedJoin]] broadcasts, and the largest canonical-form map
+    * `Canonicalize.canonicalFormsCounted` returns as a local relation. */
+  def maxBroadcastRows(spark: SparkSession): Long =
+    spark.conf.get("spark.graft.maxBroadcastRows", "1000000").toLong
 
   /** The scale gate replacing unconditional `broadcast(small)`: broadcast
     * while the build side is provably small, salted shuffle join once it

@@ -227,27 +227,94 @@ class OperatorSpec extends AnyFunSuite {
     ann.caches.foreach(_.unpersist())
   }
 
-  test("canonicalFormsCounted: the driver-local path returns a local relation") {
-    val mentions = Seq(("r1", "George Pataki"), ("r1", "Pataki"),
-      ("r2", "the convoy")).toDF("repo", "text")
-    val (map, n) = Canonicalize.canonicalFormsCounted(spark, mentions)
-    assert(n == 3 && isLocalRelation(map), map.queryExecution.logical.toString)
+  // ---- canonicalization (link stage) ----
+
+  /** The canonical-form map of `mentions`, as (repo, text) -> canonical. */
+  def canonicalMap(mentions: DataFrame): Map[(String, String), String] = {
+    val (map, _) = Canonicalize.canonicalFormsCounted(spark, mentions)
+    try map.as[(String, String, String)].collect()
+      .map { case (repo, text, canon) => (repo, text) -> canon }.toMap
+    finally map.unpersist()
   }
 
-  // ---- connected components (link stage) ----
+  /** [[canonicalMap]] with `spark.graft.maxBroadcastRows` set to `rows`. */
+  def canonicalMapUnder(rows: Long, mentions: DataFrame)
+      : Map[(String, String), String] = {
+    spark.conf.set("spark.graft.maxBroadcastRows", rows.toString)
+    try canonicalMap(mentions)
+    finally spark.conf.unset("spark.graft.maxBroadcastRows")
+  }
+
+  def isLocalRelation(df: DataFrame): Boolean =
+    df.queryExecution.logical
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
+
+  test("canonicalFormsCounted: local relation within maxBroadcastRows, persisted above") {
+    val mentions = Seq(("r1", "George Pataki"), ("r1", "Pataki"),
+      ("r2", "the convoy")).toDF("repo", "text")
+    val (local, n) = Canonicalize.canonicalFormsCounted(spark, mentions)
+    assert(n == 3 && isLocalRelation(local), local.queryExecution.logical.toString)
+    spark.conf.set("spark.graft.maxBroadcastRows", "2")
+    val (cached, n2) =
+      try Canonicalize.canonicalFormsCounted(spark, mentions)
+      finally spark.conf.unset("spark.graft.maxBroadcastRows")
+    try {
+      assert(n2 == 3 && !isLocalRelation(cached))
+      assert(cached.storageLevel != org.apache.spark.storage.StorageLevel.NONE,
+        "a map over maxBroadcastRows comes back persisted")
+    } finally cached.unpersist()
+  }
 
   test("CC: chain, star, and disjoint clusters converge to min label") {
-    val vertices = (1 to 10).map(i => s"v$i").toDF("vid")
+    // the union-find of the per-block solve, labelled by component minimum
+    val vids = (1 to 10).map(i => s"v$i").toArray
     val edges = Seq(
       ("v1", "v2"), ("v2", "v3"), ("v3", "v4"), // chain -> v1
       ("v5", "v6"), ("v5", "v7"), ("v5", "v8") // star -> v5
       // v9, v10 isolated
-    ).toDF("src", "dst")
-    val comps = Canonicalize.connectedComponents(spark, vertices, edges)
-      .as[(String, String)].collect().toMap
+    )
+    val uf = new Canonicalize.UnionFind(vids.length)
+    for ((s, d) <- edges) uf.union(vids.indexOf(s), vids.indexOf(d))
+    val minOfRoot = vids.indices.groupBy(uf.find)
+      .map { case (r, ms) => r -> ms.map(vids).min }
+    val comps = vids.indices.map(i => vids(i) -> minOfRoot(uf.find(i))).toMap
     assert(Seq("v1", "v2", "v3", "v4").map(comps) == Seq.fill(4)("v1"))
     assert(Seq("v5", "v6", "v7", "v8").map(comps) == Seq.fill(4)("v5"))
     assert(comps("v9") == "v9" && comps("v10") == "v10")
+  }
+
+  test("local union-find CC == distributed label propagation") {
+    // the per-block solve's union-find, labelled by component minimum,
+    // against min-label propagation over Spark frames run to its fixpoint,
+    // on a seeded random graph with long paths, cycles and isolated vertices
+    val rnd = new scala.util.Random(7)
+    val vids = (1 to 60).map(i => f"v$i%02d").toArray
+    val edgePairs = Seq.fill(45)((vids(rnd.nextInt(vids.length)),
+      vids(rnd.nextInt(vids.length)))) ++ (40 until 59).map(i => (vids(i), vids(i + 1)))
+    val uf = new Canonicalize.UnionFind(vids.length)
+    for ((s, d) <- edgePairs) uf.union(vids.indexOf(s), vids.indexOf(d))
+    val minOfRoot = vids.indices.groupBy(uf.find)
+      .map { case (r, ms) => r -> ms.map(vids).min }
+    val local = vids.indices.map(i => vids(i) -> minOfRoot(uf.find(i))).toMap
+
+    val pairs = edgePairs.toDF("src", "dst")
+    val undirected = pairs.union(pairs.select($"dst", $"src"))
+    var labels = vids.toSeq.toDF("vid").select($"vid", $"vid".as("component"))
+    var dist = Map.empty[String, String]
+    var rounds = 0
+    while ({
+      val next = labels.union(undirected.join(labels, $"src" === $"vid")
+          .select($"dst".as("vid"), $"component"))
+        .groupBy("vid").agg(min("component").as("component"))
+      val collected = next.as[(String, String)].collect().toMap
+      labels = collected.toSeq.toDF("vid", "component")
+      val changed = collected != dist
+      dist = collected
+      rounds += 1
+      changed
+    }) assert(rounds <= vids.length, "label propagation did not reach a fixpoint")
+    assert(local == dist)
+    assert(local.values.toSet.size < vids.length - 10, "graph too sparse to test merging")
   }
 
   test("canonicalForms: short forms map to longest form in block") {
@@ -255,56 +322,14 @@ class OperatorSpec extends AnyFunSuite {
       ("r1", "George Pataki"), ("r1", "Pataki"), ("r1", "the convoy"),
       ("r2", "Pataki") // different repo -> separate block
     ).toDF("repo", "text")
-    val m = Canonicalize.canonicalForms(spark, mentions)
-      .as[(String, String, String)].collect()
-      .map { case (repo, text, canon) => (repo, text) -> canon }.toMap
+    val m = canonicalMap(mentions)
     assert(m(("r1", "Pataki")) == "George Pataki")
     assert(m(("r1", "George Pataki")) == "George Pataki")
     assert(m(("r1", "the convoy")) == "the convoy")
     assert(m(("r2", "Pataki")) == "Pataki")
   }
 
-  test("local union-find CC == distributed label propagation") {
-    // same graph through the driver-local solve's union-find (labelled by
-    // component minimum, as canonicalFormsCounted groups it) and the
-    // distributed loop
-    val vids = (1 to 10).map(i => s"v$i").toArray
-    val edgePairs = Array(("v1", "v2"), ("v2", "v3"), ("v3", "v4"),
-      ("v5", "v6"), ("v5", "v7"), ("v5", "v8"))
-    val uf = new Canonicalize.UnionFind(vids.length)
-    for ((s, d) <- edgePairs) uf.union(vids.indexOf(s), vids.indexOf(d))
-    val minOfRoot = vids.indices.groupBy(uf.find)
-      .map { case (r, ms) => r -> ms.map(vids).min }
-    val local = vids.indices.map(i => vids(i) -> minOfRoot(uf.find(i))).toMap
-    val dist = Canonicalize.connectedComponents(spark,
-      vids.toSeq.toDF("vid"), edgePairs.toSeq.toDF("src", "dst"))
-      .as[(String, String)].collect().toMap
-    assert(local == dist)
-  }
-
-  def isLocalRelation(df: DataFrame): Boolean =
-    df.queryExecution.logical
-      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
-
-  /** The canonical map on the driver-local path and on the forced
-    * distributed path, plus whether the local path returned a local
-    * relation. */
-  def bothCanonicalPaths(mentions: DataFrame)
-      : (Map[(String, String), String], Map[(String, String), String], Boolean) = {
-    def collect(df: DataFrame) =
-      df.as[(String, String, String)].collect()
-        .map { case (repo, text, canon) => (repo, text) -> canon }.toMap
-    val localMap = Canonicalize.canonicalForms(spark, mentions)
-    val localPath = collect(localMap)
-    spark.conf.set("spark.graft.maxLocalCCForms", "0")
-    val distMap =
-      try Canonicalize.canonicalForms(spark, mentions)
-      finally spark.conf.unset("spark.graft.maxLocalCCForms")
-    try (localPath, collect(distMap), isLocalRelation(localMap))
-    finally Seq(localMap, distMap).foreach(_.unpersist())
-  }
-
-  test("canonicalForms: local and distributed CC paths emit the same map") {
+  test("canonicalFormsCounted: the local and the persisted map agree on edge-case inputs") {
     val mentions = (Seq(
       ("r1", "George Pataki"), ("r1", "Pataki"), ("r1", "the convoy"),
       ("r1", "a convoy"), ("r2", "Pataki"), ("r1", "Governor George Pataki"),
@@ -325,28 +350,24 @@ class OperatorSpec extends AnyFunSuite {
     ).toDF("repo", "text")
     spark.conf.set("spark.graft.maxBlockForms", "5")
     try {
-      val (localPath, distPath, local) = bothCanonicalPaths(mentions)
-      assert(local, "the map fits: the local path returns a local relation")
-      assert(localPath == distPath)
-      assert(localPath(("r1", "x")) == "abcdefg x")
-      assert(localPath(("r3", "\uD83D\uDE00 \uFF5E y")) == "\uFF5E \uD83D\uDE00 y")
-      assert(localPath(("r1", "Pérez")) == "José Pérez")
-      assert(localPath(("r1", "Pataki ")) == "George Pataki ")
-      assert(localPath(("r1", "spokesman said")) == "spokesman said")
+      val m = canonicalMap(mentions)
+      assert(canonicalMapUnder(1, mentions) == m)
+      assert(m(("r1", "x")) == "abcdefg x")
+      assert(m(("r3", "\uD83D\uDE00 \uFF5E y")) == "\uFF5E \uD83D\uDE00 y")
+      assert(m(("r1", "Pérez")) == "José Pérez")
+      assert(m(("r1", "Pataki ")) == "George Pataki ")
+      assert(m(("r1", "spokesman said")) == "spokesman said")
     } finally spark.conf.unset("spark.graft.maxBlockForms")
 
-    // past the edge guard: 12 nested forms of one block make 66 containment
-    // edges > 4 x 12 forms, so the components go to the distributed loop
+    // 12 nested forms of one block: 66 containment edges, one component
     val nested = (0 until 12).map(k => ("r1", ((1 to k).map(i => s"a$i") :+ "x")
       .mkString(" "))).toDF("repo", "text")
-    val (localPath, distPath, local) = bothCanonicalPaths(nested)
-    assert(!local, "the edge guard must fall back to the distributed loop")
-    assert(localPath == distPath)
-    assert(localPath.values.toSet == Set((1 to 11).map(i => s"a$i").mkString(" ") + " x"))
+    val m = canonicalMap(nested)
+    assert(canonicalMapUnder(1, nested) == m)
+    assert(m.values.toSet == Set((1 to 11).map(i => s"a$i").mkString(" ") + " x"))
   }
 
-  test("canonicalForms distributed path: consuming the map does not " +
-      "re-run the form pipeline") {
+  test("persisted canonical map: reading it does not re-run the form pipeline") {
     // every evaluation of a mention row ticks the accumulator: once the
     // map is returned, reading it must not evaluate the mentions again
     val evals = spark.sparkContext.longAccumulator("mention-evals")
@@ -354,16 +375,38 @@ class OperatorSpec extends AnyFunSuite {
     val mentions = Seq(("r1", "George Pataki"), ("r1", "Pataki"),
       ("r1", "the convoy"), ("r1", "a convoy"), ("r2", "Pataki"))
       .toDF("repo", "text").select(col("repo"), tick(col("text")).as("text"))
-    spark.conf.set("spark.graft.maxLocalCCForms", "0")
+    spark.conf.set("spark.graft.maxBroadcastRows", "1")
     val (map, nForms) =
       try Canonicalize.canonicalFormsCounted(spark, mentions)
-      finally spark.conf.unset("spark.graft.maxLocalCCForms")
+      finally spark.conf.unset("spark.graft.maxBroadcastRows")
     val built = evals.value
     val rows = map.as[(String, String, String)].collect()
+    assert(!isLocalRelation(map))
     assert(evals.value == built, s"${evals.value - built} mention rows re-evaluated")
     assert(rows.length == nForms && nForms == 5)
     assert(rows.toSet(("r1", "Pataki", "George Pataki")))
     map.unpersist()
+  }
+
+  test("canonicalFormsCounted: as many jobs for 120k distinct forms as for 1k") {
+    // the build plus one read of the map
+    // 10 forms per block; every fifth block holds a bare "xN" that links
+    // its block's forms into one component, 9 of them rewritten
+    def jobs(n: Long): Int = TestSpark.jobsOf {
+      val block = concat(lit("x"), (col("id") / 10).cast("long"))
+      val mentions = spark.range(n).select(lit("r1").as("repo"),
+        when(col("id") % 50 === 0, block)
+          .otherwise(concat(lit("w"), col("id"), lit(" "), block)).as("text"))
+      val (map, nForms) = Canonicalize.canonicalFormsCounted(spark, mentions)
+      try {
+        assert(nForms == n)
+        val merged = map.filter(col("text") =!= col("canonical")).count()
+        assert(merged == 9 * n / 50, s"$merged forms merged")
+      } finally map.unpersist()
+    }
+    val small = jobs(1000)
+    val large = jobs(120000)
+    assert(small == large, s"$small jobs for 1k forms, $large for 120k")
   }
 
   test("canonicalForms: hot-lemma block is capped, audited, and " +
@@ -377,9 +420,7 @@ class OperatorSpec extends AnyFunSuite {
     val mentions = (hot ++ normal).toDF("repo", "text")
     spark.conf.set("spark.graft.maxBlockForms", "10")
     try {
-      val m = Canonicalize.canonicalForms(spark, mentions)
-        .as[(String, String, String)].collect()
-        .map { case (r, t, c) => (r, t) -> c }.toMap
+      val m = canonicalMap(mentions)
       assert(m.size == 52)
       // dropped block: every hot form is its own canonical (under-merge,
       // never mis-merge)
@@ -406,9 +447,7 @@ class OperatorSpec extends AnyFunSuite {
       Seq(("r1", s"prefix$i spokesman said"), ("r1", s"prefix$i said")))
     spark.conf.set("spark.graft.maxBlockForms", "10")
     try {
-      val m = Canonicalize.canonicalForms(spark, forms.toDF("repo", "text"))
-        .as[(String, String, String)].collect()
-        .map { case (r, t, c) => (r, t) -> c }.toMap
+      val m = canonicalMap(forms.toDF("repo", "text"))
       for (i <- 1 to 15) {
         assert(m(("r1", s"prefix$i said")) == s"prefix$i spokesman said")
         assert(m(("r1", s"prefix$i spokesman said")) == s"prefix$i spokesman said")

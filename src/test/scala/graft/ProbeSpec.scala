@@ -8,7 +8,7 @@ import graft.Probe.{Isolate, Plans, Timeline}
 
 /** `Probe`'s command line, parsed without a session, and `plans` run
   * over a query that fails. */
-class ProbeSpec extends AnyFunSuite {
+class ProbeSpec extends AnyFunSuite with TempDirs {
   private val env = Map("SPARK_GRAFT_SF_DIR" -> "sf", "SPARK_GRAFT_CPUS" -> "8")
 
   test("isolate: the rep count is optional ahead of the query names") {
@@ -40,7 +40,7 @@ class ProbeSpec extends AnyFunSuite {
   test("plans: a failing query gets a FAILED section and the file is still written") {
     // q55 reads documents.parquet, which this dir lacks; kg_triples_by_pred
     // synthesizes its corpus from the dir name alone (sf0.001's 60 files)
-    val dir = Files.createTempDirectory("probe_sf0.001_")
+    val dir = tempDir("probe_sf0.001_")
     val out = dir.resolve("plans.txt")
     Probe.plans(TestSpark.spark, Plans(dir.toString, out.toString,
       Seq("q55_batch_plan", "kg_triples_by_pred")))

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.eval.Eval
 import graft.sources.Sources
 
-class SourcesEvalSpec extends AnyFunSuite {
+class SourcesEvalSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -33,7 +33,7 @@ class SourcesEvalSpec extends AnyFunSuite {
   }
 
   test("S5: CSV sink round-trips") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-csv").toString
+    val dir = tempDir("graft-csv").toString
     val df = Seq((1L, "days", 0.9), (2L, "hours", 0.5)).toDF("id", "pred", "p")
     Sources.writeCsv(df, s"$dir/preds")
     val back = spark.read.option("header", "true").csv(s"$dir/preds")

@@ -1,9 +1,7 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions.{col, explode}
 import org.scalatest.funsuite.AnyFunSuite
@@ -14,7 +12,7 @@ import graft.model.SourceFile
 
 /** Checkpoint/resume + quarantine semantics (north rule: "resumable from
   * checkpoint with per-partition lineage"; FIXTURES.md §4 resume case). */
-class StoreSpec extends AnyFunSuite {
+class StoreSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -22,10 +20,7 @@ class StoreSpec extends AnyFunSuite {
   val Spf = 4
   val Sig = s"synth:$NFiles:$Spf"
 
-  def tmp(): String = {
-    val p = Files.createTempDirectory("graft-store")
-    p.toString
-  }
+  def tmp(): String = tempDir("graft-store").toString
 
   def triplesOf(root: String, files: Dataset[SourceFile]): Set[T6] =
     Pipeline.runCheckpointed(spark, files, root, Sig).as[T6].collect().toSet
@@ -63,17 +58,17 @@ class StoreSpec extends AnyFunSuite {
   test("a committed build leaves no cached blocks behind") {
     // a long-lived session must not pile up storage per build: after the
     // build and a count over its triples, no RDD the build cached is left —
-    // on the driver-local canonicalization path and on the distributed one
-    for (maxLocalCCForms <- Seq(None, Some("0"))) {
-      maxLocalCCForms.foreach(spark.conf.set("spark.graft.maxLocalCCForms", _))
+    // with the canonical-form map as a local relation and persisted
+    for (maxBroadcastRows <- Seq(None, Some("1"))) {
+      maxBroadcastRows.foreach(spark.conf.set("spark.graft.maxBroadcastRows", _))
       try {
         val before = spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
         Pipeline.runCheckpointed(spark, Synth.corpus(spark, NFiles, Spf), tmp(), Sig)
           .count()
         val left = spark.sparkContext.getRDDStorageInfo.filterNot(i => before(i.id))
-        assert(left.isEmpty, s"maxLocalCCForms=$maxLocalCCForms: " +
+        assert(left.isEmpty, s"maxBroadcastRows=$maxBroadcastRows: " +
           left.map(i => s"${i.name} ${i.memSize} B").mkString("; "))
-      } finally spark.conf.unset("spark.graft.maxLocalCCForms")
+      } finally spark.conf.unset("spark.graft.maxBroadcastRows")
     }
   }
 
@@ -162,29 +157,9 @@ class StoreSpec extends AnyFunSuite {
     // each stage commit runs the rebalance and write jobs and the two of
     // the lineage aggregate; committing sentences, tagged, events and
     // relations apart instead of one annotated stage ran 31 jobs here
-    val sc = spark.sparkContext
-    val groups = new LinkedBlockingQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        groups.add(Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
-    }
-    // the bus delivers events in order, so every job of the build arrives
-    // between the two marker jobs
-    def marker(id: String): Unit = {
-      sc.setJobGroup(id, id)
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-    }
-    sc.addSparkListener(listener)
-    try {
-      marker("build-begin")
-      Pipeline.runCheckpointed(spark, Synth.corpus(spark, NFiles, Spf), tmp(), Sig)
-      marker("build-end")
-      val jobs = Iterator.continually(Option(groups.poll(60, TimeUnit.SECONDS))
-          .getOrElse(fail("no job event within 60 s")))
-        .dropWhile(_ != "build-begin").drop(1).takeWhile(_ != "build-end").size
-      assert(jobs <= 20, s"$jobs jobs")
-    } finally sc.removeSparkListener(listener)
+    val jobs = TestSpark.jobsOf(Pipeline.runCheckpointed(spark,
+      Synth.corpus(spark, NFiles, Spf), tmp(), Sig))
+    assert(jobs <= 20, s"$jobs jobs")
   }
 
   test("input-signature mismatch forces recompute") {

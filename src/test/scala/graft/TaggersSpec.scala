@@ -6,7 +6,7 @@ import graft.model._
 import graft.tag.{Ontology, Taggers}
 import graft.text.Text
 
-class TaggersSpec extends AnyFunSuite {
+class TaggersSpec extends AnyFunSuite with TempDirs {
 
   val sent = Text.tokenize("Yesterday George Pataki toured the hospital in New York.")
   // tokens: Yesterday George Pataki toured the hospital in New York .
@@ -105,7 +105,7 @@ class TaggersSpec extends AnyFunSuite {
 
   test("S8 checkpoint: write/load round-trips the model tables exactly; corrupted checkpoints fail loudly") {
     import graft.tag.Checkpoint
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ckpt_spec")
+    val tmp = tempDir("graft_ckpt_spec")
     val model = Checkpoint.fromOntology
     val file = Checkpoint.write(model, tmp.toString)
     val loaded = Checkpoint.load(file)
@@ -136,6 +136,16 @@ class TaggersSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] {
       Checkpoint.load(corrupt("graftlex\t1\ngaz\tonlyonefield\n"))
     }
+  }
+
+  test("q48 leaves no checkpoint directory behind, also when it fails") {
+    // without the golden corpora the query throws after loading its model
+    val tmpRoot = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def checkpoints() = tmpRoot.list().filter(_.startsWith("graft_ckpt_q48")).toSet
+    val before = checkpoints()
+    try SparkEntry.queries("q48_checkpoint_ner")(TestSpark.spark, "unused").count()
+    catch { case scala.util.control.NonFatal(_) => }
+    assert((checkpoints() -- before).isEmpty)
   }
 
   test("event assembly drops nothing and blanks duration (P5 + main.py:173-175)") {
