@@ -149,7 +149,7 @@ object SparkEntry {
 
   /** All five reference golden corpora as one annotation frame with a
     * `src` column — shared by every golden-data query
-    * (q30/q33/q34/q35/q38/q39/q40/q43 and, through [[goldenStages]],
+    * (q30/q33/q34/q35/q38/q39/q40/q43 and, through [[goldenAnnotated]],
     * q41/q42/kg_from_annotations). Memoized per JVM with an eager
     * localCheckpoint (the triplesFor TrieMap pattern): the five wholetext
     * JSON scans + from_json parses run ONCE per Bench/Verify session
@@ -169,39 +169,30 @@ object SparkEntry {
         .localCheckpoint()
     })
 
-  /** Per-corpus Pipeline.fromAnnotations stage snapshots (tagged, events),
-    * built from the cached [[goldenAnn]] and memoized as eager
-    * localCheckpoints — q41/q42/kg_from_annotations previously each
-    * re-ran the five-corpus annotation ingest per query (~18 s of the
-    * round-4 bench). The fromAnnotations intermediate caches release
-    * immediately after the snapshot materializes. */
-  private val goldenStageCache =
-    TrieMap.empty[String, (DataFrame, DataFrame)]
-  private def goldenStages(s: SparkSession,
-      corpus: String): (DataFrame, DataFrame) =
-    goldenStageCache.getOrElseUpdate(corpus, {
-      val ann = Pipeline.fromAnnotations(s,
-        goldenAnn(s).filter(col("src") === corpus),
-        "eventplus", s"Mu_test_data/$corpus.pred.json")
-      val tagged = ann.tagged.toDF().localCheckpoint()
-      val events = ann.events.localCheckpoint()
-      ann.caches.foreach(_.unpersist())
-      (tagged, events)
-    })
+  /** Per-corpus Pipeline.fromAnnotations frames, built from the cached
+    * [[goldenAnn]] and memoized as eager localCheckpoints —
+    * q41/q42/kg_from_annotations previously each re-ran the five-corpus
+    * annotation ingest per query (~18 s of the round-4 bench). */
+  private val goldenAnnotatedCache = TrieMap.empty[String, DataFrame]
+  private def goldenAnnotated(s: SparkSession, corpus: String): DataFrame =
+    goldenAnnotatedCache.getOrElseUpdate(corpus,
+      Pipeline.fromAnnotations(s, goldenAnn(s).filter(col("src") === corpus),
+        "eventplus", s"Mu_test_data/$corpus.pred.json").toDF().localCheckpoint())
 
-  /** Typed views of [[goldenStages]] unioned across all five corpora —
-    * the exact frames q41/q42 consume. fromAnnotations events carry the
-    * extra duration/speculation columns; they drop here so the typed
-    * union inside injectTempRelOnlyEvents lines up. */
+  /** Flat projections of [[goldenAnnotated]] unioned across all five
+    * corpora — the exact frames q41/q42 consume: the tagged sentences,
+    * and the events without the duration/speculation columns, so the
+    * typed union inside injectTempRelOnlyEvents lines up. */
   private def goldenTagged(s: SparkSession): org.apache.spark.sql.Dataset[Pipeline.TaggedSentence] = {
     import s.implicits._
-    GoldenCorpora.map(goldenStages(s, _)._1).reduce(_ union _)
-      .as[Pipeline.TaggedSentence]
+    GoldenCorpora.map(goldenAnnotated(s, _).drop("events", "relations"))
+      .reduce(_ union _).as[Pipeline.TaggedSentence]
   }
   private def goldenEvents(s: SparkSession): org.apache.spark.sql.Dataset[Pipeline.EventRow] = {
     import s.implicits._
-    GoldenCorpora.map(goldenStages(s, _)._2).reduce(_ union _)
-      .drop("duration", "speculation").as[Pipeline.EventRow]
+    GoldenCorpora.map(goldenAnnotated(s, _).select(explode(col("events")).as("e"))
+        .select(col("e.*")).drop("duration", "speculation"))
+      .reduce(_ union _).as[Pipeline.EventRow]
   }
 
   /** Every named query: the `kg_*` family and the pipeline-stage
@@ -257,17 +248,10 @@ object SparkEntry {
     // DuckDB oracle re-derives the same triples in pure SQL, including a
     // recursive-CTE connected-components for the canonicalization.
     "kg_from_annotations" -> ((s, dir) => {
-      import s.implicits._
-      // stage snapshots from the shared golden cache (goldenStages) — the
-      // round-4 variant re-ingested test_ace.pred.json per call;
-      // materialize, not emit: Bench iterates every query in one session,
-      // and the lazy emit would retain events/formMap/blockCanon caches
-      val (tagged, events) = goldenStages(s, "test_ace")
-      val emptyRels = s.emptyDataset[(String, Int, Int, String)]
-        .toDF("sentKey", "lAligned", "rAligned", "label")
-      Triples.materialize(s,
-        Pipeline.Annotated(tagged.as[Pipeline.TaggedSentence], events, emptyRels),
-        distinct = false)
+      // the shared golden snapshot (goldenAnnotated); materialize, not a
+      // lazy emit: Bench iterates every query in one session, and a lazy
+      // emit would retain the formMap/blockCanon caches
+      Triples.materialize(s, goldenAnnotated(s, "test_ace"), distinct = false)
         .select("subj", "pred", "obj").orderBy("subj", "pred", "obj")
     }),
 
@@ -612,8 +596,8 @@ object SparkEntry {
       // triggers; the oracle re-derives band, pick, strip, and the
       // NOT-EXISTS containment in SQL.
       import s.implicits._
-      // checkpointed stage snapshots shared across the golden-query family
-      // (goldenStages) — the round-4 variant re-ran all five
+      // checkpointed snapshots shared across the golden-query family
+      // (goldenAnnotated) — the round-4 variant re-ran all five
       // fromAnnotations ingests per query
       val tagged = goldenTagged(s)
       val events = goldenEvents(s)
@@ -699,29 +683,33 @@ object SparkEntry {
       // drops a committed stage fails the hash.
       import s.implicits._
       val (nFiles, spf) = (60L, 6)
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_resume_q44").toString
-      val sig = Main.inputSignature(s, s"synth:$nFiles:$spf")
-      Pipeline.runCheckpointed(s, Synth.corpus(s, nFiles, spf), root, sig)
-        .count() // cold run: commits all three stage snapshots
-      val stages = Seq("quarantine", "annotated", "triples")
-      def manifests(): Map[String, String] = stages.map { st =>
-        val p = graft.kg.Store.manifestPath(root, st)
-        st -> (if (java.nio.file.Files.exists(p))
-          java.nio.file.Files.readString(p) else "")
-      }.toMap
-      val before = manifests()
-      require(!before.values.exists(_.isEmpty),
-        s"q44: cold run left uncommitted stages under $root")
-      val resumed =
-        Pipeline.runCheckpointed(s, Synth.corpus(s, nFiles, spf), root, sig)
-      val after = manifests()
-      val changed = stages.filter(st => before(st) != after(st))
-      require(changed.isEmpty,
-        s"q44: resume recomputed committed stage(s): ${changed.mkString(",")}")
-      resumed.select("subj", "pred", "obj")
-        .dropDuplicates()
-        .orderBy("subj", "pred", "obj")
+      val root = java.nio.file.Files.createTempDirectory("graft_resume_q44")
+      // the resumed triple set comes back as a local relation, so nothing
+      // reads the snapshot root after it is deleted
+      val resumed = try {
+        val sig = Main.inputSignature(s, s"synth:$nFiles:$spf")
+        Pipeline.runCheckpointed(s, Synth.corpus(s, nFiles, spf),
+          root.toString, sig).count() // cold run: commits all three stage snapshots
+        val stages = Seq("quarantine", "annotated", "triples")
+        def manifests(): Map[String, String] = stages.map { st =>
+          val p = graft.kg.Store.manifestPath(root.toString, st)
+          st -> (if (java.nio.file.Files.exists(p))
+            java.nio.file.Files.readString(p) else "")
+        }.toMap
+        val before = manifests()
+        require(!before.values.exists(_.isEmpty),
+          s"q44: cold run left uncommitted stages under $root")
+        val triples = Pipeline.runCheckpointed(s, Synth.corpus(s, nFiles, spf),
+          root.toString, sig)
+          .select("subj", "pred", "obj").dropDuplicates()
+          .as[(String, String, String)].collect().toSeq
+        val after = manifests()
+        val changed = stages.filter(st => before(st) != after(st))
+        require(changed.isEmpty,
+          s"q44: resume recomputed committed stage(s): ${changed.mkString(",")}")
+        triples
+      } finally org.apache.commons.io.FileUtils.deleteDirectory(root.toFile)
+      resumed.toDF("subj", "pred", "obj").orderBy("subj", "pred", "obj")
     }),
     "q47_timeline_fit" -> ((s, dir) => {
       // A8 with the REFERENCE's objective (timelinemodule.py:103-216):

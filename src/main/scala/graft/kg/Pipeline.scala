@@ -22,24 +22,25 @@ import graft.text.Text
   *
   * The front end is defined once, per file and per sentence:
   * [[fileSentences]] (sha256, natural text, sentence split, tokens) and
-  * [[tagSentence]] (NER, triggers, negation cue and scope). The in-memory
-  * build ([[annotate]], via [[tagStage]]) and the committed build
-  * ([[runCheckpointed]], via [[extract]] and [[annotatedStage]]) both call
-  * them.
+  * [[tagSentence]] (NER, triggers, negation cue and scope).
   *
   * Every annotate step (A1 heads, J4 pairs, J1 alignment, P7/J3 endpoint
   * mapping, U1 injection, J2 durations, P9 speculation) reads only one
   * sentence — the reference annotates sentence by sentence,
   * project/APIs/main.py:23-242. The pipeline therefore runs them as one
-  * pure per-sentence kernel, [[annotateSentence]]: in memory inside two
-  * narrow flatMaps over the tagged frame ([[annotateFrom]]), committed in
-  * the same mapPartitions as the tagger ([[annotatedStage]]). No join, no
-  * shuffle, no cache. The relational operators below (`headsNarrow`,
-  * `relationCandidates`, `scoreRelations`, `filterRelations`,
-  * `alignHeads`, `mapRelationEndpoints`, `injectTempRelOnlyEvents`,
-  * `durations`, `enrich`) are the same steps as `sentKey`-keyed frame
-  * transforms: the golden-stage queries and the traced benchmark build
-  * compose them, and OperatorSpec pins the kernel to their composition.
+  * pure per-sentence kernel, [[annotateSentence]], in the same
+  * mapPartitions as the tagger: [[annotatedStage]], one nested
+  * [[AnnotatedSentence]] row per sentence. No join, no shuffle, no cache.
+  * Both builds run it — the committed build ([[runCheckpointed]]) commits
+  * it as the `annotated` stage, the in-memory build (`Triples.fromFiles`)
+  * persists it — and both emit triples from it; the golden ingest
+  * ([[fromAnnotations]]) produces the same row shape. The relational
+  * operators below (`headsNarrow`, `relationCandidates`,
+  * `scoreRelations`, `filterRelations`, `alignHeads`,
+  * `mapRelationEndpoints`, `injectTempRelOnlyEvents`, `durations`,
+  * `enrich`) are the same steps as `sentKey`-keyed frame transforms: the
+  * golden-stage queries and the traced benchmark build compose them, and
+  * OperatorSpec pins the kernel to their composition.
   */
 object Pipeline {
 
@@ -487,72 +488,29 @@ object Pipeline {
     }
   }
 
-  // ---- full annotate: the composed DAG up to enriched events ----
-
+  /** The flat frames of perfbench's six-stage traced build, which
+    * `Triples.emit` nests back into [[AnnotatedSentence]] rows. */
   case class Annotated(
       tagged: Dataset[TaggedSentence],
       events: DataFrame, // EventRow + duration + speculation
-      relations: DataFrame, // sentKey, lAligned, rAligned, label
-      // every frame persist()ed while building this Annotated — a
-      // long-lived session (Bench/serving) unpersists them once the
-      // downstream triple frame is materialized, instead of accumulating
-      // cached partitions per emit (Triples.materialize does this)
-      caches: Seq[DataFrame] = Seq.empty)
-
-  def annotate(spark: SparkSession, files: Dataset[SourceFile]): Annotated = {
-    // ONE cached frame, one narrow fused stage: extraction flatMap →
-    // tagging mapPartitions → tagged cache. No range repartition (the
-    // sampler re-ran the extraction flatMap and nothing downstream
-    // consumed the layout — every relational op hash-shuffles on its own
-    // key, guide §2.4) and no separate `sents` cache: the tagged frame
-    // carries sentKey + tokens, which is everything the annotate kernel
-    // reads, so caching the sentence frame only added an encoder
-    // round-trip + columnar cache write of the whole corpus (measured:
-    // per-sentence tagging compute is ~0.15 ms while the stage cost
-    // ~1.3 ms/row — the difference was Dataset encode/cache machinery).
-    // persist (columnar cache), not localCheckpoint: tried both — the
-    // checkpoint skips the columnar encode but loses column pruning, and
-    // the tagged frame's downstream consumers (the two annotate flatMaps,
-    // emit's relation and entity branches) mostly read narrow
-    // projections, so full-UnsafeRow scans cost MORE in total task time
-    // (332 vs 285 s at sf0.1). The count materializes the cache before
-    // the fan-out so broadcast threads never race a cold subtree.
-    val tagged = tagStage(spark, sentences(spark, files)).persist()
-    tagged.count()
-    val ann = annotateFrom(spark, tagged)
-    ann.copy(caches = ann.caches :+ tagged.toDF())
-  }
-
-  /** The annotate layer over a tagged frame (shared by the in-memory path
-    * and the checkpoint-resumable path): two narrow flatMaps running the
-    * [[annotateSentence]] kernel — the events half and the relations half,
-    * so neither pays for the other's work. No join, no shuffle, no cache:
-    * each sentence is annotated on its own, so two rows that share a
-    * `sentKey` (one file under two commits) never mix. */
-  def annotateFrom(spark: SparkSession,
-      tagged: Dataset[TaggedSentence]): Annotated = {
-    import spark.implicits._
-    Annotated(tagged, tagged.flatMap(sentenceEvents).toDF(),
-      tagged.flatMap(sentenceRelations).toDF())
-  }
+      relations: DataFrame) // sentKey, lAligned, rAligned, label
 
   /** Ingest reference-format annotation records (Sources.annotationSchema,
-    * the golden .pred.json shape) into the Annotated frame: runs the
+    * the golden .pred.json shape) as [[AnnotatedSentence]] rows: runs the
     * engine's assembly / linking / canonicalization / materialization over
     * REFERENCE-produced annotations instead of its own taggers — the
     * circularity breaker for the golden gate (GoldenAceSpec), and the
     * general adapter for re-materializing a KG from committed annotation
     * snapshots. Durations / speculation / relations absent from a record
     * become blank / false / empty (the reference renders the same
-    * defaults, main.py:209-230). Narrow maps only — no shuffle. */
+    * defaults, main.py:209-230); no negation is tagged. One narrow map —
+    * no shuffle. */
   def fromAnnotations(spark: SparkSession, ann: DataFrame, repo: String,
-      path: String): Annotated = {
+      path: String): Dataset[AnnotatedSentence] = {
     import spark.implicits._
     import org.apache.spark.sql.Row
     val withIdx = if (ann.columns.contains("rec_idx")) ann
       else ann.withColumn("rec_idx", lit(0L))
-    val base = withIdx.select(col("rec_idx").cast("long"), col("line_num"),
-      col("sen_num"), col("tokens"), col("events"), col("ner")).persist()
 
     // nested struct arrays come back as scala.collection.Seq (mutable
     // ArraySeq at runtime) — never ascribe immutable Seq to them
@@ -560,37 +518,19 @@ object Pipeline {
       Option(r.getAs[scala.collection.Seq[Row]](field))
         .getOrElse(scala.collection.Seq.empty)
 
-    def meta(r: Row): (Int, Int, Seq[String], String) = {
+    withIdx.select(col("rec_idx").cast("long"), col("line_num"),
+        col("sen_num"), col("tokens"), col("events"), col("ner")).map { r =>
       val lineNum = if (r.isNullAt(1)) 0 else r.getInt(1)
       val senNum = if (r.isNullAt(2)) r.getLong(0).toInt else r.getInt(2)
       val tokens = Option(r.getSeq[String](3)).getOrElse(Seq.empty)
-      (lineNum, senNum, tokens, graft.text.Text.sha256(tokens.mkString(" ")))
-    }
-    def eventRows(r: Row): Seq[Row] =
-      Option(r.getSeq[Row](4)).getOrElse(Seq.empty)
-
-    val tagged = base.map { r =>
-      val (lineNum, senNum, tokens, sha) = meta(r)
+      val sha = graft.text.Text.sha256(tokens.mkString(" "))
+      val sentKey = sentKeyOf(repo, path, lineNum, senNum)
       val ner = Option(r.getSeq[scala.collection.Seq[String]](5))
         .getOrElse(Seq.empty)
         .collect { case s if s != null && s.length >= 3 =>
           NerSpan(s(0).toInt, s(1).toInt, s(2)) }
-      val triggers = eventRows(r).flatMap { ev =>
-        val evType = Option(ev.getAs[String]("event_type")).getOrElse("")
-        nested(ev, "triggers").map { tr =>
-          Trigger(evType, Option(tr.getAs[String]("text")).getOrElse(""),
-            tr.getAs[Int]("start_token"), tr.getAs[Int]("end_token"))
-        }
-      }
-      TaggedSentence(repo, path, sha, lineNum, senNum,
-        sentKeyOf(repo, path, lineNum, senNum), tokens, ner, triggers,
-        Seq.empty, Seq.empty)
-    }
-
-    val events = base.flatMap { r =>
-      val (lineNum, senNum, _, sha) = meta(r)
-      val sentKey = sentKeyOf(repo, path, lineNum, senNum)
-      eventRows(r).flatMap { ev =>
+      val records = Option(r.getSeq[Row](4)).getOrElse(Seq.empty)
+      val events = records.flatMap { ev =>
         val evType = Option(ev.getAs[String]("event_type")).getOrElse("")
         val dur = Option(ev.getAs[String]("duration")).getOrElse("")
         val spec = Option(ev.getAs[Any]("speculation"))
@@ -599,22 +539,21 @@ object Pipeline {
           .map(a => Argument(Option(a.getAs[String]("role")).getOrElse(""),
             Option(a.getAs[String]("text")).getOrElse(""),
             a.getAs[Int]("start_token"), a.getAs[Int]("end_token"))).toSeq
-        // P5 event assembly: each trigger becomes an event row carrying
-        // the event-level type (the reference's first-trigger convention)
+        // P5 event assembly: each trigger becomes an event carrying the
+        // event-level type (the reference's first-trigger convention)
         nested(ev, "triggers").map { tr =>
           val text = Option(tr.getAs[String]("text")).getOrElse("")
           val start = tr.getAs[Int]("start_token")
-          (EventRow(repo, path, sha, lineNum, senNum, sentKey,
-            eventIdOf(sentKey, start), evType, text,
-            Ontology.lemmaOf(text), start, tr.getAs[Int]("end_token"), args),
-            dur, spec)
+          EnrichedEvent(sentKey, start, repo, path, sha, lineNum, senNum,
+            eventIdOf(sentKey, start), evType, text, Ontology.lemmaOf(text),
+            tr.getAs[Int]("end_token"), args, dur, spec)
         }
       }
-    }.select(col("_1.*"), col("_2").as("duration"), col("_3").as("speculation"))
-
-    val relations = spark.emptyDataset[(String, Int, Int, String)]
-      .toDF("sentKey", "lAligned", "rAligned", "label")
-    Annotated(tagged, events, relations, caches = Seq(base.toDF()))
+      val triggers =
+        events.map(e => Trigger(e.eventType, e.trigText, e.trigStart, e.trigEnd))
+      AnnotatedSentence(repo, path, sha, lineNum, senNum, sentKey, tokens,
+        ner, triggers, Seq.empty, Seq.empty, events, Seq.empty)
+    }
   }
 
   /** The narrow layers in one pass: K3's length sort, then per sentence
@@ -632,22 +571,12 @@ object Pipeline {
     })
   }
 
-  /** An [[annotatedStage]] frame read as the three frames emit consumes:
-    * the tagged sentences without the nested arrays, and the events and
-    * relations exploded out of them. */
-  def annotatedFrames(spark: SparkSession, annotated: DataFrame): Annotated = {
-    import spark.implicits._
-    Annotated(annotated.drop("events", "relations").as[TaggedSentence],
-      annotated.select(explode(col("events")).as("e")).select(col("e.*")),
-      annotated.select(explode(col("relations")).as("r")).select(col("r.*")))
-  }
-
   /** Checkpoint-resumable end-to-end run (north rule). Three stages commit
     * an Iceberg-style snapshot + manifest via Store: `quarantine` (the
     * extraction failures), `annotated` ([[annotatedStage]]: tagging and
     * annotation in one pass, its manifest recording the nested event count
-    * under `events`) and `triples` (emit over [[annotatedFrames]] of the
-    * committed `annotated` snapshot). A rerun resumes from the committed
+    * under `events`) and `triples` (`Triples` emit over the committed
+    * `annotated` snapshot). A rerun resumes from the committed
     * stages — their compute closures are never invoked. Returns the triple
     * DataFrame (committed). */
   def runCheckpointed(spark: SparkSession, files: Dataset[SourceFile],
@@ -665,23 +594,22 @@ object Pipeline {
     Store.runStage(spark, root, "quarantine", inputSig) {
       extraction.flatMap(_.err).toDF()
     }
-    // the event count rides on the lineage aggregate; `events.trigStart`
-    // reads one int leaf of the nested events
+    // the event count rides on the lineage aggregate
     val annotated = Store.runStageCounting(spark, root, "annotated", inputSig,
-        Seq("events" -> size(col("events.trigStart")))) {
+        Seq("events" -> Triples.EventsPerSentence)) {
       annotatedStage(spark, extraction.flatMap(_.sent)).toDF()
     }
     extracted.foreach(_.unpersist())
-    // capture emit's intermediate caches (events/formMap/blockCanon) so
-    // they release once the stage snapshot is committed — the lazy
-    // Triples.emit otherwise leaves them persisted for the session's
-    // lifetime. runStage skips the body entirely on resume, so the var
-    // stays empty (and nothing was cached) when the stage is committed.
+    // capture emit's intermediate caches (formMap/blockCanon) so they
+    // release once the stage snapshot is committed. runStage skips the
+    // body entirely on resume, so the var stays empty (and nothing was
+    // cached) when the stage is committed.
     var emitCaches: Seq[DataFrame] = Nil
     val out = Store.runStage(spark, root, "triples", inputSig) {
-      val (frame, caches) =
-        Triples.emitWithCaches(spark, annotatedFrames(spark, annotated),
-          committedEvents = Store.readCount(root, "annotated", "events"))
+      val nEvents = Store.readCount(root, "annotated", "events").getOrElse(
+        throw new IllegalStateException(
+          s"the annotated manifest under $root records no event count"))
+      val (frame, caches) = Triples.emitWithCaches(spark, annotated, nEvents)
       emitCaches = caches
       frame
     }

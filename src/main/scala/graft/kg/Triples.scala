@@ -1,6 +1,6 @@
 package graft.kg
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.link.{Canonicalize, SkewJoin}
@@ -15,86 +15,142 @@ import graft.model._
   * Lineage columns (repo, path, content sha256) ride on every row — the
   * per-row invariant of BASELINE.json.
   *
-  * One entry point per output shape: [[emit]] (lazy, annotations →
-  * triples), [[materialize]] (eager, caches released, optionally a set)
-  * and [[fromFiles]] (files → the materialized triple set).
+  * Five of the seven rules read one sentence and nothing else; they are
+  * defined once, as the per-sentence kernel [[sentenceTriples]]. The
+  * other two read across sentences: argument canonicalization (per
+  * repo) and sameAs linking (per (repo, lemma, type) block). Every build
+  * feeds [[emitWithCaches]] the same shape, the nested
+  * `Pipeline.AnnotatedSentence` frame: the committed build its
+  * `annotated` snapshot, [[fromFiles]] a persisted
+  * `Pipeline.annotatedStage`, and the golden ingest
+  * `Pipeline.fromAnnotations`.
+  *
+  * Entry points: [[materialize]] (an annotated frame → the eager triple
+  * frame, caches released, optionally a set) and [[fromFiles]] (files →
+  * the materialized triple set).
   */
 object Triples {
 
-  /** Emit all triples from an annotated corpus. `events` is the enriched
-    * EventRow frame (with duration + speculation); `relations` is the
-    * aligned relation frame. The returned frame is LAZY and depends on
-    * caches persisted here and in Pipeline — short-lived sessions can
-    * consume it directly; long-lived sessions should use [[materialize]],
-    * which materializes the result and releases every intermediate
-    * cache. */
-  def emit(spark: SparkSession, ann: Pipeline.Annotated): DataFrame =
-    emitWithCaches(spark, ann)._1
+  /** The five single-sentence rules, with the sentence's own lineage:
+    * hasType for typed events (typeless U1-injected events carry none;
+    * the reference renders them untyped, main.py:152-167), hasDuration
+    * for non-blank J2 durations, speculated for P9, one triple per
+    * aligned temporal relation (endpoints are data-derived event ids,
+    * deterministic under any partitioning, SURVEY.md §7.4), and one
+    * hasEntity per NER span (views.py graph nodes analog). One row per
+    * nested event row, so an event J2 pairs with two durations yields its
+    * hasType twice, as the event rows do. */
+  def sentenceTriples(a: Pipeline.AnnotatedSentence): Seq[Triple] = {
+    def t(subj: String, pred: String, obj: String) =
+      Triple(subj, pred, obj, a.repo, a.path, a.contentSha)
+    val perEvent = a.events.flatMap { e =>
+      Seq(
+        Option.when(e.eventType.nonEmpty)(t(e.eventId, "hasType", e.eventType)),
+        Option.when(e.duration.nonEmpty)(t(e.eventId, "hasDuration", e.duration)),
+        Option.when(e.speculation)(t(e.eventId, "speculated", "true"))).flatten
+    }
+    val relations = a.relations.map(r => t(Pipeline.eventIdOf(r.sentKey, r.lAligned),
+      r.label, Pipeline.eventIdOf(r.sentKey, r.rAligned)))
+    val doc = s"${a.repo}/${a.path}"
+    val entities = a.ner.map(n => t(doc, "hasEntity",
+      s"${n.label}:${a.tokens.slice(n.start, n.end + 1).mkString(" ")}"))
+    perEvent ++ relations ++ entities
+  }
 
-  /** Materialized emit for long-lived sessions, via an EAGER
-    * localCheckpoint in a single pass, then every intermediate cache (this
-    * emit's events/formMap/blockCanon AND the Annotated stage caches) is
-    * released, so repeated pipeline runs don't accumulate executor
-    * storage. The checkpoint truncates lineage, so repeated queries
-    * against the returned frame plan against a flat LogicalRDD instead of
-    * re-canonicalizing the whole pipeline DAG (measured ~9 s of driver
-    * time per query on the persisted-lineage variant).
+  /** The triples of an annotated frame, materialized for long-lived
+    * sessions: an EAGER localCheckpoint in a single pass, then every
+    * cache this emit made (the canonical-form map and the sameAs block
+    * map) is released, so repeated pipeline runs don't accumulate
+    * executor storage. The checkpoint truncates lineage, so repeated
+    * queries against the returned frame plan against a flat LogicalRDD
+    * instead of re-canonicalizing the whole pipeline DAG (measured ~9 s of
+    * driver time per query on the persisted-lineage variant). The caller
+    * owns `annotated`'s own cache, if any.
     *
-    * `distinct`: set semantics. Deduplication happens PER BRANCH inside
-    * the emit (arg and entity triples, the only two branches whose rows
-    * can repeat — with one commit per (repo, path), every other branch
-    * emits at most one row per event id or per distinct (sentKey, l, r)
-    * pair by construction), so only ~40%
-    * of the union's rows cross a dedup shuffle instead of the whole
-    * six-string frame (GoldenPipelineSpec pins branch-dedup ≡ global
-    * dedup). */
-  def materialize(spark: SparkSession, ann: Pipeline.Annotated,
+    * `distinct`: set semantics, as one `distinct()` over the kernel's
+    * output and one over the argument triples — the parts whose rows
+    * repeat (entities recur within a document, and an event can carry one
+    * (role, text) twice); sameAs emits one row per typed event row.
+    * GoldenPipelineSpec pins this to the global triple set. */
+  def materialize(spark: SparkSession, annotated: DataFrame,
       distinct: Boolean): DataFrame = {
-    val (out, caches) = emitWithCaches(spark, ann, distinct)
+    val nEvents = annotated.agg(coalesce(sum(EventsPerSentence), lit(0L))).first().getLong(0)
+    val (out, caches) = emitWithCaches(spark, annotated, nEvents, distinct)
     val snapped = out.localCheckpoint()
-    (caches ++ ann.caches).foreach(_.unpersist())
+    caches.foreach(_.unpersist())
     snapped
   }
 
   /** End-to-end in memory: source files → the materialized triple SET
-    * (see [[materialize]]). The committed build is
-    * `Pipeline.runCheckpointed`; both give the same triple set. */
-  def fromFiles(spark: SparkSession, files: Dataset[SourceFile]): DataFrame =
-    materialize(spark, Pipeline.annotate(spark, files), distinct = true)
+    * (see [[materialize]]) over a persisted `Pipeline.annotatedStage`.
+    * The committed build is `Pipeline.runCheckpointed`; both give the
+    * same triple set. */
+  def fromFiles(spark: SparkSession, files: Dataset[SourceFile]): DataFrame = {
+    // persist (columnar cache), not localCheckpoint: the two global rules
+    // read narrow projections of it, and materialize's event count fills
+    // it before the broadcast builds fan out
+    val annotated = Pipeline.annotatedStage(spark,
+      Pipeline.sentences(spark, files)).toDF().persist()
+    try materialize(spark, annotated, distinct = true)
+    finally annotated.unpersist()
+  }
 
-  /** `committedEvents`: the row count of `ann.events` when they are read
-    * from a committed snapshot — re-reading the snapshot is cheaper than
-    * caching it, and the known count resolves the broadcast gates. */
-  private[kg] def emitWithCaches(spark: SparkSession,
-      ann: Pipeline.Annotated, distinct: Boolean = false,
-      committedEvents: Option[Long] = None): (DataFrame, Seq[DataFrame]) = {
-    // Events that are not a committed snapshot are cached and materialized
-    // NOW: the canonicalization and the two broadcast builds below would
-    // otherwise race to each recompute the whole upstream DAG before any
-    // of them fills the cache (broadcast exchanges execute on separate
-    // threads). The count doubles as the cardinality upper bound that lets
-    // the broadcast gates below resolve without extra jobs.
-    val events = if (committedEvents.isDefined) ann.events else ann.events.persist()
-    val nEvents = committedEvents.getOrElse(events.count())
+  /** The number of nested events of an annotated row; `events.trigStart`
+    * reads one int leaf of them. */
+  private[kg] val EventsPerSentence: Column = size(col("events.trigStart"))
 
+  /** Adapter for perfbench's six-stage traced build only, which commits
+    * flat tagged, event and relation frames: nests them per `sentKey`
+    * (the events and the relations collected, left-joined to the tagged
+    * rows) and emits from the nested frame. Exact when each `sentKey`
+    * names one sentence, as in every perfbench corpus. The frame is lazy
+    * and leaves the emit's caches persisted. Deleted with
+    * [[Pipeline.Annotated]] once the traced build runs
+    * `Pipeline.runCheckpointed`. */
+  def emit(spark: SparkSession, ann: Pipeline.Annotated): DataFrame = {
+    def nested(flat: DataFrame, fields: Seq[String], name: String) =
+      flat.groupBy("sentKey").agg(collect_list(struct(fields.map(col): _*)).as(name))
+    val events = Encoders.product[Pipeline.EnrichedEvent].schema.fieldNames.toSeq
+    val relations = Encoders.product[Pipeline.RelationRow].schema.fieldNames.toSeq
+    val annotated = ann.tagged.toDF()
+      .join(nested(ann.events, events, "events"), Seq("sentKey"), "left")
+      .join(nested(ann.relations, relations, "relations"), Seq("sentKey"), "left")
+      .withColumn("events", coalesce(col("events"),
+        typedLit(Seq.empty[Pipeline.EnrichedEvent])))
+      .withColumn("relations", coalesce(col("relations"),
+        typedLit(Seq.empty[Pipeline.RelationRow])))
+    emitWithCaches(spark, annotated, ann.events.count())._1
+  }
+
+  /** All triples of a nested annotated frame (`Pipeline.AnnotatedSentence`
+    * columns) holding `nEvents` events, and the caches the frame depends
+    * on: the union of [[sentenceTriples]] over every sentence, the
+    * argument-canonicalization rule over a flat (eventId, role, text)
+    * projection, and the sameAs rule over a flat (repo, trigLemma,
+    * eventType, eventId) projection. The projections read their `events`
+    * fields through `arrays_zip`, so a parquet scan of the frame reads only
+    * those fields (`args` whole: the column API cannot select a field of
+    * an array nested in an array). */
+  private[kg] def emitWithCaches(spark: SparkSession, annotated: DataFrame,
+      nEvents: Long, distinct: Boolean = false): (DataFrame, Seq[DataFrame]) = {
+    import spark.implicits._
     val lineage = Seq(col("repo"), col("path"), col("contentSha"))
 
-    // (event, hasType, TYPE) — typed events only (typeless U1-injected
-    // events carry no hasType triple; the reference renders them untyped,
-    // main.py:152-167)
-    val hasType = events.filter(col("eventType") =!= "")
-      .select(Seq(col("eventId").as("subj"), lit("hasType").as("pred"),
-        col("eventType").as("obj")) ++ lineage: _*)
+    val sentenceRows = annotated.as[Pipeline.AnnotatedSentence]
+      .flatMap(sentenceTriples).toDF()
+    val narrow = if (distinct) sentenceRows.distinct() else sentenceRows
 
     // (event, ROLE, canonicalized arg text) — coref-canonicalized (J5).
     // formMap comes back local or persisted, with its row count: the
     // rewrite's broadcast-or-salt gate needs no count job, and the join
     // does not re-run the canonicalization
     val maxBroadcastRows = SkewJoin.maxBroadcastRows(spark)
-    val argMentions = events
-      .select((Seq(col("eventId"), explode(col("args")).as("arg")) ++ lineage): _*)
-      .select(Seq(col("eventId"), col("arg.role").as("role"),
-        col("arg.text").as("text")) ++ lineage: _*)
+    val argMentions = annotated
+      .select(lineage :+ explode(arrays_zip(col("events.eventId"),
+        col("events.args"))).as("e"): _*)
+      .select(lineage ++ Seq(col("e.eventId"), explode(col("e.args")).as("a")): _*)
+      .select(lineage ++ Seq(col("eventId"), col("a.role").as("role"),
+        col("a.text").as("text")): _*)
     val (formMap, nForms) =
       Canonicalize.canonicalFormsCounted(spark, argMentions)
     val argTriplesRaw = Canonicalize.rewrite(argMentions, formMap,
@@ -108,40 +164,6 @@ object Triples {
     // own contentSha
     val argTriples = if (distinct) argTriplesRaw.distinct() else argTriplesRaw
 
-    // (event, hasDuration, D) for non-blank durations (J2 output)
-    val durTriples = events.filter(col("duration") =!= "")
-      .select(Seq(col("eventId").as("subj"), lit("hasDuration").as("pred"),
-        col("duration").as("obj")) ++ lineage: _*)
-
-    // (event, speculated, true) — P9
-    val specTriples = events.filter(col("speculation") === true)
-      .select(Seq(col("eventId").as("subj"), lit("speculated").as("pred"),
-        lit("true").as("obj")) ++ lineage: _*)
-
-    // (e1, REL, e2) — endpoints are aligned token positions; event ids are
-    // data-derived (deterministic under any partitioning, SURVEY.md §7.4)
-    val sentMeta = ann.tagged.select(col("sentKey"), col("repo"), col("path"),
-      col("contentSha"))
-    val relTriples = ann.relations.join(sentMeta, Seq("sentKey"))
-      .select(Seq(
-        concat(col("sentKey"), lit(":T"), col("lAligned")).as("subj"),
-        col("label").as("pred"),
-        concat(col("sentKey"), lit(":T"), col("rAligned")).as("obj")) ++ lineage: _*)
-
-    // (doc, hasEntity, TYPE:text) — NER spans (views.py graph nodes analog)
-    val entTriplesRaw = ann.tagged
-      .select(col("repo"), col("path"), col("contentSha"), col("tokens"),
-        explode(col("ner")).as("n"))
-      .select(Seq(
-        concat(col("repo"), lit("/"), col("path")).as("subj"),
-        lit("hasEntity").as("pred"),
-        concat(col("n.label"), lit(":"),
-          array_join(slice(col("tokens"), col("n.start") + 1,
-            col("n.end") - col("n.start") + 1), " ")).as("obj")) ++ lineage: _*)
-    // set semantics: the same surface entity recurs within a document
-    // (~10% of rows at bench scale); whole-row dedup, as for arg triples
-    val entTriples = if (distinct) entTriplesRaw.distinct() else entTriplesRaw
-
     // (event, sameAs, canonicalEvent) — event linking: block on
     // (repo, trigger lemma, type); canonical id = min eventId in block.
     // Two-phase: partial-aggregated groupBy (map-side combine absorbs the
@@ -149,7 +171,12 @@ object Triples {
     // the broadcast-or-salt gate — the map has one row per distinct
     // (repo, lemma, type) block, which GROWS with the corpus, so an
     // unconditional broadcast would OOM at 100× scale
-    val typed = events.filter(col("eventType") =!= "")
+    val typed = annotated
+      .select(lineage :+ explode(arrays_zip(col("events.eventId"),
+        col("events.trigLemma"), col("events.eventType"))).as("e"): _*)
+      .select(lineage ++ Seq(col("e.eventId"), col("e.trigLemma"),
+        col("e.eventType")): _*)
+      .filter(col("eventType") =!= "")
     val blockCanon = typed
       .groupBy(col("repo"), col("trigLemma"), col("eventType"))
       .agg(min(col("eventId")).as("canonicalId"))
@@ -157,17 +184,14 @@ object Triples {
     val sameAs = SkewJoin.gatedJoin(typed, blockCanon,
       Seq("repo", "trigLemma", "eventType"),
       saltSource = Seq("eventId"), maxBroadcastRows = maxBroadcastRows,
-      // one row per distinct block <= one per event: the already-
-      // materialized event count usually resolves the gate job-free
+      // one row per distinct block <= one per event: the known event
+      // count usually resolves the gate job-free
       smallUpperBound = nEvents)
       .filter(col("eventId") =!= col("canonicalId"))
       .select(Seq(col("eventId").as("subj"), lit("sameAs").as("pred"),
         col("canonicalId").as("obj")) ++ lineage: _*)
 
-    val union = hasType.unionByName(argTriples).unionByName(durTriples)
-      .unionByName(specTriples).unionByName(relTriples)
-      .unionByName(entTriples).unionByName(sameAs)
-    (union, Seq(events, formMap, blockCanon))
+    (narrow.unionByName(argTriples).unionByName(sameAs), Seq(formMap, blockCanon))
   }
 
   /** Changelog between two KG snapshots: (op ∈ {add, del}, subj, pred,

@@ -33,8 +33,8 @@ class GoldenAceSpec extends AnyFunSuite {
       ner: Seq[(Int, Int, String)])
 
   def engineTriples(ann: DataFrame, path: String): Set[(String, String, String)] =
-    Triples.emit(spark, Pipeline.fromAnnotations(spark, ann, repo, path))
-      .select("subj", "pred", "obj").as[(String, String, String)]
+    Triples.materialize(spark, Pipeline.fromAnnotations(spark, ann, repo, path)
+      .toDF(), distinct = false).select("subj", "pred", "obj").as[(String, String, String)]
       .collect().toSet
 
   // ---- independent derivation (plain Scala, no engine operators) ----
@@ -171,8 +171,8 @@ class GoldenAceSpec extends AnyFunSuite {
   test("lineage: every triple carries the sentence content sha") {
     val ann = Sources.readAnnotationArray(spark, s"$dataDir/test_ace.pred.json")
     val path = "Mu_test_data/test_ace.pred.json"
-    val withSha = Triples.emit(spark,
-      Pipeline.fromAnnotations(spark, ann, repo, path))
+    val withSha = Triples.materialize(spark,
+      Pipeline.fromAnnotations(spark, ann, repo, path).toDF(), distinct = false)
       .select("subj", "contentSha").collect()
     val shaByKey = recordsOf(ann).map(r =>
       s"$repo/$path#L0:S${r.idx}" -> Text.sha256(r.tokens.mkString(" "))).toMap

@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.functions.col
 
 import graft.kg.{Pipeline, Triples}
 import graft.model._
@@ -32,13 +31,14 @@ class GoldenDemoSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
+  /** The annotated sentences of one demo file, and its triples. */
   def run(path: String, text: String) = {
     val files = Seq(SourceFile("demo", path, "c0", "markdown", text)).toDS()
-    val ann = Pipeline.annotate(spark, files)
-    val triples = Triples.emit(spark, ann)
+    val annotated = Pipeline.annotatedStage(spark, Pipeline.sentences(spark, files))
+    val triples = Triples.materialize(spark, annotated.toDF(), distinct = false)
       .select("subj", "pred", "obj").as[(String, String, String)]
       .collect().toSet
-    (ann, triples)
+    (annotated.collect().toSeq, triples)
   }
 
   // ---- 1. BETTER/joint/README.md:15-18 (ACE demo) ----
@@ -55,8 +55,7 @@ class GoldenDemoSpec extends AnyFunSuite {
 
   test("ACE demo: live pipeline reproduces the README's documented event, " +
       "arguments and NER") {
-    val (ann, triples) = run("ace.md", aceText)
-    val tagged = ann.tagged.collect()
+    val (tagged, triples) = run("ace.md", aceText)
     assert(tagged.length == 1)
     // ner: [[7,7,GPE],[8,8,ORG],[9,9,PER],[12,13,LOC],[14,14,LOC]]
     assert(tagged.head.ner.toSet == Set(
@@ -65,11 +64,10 @@ class GoldenDemoSpec extends AnyFunSuite {
     // one event: Movement:Transport, trigger 'deploy' @ [5,5]
     assert(tagged.head.triggers ==
       Seq(Trigger("Movement:Transport", "deploy", 5, 5)))
-    val typed = ann.events.filter(col("eventType") =!= "")
-      .select("eventId", "eventType", "trigText", "args")
-      .as[(String, String, String, Seq[Argument])].collect()
+    val typed = tagged.flatMap(_.events).filter(_.eventType.nonEmpty)
     assert(typed.length == 1)
-    val (eid, tpe, trig, args) = typed.head
+    val e = typed.head
+    val (eid, tpe, trig, args) = (e.eventId, e.eventType, e.trigText, e.args)
     assert(tpe == "Movement:Transport" && trig == "deploy")
     // arguments: Artifact 'soldiers' [9,9], Destination 'region' [14,14]
     assert(args.toSet == Set(
@@ -102,8 +100,8 @@ class GoldenDemoSpec extends AnyFunSuite {
 
   test("news demo: live pipeline reproduces views.py's documented event, " +
       "arguments, duration, NER and empty relation set") {
-    val (ann, triples) = run("news.md", newsText)
-    val tagged = ann.tagged.collect().sortBy(_.senNum)
+    val (sents, triples) = run("news.md", newsText)
+    val tagged = sents.sortBy(_.senNum)
     assert(tagged.length == 2)
     val offset = tagged.head.tokens.length // sentence 2 starts at 10
     assert(offset == 10)
@@ -115,13 +113,11 @@ class GoldenDemoSpec extends AnyFunSuite {
       (14, 15, "PER"), (18, 18, "GPE")))
     // exactly one typed event: 'toured', Movement:Transport, duration days,
     // Artifact 'George Pataki', Destination 'counties', not speculated
-    val typed = ann.events.filter(col("eventType") =!= "")
-      .select("eventId", "eventType", "trigText", "trigStart", "args",
-        "duration", "speculation")
-      .as[(String, String, String, Int, Seq[Argument], String, Boolean)]
-      .collect()
+    val typed = tagged.flatMap(_.events).filter(_.eventType.nonEmpty)
     assert(typed.length == 1)
-    val (eid, tpe, trig, trigStart, args, dur, spec) = typed.head
+    val e = typed.head
+    val (eid, tpe, trig, trigStart, args, dur, spec) = (e.eventId,
+      e.eventType, e.trigText, e.trigStart, e.args, e.duration, e.speculation)
     assert(tpe == "Movement:Transport" && trig == "toured")
     assert(trigStart + offset == 16) // views.py:28: start_token 16
     assert(args.map(a => (a.role, a.text)).toSet == Set(
@@ -140,8 +136,7 @@ class GoldenDemoSpec extends AnyFunSuite {
 
   test("speculation demo: events inside the 'not' negation scope are " +
       "speculated (main.py:226-230 rule on the main.py:250 demo input)") {
-    val (ann, triples) = run("moz.md", mozText)
-    val tagged = ann.tagged.collect()
+    val (tagged, triples) = run("moz.md", mozText)
     assert(tagged.length == 1)
     val toks = tagged.head.tokens
     // the 'not' cue (P8 manual override) opens the scope
@@ -150,9 +145,8 @@ class GoldenDemoSpec extends AnyFunSuite {
     // 'considering' is an event head (U1-injected, typeless) in scope
     val consIdx = toks.indexOf("considering")
     assert(consIdx == 5 && tagged.head.negationScope(consIdx) == 1)
-    val specEvents = ann.events
-      .filter(col("speculation") === true)
-      .select("trigText").as[String].collect().toSet
+    val specEvents = tagged.flatMap(_.events).filter(_.speculation)
+      .map(_.trigText).toSet
     assert(specEvents.contains("considering"))
     // and as a materialized triple
     val eid = s"demo/moz.md#L0:S0:T$consIdx"

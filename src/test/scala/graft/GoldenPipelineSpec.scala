@@ -22,7 +22,9 @@ class GoldenPipelineSpec extends AnyFunSuite {
 
   lazy val pipelineTriples: Set[T6] = {
     val files = Synth.corpus(spark, NFiles, Spf)
-    Triples.emit(spark, Pipeline.annotate(spark, files)).as[T6].collect().toSet
+    Triples.materialize(spark,
+      Pipeline.annotatedStage(spark, Pipeline.sentences(spark, files)).toDF(),
+      distinct = false).as[T6].collect().toSet
   }
 
   lazy val goldTriples: Set[T6] =
@@ -90,9 +92,9 @@ class GoldenPipelineSpec extends AnyFunSuite {
   }
 
   test("branch-level dedup in Triples.fromFiles equals the global triple SET") {
-    // the distinct snapshot dedups only the two branches that can repeat
-    // (arg + entity triples); this pins that shortcut to exact global
-    // set semantics — any branch that ever grows duplicate rows fails here
+    // the distinct snapshot dedups only the kernel's output and the
+    // argument triples; this pins that shortcut to exact global set
+    // semantics — any other rule that ever grows duplicate rows fails here
     val files = Synth.corpus(spark, NFiles, Spf)
     val branchDedup = Triples.fromFiles(spark, files)
       .as[T6].collect().toSet

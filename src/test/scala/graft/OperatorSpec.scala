@@ -115,23 +115,21 @@ class OperatorSpec extends AnyFunSuite {
 
   def multiset[A](xs: Seq[A]): Map[A, Int] = xs.groupBy(identity).map { case (k, v) => k -> v.size }
 
-  /** Kernel (`annotateFrom`, and `annotateSentence` row by row) equals the
-    * relational composition: same columns in the same order, and equal
-    * multisets of event and relation rows. Returns the kernel row counts. */
+  /** The kernel (`annotateSentence` per sentence) equals the relational
+    * composition: same columns in the same order, and equal multisets of
+    * event and relation rows. Returns the kernel row counts. */
   def assertKernelMatches(tagged: Dataset[Pipeline.TaggedSentence]): (Int, Int) = {
     val (relEvents, relRels) = relationalAnnotate(tagged)
-    val ann = Pipeline.annotateFrom(spark, tagged)
-    assert(ann.events.schema.map(f => (f.name, f.dataType)) ==
+    val kernelEvents = tagged.flatMap(Pipeline.annotateSentence(_).events)
+    val kernelRels = tagged.flatMap(Pipeline.annotateSentence(_).relations)
+    assert(kernelEvents.schema.map(f => (f.name, f.dataType)) ==
       relEvents.schema.map(f => (f.name, f.dataType)))
-    assert(ann.relations.schema.map(f => (f.name, f.dataType)) ==
+    assert(kernelRels.schema.map(f => (f.name, f.dataType)) ==
       relRels.schema.map(f => (f.name, f.dataType)))
-    val events = ann.events.as[Pipeline.EnrichedEvent].collect().toSeq
-    val rels = ann.relations.as[Pipeline.RelationRow].collect().toSeq
+    val events = kernelEvents.collect().toSeq
+    val rels = kernelRels.collect().toSeq
     assert(multiset(events) == multiset(relEvents.as[Pipeline.EnrichedEvent].collect().toSeq))
     assert(multiset(rels) == multiset(relRels.as[Pipeline.RelationRow].collect().toSeq))
-    val direct = tagged.collect().toSeq.map(Pipeline.annotateSentence)
-    assert(multiset(direct.flatMap(_.events)) == multiset(events))
-    assert(multiset(direct.flatMap(_.relations)) == multiset(rels))
     (events.size, rels.size)
   }
 
@@ -188,12 +186,11 @@ class OperatorSpec extends AnyFunSuite {
       val ann = Pipeline.fromAnnotations(spark, graft.sources.Sources
         .readAnnotationArray(spark, s"$dir/$f.pred.json"), "eventplus", f)
       // the golden records carry no negation; tag it as the pipeline does
-      val tagged = ann.tagged.map { t =>
+      val tagged = ann.drop("events", "relations").as[Pipeline.TaggedSentence].map { t =>
         val cues = Taggers.negationCues(t.tokens)
         t.copy(negationCue = cues, negationScope = Taggers.negationScope(t.tokens, cues))
       }
       assertKernelMatches(tagged)
-      ann.caches.foreach(_.unpersist())
     }
   }
 
@@ -203,11 +200,9 @@ class OperatorSpec extends AnyFunSuite {
     // copy must annotate exactly as it does alone
     val files = graft.corpus.Synth.corpus(spark, 6L, 4)
     def counts(fs: Dataset[SourceFile]): (Long, Long) = {
-      val ann = Pipeline.annotateFrom(spark,
-        Pipeline.tagStage(spark, Pipeline.sentences(spark, fs)))
-      val n = (ann.events.count(), ann.relations.count())
-      ann.caches.foreach(_.unpersist())
-      n
+      val n = Pipeline.annotatedStage(spark, Pipeline.sentences(spark, fs))
+        .agg(sum(size(col("events"))), sum(size(col("relations")))).first()
+      (n.getLong(0), n.getLong(1))
     }
     val (ev1, rel1) = counts(files)
     assert(ev1 > 0 && rel1 > 0)
@@ -215,16 +210,11 @@ class OperatorSpec extends AnyFunSuite {
     assert(counts(twice) == ((2 * ev1, 2 * rel1)))
   }
 
-  test("annotate: the frames annotateFrom returns plan no Exchange and no Join") {
-    val tagged = Pipeline.tagStage(spark, Pipeline.sentences(spark,
-      graft.corpus.Synth.corpus(spark, 8L, 4)))
-    val ann = Pipeline.annotateFrom(spark, tagged)
-    for (df <- Seq(ann.events, ann.relations)) {
-      val plan = df.queryExecution.executedPlan.toString
-      assert(!plan.contains("Exchange") && !plan.contains("Join"),
-        s"annotate must be narrow; plan:\n${plan.take(1500)}")
-    }
-    ann.caches.foreach(_.unpersist())
+  test("annotate: annotatedStage plans no Exchange and no Join") {
+    val plan = Pipeline.annotatedStage(spark, Pipeline.sentences(spark,
+      graft.corpus.Synth.corpus(spark, 8L, 4))).queryExecution.executedPlan.toString
+    assert(!plan.contains("Exchange") && !plan.contains("Join"),
+      s"annotate must be narrow; plan:\n${plan.take(1500)}")
   }
 
   // ---- canonicalization (link stage) ----

@@ -32,8 +32,10 @@ class SkewSpec extends AnyFunSuite {
 
   test("corpus hot lemma is actually hot, and the pipeline still balances") {
     val files = Synth.corpus(spark, 40L, 6)
-    val ann = Pipeline.annotate(spark, files)
-    val byLemma = ann.events.filter(col("eventType") =!= "")
+    val annotated = Pipeline.annotatedStage(spark, Pipeline.sentences(spark, files))
+      .toDF()
+    val byLemma = annotated.select(explode(col("events")).as("e"))
+      .select("e.*").filter(col("eventType") =!= "")
       .groupBy("trigLemma").count().orderBy(col("count").desc)
       .as[(String, Long)].collect()
     val total = byLemma.map(_._2).sum.toDouble
@@ -41,7 +43,7 @@ class SkewSpec extends AnyFunSuite {
     assert(byLemma.head._2 / total > 0.15, "hot lemma should dominate")
     // sameAs linking under skew: every non-canonical hot event links to
     // exactly one canonical id per (repo, lemma, type) block
-    val triples = Triples.emit(spark, ann)
+    val triples = Triples.materialize(spark, annotated, distinct = false)
     val sameAs = triples.filter(col("pred") === "sameAs")
     val fanIn = sameAs.groupBy("obj").count()
     assert(fanIn.count() > 0)
@@ -67,7 +69,9 @@ class SkewSpec extends AnyFunSuite {
   test("broadcast gate forced off: salted path emits IDENTICAL triples") {
     val files = Synth.corpus(spark, 30L, 5)
     def run(): Set[String] =
-      Triples.emit(spark, Pipeline.annotate(spark, files))
+      Triples.materialize(spark,
+        Pipeline.annotatedStage(spark, Pipeline.sentences(spark, files)).toDF(),
+        distinct = false)
         .select(concat_ws("\u0001", col("subj"), col("pred"), col("obj")))
         .as[String].collect().toSet
     val viaBroadcast = run()
